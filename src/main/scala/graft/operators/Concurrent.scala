@@ -48,17 +48,36 @@ object Concurrent {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
   }
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private[graft] val TimeoutProperty = "graft.concurrent.timeout.seconds"
+  private val DefaultTimeoutSeconds = 86400L
+  private val warnedTimeouts =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Default wall-clock bound for [[inParallel]]: a hang-breaker, not
     * a tuning knob. One wedged job on an unbounded await hangs the
     * whole query forever with no interrupt path; a generous finite
     * default (24 h, override via `-Dgraft.concurrent.timeout.seconds`)
     * keeps every legitimate workload untouched while giving a stuck
-    * deployment a loud TimeoutException instead of a silent hang. */
-  private[graft] def defaultTimeout: scala.concurrent.duration.Duration =
-    scala.concurrent.duration.Duration(
-      sys.props.get("graft.concurrent.timeout.seconds")
-        .map(_.toLong).getOrElse(86400L),
+    * deployment a loud TimeoutException instead of a silent hang. A
+    * value that is not a positive whole number of seconds falls back
+    * to the default with one warning per bad value — a typo in a JVM
+    * flag must not fail every parallel group. */
+  private[graft] def defaultTimeout: scala.concurrent.duration.Duration = {
+    val secs = sys.props.get(TimeoutProperty) match {
+      case None => DefaultTimeoutSeconds
+      case Some(raw) => raw.trim.toLongOption.filter(_ > 0).getOrElse {
+        if (warnedTimeouts.add(raw))
+          log.warn(s"ignoring -D$TimeoutProperty=$raw: not a positive " +
+            s"whole number of seconds; using the ${DefaultTimeoutSeconds}s " +
+            "default")
+        DefaultTimeoutSeconds
+      }
+    }
+    scala.concurrent.duration.Duration(secs,
       java.util.concurrent.TimeUnit.SECONDS)
+  }
 
   /** Run each thunk on its own pooled thread and wait for all;
     * returns results in input order. `parallelism` bounds in-flight
@@ -75,7 +94,8 @@ object Concurrent {
     * still running is the `timeout` hang-breaker: it interrupts the
     * pool (shutdownNow) and throws TimeoutException — by then the
     * caller's state is suspect anyway, which is what the exception
-    * says. */
+    * says; failures of thunks that had already completed ride on it
+    * as suppressed exceptions, in input order. */
   def inParallel[T](thunks: Seq[() => T], parallelism: Int = 4,
                     timeout: scala.concurrent.duration.Duration =
                       defaultTimeout): Seq[T] = {
@@ -108,6 +128,9 @@ object Concurrent {
           // non-daemon pool that pins the JVM
           interrupted = true
           pool.shutdownNow()
+          // a sibling that already failed is often the root cause of
+          // the hang; keep it on the exception instead of losing it
+          fs.flatMap(_.value).foreach(_.flatten.failed.foreach(e.addSuppressed))
           throw e
       }
       // every future is complete here; outer Try = the future's own

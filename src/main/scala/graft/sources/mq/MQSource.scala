@@ -1,6 +1,7 @@
 package graft.sources.mq
 
 import java.util
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -53,8 +54,13 @@ class MQSourceProvider extends TableProvider with DataSourceRegister {
     MQSourceProvider.Schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
+                        properties: util.Map[String, String]): Table = {
+    // both readStream and writeStream of `ibmmq` resolve the table
+    // here, before the query builds its offset/commit logs
+    SparkSession.getActiveSession
+      .foreach(graft.sources.LocalCheckpointFileManager.install)
     new MQTable(MQOptions(properties.asScala.toMap))
+  }
 }
 
 object MQSourceProvider {
@@ -299,8 +305,8 @@ class MQMicroBatchStream(options: MQOptions)
       } catch {
         case scala.util.control.NonFatal(e) =>
           commitsFailed += 1
-          System.err.println(
-            s"[ibmmq] commit($pos) failed (will redeliver): $e")
+          MQMicroBatchStream.log.warn(
+            s"ibmmq commit($pos) failed (will redeliver)", e)
       }
     }
 
@@ -324,6 +330,10 @@ class MQMicroBatchStream(options: MQOptions)
       "halted", halted.toString,
       "getInhibited", transport.inhibited.toString)
   }
+}
+
+object MQMicroBatchStream {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[MQMicroBatchStream])
 }
 
 case class MQInputPartition(options: MQOptions, start: Long, end: Long)

@@ -933,7 +933,7 @@ object StreamingOps {
    * with index size) and the ingest loop instead applies
    * [[prunedBandProbe]] to each micro-batch inside foreachBatch,
    * where the batch's own (band, bits) key set can be collected and
-   * pushed into the corpus scan as literal partition/parquet filters.
+   * joined to the band-pruned corpus side as a broadcast semi-join.
    *
    * EXACTNESS of the deferral (spec-pinned, StreamingOpsSpec): the
    * banded verdict is a pure function of `graft_sim` — exactly the

@@ -70,6 +70,32 @@ class ConcurrentSpec extends SparkSpec {
     assert(secs < 30.0, s"timeout path took ${secs}s — did not break the hang")
   }
 
+  test("inParallel's timeout carries already-completed failures as suppressed") {
+    val e = intercept[java.util.concurrent.TimeoutException] {
+      Concurrent.inParallel(Seq[() => Unit](
+        () => Thread.sleep(60000),
+        () => throw new IllegalStateException("root cause")),
+        timeout = 500.millis)
+    }
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("root cause"))
+  }
+
+  test("a malformed timeout property falls back to the default with one warning") {
+    val key = Concurrent.TimeoutProperty
+    val before = sys.props.get(key)
+    try {
+      sys.props(key) = "10m"
+      val warnings = SparkSpec.warningsOf(Concurrent.getClass) {
+        assert(Concurrent.inParallel(Seq(() => 1, () => 2)) == Seq(1, 2))
+        assert(Concurrent.defaultTimeout == 86400.seconds)
+      }
+      assert(warnings.size == 1, s"expected one warning, got $warnings")
+      assert(warnings.head.contains(s"$key=10m"))
+      sys.props(key) = "7"
+      assert(Concurrent.defaultTimeout == 7.seconds)
+    } finally before.fold(sys.props.remove(key))(v => sys.props.put(key, v))
+  }
+
   test("emptyLike shares NO logical subtree with its source " +
     "(the torn-row seed contract)") {
     import spark.implicits._

@@ -2,9 +2,12 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import graft.sources.LocalCheckpointFileManager
 import graft.sources.mq.{FileMQTransport, MQInputPartition, MQOptions, MQRecord, MQTransport, RetryingTransport}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The MQ-shaped DSv2 streaming source against the file-backed fake
   * transport: offset tracking, key synthesis across batches, commit
@@ -418,6 +421,23 @@ class MQSourceSpec extends SparkSpec {
     // batches at least the first must have been acknowledged.
     assert(last.get("messagesCommitted").toLong >= 2L)
     assert(new FileMQTransport(dir.toString).committed() >= 2L)
+  }
+
+  test("a failed MQ commit is counted, logged and swallowed (at-least-once)") {
+    val dir = tmpDir("mq-commit-fail")
+    append(dir, (1L, "a"))
+    // the commit record's temp file cannot be written
+    Files.createDirectory(dir.resolve("committed.tmp"))
+    val stream = new graft.sources.mq.MQMicroBatchStream(MQOptions(Map(
+      "path" -> dir.toString, "keepMessages" -> "false",
+      "retryAttempts" -> "1")))
+    val warnings = SparkSpec.warningsOf(stream.getClass) {
+      stream.commit(graft.sources.mq.MQOffset(1L))
+    }
+    assert(warnings.exists(_.contains("commit(1) failed")), warnings)
+    val m = stream.metrics(java.util.Optional.empty())
+    assert(m.get("commitsFailed") == "1" && m.get("messagesCommitted") == "0")
+    assert(new FileMQTransport(dir.toString).committed() == 0L)
   }
 
   test("multi-queue union: per-queue order preserved, queues isolated") {
@@ -1268,5 +1288,65 @@ class MQSourceSpec extends SparkSpec {
       s"landed ${landed.size} keys")
     // and the live index covers corpus + every arrival
     assert(pq.encoded.count() == 256L + 8L + 96L + 8L)
+  }
+
+  /** Run `body` with the session's checkpoint file manager set to
+    * `cls` (None = unset, so the `ibmmq` provider installs its own),
+    * restoring the previous setting afterwards. */
+  private def withCheckpointManager[T](cls: Option[String])(body: => T): T = {
+    val key = LocalCheckpointFileManager.ConfKey
+    val before = spark.conf.getOption(key)
+    cls.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** One AvailableNow pass of an `ibmmq` -> `ibmmq` relay. */
+  private def relayOnce(in: Path, out: Path, ckpt: Path): Unit = {
+    val q = spark.readStream.format("ibmmq")
+      .option("path", in.toString).option("keepMessages", "false")
+      .option("maxMessagesPerTrigger", "2").load()
+      .select("value")
+      .writeStream.format("ibmmq").option("path", out.toString)
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+  }
+
+  private def payloads(dir: Path): Seq[String] = {
+    val t = new FileMQTransport(dir.toString)
+    t.read(0L, t.depth()).map(_.payload).toSeq
+  }
+
+  private def crcFiles(root: Path): Seq[String] = {
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".crc")).toSeq
+    finally walk.close()
+  }
+
+  test("relay checkpoints move between Spark's default manager and the " +
+    "local one in both directions, exactly once") {
+    val sparkDefault = Some(classOf[FileContextBasedCheckpointFileManager].getName)
+    val (in, out, ckpt) =
+      (tmpDir("mq-cfm-in"), tmpDir("mq-cfm-out"), tmpDir("mq-cfm-ckpt"))
+    append(in, (1L, "a"), (2L, "b"), (3L, "c"))
+    withCheckpointManager(sparkDefault)(relayOnce(in, out, ckpt))
+    assert(crcFiles(ckpt).nonEmpty, "Spark's default manager writes .crc")
+    append(in, (4L, "d"), (5L, "e"))
+    withCheckpointManager(None)(relayOnce(in, out, ckpt))
+    append(in, (6L, "f"))
+    withCheckpointManager(sparkDefault)(relayOnce(in, out, ckpt))
+    assert(payloads(out) == Seq("a", "b", "c", "d", "e", "f"))
+  }
+
+  test("an ibmmq query's default checkpoint holds no .crc sidecars") {
+    val (in, out, ckpt) =
+      (tmpDir("mq-nocrc-in"), tmpDir("mq-nocrc-out"), tmpDir("mq-nocrc-ckpt"))
+    append(in, (1L, "a"), (2L, "b"), (3L, "c"))
+    withCheckpointManager(None)(relayOnce(in, out, ckpt))
+    assert(payloads(out) == Seq("a", "b", "c"))
+    assert(Files.exists(ckpt.resolve("commits").resolve("1")))
+    assert(crcFiles(ckpt).isEmpty, crcFiles(ckpt).mkString(", "))
   }
 }
