@@ -125,18 +125,22 @@ object Bench {
     // last-JSON-line or tail-window parser finds a complete object.
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE",
       "docs/bench_last.json")
-    try {
+    val written = try {
       val p = java.nio.file.Paths.get(sidecar)
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"))
+      true
     } catch {
       // a bench run must never fail because the sidecar location is
       // unwritable (e.g. invoked outside the repo); the stdout lines
-      // still carry everything
+      // still carry everything, and the compact line then names no
+      // sidecar
       case e: Exception =>
         System.err.println(s"[bench] sidecar write failed ($sidecar): $e")
+        false
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps,"n_queries":${results.size},"errors":$errors,"cpus":$cpus,"queries_file":"$sidecar"$filtered}""")
+    val queriesFile = if (written) s""""$sidecar"""" else "null"
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps,"n_queries":${results.size},"errors":$errors,"cpus":$cpus,"queries_file":$queriesFile$filtered}""")
     spark.stop()
     if (errors > 0) sys.exit(2)
   }

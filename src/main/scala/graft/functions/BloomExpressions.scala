@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
 
 /** Blocked-bit-array Bloom filter kernels for membership probes at
@@ -78,19 +77,8 @@ object BloomMightContain {
   def build(exprs: Seq[Expression]): BloomMightContain = {
     require(exprs.length == 3,
       "graft_bloom_contains(hash, words, k) takes 3 args")
-    require(exprs(1).foldable, "words must be a foldable array literal")
-    require(exprs(2).foldable, "k must be an integer literal")
-    val words = exprs(1).eval() match {
-      case a: ArrayData => a.toLongArray()
-      case other => throw new IllegalArgumentException(
-        s"words must evaluate to array<bigint>, got $other")
-    }
-    val k = exprs(2).eval() match {
-      case n: Number => n.intValue()
-      case other => throw new IllegalArgumentException(
-        s"k must be an integer literal, got $other")
-    }
-    BloomMightContain(exprs.head, words, k)
+    BloomMightContain(exprs.head, LiteralArgs.longArray(exprs(1), "words"),
+      LiteralArgs.int(exprs(2), "k"))
   }
 }
 

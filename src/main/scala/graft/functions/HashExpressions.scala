@@ -69,13 +69,7 @@ object MinHashSig {
   def build(exprs: Seq[Expression]): MinHashSig = {
     require(exprs.length == 2,
       "graft_minhash_sig(array<string>, n) takes 2 args")
-    require(exprs(1).foldable, "n must be a literal")
-    val n = exprs(1).eval() match {
-      case v: Number => v.intValue()
-      case other => throw new IllegalArgumentException(
-        s"n must be an integer literal, got $other")
-    }
-    MinHashSig(exprs.head, n)
+    MinHashSig(exprs.head, LiteralArgs.int(exprs(1), "n"))
   }
 }
 
@@ -119,16 +113,8 @@ object MinHashBands {
   def build(exprs: Seq[Expression]): MinHashBands = {
     require(exprs.length == 3,
       "graft_minhash_bands(array<string>, bands, rows) takes 3 args")
-    def intArg(e: Expression, what: String): Int = {
-      require(e.foldable, s"$what must be a literal")
-      e.eval() match {
-        case n: Number => n.intValue()
-        case other => throw new IllegalArgumentException(
-          s"$what must be an integer literal, got $other")
-      }
-    }
-    MinHashBands(exprs.head, intArg(exprs(1), "bands"),
-      intArg(exprs(2), "rows"))
+    MinHashBands(exprs.head, LiteralArgs.int(exprs(1), "bands"),
+      LiteralArgs.int(exprs(2), "rows"))
   }
 }
 

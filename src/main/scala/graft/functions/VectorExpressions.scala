@@ -161,6 +161,29 @@ case class SqDist(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Decoders for the foldable literal arguments of the registry
+  * builders (plan-time constants), validated with a clear message
+  * instead of a ClassCastException deep in the planner. */
+private[functions] object LiteralArgs {
+  def int(e: Expression, what: String): Int = {
+    require(e.foldable, s"$what must be an integer literal")
+    e.eval() match {
+      case n: Number => n.intValue()
+      case other => throw new IllegalArgumentException(
+        s"$what must be an integer literal, got $other")
+    }
+  }
+
+  def longArray(e: Expression, what: String): Array[Long] = {
+    require(e.foldable, s"$what must be a foldable array literal")
+    e.eval() match {
+      case a: ArrayData => a.toLongArray()
+      case other => throw new IllegalArgumentException(
+        s"$what must evaluate to array<bigint>, got $other")
+    }
+  }
+}
+
 /** Registers the engine's native functions on a session (idempotent).
   * Uses the function registry directly so it works on ANY session —
   * including the driver's — without requiring SparkSessionExtensions
@@ -211,6 +234,11 @@ object GraftFunctions {
       // words arrives as a foldable array<bigint> literal, decoded once
       ("graft_bloom_contains", classOf[BloomMightContain],
         BloomMightContain.build _),
+      // the door's text gates: n / λ table / bloom words arrive as
+      // literals, decoded once (graft.functions.TextKernels)
+      ("graft_shingles", classOf[Shingles], Shingles.build _),
+      ("graft_dsir_logw", classOf[DsirLogw], DsirLogw.build _),
+      ("graft_bloom_count", classOf[BloomCount], BloomCount.build _),
       // the round's pair / the full merge table arrive as literals
       ("graft_bpe_merge", classOf[BpeMergePass], BpeMergePass.build _),
       ("graft_bpe_encode", classOf[BpeEncode], BpeEncode.build _))

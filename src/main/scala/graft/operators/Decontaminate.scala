@@ -162,12 +162,21 @@ object Decontaminate {
         TextAnalysis.shingles(TextAnalysis.tokens(col(textCol)), n)))
         .as("g"))
 
-  /** Membership probe Column against a built filter — public so
-    * per-row composition sites (e.g. the streaming ingest door's
-    * higher-order `filter` over a shingle array) can reuse the exact
-    * build-side index derivation. */
-  def bloomContains(hash: Column, model: BloomModel): Column =
+  /** Membership probe Column against a built filter, the same index
+    * derivation as the build side (TextKernelsSpec's per-element
+    * oracle for [[bloomCount]]). */
+  private[graft] def bloomContains(hash: Column, model: BloomModel): Column =
     bloomContains(hash, model.words, model.k)
+
+  /** Number of elements of a string array that pass the filter — the
+    * value of `size(filter(arr, x -> bloomContains(xxhash64(x))))` in
+    * one native loop (`graft_bloom_count`, same probe derivation), for
+    * row-local gates such as the streaming ingest door's. */
+  def bloomCount(arr: Column, model: BloomModel): Column = {
+    graft.functions.GraftFunctions.register(SparkSession.active)
+    call_function("graft_bloom_count", arr,
+      typedLit(model.words.toSeq), lit(model.k))
+  }
 
   private def bloomContains(hash: Column, words: Array[Long],
                             k: Int): Column = {

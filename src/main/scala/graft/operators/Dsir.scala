@@ -215,9 +215,11 @@ object Dsir {
 
   /** Row-local DSIR score under a trained [[DsirModel]]: a struct of
     * `(n_grams, logw_micro, keep)` computed entirely within the row —
-    * the dense λ array rides the plan once as a literal and the
-    * per-gram lookup is an `element_at` inside a codegen fold. No
-    * join, no aggregation, no state: usable identically in a batch
+    * the dense λ array rides the plan once as a literal, decoded into
+    * a long[] the native `graft_dsir_logw` kernel indexes while it
+    * hashes each unigram and bigram once (the bucket is read off the
+    * md5 digest, the value of [[gramBucket]] without its hex string).
+    * No join, no aggregation, no state: usable identically in a batch
     * scan and a streaming micro-batch ([[
     * graft.streaming.StreamingOps.dsirAdmitAtDoor]]), with
     * bit-identical decisions — for corpus documents the score equals
@@ -226,12 +228,12 @@ object Dsir {
     * Documents with zero grams have `logw = 0, n = 0` and are never
     * kept (`0 > 0` is false) — the conservative door stance. */
   def scoreWith(model: DsirModel, toks: Column): Column = {
-    val grams = concat(toks, TextAnalysis.bigrams(toks))
-    val lamArr = typedLit(model.lambda)
-    val logw = aggregate(grams, lit(0L), (acc, g) =>
-      acc + element_at(lamArr,
-        (gramBucket(g, model.hexDigits) + lit(1L)).cast("int")))
-    val n = size(grams).cast("long")
+    graft.functions.GraftFunctions.register(
+      org.apache.spark.sql.SparkSession.active)
+    val logw = call_function("graft_dsir_logw", toks,
+      typedLit(model.lambda), lit(model.hexDigits))
+    // unigrams + bigrams, the size of concat(toks, bigrams(toks))
+    val n = (size(toks) + greatest(size(toks) - 1, lit(0))).cast("long")
     struct(n.as("n_grams"), logw.as("logw_micro"),
       (logw * lit(model.totN) > lit(model.totLogw) * n).as("keep"))
   }

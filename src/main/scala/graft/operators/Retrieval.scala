@@ -400,6 +400,17 @@ object Retrieval {
     *  [[bm25TopKWith]] plus vocabulary-sized bookkeeping. `bounds`
     *  takes a staged [[pruneBounds]] table; None computes it inline
     *  (one postings pass — fine for one-shot, stage it for serving).
+    *
+    *  Construction runs Spark jobs: the decision table is two eager
+    *  `localCheckpoint`s (the term table inside [[essentialSplit]] and
+    *  the split frame here), so building the probe — even only to
+    *  `explain` it — tokenizes the queries and scores the seed lists
+    *  at once. The returned frame therefore pins a SNAPSHOT of the
+    *  queries, `ix` (postings, df, stats) and `bounds` as of the
+    *  call: index maintenance that commits after it is not seen by
+    *  this frame's pruning decisions. Build the probe after
+    *  maintenance completes (a serving loop builds one per
+    *  micro-batch, which is the intended use).
     */
   def bm25TopKPrunedWith(ix: PostingsIndex,
                          queries: DataFrame, qidCol: String,
@@ -588,7 +599,14 @@ object Retrieval {
   /** The pruning decision table: one row per (signature, kept term)
     * with `__ess` — whether the term is essential for its signature
     * (step 3 above). Package-visible so the spec can pin that a
-    * Zipfian fixture actually demotes its stopword-grade terms. */
+    * Zipfian fixture actually demotes its stopword-grade terms.
+    *
+    * Not lazy: the per-(signature, term) table is an eager
+    * `localCheckpoint`, so this call runs a Spark job (query
+    * tokenization, the df/tf_max joins, the stats aggregate and both
+    * windows) when it is made, and the frame it returns holds the
+    * index and bounds state of that moment — later index maintenance
+    * does not reach it. */
   private[graft] def essentialSplit(ix: PostingsIndex, qsig: DataFrame,
                                     k: Int, k1: Double, b: Double,
                                     maxDfPermille: Int,

@@ -5,9 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline: tokenization,
   * n-grams, language-ID heuristic, quality scoring, token counting,
-  * fingerprinting. All pure column expressions (whole-stage-codegen
-  * friendly, no UDFs in the hot path) so they scale linearly with data
-  * and never shuffle on their own.
+  * fingerprinting. All pure column expressions (no UDFs) so they scale
+  * linearly with data and never shuffle on their own. Shingles and
+  * bigrams are a native kernel (`graft_shingles`); the remaining
+  * higher-order forms (`stopwordRatio`'s `filter`, `rollingHash`'s
+  * `aggregate`) are evaluated interpreted inside whole-stage codegen,
+  * and subexpression elimination does not reach into their lambdas.
   */
 object TextAnalysis {
 
@@ -31,22 +34,19 @@ object TextAnalysis {
   def bpeTokenCount(text: Column): Column =
     regexp_count(lower(text), lit(BpePattern))
 
-  /** Adjacent-token bigrams, built with zip_with over two shifted slices
-    * (avoids `sequence()` pitfalls on 1-token docs: slice of length 0 is
-    * an empty array, so short docs yield no bigrams).
-    */
-  def bigrams(toks: Column): Column =
-    zip_with(
-      slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
-      slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-      (a, b) => concat(a, lit(" "), b))
+  /** Adjacent-token bigrams: [[shingles]] of width 2 (a doc of one
+    * token or none yields no bigrams). */
+  def bigrams(toks: Column): Column = shingles(toks, 2)
 
-  /** Word-level n-gram shingles (n >= 2) for minhash/near-dup. */
+  /** Word-level n-gram shingles: element i joins tokens i .. i+n-1 with
+    * one space, null when any of them is null; a doc of fewer than `n`
+    * tokens yields an empty array, a null array a null one. One pass
+    * of the native `graft_shingles` kernel over the token array. */
   def shingles(toks: Column, n: Int): Column = {
-    val len = greatest(size(toks) - (n - 1), lit(0))
-    val parts = (1 to n).map(i => slice(toks, lit(i), len))
-    parts.reduceLeft((acc, nxt) => zip_with(acc, nxt,
-      (a, b) => concat(a, lit(" "), b)))
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    graft.functions.GraftFunctions.register(
+      org.apache.spark.sql.SparkSession.active)
+    call_function("graft_shingles", toks, lit(n))
   }
 
   /** Vowel-ratio language-ID heuristic. A real pipeline would score

@@ -800,11 +800,11 @@ object StreamingOps {
     * [[graft.operators.TextAnalysis.linearModelQ8]]) plus shingle
     * count and bloom-decontamination hits. Everything is computed
     * ROW-LOCAL — the bloom bit array rides into codegen as a
-    * reference object and the shingle probe is a higher-order
-    * `filter` over the doc's own shingle array — so the gate needs
-    * no join, no aggregation, and no state: it composes with any
-    * downstream stateful op and costs the same per row at 100 TB/day
-    * as in a unit test. */
+    * reference object and the shingle probe is one native loop
+    * (`Decontaminate.bloomCount`) over the doc's own shingle array —
+    * so the gate needs no join, no aggregation, and no state: it
+    * composes with any downstream stateful op and costs the same per
+    * row at 100 TB/day as in a unit test. */
   def doorScores(stream: DataFrame, textCol: String, scoreQ8: Column,
                  bloom: graft.operators.Decontaminate.BloomModel,
                  shingleN: Int = 3): DataFrame = {
@@ -817,8 +817,7 @@ object StreamingOps {
       .withColumn("graft_quality_q8", scoreQ8)
       .withColumn("graft_n_shingles", size(sh).cast("long"))
       .withColumn("graft_bloom_hits",
-        size(filter(sh, x => graft.operators.Decontaminate
-          .bloomContains(xxhash64(x), bloom))).cast("long"))
+        graft.operators.Decontaminate.bloomCount(sh, bloom))
   }
 
   /** Quality + decontamination gate at the ingest door — the
@@ -910,13 +909,16 @@ object StreamingOps {
   /* Known constant, deliberately kept: the gates tokenize the text
    * independently (DSIR grams and quality shingles over
    * `tokens(text)`, the fingerprint over `tokens(trim(text))`, the
-   * digest over `lower(trim(text))`) — separate projections across
-   * joins, so codegen cannot share the work and tokenization runs
-   * ~3x per admitted row. Sharing one working token column would
-   * require unifying the gates' token BASES (trimmed vs raw), which
-   * changes each gate's bit-exact parity with its batch twin — the
-   * contract the whole door is specified against. Revisit only
-   * together with the batch operators. */
+   * digest over `lower(trim(text))`). Each gate is its own
+   * projection, across joins codegen cannot share, so the split runs
+   * at least once per gate that needs tokens (the DSIR and shingle
+   * kernels each read the token array once), plus whatever the
+   * caller's quality model evaluates. Sharing one
+   * working token column would require unifying the gates' token
+   * BASES (trimmed vs raw), which changes each gate's bit-exact
+   * parity with its batch twin — the contract the whole door is
+   * specified against. Revisit only together with the batch
+   * operators. */
   /* The optional FIFTH gate: pass `semIndex` (the staged IVF index
    * over the corpus embeddings) and the door chains [[semanticProbe]]
    * on `semVecCol` after the fingerprint probes — semantically
