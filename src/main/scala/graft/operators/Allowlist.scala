@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.StagedTables
 
 /** The serving ALLOWLIST as staged state — the missing tense of
   * filtered retrieval. [[Retrieval.restrictToDocs]] /
@@ -19,10 +20,8 @@ import org.apache.spark.sql.functions._
   * `(doc, seq, allowed)` EVENTS, bucketed+sorted by `doc` (the
   * restrict semi-join's equi-key — a corpus-scale allowlist joins
   * doclen / the ANN id tables exchange-free), directory-partitioned
-  * by `batch_id` in front of the bucketing (the postings-table replay
-  * layout: a gated mutation drops exactly its own partition before
-  * writing, so crash+replay lands content identical to a single
-  * delivery).
+  * by `batch_id` in front of the bucketing — the replay layout and
+  * crash contract of [[graft.sources.StagedTables]].
   *
   * Semantics: a doc is SERVED iff its latest event (highest `seq`)
   * has `allowed = true` — so grant → revoke → re-grant works, which
@@ -45,9 +44,11 @@ object Allowlist {
 
   private def allowTable(prefix: String) = prefix + "_allow"
 
-  /** The batch_id the base set and compacted state land under —
-    * [[Retrieval]]'s reserved base partition, below every gated id. */
-  private val BasePartition = -1L
+  /** The event log's place in the shared staged-table lifecycle: no
+    * tombstones (a revoke is an event), compaction collapses to the
+    * latest event per doc. */
+  private def allowLayout(prefix: String) = StagedTables.Layout(
+    allowTable(prefix), "doc", compactRows = latestEvents)
 
   /** Seq of the base set: below every gated mutation's batch id, so
     * the initial grants lose to any later revoke. */
@@ -66,34 +67,27 @@ object Allowlist {
       docs.select(col(idCol).as("doc")).distinct()
         .withColumn("seq", lit(BaseSeq))
         .withColumn("allowed", lit(true))
-        .withColumn("batch_id", lit(BasePartition)),
+        .withColumn("batch_id", lit(StagedTables.BasePartition)),
       allowTable(prefix), buckets, Seq("doc"),
       partitionCols = Seq("batch_id"))
 
   /** Stage one allowlist CHANGE — grant (`allowed = true`) or revoke
-    * (`allowed = false`) for `docs` — as an idempotent gated append:
-    * the event rows land under the mutation's own `batch_id=batchId`
-    * partition, preceded by a drop of that partition, so a crash
-    * anywhere between this write and the caller's gate commit replays
-    * into content identical to a single delivery. `batchId` is also
-    * the event `seq`: foreachBatch ids are monotone, which is exactly
-    * the latest-wins order the load resolves. Single-writer, like
-    * every staged mutation in this engine. */
+    * (`allowed = false`) for `docs` — as an idempotent gated append
+    * under the mutation's own `batch_id=batchId` partition (the
+    * [[StagedTables]] replay contract). `batchId` is also the event
+    * `seq`: foreachBatch ids are monotone, which is exactly the
+    * latest-wins order the load resolves. Single-writer, like every
+    * staged mutation in this engine. */
   def stageAllowlistChange(docs: DataFrame, idCol: String,
                            allowed: Boolean, prefix: String,
                            buckets: Int, batchId: Long): Unit = {
-    require(batchId >= 0, s"gated batch ids are non-negative, got " +
-      s"$batchId ($BasePartition is the reserved base partition)")
-    val spark = docs.sparkSession
-    spark.sql(s"ALTER TABLE ${allowTable(prefix)} DROP IF EXISTS " +
-      s"PARTITION (batch_id=$batchId)")
-    graft.sources.BucketedTables.appendBucketed(
-      docs.select(col(idCol).as("doc")).distinct()
+    val events = docs.select(col(idCol).as("doc"))
+    StagedTables.append(docs.sparkSession, allowLayout(prefix), buckets,
+      Some(batchId), events, "maintainAllowlistTable") {
+      events.distinct()
         .withColumn("seq", lit(batchId))
         .withColumn("allowed", lit(allowed))
-        .withColumn("batch_id", lit(batchId)),
-      allowTable(prefix), buckets, Seq("doc"),
-      partitionCols = Seq("batch_id"))
+    }
   }
 
   /** The SERVED allowed set: one `doc` row per document whose latest
@@ -105,73 +99,41 @@ object Allowlist {
     * breaking same-seq ties: max over (seq, revoke-flag) structs —
     * one zero-exchange aggregation on the doc-bucketed scan. */
   def loadAllowlist(spark: SparkSession, prefix: String): DataFrame =
-    spark.table(allowTable(prefix))
-      .groupBy("doc")
+    latestEvents(spark.table(allowTable(prefix))).select("doc")
+
+  /** The latest event per doc, kept only when it grants: max over
+    * (seq, revoke-flag) structs, so revoke breaks same-seq ties. */
+  private def latestEvents(df: DataFrame): DataFrame =
+    df.groupBy("doc")
       .agg(max(struct(col("seq"),
         when(!col("allowed"), lit(1)).otherwise(lit(0)).as("deny"),
         col("allowed"))).as("last"))
       .filter(col("last.deny") === 0 && col("last.allowed"))
-      .select("doc")
+      .select(col("doc"), col("last.seq").as("seq"),
+        col("last.allowed").as("allowed"))
 
   /** Collapse the event log to its latest event per doc (dropping
     * docs whose latest event revokes — a fresh create over the
     * served set has no such rows), landing in the base partition.
     * Serving-equivalent (the load reads latest-event either way) and
-    * idempotent, as [[graft.sources.BucketedTables.rewriteBucketed]]'s
-    * crash recovery requires. Seqs are preserved, not renumbered: a
-    * compaction must never re-order against an in-flight gated
-    * mutation's id. Run from the maintenance owner. */
+    * idempotent, as the rewrite's crash recovery requires. Seqs are
+    * preserved, not renumbered: a compaction must never re-order
+    * against an in-flight gated mutation's id. Run from the
+    * maintenance owner. */
   def compactAllowlistTable(spark: SparkSession, prefix: String,
                             buckets: Int): Unit =
-    graft.sources.BucketedTables.rewriteBucketed(spark,
-      allowTable(prefix), buckets, Seq("doc"), Seq("batch_id")) { df =>
-      df.groupBy("doc")
-        .agg(max(struct(col("seq"),
-          when(!col("allowed"), lit(1)).otherwise(lit(0)).as("deny"),
-          col("allowed"))).as("last"))
-        .filter(col("last.deny") === 0 && col("last.allowed"))
-        .select(col("doc"), col("last.seq").as("seq"),
-          col("last.allowed").as("allowed"))
-        .withColumn("batch_id", lit(BasePartition))
-    }
+    StagedTables.compact(spark, allowLayout(prefix), buckets)
 
-  /** Audit-gated maintenance — the
-    * [[Similarity.maintainIvfIndexTable]] /
-    * [[Retrieval.maintainPostingsIndexTable]] contract on the event
-    * log, closing the one staged family that had a compact but no
-    * alarm on its growth bound: compact when the per-mutation
-    * directory growth crosses `maxBatchDirs` distinct batch
-    * partitions (the growth axis of this layout — each gated
-    * grant/revoke adds one batch_id subtree, and the doc's
-    * latest-wins history accumulates until collapsed), and recover
-    * unconditionally when a crashed rewrite left only the
-    * `_compacting` staging copy behind. No-op when healthy, so a
-    * maintenance-cadence caller costs one SHOW PARTITIONS. Returns
-    * true iff anything was rewritten. */
+  /** Audit-gated maintenance ([[StagedTables.maintain]]): compact
+    * when the per-mutation directory growth crosses `maxBatchDirs`
+    * distinct batch partitions (each gated grant/revoke adds one
+    * batch_id subtree, and the doc's latest-wins history accumulates
+    * until collapsed), after recovering a crashed rewrite. No-op when
+    * healthy, so a maintenance-cadence caller costs one SHOW
+    * PARTITIONS. Returns true iff anything was rewritten. */
   def maintainAllowlistTable(spark: SparkSession, prefix: String,
                              buckets: Int,
-                             maxBatchDirs: Int = 2): Boolean = {
-    require(maxBatchDirs >= 1,
-      s"maxBatchDirs below 1 ($maxBatchDirs) would recompact a fresh " +
-        "allowlist forever")
-    val crashed =
-      !spark.catalog.tableExists(allowTable(prefix)) &&
-        spark.catalog.tableExists(allowTable(prefix) + "_compacting")
-    if (crashed) {
-      compactAllowlistTable(spark, prefix, buckets)
-      return true
-    }
-    // the OTHER crash window (live still present, staging written but
-    // never swapped): the live table is intact, so just drop the
-    // stale staging copy — housekeeping, not a rewrite
-    graft.sources.BucketedTables.dropStaleStaging(spark,
-      allowTable(prefix))
-    val batchDirs = spark
-      .sql(s"SHOW PARTITIONS ${allowTable(prefix)}")
-      .collect().map(_.getString(0).split("/")(0)).distinct.length
-    if (batchDirs > maxBatchDirs) {
-      compactAllowlistTable(spark, prefix, buckets)
-      true
-    } else false
-  }
+                             maxBatchDirs: Int = 2): Boolean =
+    StagedTables.maintain(spark, allowLayout(prefix), buckets,
+      maxBatchDirs)
 }

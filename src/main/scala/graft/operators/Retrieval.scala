@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.StagedTables
+import graft.sources.StagedTables.BasePartition
 
 /** BM25 ranked retrieval — query → top-k documents over an inverted
   * index, the classic lexical-retrieval op a training-data pipeline
@@ -364,11 +366,6 @@ object Retrieval {
     *     document's full score ≥ any one contribution, so k docs at
     *     single-term contribution ≥ c guarantee k full scores ≥ c.
     *     One short posting list scanned; no corpus pass.
-    *     (`fullSeedTheta = true` is the tighter notch: fully score
-    *     the seed docs over all the query's terms via a seed-bounded
-    *     (term, doc) lookup join and take the k-th best FULL score —
-    *     θ can only rise, so more terms demote; see essentialSplit
-    *     for when it pays.)
     *  3. Sort the query's terms by ub ascending; the maximal prefix
     *     whose CUMULATIVE ub sum is < θ is NON-ESSENTIAL — a document
     *     matching only prefix terms scores ≤ that cumulative sum
@@ -416,8 +413,7 @@ object Retrieval {
                          queries: DataFrame, qidCol: String,
                          qToks: Column, k: Int, k1: Double = 1.2,
                          b: Double = 0.75, maxDfPermille: Int = 1000,
-                         bounds: Option[DataFrame] = None,
-                         fullSeedTheta: Boolean = false): DataFrame = {
+                         bounds: Option[DataFrame] = None): DataFrame = {
     requireProbeArgs(k, maxDfPermille)
     val qsig = qsigOf(queries, qidCol, qToks)
     // the decision table is signature-sized but its θ column cost a
@@ -428,8 +424,7 @@ object Retrieval {
     // clearCache releases, while checkpoint blocks are reclaimed by
     // the ContextCleaner once the probe's frames go unreferenced —
     // per-call state that cleans itself up.
-    val split = essentialSplit(ix, qsig, k, k1, b, maxDfPermille,
-        bounds, fullSeedTheta)
+    val split = essentialSplit(ix, qsig, k, k1, b, maxDfPermille, bounds)
       .localCheckpoint(true)
     def matched(terms: DataFrame) = terms
       .select("__sig", "term", "df")
@@ -610,8 +605,7 @@ object Retrieval {
   private[graft] def essentialSplit(ix: PostingsIndex, qsig: DataFrame,
                                     k: Int, k1: Double, b: Double,
                                     maxDfPermille: Int,
-                                    bounds: Option[DataFrame],
-                                    fullSeedTheta: Boolean = false)
+                                    bounds: Option[DataFrame])
   : DataFrame = {
     val sigs = qsig.select("__sig").distinct()
     val qterms = sigs.select(col("__sig"),
@@ -656,86 +650,34 @@ object Retrieval {
       .withColumn("__seed", row_number().over(wSeed) === 1)
       .localCheckpoint(true)
     // θ per signature (absent when the seed list is shorter than k →
-    // no θ → nothing prunes, the exhaustive degenerate). Two notches:
+    // no θ → nothing prunes, the exhaustive degenerate): the k-th best
+    // single-term contribution on the seed term's own posting list —
+    // one short list scanned, nothing else touched. Valid because a
+    // doc's FULL score ≥ any one contribution, so k docs at
+    // single-term contribution ≥ c guarantee k full scores ≥ c.
     //
-    //  LOOSE (default): k-th best single-term contribution on the
-    //  seed term's own posting list — one short list scanned, nothing
-    //  else touched. Valid because a doc's FULL score ≥ any one
-    //  contribution, so k docs at single-term contribution ≥ c
-    //  guarantee k full scores ≥ c.
-    //
-    //  FULL-SEED (opt-in): fully score the seed term's ≤ df docs over
-    //  ALL the signature's kept terms — a (term, doc) lookup join
-    //  (each term's postings joined DOWN to the seed docs, the same
-    //  relational seek the candidate phase uses) — and take the k-th
-    //  best FULL score. θ_full ≥ θ_loose term for term (the full
-    //  score of each seed doc ≥ its seed contribution), so strictly
-    //  more prefix terms demote; still exact, because θ_full is
-    //  ACHIEVED by k real documents, so any doc excluded with score
-    //  < θ_full sits below k achieved full scores. Costs one extra
-    //  seed-doc-bounded join pass — pay it when the corpus is
-    //  Zipfian and queries carry several mid-frequency terms whose
-    //  ubs straddle the loose θ (measured crossovers in
-    //  docs/SCALE.md; on single-rare-term queries the loose θ
-    //  already demotes everything demotable and the notch buys ~0).
-    val thetas = if (!fullSeedTheta) {
-      // θ_loose is a pure function of the seed TERM: the k-th best
-      // single-term contribution over that term's posting list, and
-      // contribQ6 reads only (df, tf, len, stats) — nothing
-      // per-signature. Signatures sharing a seed term would each
-      // re-join and re-window the same posting list (the worst lists
-      // in the workload: seeds are the highest-ub terms), so the
-      // k-th-best runs once per DISTINCT seed term and maps back to
-      // signatures by the seed relation — row-identical to the
-      // per-signature window (same ordering, same k, same ties).
-      val seedTermMatched = terms2.filter(col("__seed"))
-        .select("term", "df").distinct()
-        .join(ix.postings, "term")
-        .join(ix.doclen, "doc")
-        .crossJoin(broadcast(ix.stats))
-        .withColumn("__contrib_q6", contribQ6(k1, b))
-      val wTheta = Window.partitionBy("term")
-        .orderBy(col("__contrib_q6").desc, col("doc").asc)
-      seedTermMatched
-        .withColumn("__r", row_number().over(wTheta))
-        .filter(col("__r") === k)
-        .select(col("term"), col("__contrib_q6").as("__theta_q6"))
-        .join(terms2.filter(col("__seed")).select("__sig", "term"),
-          "term")
-        .select(col("__sig"), col("__theta_q6"))
-    } else {
-      val seedMatched = terms2.filter(col("__seed"))
-        .select("__sig", "term", "df")
-        .join(ix.postings, "term")
-        .join(ix.doclen, "doc")
-        .crossJoin(broadcast(ix.stats))
-        .withColumn("__contrib_q6", contribQ6(k1, b))
-      val seedDocs = seedMatched.select("__sig", "doc")
-      // join ORDER is the cost model: restrict postings to the seed
-      // DOCS first (seedDocs is signatures×df_seed rows — broadcast-
-      // sized — so the postings scan emits only the seed docs' own
-      // rows, ≤ |seed docs|·doc length), THEN keep the signature's
-      // query terms. Joining terms-first would materialize every
-      // query term's full posting list per signature — sig×corpus
-      // rows for a stopword — before the seed restriction.
-      val fullScores = seedDocs
-        .join(ix.postings, "doc")
-        // terms2, not terms1: terms2 is the checkpointed frame, so
-        // this lookup does not re-run the vocabulary pipeline
-        .join(terms2.select("__sig", "term", "df"),
-          Seq("__sig", "term"))
-        .join(ix.doclen, "doc")
-        .crossJoin(broadcast(ix.stats))
-        .withColumn("__contrib_q6", contribQ6(k1, b))
-        .groupBy("__sig", "doc")
-        .agg(sum("__contrib_q6").as("__score_q6"))
-      val wFull = Window.partitionBy("__sig")
-        .orderBy(col("__score_q6").desc, col("doc").asc)
-      fullScores
-        .withColumn("__r", row_number().over(wFull))
-        .filter(col("__r") === k)
-        .select(col("__sig"), col("__score_q6").as("__theta_q6"))
-    }
+    // θ is a pure function of the seed TERM: contribQ6 reads only
+    // (df, tf, len, stats) — nothing per-signature. Signatures sharing
+    // a seed term would each re-join and re-window the same posting
+    // list (the worst lists in the workload: seeds are the highest-ub
+    // terms), so the k-th-best runs once per DISTINCT seed term and
+    // maps back to signatures by the seed relation — row-identical to
+    // the per-signature window (same ordering, same k, same ties).
+    val seedTermMatched = terms2.filter(col("__seed"))
+      .select("term", "df").distinct()
+      .join(ix.postings, "term")
+      .join(ix.doclen, "doc")
+      .crossJoin(broadcast(ix.stats))
+      .withColumn("__contrib_q6", contribQ6(k1, b))
+    val wTheta = Window.partitionBy("term")
+      .orderBy(col("__contrib_q6").desc, col("doc").asc)
+    val thetas = seedTermMatched
+      .withColumn("__r", row_number().over(wTheta))
+      .filter(col("__r") === k)
+      .select(col("term"), col("__contrib_q6").as("__theta_q6"))
+      .join(terms2.filter(col("__seed")).select("__sig", "term"),
+        "term")
+      .select(col("__sig"), col("__theta_q6"))
     // essential iff the ub-ascending cumulative sum through this term
     // reaches θ; the seed term's cum is the full sum >= any achieved
     // score >= θ, so at least one term is always essential
@@ -789,13 +731,11 @@ object Retrieval {
   // double-count df/stats partials and duplicate postings rows —
   // shifting every score for those docs forever (the dedup tables are
   // immune because their probes are anti-joins; additive state is
-  // not). So every table carries a `batch_id` DIRECTORY PARTITION in
-  // front of its bucketing (the banded index's band layout), appends
-  // stamp their batch id, and the gated form FIRST drops its own
-  // batch's partition — a no-op on first delivery, and on replay it
-  // removes the partial or complete previous attempt, making the
-  // append idempotent per batch id. The capstone injects a crash in
-  // exactly this window and pins post-replay retrieval == rebuild.
+  // not). So every table follows the graft.sources.StagedTables
+  // contract: a `batch_id` DIRECTORY PARTITION in front of its
+  // bucketing, dropped by the gated form before it writes. The
+  // capstone injects a crash in exactly this window and pins
+  // post-replay retrieval == rebuild.
   // Probes never see batch_id (loadPostingsIndex projects it away);
   // bucket-colocated joins survive partitioning (a bucketed scan
   // spans partition directories — the banded-index precedent).
@@ -807,11 +747,6 @@ object Retrieval {
   private def statsTable(prefix: String) = prefix + "_stats"
   private def tfmaxTable(prefix: String) = prefix + "_tfmax"
   private def tombTable(prefix: String) = prefix + "_tombstones"
-
-  /** The batch_id every non-gated write lands under (the base corpus
-    * and compacted state). Gated appends use their own positive batch
-    * id so replay can surgically remove a previous attempt. */
-  private val BasePartition = -1L
 
   // the merge transforms collapse batch attribution into the base
   // partition — probe-equivalent (batch_id never reaches a probe),
@@ -927,41 +862,22 @@ object Retrieval {
                                  buckets: Int,
                                  batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    val pid = batchId.getOrElse(BasePartition)
+    val pid = StagedTables.partitionOf(batchId)
     // ENFORCE the "not already present" contract for the one case the
     // door cannot see: a tombstoned id is invisible to serving (and to
     // the door's corpus probes once its signatures age out) but still
     // PENDING physical removal — re-appending it would add postings/
     // doclen rows plus POSITIVE df/stats partials that the eventual
     // compaction's anti-join then destroys, silently losing the new
-    // rows and leaving probe scores drifted until the recompute. The
-    // check is a batch-sized semi-join against the (small) tombstone
-    // table, gated on a limit-1 emptiness scan so the no-deletes hot
-    // path pays almost nothing.
-    //
-    // The check runs BEFORE the replay partition drop below: a batch
-    // that landed, crashed before gate commit, and then had one of
-    // its ids tombstoned must fail with its already-landed partitions
-    // INTACT — dropping first would destroy the batch's other rows on
-    // every retry while the throw makes normal replay unrecoverable.
-    if (spark.catalog.tableExists(tombTable(prefix)) &&
-        !spark.table(tombTable(prefix)).isEmpty) {
-      val clash = batch.select(col(idCol).as("doc"))
-        .join(spark.table(tombTable(prefix)).select("doc"),
-          Seq("doc"), "left_semi")
-      require(clash.isEmpty,
-        s"appendToPostingsIndexTable($prefix): batch contains doc ids " +
-          "that are tombstoned but not yet compacted away (e.g. " +
-          clash.limit(3).collect().map(_.get(0)).mkString(", ") +
-          "); run maintainPostingsIndexTable first — re-appending a " +
-          "pending-delete id would be destroyed by the compaction")
-    }
+    // rows and leaving probe scores drifted until the recompute. Runs
+    // BEFORE the replay drop (the StagedTables ordering).
+    StagedTables.requireNoTombstoned(spark, tombTable(prefix),
+      batch.select(col(idCol).as("doc")),
+      s"appendToPostingsIndexTable($prefix)", "maintainPostingsIndexTable")
     batchId.foreach { id =>
-      require(id >= 0, s"gated batch ids are non-negative, got $id " +
-        s"($BasePartition is the reserved base partition)")
       // five independent single-table DDLs — overlapped (guide §2.6)
-      Concurrent.inParallel(allTables(prefix).map(t => () => spark.sql(
-        s"ALTER TABLE $t DROP IF EXISTS PARTITION (batch_id=$id)")))
+      Concurrent.inParallel(allTables(prefix).map(t =>
+        () => StagedTables.dropBatch(spark, t, id)))
       ()
     }
     val ix = postingsIndex(batch, idCol, toks)
@@ -1278,10 +1194,8 @@ object Retrieval {
                                    docs: DataFrame, idCol: String,
                                    prefix: String, buckets: Int,
                                    batchId: Option[Long] = None): Long = {
-    val pid = batchId.map { id =>
-      require(id >= 0, s"gated batch ids are non-negative, got $id")
-      deletePid(id)
-    }.getOrElse(BasePartition)
+    val pid = batchId.map(id => deletePid(StagedTables.gated(id)))
+      .getOrElse(BasePartition)
     // an index created before the tombstone table shipped gets one
     // lazily on its first delete — same schema and layout as
     // createPostingsIndexTable writes
@@ -1293,8 +1207,8 @@ object Retrieval {
         partitionCols = Seq("batch_id"))
     batchId.foreach { _ =>
       // three independent single-table DDLs — overlapped (guide §2.6)
-      Concurrent.inParallel(deleteTables(prefix).map(t => () => spark.sql(
-        s"ALTER TABLE $t DROP IF EXISTS PARTITION (batch_id=$pid)")))
+      Concurrent.inParallel(deleteTables(prefix).map(t =>
+        () => StagedTables.dropBatch(spark, t, pid)))
       ()
     }
     // resolve against the live set, then MATERIALIZE: the victim set
@@ -1446,9 +1360,7 @@ object Retrieval {
     //   - derived tables recomputed + tombstones cleared LAST: the
     //     recompute reads the already-clean base tables.
     val part = Seq("batch_id")
-    val hasTomb = spark.catalog.tableExists(tombTable(prefix))
-    val tombPending = hasTomb &&
-      !spark.table(tombTable(prefix)).isEmpty
+    val tombPending = StagedTables.pending(spark, tombTable(prefix))
     // tombstones apply PHYSICALLY here: victims' rows leave postings
     // and doclen. The anti-join transform is idempotent (a second
     // application finds nothing to remove), as rewriteBucketed
@@ -1517,9 +1429,7 @@ object Retrieval {
           .saveAsTable(statsTable(prefix))
       }
       onStep("stats")
-      graft.sources.BucketedTables.rewriteBucketed(
-        spark, tombTable(prefix), buckets, Seq("doc"), part)(
-        _.filter(lit(false)))
+      StagedTables.clearTombstones(spark, tombTable(prefix), "doc", buckets)
       onStep("tombstones")
     } else {
       graft.sources.BucketedTables.rewriteBucketed(
@@ -1558,36 +1468,20 @@ object Retrieval {
     // is the directory count itself, which IS files-per-bucket across
     // the whole table. Same threshold, same crash-recovery-first,
     // same rewrite protocol; only the measurement matches the layout.
-    def crashed(table: String) =
-      !spark.catalog.tableExists(table) &&
-        spark.catalog.tableExists(table + "_compacting")
     def over(table: String) =
       spark.catalog.tableExists(table) &&
         spark.sql(s"SHOW PARTITIONS $table").count() > maxFilesPerBucket
-    // ANY pending tombstone triggers the full apply-and-clear
-    // compaction — takedown latency is bounded by one maintenance
-    // cadence, and the cross-table ordering (tombstones cleared last)
-    // lives in ONE place. A crashed tombstone-clear recovers the same
-    // way. The healthy-path cost of this check is one limit-1 scan of
-    // the (small) tombstone table.
-    val tombPending =
-      (spark.catalog.tableExists(tombTable(prefix)) &&
-        !spark.table(tombTable(prefix)).isEmpty) ||
-        crashed(tombTable(prefix))
-    if (tombPending) {
-      compactPostingsIndexTable(spark, prefix, buckets)
-      // a crashed CLEAR leaves live-missing/staging-present, which
-      // compact's tombPending re-check may see as already cleared —
-      // recover the swap explicitly so the table is never left dark
-      if (crashed(tombTable(prefix)))
-        graft.sources.BucketedTables.rewriteBucketed(spark,
-          tombTable(prefix), buckets, Seq("doc"), Seq("batch_id"))(
-          _.filter(lit(false)))
+    // ANY pending (or crashed-clear) tombstone triggers the full
+    // apply-and-clear compaction — takedown latency is bounded by one
+    // maintenance cadence (the StagedTables.recover opening; a crashed
+    // rewrite of one base table recovers in maintainOne below).
+    if (StagedTables.recover(spark, Nil, Some(tombTable(prefix)), "doc",
+        buckets)(compactPostingsIndexTable(spark, prefix, buckets)))
       return true
-    }
     def maintainOne(table: String, keyCols: Seq[String],
                     transform: DataFrame => DataFrame): Boolean =
-      if (crashed(table) || over(table)) {
+      if (graft.sources.BucketedTables.crashedSwap(spark, table) ||
+          over(table)) {
         graft.sources.BucketedTables.rewriteBucketed(spark, table,
           buckets, keyCols, Seq("batch_id"))(transform)
         true

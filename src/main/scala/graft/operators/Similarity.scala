@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.StagedTables
 
 /** Vector-similarity operators over an `ArrayType(FloatType)` embedding
   * column: brute-force cosine top-k (exact baseline), kNN label vote,
@@ -2519,9 +2520,12 @@ object Similarity {
   private def ivfAssignedTable(prefix: String) = prefix + "_assigned"
   private def ivfTombTable(prefix: String) = prefix + "_tombstones"
 
-  /** Reserved base partition for create/compacted state (gated
-    * appends use their own non-negative batch ids). */
-  private val IvfBasePartition = -1L
+  /** The assigned table's place in the shared staged-table lifecycle:
+    * cent_id follows batch_id as a directory level, so a probe prunes
+    * to its own lists. */
+  private def ivfLayout(prefix: String) = StagedTables.Layout(
+    ivfAssignedTable(prefix), "c_id", Seq("batch_id", "cent_id"),
+    Some(ivfTombTable(prefix)))
 
   /** Every table an IVF-table prefix owns — the one cleanup/refresh
     * enumeration (the [[graft.operators.Retrieval.indexTableNames]]
@@ -2529,24 +2533,6 @@ object Similarity {
   def ivfIndexTableNames(prefix: String): Seq[String] =
     Seq(ivfCentsTable(prefix), ivfAssignedTable(prefix),
       ivfTombTable(prefix))
-
-  /** Drop every partition of `table` under `batch_id=id` — partial
-    * partition specs are not portable across catalogs for a
-    * two-level-partitioned table, so the drop enumerates matching
-    * leaves (bounded by the batch's own cent spread) and drops each
-    * by full spec. */
-  private def dropBatchPartitions(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      id: Long): Unit =
-    spark.sql(s"SHOW PARTITIONS $table").collect()
-      .map(_.getString(0)).filter(_.startsWith(s"batch_id=$id/"))
-      .foreach { p =>
-        val spec = p.split("/").map { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          s"$k='$v'"
-        }.mkString(", ")
-        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($spec)")
-      }
 
   /** Materialize a staged [[IvfIndex]] as the tables above. `buckets`
     * sizes the c_id layout like a shuffle partition count at full
@@ -2571,14 +2557,14 @@ object Similarity {
     // `assigned.limit(0)`.
     val tombSeed = Concurrent.emptyLike(
       index.assigned.select(col("c_id")))
-      .withColumn("batch_id", lit(IvfBasePartition))
+      .withColumn("batch_id", lit(StagedTables.BasePartition))
     Concurrent.inParallel(Seq(
       () => index.cents.toDF("cent_id", "cent_vec").write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .format("parquet").saveAsTable(ivfCentsTable(prefix)),
       () => graft.sources.BucketedTables.writeBucketed(
         index.assigned.select("c_id", "c_vec", "cent_id")
-          .withColumn("batch_id", lit(IvfBasePartition)),
+          .withColumn("batch_id", lit(StagedTables.BasePartition)),
         ivfAssignedTable(prefix), buckets, Seq("c_id"),
         partitionCols = Seq("batch_id", "cent_id")),
       () => graft.sources.BucketedTables.writeBucketed(
@@ -2618,109 +2604,55 @@ object Similarity {
     * batch under the staged FROZEN quantizer (map-only) and hash it
     * into the existing layout — batch-sized shuffle, corpus rows
     * never read or rewritten. `batchId` makes the append idempotent
-    * per foreachBatch id (own partition subtree, dropped first — the
-    * gated postings-append replay contract). The "not already
-    * present" caller contract is ENFORCED against pending tombstones
-    * exactly like the postings append: a re-appended
-    * pending-delete id would be destroyed by the compaction. */
+    * per foreachBatch id; a batch holding a pending-delete id fails
+    * (the [[StagedTables]] replay and clash contract). */
   def appendToIvfIndexTable(batch: DataFrame, idCol: String,
                             vecCol: String, prefix: String,
                             buckets: Int,
                             batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     requireIntegralId(batch, idCol, "appendToIvfIndexTable")
-    val pid = batchId.getOrElse(IvfBasePartition)
-    // Clash check BEFORE the replay partition drop: a crashed-then-
-    // tombstoned batch must fail with its already-landed partition
-    // intact (appendToPostingsIndexTable's ordering contract).
-    if (spark.catalog.tableExists(ivfTombTable(prefix)) &&
-        !spark.table(ivfTombTable(prefix)).isEmpty) {
-      val clash = batch
-        .select(col(idCol).cast("long").as("c_id"))
-        .join(spark.table(ivfTombTable(prefix)).select("c_id"),
-          Seq("c_id"), "left_semi")
-      require(clash.isEmpty,
-        s"appendToIvfIndexTable($prefix): batch contains ids that " +
-          "are tombstoned but not yet compacted away (e.g. " +
-          clash.limit(3).collect().map(_.get(0)).mkString(", ") +
-          "); run maintainIvfIndexTable first")
+    StagedTables.append(spark, ivfLayout(prefix), buckets, batchId,
+      batch.select(col(idCol).cast("long").as("c_id")),
+      "maintainIvfIndexTable") {
+      ivfAssign(
+        nonNullVecs(batch, vecCol).dropDuplicates(idCol)
+          .select(col(idCol).cast("long").as("c_id"),
+            toDouble(col(vecCol)).as("c_vec")),
+        loadIvfCents(spark, prefix))
     }
-    batchId.foreach { id =>
-      require(id >= 0, s"gated batch ids are non-negative, got $id " +
-        s"($IvfBasePartition is the reserved base partition)")
-      dropBatchPartitions(spark, ivfAssignedTable(prefix), id)
-    }
-    val assigned = ivfAssign(
-      nonNullVecs(batch, vecCol).dropDuplicates(idCol)
-        .select(col(idCol).cast("long").as("c_id"),
-          toDouble(col(vecCol)).as("c_vec")),
-      loadIvfCents(spark, prefix))
-    graft.sources.BucketedTables.appendBucketed(
-      assigned.withColumn("batch_id", lit(pid)),
-      ivfAssignedTable(prefix), buckets, Seq("c_id"),
-      partitionCols = Seq("batch_id", "cent_id"))
   }
 
   /** The table tense of [[deleteFromIvfIndex]] — a takedown is an
     * APPEND of c_id tombstones, never a rewrite of the cent_id-
     * partitioned corpus; serving stops at the next
-    * [[loadIvfIndexTable]] (every probe reads through the anti-join)
-    * and the bytes leave at the next compaction. Ids resolve against
-    * the LIVE set, so re-deletes/absent ids are no-ops; the gated
-    * form drops its own tombstone partition first (idempotent
-    * replay). Returns ids actually deleted. */
+    * [[loadIvfIndexTable]] and the bytes leave at the next compaction
+    * ([[StagedTables.delete]]). Returns ids actually deleted. */
   def deleteFromIvfIndexTable(spark: org.apache.spark.sql.SparkSession,
                               ids: DataFrame, idCol: String,
                               prefix: String, buckets: Int,
                               batchId: Option[Long] = None): Long = {
     requireIntegralId(ids, idCol, "deleteFromIvfIndexTable")
-    val pid = batchId.map { id =>
-      require(id >= 0, s"gated batch ids are non-negative, got $id")
-      spark.sql(s"ALTER TABLE ${ivfTombTable(prefix)} DROP IF EXISTS " +
-        s"PARTITION (batch_id=$id)")
-      id
-    }.getOrElse(IvfBasePartition)
-    val victims = spark.table(ivfAssignedTable(prefix)).select("c_id")
-      .join(spark.table(ivfTombTable(prefix)).select("c_id"),
-        Seq("c_id"), "left_anti")
-      .join(ids.select(col(idCol).cast("long").as("c_id")).distinct(),
-        "c_id")
-      .localCheckpoint(true)
-    val n = victims.count()
-    if (n == 0) return 0L
-    graft.sources.BucketedTables.appendBucketed(
-      victims.withColumn("batch_id", lit(pid)),
-      ivfTombTable(prefix), buckets, Seq("c_id"),
-      partitionCols = Seq("batch_id"))
-    n
+    StagedTables.delete(spark, ivfLayout(prefix), buckets, batchId,
+      ids.select(col(idCol).cast("long").as("c_id")))
   }
 
   /** Apply pending tombstones physically and collapse batch
     * attribution into the base partition — content thereafter equals
     * a fresh [[createIvfIndexTable]] over the survivors under the
-    * same frozen quantizer. Tombstones clear LAST (any interrupted
-    * state still loads exactly — the anti-join over already-clean
-    * tables is a no-op, the postings compaction's ordering argument
-    * on a two-table layout). Single-writer maintenance cadence. */
+    * same frozen quantizer. Single-writer maintenance cadence. */
   def compactIvfIndexTable(spark: org.apache.spark.sql.SparkSession,
-                           prefix: String, buckets: Int): Unit = {
-    val tombPending =
-      spark.catalog.tableExists(ivfTombTable(prefix)) &&
-        !spark.table(ivfTombTable(prefix)).isEmpty
-    def applyTomb(df: DataFrame): DataFrame =
-      if (tombPending)
-        df.join(spark.table(ivfTombTable(prefix)).select("c_id"),
-          Seq("c_id"), "left_anti")
-      else df
-    graft.sources.BucketedTables.rewriteBucketed(
-      spark, ivfAssignedTable(prefix), buckets, Seq("c_id"),
-      Seq("batch_id", "cent_id"))(df =>
-      applyTomb(df).withColumn("batch_id", lit(IvfBasePartition)))
-    if (tombPending)
-      graft.sources.BucketedTables.rewriteBucketed(
-        spark, ivfTombTable(prefix), buckets, Seq("c_id"),
-        Seq("batch_id"))(_.filter(lit(false)))
-  }
+                           prefix: String, buckets: Int): Unit =
+    StagedTables.compact(spark, ivfLayout(prefix), buckets)
+
+  /** Audit-gated tense of [[compactIvfIndexTable]]
+    * ([[StagedTables.maintain]]): crash recovery and pending
+    * tombstones first, then compact only past `maxBatchDirs` distinct
+    * batch partitions. Returns true iff anything was rewritten. */
+  def maintainIvfIndexTable(spark: org.apache.spark.sql.SparkSession,
+                            prefix: String, buckets: Int,
+                            maxBatchDirs: Int = 2): Boolean =
+    StagedTables.maintain(spark, ivfLayout(prefix), buckets, maxBatchDirs)
 
   // ------------------------------------------------------------------
   // The TABLE tense of the LSH index — the other family whose probe
@@ -2746,6 +2678,12 @@ object Similarity {
   private def lshDroppedTable(prefix: String) = prefix + "_dropped"
   private def lshTombTable(prefix: String) = prefix + "_tombstones"
 
+  /** The buckets table's place in the shared staged-table lifecycle:
+    * the probe's own `bucket` follows batch_id as a directory level. */
+  private def lshLayout(prefix: String) = StagedTables.Layout(
+    lshBucketsTable(prefix), "c_id", Seq("batch_id", "bucket"),
+    Some(lshTombTable(prefix)))
+
   /** Every table an LSH-table prefix owns. */
   def lshIndexTableNames(prefix: String): Seq[String] =
     Seq(lshMetaTable(prefix), lshBucketsTable(prefix),
@@ -2764,7 +2702,7 @@ object Similarity {
     // frame, never `buckets.limit(0)`.
     val tombSeed = Concurrent.emptyLike(
       index.buckets.select(col("c_id")))
-      .withColumn("batch_id", lit(IvfBasePartition))
+      .withColumn("batch_id", lit(StagedTables.BasePartition))
     Concurrent.inParallel(Seq(
       // the meta row carries BOTH quantizer parameters: the plane count
       // and (explicit-planes tense) the hyperplanes themselves — empty
@@ -2776,7 +2714,7 @@ object Similarity {
       () => {
         graft.sources.BucketedTables.writeBucketed(
           index.buckets.select("c_id", "c_vec", "bucket")
-            .withColumn("batch_id", lit(IvfBasePartition)),
+            .withColumn("batch_id", lit(StagedTables.BasePartition)),
           lshBucketsTable(prefix), buckets, Seq("c_id"),
           partitionCols = Seq("batch_id", "bucket"))
         index.dropped.write
@@ -2829,181 +2767,45 @@ object Similarity {
   /** The table tense of [[appendToLshIndex]]: hash the admitted batch
     * with the STAGED plane count, exclude census-dropped buckets
     * (frozen census — resurrecting one with the batch's biased sliver
-    * is the documented wrong answer), gated idempotent append. The
-    * pending-tombstone re-append guard is the IVF/postings
-    * contract. */
+    * is the documented wrong answer), gated idempotent append under
+    * the [[StagedTables]] contract. */
   def appendToLshIndexTable(batch: DataFrame, idCol: String,
                             vecCol: String, prefix: String,
                             buckets: Int,
                             batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val pid = batchId.getOrElse(IvfBasePartition)
-    // Clash check BEFORE the replay partition drop: a crashed-then-
-    // tombstoned batch must fail with its already-landed partition
-    // intact (appendToPostingsIndexTable's ordering contract).
-    if (spark.catalog.tableExists(lshTombTable(prefix)) &&
-        !spark.table(lshTombTable(prefix)).isEmpty) {
-      val clash = batch.select(col(idCol).as("c_id"))
-        .join(spark.table(lshTombTable(prefix)).select("c_id"),
-          Seq("c_id"), "left_semi")
-      require(clash.isEmpty,
-        s"appendToLshIndexTable($prefix): batch contains ids that " +
-          "are tombstoned but not yet compacted away (e.g. " +
-          clash.limit(3).collect().map(_.get(0)).mkString(", ") +
-          "); run maintainLshIndexTable first")
+    StagedTables.append(spark, lshLayout(prefix), buckets, batchId,
+      batch.select(col(idCol).as("c_id")), "maintainLshIndexTable") {
+      val (nPlanes, planes) = lshMeta(spark, prefix)
+      nonNullVecs(batch, vecCol).dropDuplicates(idCol)
+        .select(col(idCol).as("c_id"), toDouble(col(vecCol)).as("c_vec"))
+        .withColumn("bucket", lshHash(col("c_vec"), nPlanes, planes))
+        .join(broadcast(spark.table(lshDroppedTable(prefix))),
+          Seq("bucket"), "left_anti")
+        .select("c_id", "c_vec", "bucket")
     }
-    batchId.foreach { id =>
-      require(id >= 0, s"gated batch ids are non-negative, got $id " +
-        s"($IvfBasePartition is the reserved base partition)")
-      dropBatchPartitions(spark, lshBucketsTable(prefix), id)
-    }
-    val (nPlanes, planes) = lshMeta(spark, prefix)
-    val hashed = nonNullVecs(batch, vecCol).dropDuplicates(idCol)
-      .select(col(idCol).as("c_id"), toDouble(col(vecCol)).as("c_vec"))
-      .withColumn("bucket", lshHash(col("c_vec"), nPlanes, planes))
-      .join(broadcast(spark.table(lshDroppedTable(prefix))),
-        Seq("bucket"), "left_anti")
-      .select("c_id", "c_vec", "bucket")
-    graft.sources.BucketedTables.appendBucketed(
-      hashed.withColumn("batch_id", lit(pid)),
-      lshBucketsTable(prefix), buckets, Seq("c_id"),
-      partitionCols = Seq("batch_id", "bucket"))
   }
 
   /** The table tense of [[deleteFromLshIndex]] — tombstone append
-    * resolved against the live set, the IVF table's contract
-    * verbatim. */
+    * resolved against the live set ([[StagedTables.delete]]). */
   def deleteFromLshIndexTable(spark: org.apache.spark.sql.SparkSession,
                               ids: DataFrame, idCol: String,
                               prefix: String, buckets: Int,
-                              batchId: Option[Long] = None): Long = {
-    val pid = batchId.map { id =>
-      require(id >= 0, s"gated batch ids are non-negative, got $id")
-      spark.sql(s"ALTER TABLE ${lshTombTable(prefix)} DROP IF EXISTS " +
-        s"PARTITION (batch_id=$id)")
-      id
-    }.getOrElse(IvfBasePartition)
-    val victims = spark.table(lshBucketsTable(prefix)).select("c_id")
-      .join(spark.table(lshTombTable(prefix)).select("c_id"),
-        Seq("c_id"), "left_anti")
-      .join(ids.select(col(idCol).as("c_id")).distinct(), "c_id")
-      .localCheckpoint(true)
-    val n = victims.count()
-    if (n == 0) return 0L
-    graft.sources.BucketedTables.appendBucketed(
-      victims.withColumn("batch_id", lit(pid)),
-      lshTombTable(prefix), buckets, Seq("c_id"),
-      partitionCols = Seq("batch_id"))
-    n
-  }
+                              batchId: Option[Long] = None): Long =
+    StagedTables.delete(spark, lshLayout(prefix), buckets, batchId,
+      ids.select(col(idCol).as("c_id")))
 
   /** Tombstone-applying compaction + batch-attribution collapse —
-    * [[compactIvfIndexTable]]'s contract on the bucket layout. */
+    * [[compactIvfIndexTable]]'s contract on the bucket layout. The
+    * `dropped` census is untouched: it stays frozen. */
   def compactLshIndexTable(spark: org.apache.spark.sql.SparkSession,
-                           prefix: String, buckets: Int): Unit = {
-    val tombPending =
-      spark.catalog.tableExists(lshTombTable(prefix)) &&
-        !spark.table(lshTombTable(prefix)).isEmpty
-    def applyTomb(df: DataFrame): DataFrame =
-      if (tombPending)
-        df.join(spark.table(lshTombTable(prefix)).select("c_id"),
-          Seq("c_id"), "left_anti")
-      else df
-    graft.sources.BucketedTables.rewriteBucketed(
-      spark, lshBucketsTable(prefix), buckets, Seq("c_id"),
-      Seq("batch_id", "bucket"))(df =>
-      applyTomb(df).withColumn("batch_id", lit(IvfBasePartition)))
-    if (tombPending)
-      graft.sources.BucketedTables.rewriteBucketed(
-        spark, lshTombTable(prefix), buckets, Seq("c_id"),
-        Seq("batch_id"))(_.filter(lit(false)))
-  }
+                           prefix: String, buckets: Int): Unit =
+    StagedTables.compact(spark, lshLayout(prefix), buckets)
 
   /** Audit-gated maintenance — [[maintainIvfIndexTable]]'s contract
     * on the bucket layout. */
   def maintainLshIndexTable(spark: org.apache.spark.sql.SparkSession,
                             prefix: String, buckets: Int,
-                            maxBatchDirs: Int = 2): Boolean = {
-    require(maxBatchDirs >= 1,
-      s"maxBatchDirs below 1 ($maxBatchDirs) would recompact a fresh " +
-        "index forever")
-    def crashed(table: String) =
-      !spark.catalog.tableExists(table) &&
-        spark.catalog.tableExists(table + "_compacting")
-    val tombPending =
-      (spark.catalog.tableExists(lshTombTable(prefix)) &&
-        !spark.table(lshTombTable(prefix)).isEmpty) ||
-        crashed(lshTombTable(prefix))
-    if (tombPending || crashed(lshBucketsTable(prefix))) {
-      compactLshIndexTable(spark, prefix, buckets)
-      if (crashed(lshTombTable(prefix)))
-        graft.sources.BucketedTables.rewriteBucketed(spark,
-          lshTombTable(prefix), buckets, Seq("c_id"),
-          Seq("batch_id"))(_.filter(lit(false)))
-      return true
-    }
-    // live-present + staging-present (crash before the swap): the
-    // live tables are intact — drop the stale staging copies so a
-    // healthy pass leaves the catalog clean (housekeeping, not a
-    // rewrite)
-    graft.sources.BucketedTables.dropStaleStaging(spark,
-      lshBucketsTable(prefix))
-    graft.sources.BucketedTables.dropStaleStaging(spark,
-      lshTombTable(prefix))
-    val batchDirs = spark
-      .sql(s"SHOW PARTITIONS ${lshBucketsTable(prefix)}")
-      .collect().map(_.getString(0).split("/")(0)).distinct.length
-    if (batchDirs > maxBatchDirs) {
-      compactLshIndexTable(spark, prefix, buckets)
-      true
-    } else false
-  }
-
-  /** Audit-gated tense of [[compactIvfIndexTable]] (the
-    * maintainPostingsIndexTable stance): any pending tombstone forces
-    * the apply-and-clear compaction (takedown latency bounded by one
-    * cadence); otherwise compact only when the per-batch directory
-    * growth crosses `maxBatchDirs` distinct batch partitions — the
-    * growth axis of this layout (each gated append adds one batch_id
-    * subtree of single-file buckets, so file amplification per leaf
-    * stays 1.0 forever). A crashed rewrite recovers unconditionally.
-    * Returns true iff anything was rewritten. */
-  def maintainIvfIndexTable(spark: org.apache.spark.sql.SparkSession,
-                            prefix: String, buckets: Int,
-                            maxBatchDirs: Int = 2): Boolean = {
-    require(maxBatchDirs >= 1,
-      s"maxBatchDirs below 1 ($maxBatchDirs) would recompact a fresh " +
-        "index forever")
-    def crashed(table: String) =
-      !spark.catalog.tableExists(table) &&
-        spark.catalog.tableExists(table + "_compacting")
-    val tombPending =
-      (spark.catalog.tableExists(ivfTombTable(prefix)) &&
-        !spark.table(ivfTombTable(prefix)).isEmpty) ||
-        crashed(ivfTombTable(prefix))
-    if (tombPending || crashed(ivfAssignedTable(prefix))) {
-      compactIvfIndexTable(spark, prefix, buckets)
-      if (crashed(ivfTombTable(prefix)))
-        graft.sources.BucketedTables.rewriteBucketed(spark,
-          ivfTombTable(prefix), buckets, Seq("c_id"),
-          Seq("batch_id"))(_.filter(lit(false)))
-      return true
-    }
-    // live-present + staging-present (crash before the swap): the
-    // live tables are intact — drop the stale staging copies so a
-    // healthy pass leaves the catalog clean (housekeeping, not a
-    // rewrite)
-    graft.sources.BucketedTables.dropStaleStaging(spark,
-      ivfAssignedTable(prefix))
-    graft.sources.BucketedTables.dropStaleStaging(spark,
-      ivfTombTable(prefix))
-    val batchDirs = spark
-      .sql(s"SHOW PARTITIONS ${ivfAssignedTable(prefix)}")
-      .collect().map(_.getString(0).split("/")(0)).distinct.length
-    if (batchDirs > maxBatchDirs) {
-      compactIvfIndexTable(spark, prefix, buckets)
-      true
-    } else false
-  }
+                            maxBatchDirs: Int = 2): Boolean =
+    StagedTables.maintain(spark, lshLayout(prefix), buckets, maxBatchDirs)
 }

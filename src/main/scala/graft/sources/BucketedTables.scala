@@ -132,14 +132,22 @@ object BucketedTables {
     * DROP TABLE on the managed staging table removes its directory
     * too. Returns true iff a stale copy was dropped (housekeeping —
     * the maintain functions do not count it as a rewrite). */
-  def dropStaleStaging(spark: SparkSession, table: String): Boolean = {
-    val staging = table + "_compacting"
+  def dropStaleStaging(spark: SparkSession, table: String): Boolean =
     if (spark.catalog.tableExists(table) &&
-        spark.catalog.tableExists(staging)) {
-      spark.sql(s"DROP TABLE $staging")
+        spark.catalog.tableExists(stagingOf(table))) {
+      spark.sql(s"DROP TABLE ${stagingOf(table)}")
       true
     } else false
-  }
+
+  /** The staging name a rewrite of `table` writes before its swap. */
+  private def stagingOf(table: String): String = table + "_compacting"
+
+  /** A rewrite of `table` crashed between dropping the live table and
+    * renaming its staging copy: the staging copy is the only one, and
+    * re-running the rewrite finishes the swap. */
+  def crashedSwap(spark: SparkSession, table: String): Boolean =
+    !spark.catalog.tableExists(table) &&
+      spark.catalog.tableExists(stagingOf(table))
 
   /** [[compactBucketed]] with a content transform: rewrite the table
     * through `transform` under the same staging / drop / rename crash
@@ -157,10 +165,8 @@ object BucketedTables {
                       keyCols: Seq[String],
                       partitionCols: Seq[String] = Nil)(
                       transform: DataFrame => DataFrame): Unit = {
-    val staging = table + "_compacting"
-    val liveExists = spark.catalog.tableExists(table)
-    val stagingExists = spark.catalog.tableExists(staging)
-    if (!liveExists && stagingExists) {
+    val staging = stagingOf(table)
+    if (crashedSwap(spark, table)) {
       // crashed between DROP TABLE <live> and RENAME: the staging
       // table holds the only copy — finish the swap and return (the
       // staging copy IS the compacted form, so there is nothing left
@@ -170,7 +176,7 @@ object BucketedTables {
         spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
       return
     }
-    if (!liveExists)
+    if (!spark.catalog.tableExists(table))
       throw new IllegalStateException(
         s"compactBucketed: table $table does not exist and no staging copy found")
     if (partitionCols.nonEmpty) {
@@ -289,33 +295,12 @@ object BucketedTables {
   def maintainBucketed(spark: SparkSession, table: String, buckets: Int,
                        keyCols: Seq[String],
                        partitionCols: Seq[String] = Nil,
-                       maxFilesPerBucket: Double = 2.0): Boolean =
-    maintainRewritten(spark, table, buckets, keyCols, partitionCols,
-      maxFilesPerBucket)(identity)
-
-  /** [[maintainBucketed]] with a content transform — the audit-gated
-    * tense of [[rewriteBucketed]], for append-only PARTIAL tables
-    * maintained by merge (the BM25 dfreq/tfmax partials). Same
-    * contract: idempotent transform, crash recovery first,
-    * under-threshold calls cost one file listing. */
-  def maintainRewritten(spark: SparkSession, table: String,
-                        buckets: Int, keyCols: Seq[String],
-                        partitionCols: Seq[String] = Nil,
-                        maxFilesPerBucket: Double = 2.0)(
-                        transform: DataFrame => DataFrame): Boolean = {
+                       maxFilesPerBucket: Double = 2.0): Boolean = {
     require(maxFilesPerBucket >= 1.0,
       s"maxFilesPerBucket below 1.0 ($maxFilesPerBucket) would recompact a fresh table forever")
-    val staging = table + "_compacting"
-    if (!spark.catalog.tableExists(table) &&
-        spark.catalog.tableExists(staging)) {
-      rewriteBucketed(spark, table, buckets, keyCols,
-        partitionCols)(transform)
-      return true
-    }
-    val amp = fileAmplification(spark, table, buckets)
-    if (amp > maxFilesPerBucket) {
-      rewriteBucketed(spark, table, buckets, keyCols,
-        partitionCols)(transform)
+    if (crashedSwap(spark, table) ||
+        fileAmplification(spark, table, buckets) > maxFilesPerBucket) {
+      compactBucketed(spark, table, buckets, keyCols, partitionCols)
       true
     } else false
   }

@@ -65,16 +65,12 @@ time("pruned") {
   Retrieval.bm25TopKPrunedWith(ix, queries, "query_id", col("toks"),
     k = 10, bounds = Some(bounds)).count()
 }
-time("pruned_fullseed") {
-  Retrieval.bm25TopKPrunedWith(ix, queries, "query_id", col("toks"),
-    k = 10, bounds = Some(bounds), fullSeedTheta = true).count()
-}
 
 // query set 2: several mid-frequency terms per query, CO-OCCURRING
 // with the rare term's own docs (mid_(j%100) / w_(j%1000) are exactly
 // the bands the seed docs carry) — the shape where the loose θ keeps
-// the mid/w lists essential but the fully-scored-seed θ (≈ the seed
-// docs' full 4-term score) demotes them
+// the mid/w lists essential (the removed fully-scored-seed θ notch
+// demoted them; docs/SCALE.md holds its numbers)
 val queries2 = spark.range(NQ).select(
   col("id").as("query_id"),
   array(
@@ -91,20 +87,6 @@ time("pruned_multiband") {
   Retrieval.bm25TopKPrunedWith(ix, queries2, "query_id", col("toks"),
     k = 10, bounds = Some(bounds)).count()
 }
-time("pruned_fullseed_multiband") {
-  Retrieval.bm25TopKPrunedWith(ix, queries2, "query_id", col("toks"),
-    k = 10, bounds = Some(bounds), fullSeedTheta = true).count()
-}
-
-val parity2 = {
-  val a = Retrieval.bm25TopKWith(ix, queries2, "query_id",
-    col("toks"), k = 10).collect().map(_.toString).sorted.toSeq
-  val b = Retrieval.bm25TopKPrunedWith(ix, queries2, "query_id",
-    col("toks"), k = 10, bounds = Some(bounds), fullSeedTheta = true)
-    .collect().map(_.toString).sorted.toSeq
-  (a == b, a.size)
-}
-println(s"""{"bench":"bm25_zipf","parity_fullseed_multiband":${parity2._1},"rows":${parity2._2}}""")
 
 // result identity on this fixture too (sorted collect compare);
 // braces keep the chain one statement under spark-shell -I's
