@@ -507,4 +507,112 @@ class XlQuantizerSpec extends SparkSpec {
       children = Map(0L -> nanCents))
     Similarity.requireHierOver(tlqNan, nanCents) // must not throw
   }
+
+  test("quantizer edge cases: explicit expected values at K <= 64 and " +
+    "K > 64 for assignment, probe ranks, k-means, PQ encode and probe") {
+    import graft.operators.Similarity.{IvfIndex => _, _}
+    import org.apache.spark.sql.graftbridge.GraftBridge
+    // the shared fixture plus an exact tie: (1,0,0,1) scores 1.0
+    // against both centroid 0 and centroid 1
+    val edge = cands.unionByName(Seq((94L, Seq(Option(1.0d), Option(0.0d),
+      Option(0.0d), Option(1.0d)))).toDF("c_id", "c_vec"))
+    // K > 64: the same centroids plus 66 filler centroids pointing away
+    // from every fixture vector (ids after the real ones, so the scan
+    // order and every expected value stay the same)
+    def widen(cs: Seq[(Long, Seq[Double])]) = cs ++ (0 until 66).map(i =>
+      (100L + i, Seq(-1.0d - 0.01d * i, -1.0d, -1.0d, -1.0d)))
+    // k-means centroids by position: a dim-3 centroid at index 0 that
+    // would win row 0 if truncated, then three dim-4 ones
+    val d2Small: Seq[Seq[Double]] = Seq(Seq(1.0d, 0.0d, 0.0d),
+      Seq(1.0d, 0.0d, 0.0d, 0.0d), Seq(0.0d, 0.0d, 0.0d, 1.0d),
+      Seq(0.0d, 1.0d, 0.0d, 0.0d))
+    val d2Big = d2Small ++ (0 until 67).map(i =>
+      Seq(100.0d + i, 100.0d, 100.0d, 100.0d))
+    // PQ: 2 subspaces x 3 words, widened to 2 x 36 = 72 words
+    def widenBook(b: Array[Array[Seq[Double]]]) = b.map(ws =>
+      ws ++ (0 until 33).map(i => Seq(100.0d + i, 100.0d + i)))
+    val noZero = cents.filter(_._1 != 7L)
+    val regimes = Seq(
+      ("K<=64", cents, noZero, d2Small, book),
+      ("K>64", widen(cents), widen(noZero), d2Big, widenBook(book)))
+    regimes.foreach { case (regime, cs, csNz, d2cs, bk) =>
+      assert((regime == "K>64") == (cs.size > 64 && csNz.size > 64 &&
+        d2cs.size > 64 && bk.map(_.length).sum > 64), regime)
+      def assign(q: Seq[(Long, Seq[Double])]) =
+        asgMap(ivfAssignBroadcast(edge, q))
+      def ranks(q: Seq[(Long, Seq[Double])]) = {
+        val kernel = new graft.functions.CentroidRankKernel(
+          spark.sparkContext.broadcast((q.map(_._1).toArray,
+            q.map(_._2.toArray).toArray, q.map(c => math.sqrt(
+              c._2.foldLeft(0.0d)((a, x) => a + x * x))).toArray)))
+        edge.select(col("c_id"), GraftBridge.column(
+            graft.functions.CentroidRanks(
+              GraftBridge.expression(col("c_vec")), kernel, 3)))
+          .as[(Long, Seq[Long])].collect().toMap
+      }
+      val d2 = assignBroadcastD2(
+          edge.select(col("c_id").as("id"), col("c_vec").as("v")), d2cs)
+        .select("id", "cluster").as[(Long, Long)].collect().toMap
+      def codes(df: DataFrame) = df.select("c_id", "codes")
+        .as[(Long, Seq[Int])].collect().toMap
+      val pq = codes(pqEncodeBroadcast(edge, "c_id", "c_vec", bk))
+      def residual(q: Seq[(Long, Seq[Double])]) = codes(
+        ivfPqEncodeAssignedBroadcast(ivfAssignBroadcast(edge, q), q, bk,
+          residual = true))
+      def probed(q: Seq[(Long, Seq[Double])]) = {
+        val corpus = cands.filter(col("c_id") < 90L)
+        val idx = ivfIndexWithCentroids(corpus, "c_id", "c_vec", q,
+          persistIndex = false)
+        ivfTopKXL(idx, edge, "c_id", "c_vec", k = 3, nProbe = 2)
+          .select("q_id").as[Long].collect().toSet
+      }
+      val (asg, asgNz) = (assign(cs), assign(csNz))
+      val (rk, rkNz) = (ranks(cs), ranks(csNz))
+      val (res, resNz) = (residual(cs), residual(csNz))
+      val probes = probed(csNz)
+      // (case, observed, expected)
+      val table: Seq[(String, Any, Any)] = Seq(
+        ("clean rows take their own cluster", (asg(0L), asg(1L)), (0L, 1L)),
+        ("NaN element takes the first centroid (NaN sorts largest)",
+          asg(91L), 0L),
+        ("NaN element ranks id-ascending", rk(91L), Seq(0L, 1L, 2L)),
+        ("dim mismatch falls to the zero-norm centroid", asg(92L), 7L),
+        ("null element falls to the zero-norm centroid", asg(93L), 7L),
+        ("dim mismatch without a zero-norm centroid: sentinel",
+          asgNz(92L), -1L),
+        ("null element without a zero-norm centroid: sentinel",
+          asgNz(93L), -1L),
+        ("unplaceable vectors rank only the zero-norm centroid",
+          (rk(92L), rk(93L)), (Seq(7L), Seq(7L))),
+        ("unplaceable vectors without it rank nothing",
+          (rkNz(92L), rkNz(93L)), (Seq(), Seq())),
+        ("zero vector takes the first maximum", asg(90L), 0L),
+        ("zero vector ranks id-ascending", rk(90L), Seq(0L, 1L, 2L)),
+        ("exact tie goes to the smaller id", asg(94L), 0L),
+        ("exact tie ranks the smaller id first", rk(94L), Seq(0L, 1L, 2L)),
+        ("k-means: a wrong-dimension centroid is never chosen",
+          (d2(0L), d2(1L)), (1L, 2L)),
+        ("k-means: a dim-3 vector reaches only the dim-3 centroid",
+          d2(92L), 0L),
+        ("k-means: NaN or null element gets the sentinel",
+          (d2(91L), d2(93L)), (-1L, -1L)),
+        ("k-means: zero vector and exact tie take the first minimum",
+          (d2(90L), d2(94L)), (1L, 1L)),
+        ("PQ: short slice encodes -1", pq(92L), Seq(2, -1)),
+        ("PQ: null element encodes -1", pq(93L), Seq(-1, 1)),
+        ("PQ: NaN element never beats a codeword", pq(91L), Seq(-1, 1)),
+        ("PQ: zero vector takes the first minimum", pq(90L), Seq(0, 1)),
+        ("PQ residual: zip_with padding nulls the overhanging slice",
+          res(92L), Seq(2, -1)),
+        ("PQ residual: missed centroid encodes all -1",
+          resNz(92L), Seq(-1, -1)),
+        ("unplaceable probe queries get no list",
+          (probes(92L), probes(93L)), (false, false)),
+        ("placeable probe queries get a list",
+          (probes(0L), probes(90L), probes(91L)), (true, true, true)))
+      table.foreach { case (what, got, want) =>
+        assert(got == want, s"$regime: $what")
+      }
+    }
+  }
 }
