@@ -53,15 +53,13 @@ object RankKernel {
 }
 
 /** Serializable top-`nProbe`-centroid kernel over a TORRENT-BROADCAST
-  * quantizer — the streaming tense of the XL transports in
+  * quantizer — the row-local tense of the broadcast quantizer scans in
   * [[graft.operators.Similarity]]: the ingest door's semantic gate
   * must stay ROW-LOCAL (no object boundary, it composes with the one
-  * allowed stateful op), but its plan-literal form pays interpreted
-  * higher-order-lambda cost per centroid per row AND carries the
-  * matrix in the plan. This kernel is the third transport: a native
-  * codegen expression whose generated code calls ONE tight JVM
-  * method, with the quantizer behind a broadcast handle that
-  * serializes as bytes-sized task state.
+  * allowed stateful op), so this is a native codegen expression whose
+  * generated code calls ONE tight JVM method, with the quantizer
+  * behind a broadcast handle that serializes as bytes-sized task
+  * state.
   *
   * The kernel returns ALL probe ranks in one pass (an array of the
   * top-`nProbe` centroid ids): the door references `rank p` as a
@@ -72,9 +70,9 @@ object RankKernel {
   *
   * Both the interpreted `eval` and the generated code call the same
   * [[ranksOf]], so the two execution paths cannot diverge. Scoring
-  * and ordering are bit-identical to `centroidRankExpr` for vectors
-  * the quantizer can place: same index-order dot, same
-  * zero-norm-denominator-first 0.0, same SQL NaN-largest ordering
+  * and ordering are `ivfAssignBroadcast`'s, rank by rank: same
+  * index-order dot, same zero-norm-denominator-first 0.0, same SQL
+  * NaN-largest ordering
   * (shared [[graft.operators.Similarity.gtSqlDouble]] — one
   * definition, not a copy), same score-desc/id-asc selection (ids
   * must arrive sorted ascending, the `ivfIndex` contract).

@@ -13,11 +13,12 @@ import graft.sources.StagedTables
   * expressions with codegen; the remaining kernels are pure column
   * expressions (`transform`/`aggregate` folds). Either way they stay
   * inside whole-stage codegen; floats are widened to double BEFORE
-  * arithmetic so results are bit-stable and oracle-comparable. The one
-  * imperative exception is the fused Lloyd iterate in [[kmeans]] — an
-  * RDD `mapPartitions` + reduce pass per round whose arithmetic the
-  * `assignToCentroids` expression mirrors bit-for-bit (KMeansSpec pins
-  * the contract).
+  * arithmetic so results are bit-stable and oracle-comparable. The
+  * imperative exceptions are the quantizer scans — IVF list
+  * assignment and probe ranking, k-means assignment, PQ encode — which
+  * hold the centroid or codeword matrix behind a broadcast and score
+  * it in one JVM loop per row, and the fused Lloyd iterate in
+  * [[kmeans]] (an RDD `mapPartitions` + reduce pass per round).
   *
   * Scale notes:
   *  - brute-force top-k broadcasts the (small) query set against the
@@ -322,14 +323,10 @@ object Similarity {
   /** Build the IVF index: `nCentroids` centroids picked
     * deterministically (smallest xxhash64 of the id — a seeded uniform
     * sample, no Random), then every candidate assigned to its nearest
-    * centroid by a MAP-ONLY argmax fold over the literal centroid
-    * array — zero corpus exchange, same pattern as
-    * [[assignToCentroids]]. Ranking inside the fold is
-    * dot(v, centroid)/‖centroid‖: ordering-identical to cosine (the
-    * candidate's own norm is a positive constant across centroids);
-    * ties keep the smallest cent_id, matching the max_by form this
-    * replaces. In a real deployment `assigned` materializes as a table
-    * bucketed by cent_id, amortized over all queries.
+    * centroid by the MAP-ONLY [[ivfAssignBroadcast]] scan — zero
+    * corpus exchange, same shape as [[assignToCentroids]]. In a real
+    * deployment `assigned` materializes as a table bucketed by
+    * cent_id, amortized over all queries.
     *
     * SIZE `nCentroids` WITH THE CORPUS ([[suggestedNCentroids]]):
     * every downstream probe — [[ivfTopKWith]],
@@ -393,12 +390,8 @@ object Similarity {
         .orderBy(col("h"), col("c_id")).limit(nCentroids)
         .select(col("c_id"), col("c_vec"))
         .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-    val assigned0 = ivfAssign(cands, cents)
-    val assigned =
-      if (persistIndex) assigned0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else assigned0
-    IvfIndex(cents, assigned)
+    IvfIndex(cents, persisted(ivfAssignBroadcast(cands, cents),
+      persistIndex))
   }
 
   /** Build an [[IvfIndex]] under a caller-supplied FROZEN coarse
@@ -408,11 +401,9 @@ object Similarity {
     * centroids are an id-picked corpus subset (q_sim_ann_ivf's DuckDB
     * twin recomputes assignment + probe + in-list rerank from the
     * same explicit table). Assignment is the builds' shared
-    * [[ivfAssign]] projection (literal fold below
-    * [[LiteralQuantizerMax]], broadcast kernel above — bit-identical),
-    * so append/delete/restrict semantics are unchanged. Centroids are
-    * re-sorted by id, the [[ivfIndex]] invariant every probe's
-    * tie-break relies on. */
+    * [[ivfAssignBroadcast]] projection, so append/delete/restrict
+    * semantics are unchanged. Centroids are re-sorted by id, the
+    * [[ivfIndex]] invariant every probe's tie-break relies on. */
   def ivfIndexWithCentroids(candidates: DataFrame, idCol: String,
                             vecCol: String,
                             cents: Seq[(Long, Seq[Double])],
@@ -421,20 +412,25 @@ object Similarity {
       "ivfIndexWithCentroids needs at least one centroid")
     requireIntegralId(candidates, idCol, "ivfIndexWithCentroids")
     val sorted = cents.sortBy(_._1)
-    val assigned0 = ivfAssign(
+    IvfIndex(sorted, persisted(ivfAssignBroadcast(
       nonNullVecs(candidates, vecCol)
         .select(col(idCol).cast("long").as("c_id"),
-          toDouble(col(vecCol)).as("c_vec")), sorted)
-    val assigned =
-      if (persistIndex) assigned0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else assigned0
-    IvfIndex(sorted, assigned)
+          toDouble(col(vecCol)).as("c_vec")), sorted), persistIndex))
   }
 
+  /** The staged-index persist step every in-memory build shares:
+    * `persistIndex = false` trades recomputing the projection for each
+    * consumer against zero cache residue — the one-shot `*TopK` entry
+    * points take it so a throwaway index cannot leak until
+    * clearCache. */
+  private def persisted(df: DataFrame, persistIndex: Boolean): DataFrame =
+    if (persistIndex)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else df
+
   /** Contract shared by every operator keying on a Long id: ids must
-    * be integral (the centroid literal tables and IvfIndex.cents
-    * carry them as Long) — fail fast with a named requirement instead
+    * be integral (the centroid tables and IvfIndex.cents carry them
+    * as Long) — fail fast with a named requirement instead
     * of a silent `cast("long") = null` (non-ANSI cast semantics would
     * otherwise null out e.g. UUID string ids and make the rows vanish
     * from every probe without an error anywhere). */
@@ -443,74 +439,22 @@ object Similarity {
     Guards.requireIntegral(df.schema(idCol).dataType, opName,
       s"id ('$idCol')", "centroid tables are keyed by Long")
 
-  /** The IVF list assignment as a reusable map-only projection over a
-    * FROZEN centroid table: (c_id, c_vec) → (c_id, c_vec, cent_id).
-    * ONE definition shared by [[ivfIndex]] (build) and
-    * [[appendToIvfIndex]] (incremental refresh), so an appended
-    * vector can never land in a different list than a rebuild with
-    * the same quantizer would put it in. Above
-    * [[LiteralQuantizerMax]] centroids the literal form is replaced
-    * by the bit-identical [[ivfAssignBroadcast]] — same results,
-    * quantizer behind a broadcast instead of inside the plan. */
-  private def ivfAssign(cands: DataFrame,
-                        cents: Seq[(Long, Seq[Double])]): DataFrame =
-    if (cents.size > LiteralQuantizerMax) ivfAssignBroadcast(cands, cents)
-    else ivfAssignLiteral(cands, cents)
-
-  private[graft] def ivfAssignLiteral(cands: DataFrame,
-                        cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val ids = typedLit(cents.map(_._1))
-    val centsL = typedLit(cents.map(_._2))
-    // index-order driver sum — bit-identical to the graft_dot kernel
-    val norms = typedLit(cents.map(c =>
-      math.sqrt(c._2.foldLeft(0.0d)((a, x) => a + x * x))))
-    val zero = struct(lit(-1L).as("c"),
-      lit(Double.NegativeInfinity).as("s"))
-    // score once per centroid (native dot kernel), argmin-fold over
-    // the materialized structs — see assignLiteral on why not `when`
-    // over a recomputed score
-    val scored = transform(sequence(lit(0), lit(cents.size - 1)),
-      i => struct(element_at(ids, i + lit(1)).as("c"),
-        safeCosDiv(dot(col("c_vec"), element_at(centsL, i + lit(1))),
-          element_at(norms, i + lit(1))).as("s")))
-    val best = aggregate(scored, zero, (acc, x) =>
-      when(x.getField("s") > acc.getField("s"), x).otherwise(acc))
-    cands.withColumn("cent_id", best.getField("c"))
-  }
-
-  /** Largest coarse-quantizer the PLAN-LITERAL batch assignment
-    * carries before [[ivfAssign]] switches (bit-identically) to
-    * [[ivfAssignBroadcast]]. The boundary is MEASURED, not assumed:
-    * the literal form's `transform`+`aggregate` fold pays interpreted
-    * higher-order-lambda cost per centroid per row (plus a plan that
-    * serializes the matrix with every task closure), so it loses to
-    * the broadcast JVM loop well before the plan size itself hurts —
-    * 20k vecs × dim 64 assignment-only medians: K=16 0.51 s vs
-    * 0.25 s, K=64 0.74 vs 0.18, K=256 1.97 vs 0.21, K=1024 7.81 vs
-    * 0.36, K=4096 ~31 vs ~1 (docs/SCALE.md round 10). 64 keeps the
-    * expression form exercised at fixture scale — it is also the
-    * form the STREAMING door must use (row-local, no object
-    * boundary) — while every √N-sized real corpus takes the
-    * broadcast path. */
-  val LiteralQuantizerMax: Int = 64
-
-  /** Spark SQL's total order on doubles for the JVM twin of the
-    * assignment fold: NaN compares GREATER than every non-NaN value
-    * (and equal to itself), unlike the JVM's always-false `>`. A
-    * NaN-scored centroid therefore wins the fold in BOTH forms —
-    * bit-parity on corrupt vectors, not just clean ones. ONE
-    * definition shared with [[graft.functions.CentroidRankKernel]]
-    * (the semantics live here, not in per-kernel copies). */
+  /** Spark SQL's total order on doubles for the quantizer scans: NaN
+    * compares GREATER than every non-NaN value (and equal to itself),
+    * unlike the JVM's always-false `>`. A NaN-scored centroid
+    * therefore wins the scan, exactly as it would sort first in a
+    * SQL `ORDER BY score DESC`. ONE definition shared with
+    * [[graft.functions.CentroidRankKernel]] (the semantics live
+    * here, not in per-kernel copies). */
   private[graft] def gtSqlDouble(a: Double, b: Double): Boolean =
     if (java.lang.Double.isNaN(a)) !java.lang.Double.isNaN(b)
     else if (java.lang.Double.isNaN(b)) false
     else a > b
 
-  /** JVM twin of `graft_dot` against a (never-null) centroid: index-
+  /** `graft_dot` against a (never-null) centroid, on the JVM: index-
     * order summation; boxed null on a dim mismatch or a null element,
-    * exactly as the codegen kernel — so degenerate vectors lose every
-    * fold comparison and surface as the `cent_id = -1` sentinel in
-    * both forms. */
+    * exactly as the codegen kernel — so a degenerate vector scores no
+    * centroid and surfaces as the `cent_id = -1` sentinel. */
   private def dotOrNull(v: scala.collection.Seq[Any],
                         c: Array[Double]): java.lang.Double = {
     if (v.length != c.length) return null
@@ -527,10 +471,12 @@ object Similarity {
     java.lang.Double.valueOf(s)
   }
 
-  /** One centroid's score for one vector — the JVM twin of the
-    * literal fold's `safeCosDiv(dot(v, cent), ‖cent‖)` INCLUDING the
-    * degenerate branch: a zero-norm centroid scores 0.0 even against
-    * a null-dot vector (safeCosDiv tests the denominator first). */
+  /** One centroid's score for one vector: `safeCosDiv(dot(v, cent),
+    * ‖cent‖)` INCLUDING the degenerate branch — a zero-norm centroid
+    * scores 0.0 even against a null-dot vector (safeCosDiv tests the
+    * denominator first). dot/‖cent‖ ranks centroids exactly as
+    * cosine does: the vector's own norm is a positive constant across
+    * them. */
   private def centScoreOrNull(v: scala.collection.Seq[Any],
                               c: Array[Double],
                               norm: Double): java.lang.Double =
@@ -556,21 +502,23 @@ object Similarity {
     spark.sparkContext.broadcast((ids, mat, norms))
   }
 
-  /** [[ivfAssignLiteral]] with the quantizer BEHIND A BROADCAST — the
-    * large-K tense of the assignment, and the closing of the
-    * documented plan-literal boundary: at √N sizing a 10-billion-
-    * vector corpus needs ~10⁵ centroids, far past what a `typedLit`
-    * plan constant can carry, while a torrent broadcast of the same
-    * matrix is one executor-cached artifact.
+  /** The IVF list assignment over a FROZEN centroid table: (c_id,
+    * c_vec) → (c_id, c_vec, cent_id). ONE definition shared by every
+    * build, append and table append, so an appended vector can never
+    * land in a different list than a rebuild with the same quantizer
+    * would put it in. The quantizer rides a torrent broadcast, never
+    * the plan: at √N sizing a 10-billion-vector corpus needs ~10⁵
+    * centroids, and the broadcast is one executor-cached artifact.
     *
-    * Results are BIT-IDENTICAL to the literal fold (XlQuantizerSpec
-    * pins it): same index-order dot, same safeCosDiv zero-norm
-    * branch, same NULL-on-mismatch skip, same SQL NaN ordering, same
-    * first-max tie-break over the id-sorted centroid order (callers
-    * keep `cents` sorted by cent_id — [[ivfIndex]] does). Plan shape:
-    * ONE map-only `mapPartitions` projection — zero exchanges, zero
-    * joins, plan size independent of K (ScaleSpec asserts both).
-    * Requires `c_vec` as array<double> (the shared cands shape). */
+    * Contract (XlQuantizerSpec's edge-case table): each centroid
+    * scores [[centScoreOrNull]]; the highest score in Spark SQL's
+    * order wins ([[gtSqlDouble]] — a NaN score wins); ties keep the
+    * first centroid in `cents` order (callers keep `cents` sorted by
+    * cent_id — [[ivfIndex]] does); a vector that scores no centroid
+    * gets `cent_id = -1`. Plan shape: ONE map-only `mapPartitions`
+    * projection — zero exchanges, zero joins, plan size independent
+    * of K (ScaleSpec asserts both). Requires `c_vec` as array<double>
+    * (the shared cands shape). */
   def ivfAssignBroadcast(cands: DataFrame,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
     val spark = cands.sparkSession
@@ -598,29 +546,23 @@ object Similarity {
     }(enc)
   }
 
-  /** Query-side twin of [[ivfAssignBroadcast]]: [[ivfTopKWith]]'s
-    * probe ranking materializes queries × centroids rows through a
-    * window (fine while K is crossJoin-sized; Q·K rows at K ≈ 10⁵ is
-    * not) — this computes each query's top-`nProbe` centroid ids as
-    * ONE map-only projection over the broadcast quantizer, then runs
-    * the identical equi-join rerank. Probe selection matches the
-    * literal form's ordering (score desc, cent_id asc; dot/‖cent‖ is
-    * ordering-identical to cosine per query — the query's own norm is
-    * a positive per-row constant, and a zero-norm query degenerates
-    * to all-zero scores → id-ascending probes in both forms).
-    * XlQuantizerSpec pins result equality with the literal form. One
-    * scoped divergence: a query whose vector scores null against
-    * EVERY centroid (dim mismatch, null element) probes nothing here,
-    * while the literal window still ranks its all-null scores and
-    * probes the id-ascending lists — the empty probe is the more
-    * honest answer for a query the quantizer cannot place (the
-    * [[ivfAssignTwoLevel]] stance). */
-  def ivfTopKXL(index: IvfIndex, queries: DataFrame,
-                idCol: String, vecCol: String, k: Int,
-                nProbe: Int = 2): DataFrame = {
+  /** Query stage of IVF top-k against a prebuilt [[IvfIndex]]: each
+    * query probes its `nProbe` nearest centroid lists and
+    * exact-reranks only inside them. Probe selection is ONE map-only
+    * projection over the broadcast quantizer (never a queries ×
+    * centroids cross product): [[ivfAssignBroadcast]]'s scores and
+    * order, taken `nProbe` deep (score desc, cent_id asc; a zero-norm
+    * query scores 0.0 everywhere and probes the id-ascending lists).
+    * A query that scores null against EVERY centroid (dim mismatch,
+    * null element) probes nothing and is absent from the result —
+    * the honest answer for a query the quantizer cannot place (the
+    * [[ivfAssignTwoLevel]] stance). The list join is an equi-join on
+    * cent_id. `nProbe` past K probes every list. */
+  def ivfTopKWith(index: IvfIndex, queries: DataFrame,
+                  idCol: String, vecCol: String, k: Int,
+                  nProbe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
-    require(nProbe >= 1 && nProbe <= index.cents.size,
-      s"nProbe=$nProbe out of range [1, ${index.cents.size}]")
+    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     val bc = broadcastQuantizer(spark, index.cents)
     val qs = nonNullVecs(queries, vecCol)
       .select(col(idCol).as("q_id"), toDouble(col(vecCol)).as("q_vec"))
@@ -630,7 +572,7 @@ object Similarity {
         org.apache.spark.sql.types.LongType, containsNull = false),
       nullable = false)
     val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val np = nProbe
+    val np = math.min(nProbe, index.cents.size)
     val probed = qs.mapPartitions { rows =>
       val (ids, mat, norms) = bc.value
       rows.map { r =>
@@ -665,10 +607,10 @@ object Similarity {
     rerankProbes(index, probed, k)
   }
 
-  /** The exact-rerank tail shared by every probe-list transport
-    * (identical to ivfTopKWith's): explode each query's probe list,
-    * broadcast the query side into the cent_id equi-join against the
-    * assigned lists, exact cosine top-k per query. */
+  /** The exact-rerank tail shared by [[ivfTopKWith]] and
+    * [[ivfTopKHier]]: explode each query's probe list, broadcast the
+    * query side into the cent_id equi-join against the assigned
+    * lists, exact cosine top-k per query. */
   private def rerankProbes(index: IvfIndex, probed: DataFrame,
                            k: Int): DataFrame = {
     val probes = probed.select(col("q_id"), col("q_vec"),
@@ -683,16 +625,16 @@ object Similarity {
       .select(col("q_id"), col("rank"), col("c_id"), col("cos"))
   }
 
-  /** EXTREME-K tense of [[ivfTopKXL]]: probe selection routed through
-    * a [[TwoLevelQuantizer]] (ONE codegen
+  /** EXTREME-K tense of [[ivfTopKWith]]: probe selection routed
+    * through a [[TwoLevelQuantizer]] (ONE codegen
     * [[graft.functions.CentroidRanks]] call per query,
     * O(wProbe·√K·dim) instead of the flat O(K·dim) scan), then the
     * identical exact-rerank tail — the batch query stage's twin of
     * the streaming gate's hierarchical transport. Full `wProbe` is
-    * result-identical to [[ivfTopKXL]] (XlQuantizerSpec); narrow
+    * result-identical to [[ivfTopKWith]] (XlQuantizerSpec); narrow
     * `wProbe` trades boundary recall exactly as [[ivfAssignTwoLevel]]
     * documents. A query no super can score probes nothing and is
-    * absent from the result (the XL form's empty-probe stance). */
+    * absent from the result (the flat probe's empty-probe stance). */
   def ivfTopKHier(index: IvfIndex, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int,
                   tlq: TwoLevelQuantizer,
@@ -888,68 +830,29 @@ object Similarity {
     }(enc)
   }
 
-  /** The rank-th nearest centroid id for one vector, as a pure
-    * expression over the FROZEN centroid literal — the streaming-probe
-    * tense of [[ivfAssign]]: rank 1 is bit-identical to the build's
-    * assignment (same safeCosDiv(dot)/norm scoring, same
-    * smallest-cent_id tie-break), so an arriving vector probes exactly
-    * the list a rebuild would have put it in; ranks 2..n are the
-    * nProbe widening. Row-local — no join, no shuffle, composes with
-    * any downstream stateful op
-    * ([[graft.streaming.StreamingOps.semanticProbe]]). */
-  private[graft] def centroidRankExpr(vec: Column,
-                                      cents: Seq[(Long, Seq[Double])],
-                                      rank: Int): Column = {
-    require(rank >= 1 && rank <= cents.size,
-      s"centroid rank $rank out of range [1, ${cents.size}]")
-    val ids = typedLit(cents.map(_._1))
-    val centsL = typedLit(cents.map(_._2))
-    val norms = typedLit(cents.map(c =>
-      math.sqrt(c._2.foldLeft(0.0d)((a, x) => a + x * x))))
-    val scored = transform(sequence(lit(0), lit(cents.size - 1)),
-      i => struct(
-        safeCosDiv(dot(vec, element_at(centsL, i + lit(1))),
-          element_at(norms, i + lit(1))).as("s"),
-        element_at(ids, i + lit(1)).as("c")))
-    val sorted = array_sort(scored, (l, r) =>
-      when(l.getField("s") > r.getField("s"), lit(-1))
-        .when(l.getField("s") < r.getField("s"), lit(1))
-        .when(l.getField("c") < r.getField("c"), lit(-1))
-        .when(l.getField("c") > r.getField("c"), lit(1))
-        .otherwise(lit(0)))
-    element_at(sorted, rank).getField("c")
-  }
-
   /** Row-local top-`nProbe` centroid-id ARRAY for streaming
     * consumers ([[graft.streaming.StreamingOps.semanticProbe]]
-    * references rank p as `try_element_at(col, p)`). At
-    * ≤ [[LiteralQuantizerMax]] it is an array of the
-    * [[centroidRankExpr]] folds (plan-transparent,
-    * fixture-friendly); past it, ONE native codegen
-    * [[graft.functions.CentroidRanks]] kernel call — STILL row-local
-    * (no object boundary, composes with the door's single stateful
-    * op), scoring the K centroids ONCE per row for all probe ranks,
-    * tight JVM work instead of O(K·nProbe) interpreted lambdas, with
-    * the matrix behind a broadcast handle instead of inside the
-    * plan. Bit-identical ranks for vectors the quantizer can place
-    * (XlQuantizerSpec); an unplaceable vector yields a SHORT array
-    * from the kernel (missing ranks read as NULL downstream) where
-    * the fold's null-score sort is undefined — the door guards those
-    * upstream either way. */
+    * references rank p as `try_element_at(col, p)`): ONE native
+    * codegen [[graft.functions.CentroidRanks]] kernel call —
+    * row-local (no object boundary, composes with the door's single
+    * stateful op), scoring the K centroids ONCE per row for all probe
+    * ranks, with the matrix behind a broadcast handle instead of
+    * inside the plan. Rank 1 is [[ivfAssignBroadcast]]'s assignment
+    * (same scores, same SQL order, same smallest-cent_id tie-break),
+    * so an arriving vector probes exactly the list a rebuild would
+    * have put it in; ranks 2..n are the nProbe widening. A vector
+    * the quantizer cannot place yields a SHORT array (missing ranks
+    * read as NULL downstream). */
   def centroidRanks(vec: Column,
                                    cents: Seq[(Long, Seq[Double])],
-                                   nProbe: Int): Column =
-    if (cents.size <= LiteralQuantizerMax)
-      array((1 to nProbe).map(p => centroidRankExpr(vec, cents, p)): _*)
-    else {
-      val kernel = new graft.functions.CentroidRankKernel(
-        broadcastQuantizer(
-          org.apache.spark.sql.SparkSession.active, cents))
-      org.apache.spark.sql.graftbridge.GraftBridge.column(
-        graft.functions.CentroidRanks(
-          org.apache.spark.sql.graftbridge.GraftBridge.expression(vec),
-          kernel, nProbe))
-    }
+                                   nProbe: Int): Column = {
+    val kernel = new graft.functions.CentroidRankKernel(
+      broadcastQuantizer(org.apache.spark.sql.SparkSession.active, cents))
+    org.apache.spark.sql.graftbridge.GraftBridge.column(
+      graft.functions.CentroidRanks(
+        org.apache.spark.sql.graftbridge.GraftBridge.expression(vec),
+        kernel, nProbe))
+  }
 
   /** EXTREME-K tense of [[centroidRanks]]: the same row-local
     * top-`nProbe` centroid-id ARRAY, but routed through a
@@ -974,57 +877,6 @@ object Similarity {
       graft.functions.CentroidRanks(
         org.apache.spark.sql.graftbridge.GraftBridge.expression(vec),
         kernel, nProbe))
-  }
-
-  /** Query stage of IVF top-k against a prebuilt [[IvfIndex]]: each
-    * query probes its `nProbe` nearest centroid lists and
-    * exact-reranks only inside them. The probe ranking runs over
-    * queries × centroids — the SMALL side — and the list join is an
-    * equi-join on cent_id. */
-  def ivfTopKWith(index: IvfIndex, queries: DataFrame,
-                  idCol: String, vecCol: String, k: Int,
-                  nProbe: Int = 2): DataFrame = {
-    // the window form always capped nProbe at K silently (rn <= n
-    // keeps at most K lists); clamp BEFORE dispatching so the XL
-    // branch — whose kernel validates its range — behaves identically
-    // across the boundary (a recall sweep crossing K must not start
-    // throwing only on big indexes). Both bounds: nProbe < 1 would
-    // return empty on the literal side but throw in the XL kernel.
-    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    val np = math.min(nProbe, index.cents.size)
-    // past the literal boundary the probe ranking's queries×centroids
-    // crossJoin is the catastrophic shape (Q·10⁵ rows through a
-    // window) — auto-switch to the result-equal broadcast projection,
-    // the same dispatch [[ivfAssign]] applies on the build side
-    if (index.cents.size > LiteralQuantizerMax)
-      ivfTopKXL(index, queries, idCol, vecCol, k, np)
-    else ivfTopKLiteral(index, queries, idCol, vecCol, k, np)
-  }
-
-  private[graft] def ivfTopKLiteral(index: IvfIndex, queries: DataFrame,
-                  idCol: String, vecCol: String, k: Int,
-                  nProbe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cents = broadcast(index.cents.toDF("cent_id", "cent_vec"))
-    val qs = nonNullVecs(queries, vecCol)
-      .select(col(idCol).as("q_id"),
-        toDouble(col(vecCol)).as("q_vec"))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("qd").desc, col("cent_id").asc)
-    val probes = qs.crossJoin(cents)
-      .withColumn("qd", cosine(col("q_vec"), col("cent_vec")))
-      .withColumn("rn", row_number().over(wq)).filter(col("rn") <= nProbe)
-      .select(col("q_id"), col("q_vec"), col("cent_id"))
-    // exact rerank inside probed lists
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id").asc)
-    broadcast(probes).join(index.assigned, "cent_id")
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("c_id"), col("cos"))
   }
 
   /** IVF (inverted-file) approximate top-k — the other standard ANN
@@ -1109,25 +961,29 @@ object Similarity {
     * sort-shuffling every (vector, bucket) row. */
   def lshIndex(candidates: DataFrame, idCol: String, vecCol: String,
                nPlanes: Int = 6, bucketCap: Int = 2000,
-               persistIndex: Boolean = true): LshIndex = {
-    val cb0 = nonNullVecs(candidates, vecCol)
+               persistIndex: Boolean = true): LshIndex =
+    lshBuild(candidates, idCol, vecCol, nPlanes, Nil, bucketCap,
+      persistIndex)
+
+  /** The one LSH build both public tenses share: hash through
+    * [[lshHash]] (the index's own planes, or the seeded pseudo-random
+    * ones), persist, census the buckets once and broadcast-anti-join
+    * the over-cap ones away. */
+  private def lshBuild(candidates: DataFrame, idCol: String,
+                       vecCol: String, nPlanes: Int,
+                       planes: Seq[Seq[Double]], bucketCap: Int,
+                       persistIndex: Boolean): LshIndex = {
+    val cb = persisted(nonNullVecs(candidates, vecCol)
       .select(col(idCol).as("c_id"),
         toDouble(col(vecCol)).as("c_vec"))
-      .withColumn("bucket", lshBucket(col("c_vec"), nPlanes))
-    // persistIndex = false trades re-running the nPlanes kernel for
-    // the census consumer against zero cache residue — the one-shot
-    // [[lshTopK]] takes it so a throwaway index can't leak until
-    // clearCache (same stance as ivfTopK/pqTopK)
-    val cb =
-      if (persistIndex) cb0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else cb0
+      .withColumn("bucket", lshHash(col("c_vec"), nPlanes, planes)),
+      persistIndex)
     val hotBuckets = cb.groupBy(col("bucket"))
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") > bucketCap).select("bucket")
     LshIndex(nPlanes,
       cb.join(broadcast(hotBuckets), Seq("bucket"), "left_anti"),
-      hotBuckets)
+      hotBuckets, planes)
   }
 
   /** Build an [[LshIndex]] under CALLER-SUPPLIED hyperplanes — the
@@ -1144,20 +1000,8 @@ object Similarity {
                          persistIndex: Boolean = true): LshIndex = {
     require(planes.nonEmpty,
       "lshIndexWithPlanes needs at least one hyperplane")
-    val cb0 = nonNullVecs(candidates, vecCol)
-      .select(col(idCol).as("c_id"),
-        toDouble(col(vecCol)).as("c_vec"))
-      .withColumn("bucket", lshBucketWithPlanes(col("c_vec"), planes))
-    val cb =
-      if (persistIndex) cb0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else cb0
-    val hotBuckets = cb.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > bucketCap).select("bucket")
-    LshIndex(planes.size,
-      cb.join(broadcast(hotBuckets), Seq("bucket"), "left_anti"),
-      hotBuckets, planes)
+    lshBuild(candidates, idCol, vecCol, planes.size, planes, bucketCap,
+      persistIndex)
   }
 
   /** Query stage of LSH top-k against a prebuilt [[LshIndex]]:
@@ -1194,59 +1038,29 @@ object Similarity {
         persistIndex = false),
       queries, idCol, vecCol, k)
 
-  /** Map-only nearest-centroid assignment: an argmin fold over the
-    * LITERAL centroid array (the same pattern as [[pqEncode]]). The
-    * centroid table is driver state (k·dim doubles) and rides into
-    * the plan as ONE literal, so assignment is a pure projection —
-    * the corpus is scanned once and NEVER shuffled. d2 is the same
-    * index-order zip_with fold as the crossJoin+max_by form this
-    * replaces, so assignments are bit-identical to it; ties keep the
-    * smallest centroid id (strict `<` scanning ids in order).
-    * `cents(i)` is the centroid of cluster id `i`.
-    * Output: (id, v, cluster, d2).
+  /** Map-only nearest-centroid assignment with the centroid table
+    * behind a broadcast ([[assignBroadcastD2]]) — the corpus is
+    * scanned once and NEVER shuffled. `cents(i)` is the centroid of
+    * cluster id `i`. Output: (id, v, cluster, d2).
     */
   def assignToCentroids(vecs: DataFrame, idCol: String, vecCol: String,
                         cents: Seq[Seq[Double]]): DataFrame = {
     requireIntegralId(vecs, idCol, "assignToCentroids")
-    assignDispatch(nonNullVecs(vecs, vecCol)
+    assignBroadcastD2(nonNullVecs(vecs, vecCol)
       .select(col(idCol).cast("long").as("id"),
         toDouble(col(vecCol)).as("v")), cents)
   }
 
-  private[graft] def assignLiteral(v: DataFrame,
-                            cents: Seq[Seq[Double]]): DataFrame = {
-    require(cents.nonEmpty, "assignLiteral needs at least one centroid")
-    val centsL = typedLit(cents.map(_.toSeq))
-    val zero = struct(lit(-1L).as("c"), lit(Double.MaxValue).as("d2"))
-    // score ONCE per centroid via transform (a `when` whose condition
-    // and branch both reference the d2 subtree would evaluate it
-    // twice — HOFs get no common-subexpression elimination), then
-    // fold an argmin over the materialized (c, d2) structs
-    val scored = transform(sequence(lit(0), lit(cents.size - 1)),
-      i => struct(i.cast("long").as("c"),
-        sqDist(col("v"), element_at(centsL, i + lit(1))).as("d2")))
-    val best = aggregate(scored, zero, (acc, x) =>
-      when(x.getField("d2") < acc.getField("d2"), x).otherwise(acc))
-    // two-step projection: `best` is expensive and read twice, and
-    // CollapseProject keeps non-cheap multiply-referenced aliases in
-    // their own projection, so the fold runs once per row
-    v.select(col("id"), col("v"), best.as("best"))
-      .select(col("id"), col("v"), col("best.c").as("cluster"),
-        col("best.d2").as("d2"))
-  }
-
-  /** [[assignLiteral]] with the centroid table BEHIND A BROADCAST —
-    * the d2 (k-means) twin of [[ivfAssignBroadcast]], closing the
-    * LAST literal model-fold in the ANN family: `trainCoarse`
-    * rebuilds at AutoCentroids sizing run the final k-means
-    * assignment at K > [[LiteralQuantizerMax]], where the literal
-    * form pays the measured interpreted-HOF cost. Bit-identical
-    * (XlQuantizerSpec): same index-order (x−c)² sum, same NULL on
-    * dim mismatch / null element (the skipped centroid), same
-    * strict-< first-min tie-break over ascending cluster ids, same
-    * (−1, Double.MaxValue) fallback for a vector no centroid can
-    * score. [[assignToCentroids]] and the [[kmeans]] final
-    * assignment dispatch on K automatically. */
+  /** The d2 (k-means) assignment over (id, v) with the centroid table
+    * behind a broadcast — the shape of [[ivfAssignBroadcast]]: ONE
+    * map-only `mapPartitions` projection. Contract (XlQuantizerSpec's
+    * edge-case table, KMeansSpec): d2 is the index-order (x−c)² sum,
+    * the fused Lloyd iterate's arithmetic; a centroid of another
+    * dimension, or any centroid against a vector with a null element,
+    * is skipped; strict `<` keeps the first minimum over ascending
+    * cluster ids, so a NaN d2 never wins; a vector no centroid can
+    * score gets (−1, Double.MaxValue). Used by [[assignToCentroids]]
+    * and the [[kmeans]] final assignment. */
   private[graft] def assignBroadcastD2(v: DataFrame,
       cents: Seq[Seq[Double]]): DataFrame = {
     require(cents.nonEmpty, "assignBroadcastD2 needs at least one centroid")
@@ -1300,11 +1114,6 @@ object Similarity {
     }(enc)
   }
 
-  private def assignDispatch(v: DataFrame,
-                             cents: Seq[Seq[Double]]): DataFrame =
-    if (cents.size > LiteralQuantizerMax) assignBroadcastD2(v, cents)
-    else assignLiteral(v, cents)
-
   /** Per-round k-means convergence evidence: inertia (Σ d2 of the
     * round's assignment, exact decimal sum) and the max centroid
     * displacement of the round's update. */
@@ -1336,8 +1145,8 @@ object Similarity {
     * small scale and buy nothing at large scale. Driver state stays
     * O(k·dim): the centroid table, independent of corpus size.
     *
-    * The final returned assignment IS the Catalyst literal-argmin
-    * projection (map-only, codegen-friendly, plan-assertable).
+    * The final returned assignment is [[assignBroadcastD2]] under the
+    * final centroids (map-only, plan-assertable).
     *
     * Seeding is deterministic farthest-first (k-center) over a
     * bounded uniform sample: the `sampleSize` smallest-xxhash64(id)
@@ -1355,8 +1164,8 @@ object Similarity {
     * DECIMAL(38,0)) — a plain double sum would vary with partition
     * merge order, drifting centroids by ulps and flipping borderline
     * assignments between runs/retries. Lineage stays flat: every
-    * round re-derives from the persisted input and a LITERAL
-    * centroid table, so no checkpointing is needed.
+    * round re-derives from the persisted input and a freshly
+    * broadcast centroid table, so no checkpointing is needed.
     */
   def kmeans(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
              maxIter: Int = 10, tol: Double = 1e-6,
@@ -1411,7 +1220,7 @@ object Similarity {
     // cents(i) = centroid of cluster id i
     var cents: Array[Seq[Double]] = seeds.toArray
 
-    def assign(): DataFrame = assignDispatch(v, cents.toSeq)
+    def assign(): DataFrame = assignBroadcastD2(v, cents.toSeq)
 
     // built ONCE over the persisted corpus and reused every round —
     // no per-round Catalyst planning, the rounds are plain jobs
@@ -1419,13 +1228,12 @@ object Similarity {
     val vecRdd = v.as[(Long, Seq[Double])].rdd.map(_._2.toArray)
 
     // One fused assignment+update pass. Exactness contract (what makes
-    // results independent of partitioning and merge order, matching
-    // the Catalyst form bit for bit): per-element micro-unit longs
+    // results independent of partitioning and merge order): per-element micro-unit longs
     // `floor(x*1e6 + 0.5)` summed per partition (no overflow: a
     // partition's row count × 1e7 ≪ 2^63), merged as BigInt; per-row
     // d2 rounded HALF_UP to 6 dp exactly like CAST(d2 AS
     // DECIMAL(30,6)) and summed in BigDecimal; the argmin scans
-    // centroid ids in order with strict <, the [[assignLiteral]]
+    // centroid ids in order with strict <, the [[assignBroadcastD2]]
     // tiebreak.
     def iterate(): (Array[Long], Array[Array[BigInt]],
         java.math.BigDecimal) = {
@@ -1594,79 +1402,33 @@ object Similarity {
   }
 
   /** The trained codebook as ONE 3-level literal column
-    * (m × ksub × sub). The previous form unrolled a typedLit + fold
-    * PER CODEWORD — m·ksub separate expression trees whose analysis/
-    * codegen constant cost dominated the sf0.1 bench entry (r4
-    * finding #4); a single literal keeps the tree size independent of
-    * m·ksub. */
+    * (m × ksub × sub) for the per-query lookup table
+    * ([[pqLutExpr]]): one literal keeps the expression tree size
+    * independent of m·ksub, and the LUT is built on the small
+    * broadcast query side only. */
   private def codebookLit(codebook: Array[Array[Seq[Double]]]): Column =
     typedLit(codebook.map(_.map(_.toSeq).toSeq).toSeq)
 
   /** Encode every vector into its `m` nearest-codeword ids + exact
-    * norm: a map-only projection over the literal codebook — the
-    * corpus is scanned once and never shuffled. The per-subspace
-    * argmin is a fold over code ids with the same index-order d2
-    * arithmetic as before (strict < keeps the SMALLEST code id on
-    * ties). Output: (c_id, codes array<int>, c_norm).
+    * norm ([[pqCodesBroadcast]]): a map-only projection with the
+    * codebook behind a broadcast — the corpus is scanned once and
+    * never shuffled. Output: (c_id, codes array<int>, c_norm).
     */
   def pqEncode(vecs: DataFrame, idCol: String, vecCol: String,
                codebook: Array[Array[Seq[Double]]]): DataFrame = {
     require(codebook.nonEmpty && codebook(0).nonEmpty,
       "pqEncode: codebook must have at least one subspace with one codeword")
-    if (codebook.length * codebook(0).length > CodebookLiteralMax)
-      pqCodesBroadcast(
-        nonNullVecs(vecs, vecCol).select(col(idCol).as("c_id"),
-          toDouble(col(vecCol)).as("c_vec")),
-        codebook, cents = None)
-    else {
-      val v = toDouble(col(vecCol))
-      nonNullVecs(vecs, vecCol).select(col(idCol).as("c_id"),
-        pqCodesExpr(v, codebook).as("codes"),
-        sqrt(normSq(v)).as("c_norm"))
-    }
-  }
-
-  /** [[pqEncode]] forced onto the plan-literal expression form —
-    * the parity seam for XlQuantizerSpec (and any caller pinning a
-    * fixture to the expression transport). */
-  def pqEncodeLiteral(vecs: DataFrame, idCol: String,
-      vecCol: String, codebook: Array[Array[Seq[Double]]]): DataFrame = {
-    val v = toDouble(col(vecCol))
-    nonNullVecs(vecs, vecCol).select(col(idCol).as("c_id"),
-      pqCodesExpr(v, codebook).as("codes"),
-      sqrt(normSq(v)).as("c_norm"))
-  }
-
-  /** [[pqEncode]] forced onto the broadcast transport — the other
-    * half of the parity seam. */
-  def pqEncodeBroadcast(vecs: DataFrame, idCol: String,
-      vecCol: String, codebook: Array[Array[Seq[Double]]]): DataFrame =
     pqCodesBroadcast(
       nonNullVecs(vecs, vecCol).select(col(idCol).as("c_id"),
         toDouble(col(vecCol)).as("c_vec")),
       codebook, cents = None)
+  }
 
-  /** Largest codebook (m·ksub codewords) the PLAN-LITERAL encode
-    * carries before [[pqEncode]] / the IVF+PQ encode switch
-    * (bit-identically) to [[pqCodesBroadcast]] — the same measured
-    * boundary as [[LiteralQuantizerMax]]: the literal form's nested
-    * `transform`+`aggregate` folds pay interpreted
-    * higher-order-lambda cost per codeword per row, so FAISS-sized
-    * codebooks (m=64, ksub=256 → 16k codewords/row) are only viable
-    * through the broadcast JVM loop. Measured (20k vecs × dim 64,
-    * encode-only medians): 128 words 1.30 s literal vs 0.27
-    * broadcast, 512 words 3.29 vs 0.23, 4096 words 23.3 vs 0.26 —
-    * the default m=8×ksub=16 config already sits past the crossover,
-    * so 64 routes it (and everything bigger) to the broadcast loop
-    * while the small spec fixtures keep the expression form. */
-  val CodebookLiteralMax: Int = 64
-
-  /** JVM twin of `graft_sqdist` over a boxed (null-preserving) slice
+  /** `graft_sqdist` on the JVM over a boxed (null-preserving) slice
     * of the encode vector vs a (never-null) codeword: index-order
     * summation, boxed null on a short/overhanging slice or a null
-    * element — exactly the `slice` + kernel NULL semantics of the
-    * literal fold, so degenerate vectors produce the same `-1` codes
-    * in both forms. */
+    * element — so a degenerate slice scores no codeword and encodes
+    * as `-1`. */
   private def sliceSqDistOrNull(arr: Array[java.lang.Double],
                                 start: Int,
                                 w: Array[Double]): java.lang.Double = {
@@ -1683,19 +1445,19 @@ object Similarity {
     java.lang.Double.valueOf(s)
   }
 
-  /** [[pqCodesExpr]] + norm with the codebook (and, for the residual
-    * path, the coarse centroids) BEHIND A BROADCAST — the PQ tense of
-    * [[ivfAssignBroadcast]], closing the same two boundaries at once:
-    * plan size (the codebook literal is re-serialized with every task
-    * closure) and the interpreted per-codeword lambda cost that makes
-    * FAISS-sized codebooks infeasible as expressions. Bit-identical
-    * to the literal forms (XlQuantizerSpec): same index-order d2,
-    * same strict-< smallest-code tie-break, same NULL semantics —
-    * short/ragged vectors and null elements yield `-1` codes, and the
-    * residual path replicates `zip_with`'s null-padding (residual
-    * length = max of the two, missing side → null element) plus the
-    * null-vector result of a missed centroid lookup (cent_id = -1 →
-    * all codes -1).
+  /** The PQ code array + norm with the codebook (and, for the
+    * residual path, the coarse centroids) BEHIND A BROADCAST — the PQ
+    * tense of [[ivfAssignBroadcast]]: nothing in the plan, one tight
+    * JVM loop per row, so FAISS-sized codebooks (m=64 × ksub=256)
+    * encode at JVM speed. Contract (XlQuantizerSpec's edge-case
+    * table): per subspace, the index-order d2 against each codeword
+    * (the `graft_sqdist` arithmetic); strict `<` keeps the smallest
+    * code id on ties, so a NaN d2 never wins; a short/ragged slice or
+    * a null element encodes `-1`. The residual path is `v − cent`
+    * with `zip_with`'s null-padding (residual length = max of the
+    * two, missing side → null element), and a missed centroid lookup
+    * (cent_id = -1) is a null residual → all codes -1 — the shape
+    * [[residualExpr]] gives codebook training.
     *
     * Input: any frame with `c_vec` (+ `cent_id` when `cents` is
     * given, the residual path). Output: input columns minus `c_vec`,
@@ -1799,34 +1561,6 @@ object Similarity {
     }(enc)
   }
 
-  /** The per-vector PQ code array as one expression over a double
-    * vector column: per-subspace argmin over the literal codebook.
-    * Shared by [[pqEncode]] and the composed [[ivfPqIndex]] so both
-    * produce byte-identical codes; above [[CodebookLiteralMax]]
-    * codewords both switch to the bit-identical
-    * [[pqCodesBroadcast]]. */
-  private def pqCodesExpr(v: Column,
-                          codebook: Array[Array[Seq[Double]]]): Column = {
-    val m = codebook.length
-    val ksub = codebook(0).length
-    val sub = codebook(0)(0).length
-    val cb = codebookLit(codebook)
-    val zero = struct(lit(-1).as("c"), lit(Double.MaxValue).as("d2"))
-    // score once per codeword, argmin-fold over the materialized
-    // structs — see assignLiteral on why not `when` over a recomputed
-    // distance
-    transform(sequence(lit(0), lit(m - 1)), s => {
-      val subv = slice(v, s * lit(sub) + lit(1), lit(sub))
-      val words = element_at(cb, s + lit(1))
-      val scored = transform(sequence(lit(0), lit(ksub - 1)),
-        ci => struct(ci.as("c"),
-          sqDist(subv, element_at(words, ci + lit(1))).as("d2")))
-      aggregate(scored, zero, (acc, x) =>
-        when(x.getField("d2") < acc.getField("d2"), x).otherwise(acc))
-        .getField("c")
-    })
-  }
-
   /** Per-query ADC lookup table over a double vector column:
     * lut[s][c] = dot(query_sub_s, codeword_sc) — m·ksub short dot
     * products built on the SMALL broadcast query side from the single
@@ -1858,12 +1592,8 @@ object Similarity {
               persistIndex: Boolean = true): PqIndex = {
     val codebook = pqTrain(candidates, idCol, vecCol, m, ksub, maxIter,
       trainSize)
-    val encoded0 = pqEncode(candidates, idCol, vecCol, codebook)
-    val encoded =
-      if (persistIndex) encoded0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else encoded0
-    PqIndex(codebook, encoded)
+    PqIndex(codebook, persisted(
+      pqEncode(candidates, idCol, vecCol, codebook), persistIndex))
   }
 
   /** PQ asymmetric-distance (ADC) approximate top-k against a
@@ -1903,7 +1633,7 @@ object Similarity {
     * the (query, candidate) pair frame, keep the `rerank`-deep
     * per-query shortlist, exact-rerank it against the raw vectors —
     * ONE definition so the two ANN paths cannot diverge in ranking or
-    * tie-break semantics (the stance [[pqCodesExpr]] takes for codes).
+    * tie-break semantics.
     * `pairs` must carry (q_id, q_vec, q_norm, lut, c_id, codes,
     * c_norm, adc_base) — `adc_base` is the score term the codes do
     * not cover: 0 for plain PQ, dot(query, centroid) for residual
@@ -1957,9 +1687,9 @@ object Similarity {
     * [[ivfIndex]] and [[pqIndex]] — the centroid table (bounded driver
     * state) and the trained codebook — and the composed corpus table
     * (c_id, cent_id, codes, c_norm) comes from ONE map-only projection:
-    * list assignment is [[ivfIndex]]'s literal-centroid argmax fold,
-    * code assignment [[pqEncode]]'s literal-codebook argmin fold, so
-    * the corpus is scanned once and never shuffled at build time.
+    * list assignment is [[ivfIndex]]'s [[ivfAssignBroadcast]], code
+    * assignment [[pqEncode]]'s [[pqCodesBroadcast]], so the corpus is
+    * scanned once and never shuffled at build time.
     *
     * `residual = true` (FAISS's IVFADC form) trains and encodes the
     * RESIDUAL v − centroid(v) instead of the raw vector; the score
@@ -2011,13 +1741,8 @@ object Similarity {
       else
         pqTrain(candidates, idCol, vecCol, m, ksub, maxIter, trainSize)
     // codes + exact corpus norm ride one projection: one corpus scan
-    val encoded0 = ivfPqEncodeAssigned(ivf.assigned, ivf.cents,
-      codebook, residual)
-    val encoded =
-      if (persistIndex) encoded0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else encoded0
-    IvfPqIndex(ivf.cents, codebook, encoded, residual)
+    IvfPqIndex(ivf.cents, codebook, persisted(ivfPqEncodeAssigned(
+      ivf.assigned, ivf.cents, codebook, residual), persistIndex), residual)
   }
 
   /** The IVF+PQ encode projection over an ALREADY-ASSIGNED frame —
@@ -2025,46 +1750,17 @@ object Similarity {
     * [[appendToIvfPqIndex]] (incremental refresh), so appended codes
     * are byte-identical to what a rebuild with the same quantizers
     * would produce. */
-  private def ivfPqEncodeAssigned(assigned: DataFrame,
+  private[graft] def ivfPqEncodeAssigned(assigned: DataFrame,
                                   cents: Seq[(Long, Seq[Double])],
                                   codebook: Array[Array[Seq[Double]]],
                                   residual: Boolean): DataFrame = {
     require(codebook.nonEmpty && codebook(0).nonEmpty,
       "ivfPqEncodeAssigned: codebook must have at least one subspace " +
         "with one codeword")
-    if (codebook.length * codebook(0).length > CodebookLiteralMax)
-      pqCodesBroadcast(
-        assigned.select(col("c_id"), col("cent_id"), col("c_vec")),
-        codebook, cents = if (residual) Some(cents) else None)
-    else {
-      val encCol = if (residual) residualExpr(cents) else col("c_vec")
-      assigned.select(col("c_id"), col("cent_id"),
-        pqCodesExpr(encCol, codebook).as("codes"),
-        sqrt(normSq(col("c_vec"))).as("c_norm"))
-    }
-  }
-
-  /** The literal form of the composed encode — the parity seam for
-    * XlQuantizerSpec's residual-path comparison. */
-  private[graft] def ivfPqEncodeAssignedLiteral(assigned: DataFrame,
-      cents: Seq[(Long, Seq[Double])],
-      codebook: Array[Array[Seq[Double]]],
-      residual: Boolean): DataFrame = {
-    val encCol = if (residual) residualExpr(cents) else col("c_vec")
-    assigned.select(col("c_id"), col("cent_id"),
-      pqCodesExpr(encCol, codebook).as("codes"),
-      sqrt(normSq(col("c_vec"))).as("c_norm"))
-  }
-
-  /** The broadcast form of the composed encode — the other half of
-    * the parity seam. */
-  private[graft] def ivfPqEncodeAssignedBroadcast(assigned: DataFrame,
-      cents: Seq[(Long, Seq[Double])],
-      codebook: Array[Array[Seq[Double]]],
-      residual: Boolean): DataFrame =
     pqCodesBroadcast(
       assigned.select(col("c_id"), col("cent_id"), col("c_vec")),
       codebook, cents = if (residual) Some(cents) else None)
+  }
 
   /** v − cent(cent_id): THE residual definition, shared by codebook
     * training and (append-)encoding so the two cannot diverge. */
@@ -2072,38 +1768,20 @@ object Similarity {
     zip_with(col("c_vec"), centVecExpr(cents), (x, c) => x - c)
 
   /** Query stage of IVF+PQ: coarse-probe the `nProbe` nearest centroid
-    * lists (queries × centroids — the small side), ADC-score ONLY the
-    * probed lists via an equi-join on cent_id with the probe side
-    * broadcast (the encoded corpus is never exchanged), then
-    * exact-rerank the `rerank`-deep shortlist against the raw vectors
-    * (an equi-join touching |Q|·rerank rows). Same output shape as
-    * [[bruteForceTopK]], so [[recallAtK]] measures it directly. */
+    * lists ([[centroidRanks]] — one kernel call per query plus an
+    * explode, the [[ivfTopKWith]] probe order; an unplaceable query
+    * probes nothing), ADC-score ONLY the probed lists via an
+    * equi-join on cent_id with the probe side broadcast (the encoded
+    * corpus is never exchanged), then exact-rerank the `rerank`-deep
+    * shortlist against the raw vectors (an equi-join touching
+    * |Q|·rerank rows). The residual decomposition's base term
+    * `dot(q, cent)` is re-attached by a broadcast equi-join against
+    * the (small) centroid table. `nProbe` past K probes every list.
+    * Same output shape as [[bruteForceTopK]], so [[recallAtK]]
+    * measures it directly. */
   def ivfPqTopKWith(index: IvfPqIndex, queries: DataFrame,
                     candidates: DataFrame, idCol: String, vecCol: String,
-                    k: Int, nProbe: Int = 2, rerank: Int = 32): DataFrame =
-    ivfPqTopKImpl(index, queries, candidates, idCol, vecCol, k, nProbe,
-      rerank, xlProbe = index.cents.size > LiteralQuantizerMax)
-
-  /** [[ivfPqTopKWith]] with the coarse-probe transport pinned — the
-    * parity seam for XlQuantizerSpec. For queries the quantizer can
-    * place, the probes are the same (q_id, lists) set either way
-    * (centroid ranking is ordering-identical to the window form,
-    * XlQuantizerSpec pins result equality below AND above the
-    * boundary); an UNPLACEABLE query (null element / dim mismatch
-    * against every centroid) probes nothing in the XL form where the
-    * window form still ranks its all-null scores — the
-    * [[ivfTopKXL]] / [[ivfAssignTwoLevel]] documented stance. The XL
-    * form replaces the queries × centroids crossJoin-through-a-window
-    * with ONE kernel call per query plus an explode, with the
-    * residual decomposition's base term `dot(q, cent)` re-attached by
-    * a broadcast equi-join against the (small) centroid table instead
-    * of riding the cross product. nProbe is clamped at K (the window
-    * form's silent cap) so behavior cannot flip at the dispatch
-    * boundary. */
-  private[graft] def ivfPqTopKImpl(index: IvfPqIndex, queries: DataFrame,
-                    candidates: DataFrame, idCol: String, vecCol: String,
-                    k: Int, nProbe: Int, rerank: Int,
-                    xlProbe: Boolean): DataFrame = {
+                    k: Int, nProbe: Int = 2, rerank: Int = 32): DataFrame = {
     require(rerank >= k,
       s"rerank ($rerank) must be >= k ($k): the exact re-scoring can " +
         "only return rows from the ADC shortlist")
@@ -2112,46 +1790,27 @@ object Similarity {
     val spark = queries.sparkSession
     import spark.implicits._
     val qv = toDouble(col(vecCol))
-    val qs = nonNullVecs(queries, vecCol)
+    val exploded = nonNullVecs(queries, vecCol)
       .select(col(idCol).as("q_id"), qv.as("q_vec"),
         sqrt(normSq(qv)).as("q_norm"),
         pqLutExpr(qv, index.codebook).as("lut"))
-    // coarse probe: nProbe best lists per query. The raw dot(q, cent)
-    // rides along: it is the residual decomposition's base term
+      .withColumn("graft_cents",
+        centroidRanks(col("q_vec"), index.cents, np))
+      .select(col("q_id"), col("q_vec"), col("q_norm"), col("lut"),
+        explode(col("graft_cents")).as("cent_id"))
+    // the raw dot(q, cent) is the residual decomposition's base term
     // (0 when the index holds raw-vector codes)
     val probes =
-      if (!xlProbe) {
-        val cents = broadcast(index.cents.toDF("cent_id", "cent_vec"))
-        val wq = Window.partitionBy(col("q_id"))
-          .orderBy(col("qd").desc, col("cent_id").asc)
-        qs.crossJoin(cents)
-          .withColumn("qd", cosine(col("q_vec"), col("cent_vec")))
-          .withColumn("adc_base",
-            if (index.residual) dot(col("q_vec"), col("cent_vec"))
-            else lit(0.0d))
-          .withColumn("rn", row_number().over(wq))
-          .filter(col("rn") <= np)
-          .select(col("q_id"), col("q_vec"), col("q_norm"), col("lut"),
-            col("cent_id"), col("adc_base"))
-      } else {
-        val exploded = qs
-          .withColumn("graft_cents",
-            centroidRanks(col("q_vec"), index.cents, np))
-          .select(col("q_id"), col("q_vec"), col("q_norm"), col("lut"),
-            explode(col("graft_cents")).as("cent_id"))
-        val withBase =
-          if (index.residual)
-            exploded.join(
-                broadcast(index.cents.toDF("cent_id", "cent_vec")),
-                "cent_id")
-              .withColumn("adc_base", dot(col("q_vec"), col("cent_vec")))
-              .drop("cent_vec")
-          else exploded.withColumn("adc_base", lit(0.0d))
-        withBase.select(col("q_id"), col("q_vec"), col("q_norm"),
-          col("lut"), col("cent_id"), col("adc_base"))
-      }
+      if (index.residual)
+        exploded.join(
+            broadcast(index.cents.toDF("cent_id", "cent_vec")), "cent_id")
+          .withColumn("adc_base", dot(col("q_vec"), col("cent_vec")))
+          .drop("cent_vec")
+      else exploded.withColumn("adc_base", lit(0.0d))
     adcShortlistRerank(
-      broadcast(probes).join(index.encoded, "cent_id")
+      broadcast(probes.select(col("q_id"), col("q_vec"), col("q_norm"),
+          col("lut"), col("cent_id"), col("adc_base")))
+        .join(index.encoded, "cent_id")
         .filter(col("q_id") =!= col("c_id")),
       candidates, idCol, vecCol, k, rerank)
   }
@@ -2208,7 +1867,7 @@ object Similarity {
                        idCol: String, vecCol: String): IvfIndex = {
     requireIntegralId(newVecs, idCol, "appendToIvfIndex")
     IvfIndex(index.cents,
-      index.assigned.unionByName(ivfAssign(
+      index.assigned.unionByName(ivfAssignBroadcast(
         nonNullVecs(newVecs, vecCol).dropDuplicates(idCol)
           .select(col(idCol).cast("long").as("c_id"),
             toDouble(col(vecCol)).as("c_vec")), index.cents)))
@@ -2257,7 +1916,7 @@ object Similarity {
     requireIntegralId(newVecs, idCol, "appendToIvfPqIndex")
     IvfPqIndex(index.cents, index.codebook,
       index.encoded.unionByName(ivfPqEncodeAssigned(
-        ivfAssign(nonNullVecs(newVecs, vecCol).dropDuplicates(idCol)
+        ivfAssignBroadcast(nonNullVecs(newVecs, vecCol).dropDuplicates(idCol)
           .select(col(idCol).cast("long").as("c_id"),
             toDouble(col(vecCol)).as("c_vec")), index.cents),
         index.cents, index.codebook, index.residual)),
@@ -2615,7 +2274,7 @@ object Similarity {
     StagedTables.append(spark, ivfLayout(prefix), buckets, batchId,
       batch.select(col(idCol).cast("long").as("c_id")),
       "maintainIvfIndexTable") {
-      ivfAssign(
+      ivfAssignBroadcast(
         nonNullVecs(batch, vecCol).dropDuplicates(idCol)
           .select(col(idCol).cast("long").as("c_id"),
             toDouble(col(vecCol)).as("c_vec")),

@@ -52,6 +52,86 @@ object VectorQueries {
   : Seq[Seq[Double]] =
     explicitCents(s, emb).take(4).map(_._2)
 
+  /** Driver-side recompute of the quantizer contracts the parity
+    * verdicts check (the q_pca_project pattern): plain Scala over
+    * collected sample rows, sharing no code with Similarity's
+    * broadcast scans, so a transport fault cannot cancel itself out.
+    * Vectors are null-preserving (a null element is `null`); doubles
+    * compare in Spark SQL order (NaN largest). */
+  private object Recompute {
+    type Vec = IndexedSeq[java.lang.Double]
+
+    def vec(xs: scala.collection.Seq[Any]): Vec =
+      xs.map(x => if (x == null) null
+        else java.lang.Double.valueOf(x.asInstanceOf[Number].doubleValue()))
+        .toIndexedSeq
+
+    private def gt(a: Double, b: Double): Boolean =
+      if (a.isNaN) !b.isNaN else !b.isNaN && a > b
+
+    /** `a` sorts strictly before `b` under ORDER BY x DESC (NULLS
+      * LAST, NaN largest) */
+    def before(a: Option[Double], b: Option[Double]): Boolean =
+      (a, b) match {
+        case (Some(x), Some(y)) => gt(x, y)
+        case (Some(_), None)    => true
+        case _                  => false
+      }
+
+    /** index-order dot; None on a dim mismatch or a null element */
+    def dot(a: Vec, b: Seq[Double]): Option[Double] =
+      if (a.length != b.length || a.contains(null)) None
+      else Some(a.indices.foldLeft(0.0d)((s, i) => s + a(i) * b(i)))
+
+    private def norm(c: Seq[Double]) =
+      math.sqrt(c.foldLeft(0.0d)((s, x) => s + x * x))
+
+    /** top-`n` centroid ids by (dot/‖c‖ desc, id asc); a zero-norm
+      * centroid scores 0.0, an unscoreable one is skipped */
+    def ranks(v: Vec, cents: Seq[(Long, Seq[Double])], n: Int): Seq[Long] = {
+      val scored = cents.flatMap { case (id, c) =>
+        val nc = norm(c)
+        (if (nc == 0.0d) Some(0.0d) else dot(v, c).map(_ / nc))
+          .map(s => (id, s))
+      }
+      scored.sortWith { case ((ia, a), (ib, b)) =>
+        gt(a, b) || (!gt(b, a) && ia < ib) }.take(n).map(_._1)
+    }
+
+    /** cosine with safeCosDiv's zero-denominator 0.0; None = NULL */
+    def cosine(a: Vec, b: Vec): Option[Double] =
+      if (a.contains(null) || b.contains(null)) None
+      else {
+        val bd = b.map(_.doubleValue)
+        val d = norm(a.map(_.doubleValue)) * norm(bd)
+        if (d == 0.0d) Some(0.0d) else dot(a, bd).map(_ / d)
+      }
+
+    /** first-minimum index by index-order d2, or -1 */
+    def argminD2(v: Vec, cents: Seq[Seq[Double]]): Int = {
+      var best = -1
+      var bestD = Double.MaxValue
+      cents.indices.foreach { i =>
+        val c = cents(i)
+        if (c.length == v.length && !v.contains(null)) {
+          val d = c.indices.foldLeft(0.0d) { (s, j) =>
+            val x = v(j) - c(j); s + x * x }
+          if (d < bestD) { bestD = d; best = i }
+        }
+      }
+      best
+    }
+
+    /** PQ codes: per subspace, argminD2 over its codewords; a short
+      * slice or a null element encodes -1 */
+    def codes(v: Vec, book: Array[Array[Seq[Double]]]): Seq[Int] =
+      book.indices.map { s =>
+        val sub = book(s)(0).length
+        if (s * sub + sub > v.length) -1
+        else argminD2(v.slice(s * sub, s * sub + sub), book(s).toSeq)
+      }
+  }
+
   val queries: Map[String, QueryFn] = Map(
 
     "q_sim_cosine_topk" -> ((s, d) => {
@@ -290,9 +370,8 @@ object VectorQueries {
       // two-stage probe is then DuckDB-expressible: per-subspace
       // L2-argmin codes (ties → smallest code), the per-query LUT,
       // ADC = Σ lut[s][code_s] / (‖q‖·‖c‖), rerank-deep shortlist by
-      // (adc desc, c_id asc), exact cosine top-k. 128 codewords sit
-      // past CodebookLiteralMax, so this also exercises the broadcast
-      // encode transport on the oracle path. The TRAINED-codebook
+      // (adc desc, c_id asc), exact cosine top-k. The 128 codewords
+      // encode on the broadcast transport. The TRAINED-codebook
       // build stays covered by q_sim_ann_recall + xl_parity's encode
       // parity + SimilaritySpec.
       import s.implicits._
@@ -425,47 +504,40 @@ object VectorQueries {
     }),
 
     "q_sim_ann_xl_parity" -> ((s, d) => {
-      // XL-quantizer parity audit (round 10): the broadcast-transport
-      // assignment and probe forms must agree with the plan-literal
-      // forms EXACTLY (same math, different transport — the form the
-      // engine auto-switches to past LiteralQuantizerMax centroids,
-      // where √N sizing of a 10B-vector corpus lands), and the
-      // two-level hierarchy must clear its agreement floor. One-row
-      // verdict with a CONSTANT oracle — the *_precision audit shape:
-      // any transport divergence flips a diff counter, an empty
+      // Quantizer parity audit (round 10; re-pointed when the
+      // plan-literal folds were retired): the broadcast assignment,
+      // probe and PQ encode must agree EXACTLY with a driver-side
+      // recompute over collected rows ([[Recompute]] — the
+      // q_pca_project pattern), at √N sizing, and the two-level
+      // hierarchy at full wProbe must agree with the flat transports.
+      // One-row verdict with a CONSTANT oracle — the *_precision
+      // audit shape: any divergence flips a diff counter, an empty
       // corpus OR an empty compare sample flips checked_nonzero, so
       // it cannot pass vacuously.
+      import s.implicits._
       val emb = t(s, d, "embeddings").filter(col("embedding").isNotNull)
       val n = emb.count()
       val k = Similarity.suggestedNCentroids(n)
       val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", k)
       val cands = emb.select(col("vec_id").cast("long").as("c_id"),
         Similarity.toDouble(col("embedding")).as("c_vec"))
-      // assignment parity with BOTH transports pinned — comparing the
-      // index's own assignment against a broadcast recompute would go
-      // vacuous exactly where it matters (past LiteralQuantizerMax the
-      // build side IS the broadcast form; √N crosses 64 at the derived
-      // sf1 run, K≈448). The literal fold at XL K is the interpreted
-      // cost the dispatch exists to avoid, so the pinned compare runs
-      // on a deterministic id-spread sample (≤2048 rows — parity is
+      // the recomputes run on the driver, so they read a
+      // deterministic id-spread sample (≤2048 rows — parity is
       // per-row, so the sample is coverage, not an estimate); full
       // corpus wherever n ≤ 2048
       val samStep = math.max(1L, n / 2048L)
-      val sample = cands.filter(pmod(col("c_id"), lit(samStep)) === 0)
+      def inSample(c: String) = pmod(col(c).cast("long"), lit(samStep)) === 0
+      val sample = cands.filter(inSample("c_id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the non-vacuous guard must cover the SAMPLE, not just the
       // corpus: an id distribution that misses every residue-0 id
       // would zero the diffs with nothing compared
       val nSample = sample.count()
-      val exact = Similarity.ivfAssignBroadcast(sample, idx.cents)
-        .select(col("c_id"), col("cent_id").as("cent_bc"))
+      // the index build's own assignment of the sample rows
+      val exact = idx.assigned.filter(inSample("c_id"))
+        .select(col("c_id"), col("c_vec"), col("cent_id").as("cent_bc"))
       val q = emb.filter(col("vec_id") < nQueries)
-      // transport-pinned forms on BOTH sides here too: ivfTopKWith
-      // auto-dispatches to XL past the literal boundary (the sf1-scale
-      // run), where comparing it against ivfTopKXL would be vacuous
-      val lit3 = Similarity.ivfTopKLiteral(idx, q, "vec_id",
-        "embedding", 3, nProbe = 4).select("q_id", "rank", "c_id")
-      val xl3 = Similarity.ivfTopKXL(idx, q, "vec_id", "embedding",
+      val xl3 = Similarity.ivfTopKWith(idx, q, "vec_id", "embedding",
         3, nProbe = 4).select("q_id", "rank", "c_id")
       // two-level contract checkable at ANY corpus: full-probe
       // routing is EXACT (narrow-wProbe agreement is a corpus-shape
@@ -478,69 +550,83 @@ object VectorQueries {
         .select(col("c_id"), col("cent_id").as("cent_tl"))
       // round 11: the hierarchical PROBE twin (the TwoLevelRankKernel
       // through ivfTopKHier) at full wProbe must return exactly the
-      // XL probe's results — the query-stage parity of the same
-      // full-probe-is-exact contract the assignment compare pins
+      // flat probe's results
       val hier3 = Similarity.ivfTopKHier(idx, q, "vec_id", "embedding",
         3, tlq, nProbe = 4, wProbe = tlq.supers.size)
         .select("q_id", "rank", "c_id")
-      // PQ transport parity at the DEFAULT m=8 × ksub=16 shape (128
-      // codewords — past CodebookLiteralMax, so production takes the
-      // broadcast loop; this pins it against the expression form).
-      // Transport parity holds for ANY codebook, so train cheaply:
-      // 2 Lloyd rounds on a 2048 sample, not the production 5/4096.
-      // The encode compare runs on the same id-spread sample as the
-      // assign parity — the literal form past CodebookLiteralMax is
-      // the measured-5x interpreted fold the dispatch avoids, and
-      // per-row parity needs row coverage, not corpus volume
-      val sampleEmb = emb
-        .filter(pmod(col("vec_id").cast("long"), lit(samStep)) === 0)
       // the five diff counters are INDEPENDENT read-only probes over
       // already-staged state (persisted sample + idx, or their own
-      // cheap train) — overlapped from the driver (guide §2.6)
-      // instead of eight serialized count() round-trips; the sums are
-      // order-free, so the verdict row is bit-identical. The two
-      // frames consumed by MORE THAN ONE thunk (`exact`, `xl3`) are
-      // eagerly checkpointed first — the Concurrent SHARED-LINEAGE
-      // CONTRACT wants LogicalRDDs for cross-thunk sharing, and both
-      // are tiny (≤ sample / |q|·k rows); the checkpoints themselves
-      // share only persisted/parquet inputs, so they overlap too.
+      // cheap train) — overlapped from the driver (guide §2.6). The
+      // two frames consumed by MORE THAN ONE thunk (`exact`, `xl3`)
+      // are eagerly checkpointed first — the Concurrent
+      // SHARED-LINEAGE CONTRACT wants LogicalRDDs for cross-thunk
+      // sharing, and both are tiny (≤ sample / |q|·k rows).
       val shared = graft.operators.Concurrent.inParallel(Seq(
         () => exact.localCheckpoint(true),
         () => xl3.localCheckpoint(true)))
       val (exactC, xl3C) = (shared(0), shared(1))
       val diffs = graft.operators.Concurrent.inParallel[Long](Seq(
-        () => Similarity
-          .ivfAssignLiteral(sample, idx.cents)
-          .select(col("c_id"), col("cent_id"))
-          .join(exactC, "c_id")
-          .filter(!(col("cent_id") <=> col("cent_bc"))).count(),
-        () => lit3.exceptAll(xl3C).count() +
-          xl3C.exceptAll(lit3).count(),
+        () => exactC.collect().count { r =>
+          val want = Recompute.ranks(Recompute.vec(r.getSeq[Any](1)),
+            idx.cents, 1).headOption.getOrElse(-1L)
+          r.getLong(2) != want
+        }.toLong,
+        () => {
+          // the probe recomputed end to end: top-4 lists per query,
+          // then exact cosine top-3 over their members
+          val qs = q.select(col("vec_id").cast("long"),
+              Similarity.toDouble(col("embedding")))
+            .collect().map(r => (r.getLong(0), Recompute.vec(r.getSeq[Any](1))))
+          val lists = qs.map { case (id, v) =>
+            id -> Recompute.ranks(v, idx.cents, 4) }.toMap
+          val members = idx.assigned
+            .filter(col("cent_id").isin(lists.values.flatten.toSeq.distinct: _*))
+            .select("c_id", "c_vec", "cent_id").collect()
+            .map(r => (r.getLong(0), Recompute.vec(r.getSeq[Any](1)),
+              r.getLong(2)))
+          val want = qs.flatMap { case (qid, v) =>
+            members.filter(m => m._1 != qid && lists(qid).contains(m._3))
+              .map(m => (m._1, Recompute.cosine(v, m._2)))
+              .sortWith { case ((ia, a), (ib, b)) =>
+                Recompute.before(a, b) ||
+                  (!Recompute.before(b, a) && ia < ib) }
+              .take(3).zipWithIndex.map { case ((cid, _), i) =>
+                (qid, i + 1, cid) }
+          }.toSet
+          val got = xl3C.as[(Long, Int, Long)].collect().toSet
+          (got.diff(want).size + want.diff(got).size).toLong
+        },
         () => exactC.join(two, "c_id")
           .filter(!(col("cent_bc") <=> col("cent_tl"))).count(),
         () => hier3.exceptAll(xl3C).count() +
           xl3C.exceptAll(hier3).count(),
         () => {
+          // PQ encode at the DEFAULT m=8 × ksub=16 shape; transport
+          // parity holds for ANY codebook, so train cheaply: 2 Lloyd
+          // rounds on a 2048 sample, not the production 5/4096
           val book = Similarity.pqTrain(emb, "vec_id", "embedding",
             8, 16, 2, 2048)
-          val pl = Similarity.pqEncodeLiteral(sampleEmb, "vec_id",
-            "embedding", book).select(col("c_id"),
-            col("codes").as("codes_l"), col("c_norm").as("norm_l"))
-          val pb = Similarity.pqEncodeBroadcast(sampleEmb, "vec_id",
-            "embedding", book).select(col("c_id"),
-            col("codes").as("codes_b"), col("c_norm").as("norm_b"))
-          pl.join(pb, "c_id")
-            .filter(col("codes_l") =!= col("codes_b") ||
-              !(col("norm_l") <=> col("norm_b"))).count()
+          val sampleEmb = emb.filter(inSample("vec_id"))
+          Similarity.pqEncode(sampleEmb, "vec_id", "embedding", book)
+            .join(sampleEmb.select(col("vec_id").as("c_id"),
+              Similarity.toDouble(col("embedding")).as("v")), "c_id")
+            .select("codes", "c_norm", "v").collect().count { r =>
+              val v = Recompute.vec(r.getSeq[Any](2))
+              val norm = if (v.contains(null)) None
+                else Some(math.sqrt(v.foldLeft(0.0d)((a, x) => a + x * x)))
+              val gotNorm = if (r.isNullAt(1)) None else Some(r.getDouble(1))
+              r.getSeq[Int](0) != Recompute.codes(v, book) ||
+                gotNorm.map(java.lang.Double.doubleToLongBits) !=
+                  norm.map(java.lang.Double.doubleToLongBits)
+            }.toLong
         }))
       val Seq(assignDiff, probeDiff, tlDiff, hierDiff, pqDiff) = diffs
-      // every compare above is an eager count, so nothing still needs
-      // the caches — release them here rather than letting them pile
-      // up across a 132-query sweep (the sweep-inflation failure mode
+      // every compare above is eager, so nothing still needs the
+      // caches — release them here rather than letting them pile up
+      // across a 132-query sweep (the sweep-inflation failure mode
       // Bench.scala documents)
       sample.unpersist()
       idx.assigned.unpersist()
-      import s.implicits._
       Seq((if (n > 0 && nSample > 0) 1L else 0L,
           assignDiff, probeDiff, tlDiff, hierDiff, pqDiff))
         .toDF("checked_nonzero", "n_assign_diff", "n_probe_diff",
@@ -554,10 +640,10 @@ object VectorQueries {
       // q_embed_cluster_audit + KMeansSpec). The iterative clustering
       // itself isn't oracle-expressible, but its CONTRACTS are
       // exact-integer checkable (the q_sim_ann_xl_parity shape):
-      //  - assignment under the FINAL centroids agrees between the
-      //    two transports — the result's own Catalyst literal-argmin
-      //    projection vs the broadcast JVM kernel (assignBroadcastD2,
-      //    the form AutoCentroids-scale rebuilds run) — per row;
+      //  - the result's assignment under the FINAL centroids agrees,
+      //    per row, with a driver-side d2 argmin recompute over a
+      //    deterministic id-spread sample ([[Recompute]], the
+      //    q_pca_project pattern);
       //  - every non-null vector is assigned exactly once, none
       //    unplaced (cluster −1);
       //  - per-round inertia is monotone non-increasing within the
@@ -570,12 +656,13 @@ object VectorQueries {
       val v = emb.filter(col("embedding").isNotNull)
         .select(col("vec_id").cast("long").as("id"),
           Similarity.toDouble(col("embedding")).as("v"))
-      val bcAsg = Similarity.assignBroadcastD2(v, res.centroids)
-        .select(col("id"), col("cluster").as("cl_bc"))
-      val nDiff = res.assignments.select(col("id"), col("cluster"))
-        .join(bcAsg, "id")
-        .filter(!(col("cluster") <=> col("cl_bc"))).count()
       val n = v.count()
+      val samStep = math.max(1L, n / 2048L)
+      val nDiff = res.assignments.filter(pmod(col("id"), lit(samStep)) === 0)
+        .join(v, "id").select("cluster", "v").collect().count { r =>
+          r.getLong(0) != Recompute.argminD2(
+            Recompute.vec(r.getSeq[Any](1)), res.centroids).toLong
+        }.toLong
       val nMissing = n - res.assignments.count()
       val nUnplaced =
         res.assignments.filter(col("cluster") === -1L).count()
@@ -604,9 +691,9 @@ object VectorQueries {
       //    to 1e-6 units; per-row d2 is DECIMAL(.,6)-rounded), the
       //    kmeansWithAudit scaladoc bound;
       //  - no round reports a negative centroid displacement;
-      //  - the FINAL assignment's inertia (the Catalyst literal-
-      //    argmin path's d2, summed — an independent transport from
-      //    the RDD kernel that produced the audit numbers) does not
+      //  - the FINAL assignment's inertia (assignBroadcastD2's d2,
+      //    summed — an independent code path from the RDD kernel
+      //    that produced the audit numbers) does not
       //    exceed the last round's inertia plus slack: both Lloyd
       //    steps between those two measurements only lower it;
       //  - the loop terminated legitimately: converged (last moved

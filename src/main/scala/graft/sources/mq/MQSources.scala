@@ -113,8 +113,8 @@ object MQSources {
   /** [[orderedMerge]] on Spark 4's `transformWithState` — the
     * SCALE-SAFE state transport (requires the RocksDB state store
     * provider; the flatMapGroupsWithState form above stays as the
-    * HDFS-state-store twin, the statefulKeyCounter/Tws stance, and
-    * the two are emission-parity pinned on the interleaved fixture).
+    * HDFS-state-store twin, and the two are emission-parity pinned on
+    * the interleaved fixture).
     *
     * Why this form exists: the fMGWS transport deserializes, appends
     * to, and re-serializes the ENTIRE buffer Seq every trigger — at

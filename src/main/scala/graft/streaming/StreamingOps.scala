@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -325,23 +325,21 @@ object StreamingOps {
     * ([[graft.operators.Similarity.appendToIvfIndex]] /
     * [[graft.operators.IndexMaintenance.rebuildIvfIndex]]), exactly
     * the [[nearDupAgainstCorpus]] hamming-1..3 stance. NULL
-    * embeddings pass untouched (no semantic evidence to drop on;
-    * guarded so the rank expression never sorts null scores).
+    * embeddings pass untouched (no semantic evidence to drop on),
+    * and so does an arrival the quantizer cannot place (dim
+    * mismatch, null element: its rank array is short).
     *
     * Sizing: the probe's per-arrival cost is O(corpusSize /
     * index.cents.size) — size the index's coarse quantizer with
     * [[graft.operators.Similarity.suggestedNCentroids]] (√N; a
     * frozen count degrades this gate linearly in corpus growth —
-    * measured 17× at 10×, docs/SCALE.md round 10). Transport: at
-    * K ≤ `LiteralQuantizerMax` the ranks are
-    * [[graft.operators.Similarity.centroidRankExpr]] folds over the
-    * frozen centroid literal (plan-transparent); past it,
-    * [[graft.operators.Similarity.centroidRanks]] auto-switches to
-    * ONE native codegen [[graft.functions.CentroidRanks]] kernel call
-    * per arrival — all probe ranks in a single K-scan, the quantizer
-    * behind a broadcast handle instead of inside the plan — still
-    * row-local, still composing with the door's single stateful op
-    * (parity and the door-level XL test: XlQuantizerSpec). The
+    * measured 17× at 10×, docs/SCALE.md round 10). Transport:
+    * [[graft.operators.Similarity.centroidRanks]] is ONE native
+    * codegen [[graft.functions.CentroidRanks]] kernel call per
+    * arrival at every K — all probe ranks in a single K-scan, the
+    * quantizer behind a broadcast handle instead of inside the plan
+    * — row-local, composing with the door's single stateful op
+    * (StreamingOpsSpec: batch == stream verdicts). The
     * EXTREME-K cost axis has its own dial: the flat kernel scans all
     * K centroids per arrival, fine through ~10⁵ (√N of a 10-billion-
     * vector corpus); past that pass `hier` (a
@@ -377,12 +375,11 @@ object StreamingOps {
       "input stream already has a graft_cent/graft_cents column")
     val v = Similarity.toDouble(col(vecCol))
     // ALL probe ranks computed once per arrival up front
-    // (Similarity.centroidRanks): past LiteralQuantizerMax that is
-    // ONE native codegen kernel call scoring the K centroids once —
-    // row-local, still composes with the single stateful op — instead
-    // of nProbe O(K)-interpreted literal folds; each probe stage then
-    // reads its rank with try_element_at (NULL past a short array =
-    // unplaceable vector = nothing to probe, row passes)
+    // (Similarity.centroidRanks): ONE native codegen kernel call
+    // scoring the K centroids once — row-local, composes with the
+    // single stateful op; each probe stage then reads its rank with
+    // try_element_at (NULL past a short array = unplaceable vector =
+    // nothing to probe, row passes)
     val ranks = hier.fold(
       Similarity.centroidRanks(v, index.cents, nProbe))(tlq =>
       Similarity.centroidRanksTwoLevel(v, tlq, nProbe, wProbe))
@@ -1175,53 +1172,5 @@ object StreamingOps {
           state.update(seq)
           out.iterator
         })
-  }
-
-  /** [[statefulKeyCounter]] on Spark 4's `transformWithState` — the
-    * operator Structured Streaming is migrating stateful processing
-    * onto (typed per-key state handles, timers, TTL; requires the
-    * RocksDB state store provider). Same contract, spec-pinned to
-    * emit identically: seq = running count within the key's
-    * millisecond. Kept as a twin rather than a replacement so
-    * deployments on the HDFS-backed state store keep the
-    * flatMapGroupsWithState form. */
-  def statefulKeyCounterTws(records: Dataset[(Long, String)])
-  : Dataset[(Long, Int, String)] = {
-    import records.sparkSession.implicits._
-    records
-      .groupByKey(_._1)
-      .transformWithState(new MsCounterProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  /** The per-ms counter as a [[org.apache.spark.sql.streaming.StatefulProcessor]]:
-    * one Int ValueState per active millisecond key (no TTL — the
-    * production deployment keys by event time and bounds state with
-    * the watermark, mirroring [[statefulKeyCounter]]'s stance). */
-  private[graft] final class MsCounterProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, String), (Long, Int, String)] {
-    @transient private var seqState
-    : org.apache.spark.sql.streaming.ValueState[Int] = _
-
-    override def init(outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      seqState = getHandle.getValueState[Int]("seq",
-        Encoders.scalaInt,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(ms: Long,
-        rows: Iterator[(Long, String)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-    : Iterator[(Long, Int, String)] = {
-      var seq = if (seqState.exists()) seqState.get() else 0
-      val out = rows.map { case (_, payload) =>
-        seq += 1
-        (ms, seq, payload)
-      }.toVector
-      seqState.update(seq)
-      out.iterator
-    }
   }
 }

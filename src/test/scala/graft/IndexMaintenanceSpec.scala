@@ -49,10 +49,10 @@ class IndexMaintenanceSpec extends SparkSpec {
   test("maintenance inherits the XL dispatch: an AutoCentroids " +
     "rebuild past LiteralQuantizerMax round-trips the store and " +
     "answers queries identically to the in-memory broadcast build") {
-    // 5000 vectors -> sqrt-N = 71 centroids > LiteralQuantizerMax
-    // (64): the rebuild's assignment runs on the broadcast transport,
-    // the quantizer round-trips through the versioned parquet store,
-    // and the loaded index's probes dispatch to ivfTopKXL
+    // 5000 vectors -> sqrt-N = 71 centroids (past 64, where the
+    // retired plan-literal assignment stopped): the rebuild's
+    // assignment runs on the broadcast transport and the quantizer
+    // round-trips through the versioned parquet store
     val big = (0 until 5000).map { i =>
       val c = if (i % 2 == 0) Array(1.0f, 0.02f, 0.01f, 0.0f)
               else Array(0.0f, 0.01f, 0.02f, 1.0f)
@@ -62,7 +62,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val store = tmpStore()
     val loaded = IM.rebuildIvfIndex(store, big, "vec_id", "embedding")
     assert(loaded.cents.size === Similarity.suggestedNCentroids(5000L))
-    assert(loaded.cents.size > Similarity.LiteralQuantizerMax)
+    assert(loaded.cents.size === 71)
     val mem = Similarity.ivfIndex(big, "vec_id", "embedding",
       nCentroids = loaded.cents.size, persistIndex = false)
     assert(loaded.cents === mem.cents)

@@ -1832,10 +1832,10 @@ class KMeansSpec extends SparkSpec {
 
   test("assignToCentroids mirrors the fused iterate's argmin bit-for-bit") {
     // pseudo-random (deterministic) vectors + centroids, including
-    // exact-tie constructions; the Catalyst literal-argmin projection
-    // and a replica of the iterate's JVM loop must agree on every
-    // (cluster, d2) — this IS the contract that lets the loop iterate
-    // imperatively while the returned assignment stays declarative
+    // exact-tie constructions; assignToCentroids (the broadcast d2
+    // scan) and a replica of the iterate's JVM loop must agree on
+    // every (cluster, d2) — this IS the contract that lets the Lloyd
+    // rounds and the returned assignment run as separate passes
     def rnd(seed: Long): Double = {
       val x = seed * 6364136223846793005L + 1442695040888963407L
       (x >>> 11).toDouble / (1L << 53).toDouble

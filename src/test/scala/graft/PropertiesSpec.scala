@@ -138,7 +138,6 @@ class PropertiesSpec extends SparkSpec {
     "the literal fold, and the native rank kernel equals the literal " +
     "rank, over adversarial quantizers (zero-norm, NaN, huge values)") {
     import graft.operators.Similarity
-    import org.apache.spark.sql.graftbridge.GraftBridge
     val dim = 3
     // element pool stresses every comparison branch: zero-norm
     // centroids, NaN scores, overflow-to-Inf products, exact ties
@@ -155,34 +154,23 @@ class PropertiesSpec extends SparkSpec {
     } yield vs.zipWithIndex.map { case (v, i) => (100L + i, v) }
     val cases = samples(Gen.zip(centsGen, batchGen), 6)
     assert(cases.nonEmpty)
+    // the reference is the retired literal fold's contract in plain
+    // Scala (LiteralFold), sharing no code with the engine
     cases.foreach { case (cents, batch) =>
       val df = batch.toDF("c_id", "c_vec")
-      val lit = Similarity.ivfAssignLiteral(df, cents)
-        .select("c_id", "cent_id").as[(Long, Long)].collect().toMap
       val bc = Similarity.ivfAssignBroadcast(df, cents)
         .select("c_id", "cent_id").as[(Long, Long)].collect().toMap
+      val lit = batch.map { case (id, v) =>
+        id -> LiteralFold.assign(v, cents) }.toMap
       assert(bc === lit, s"assignment parity, cents=$cents")
-      // rank parity on WELL-FORMED vectors (no null elements: the
-      // literal comparator is undefined over null scores, and the
-      // door guards them upstream)
-      val wf = batch.filter(_._2.forall(_.isDefined)).toDF("c_id", "c_vec")
-      val kernel = new graft.functions.CentroidRankKernel(
-        spark.sparkContext.broadcast((cents.map(_._1).toArray,
-          cents.map(_._2.toArray).toArray,
-          cents.map(c => math.sqrt(
-            c._2.foldLeft(0.0d)((a, x) => a + x * x))).toArray)))
-      val natAll = wf.withColumn("rs",
-        GraftBridge.column(graft.functions.CentroidRanks(
-          GraftBridge.expression(col("c_vec")), kernel, cents.size)))
-      for (rank <- Seq(1, cents.size)) {
-        val nat = natAll
-          .select(col("c_id"), try_element_at(col("rs"), org.apache.spark.sql.functions.lit(rank)))
-          .as[(Long, Long)].collect().toMap
-        val litR = wf.withColumn("r",
-            Similarity.centroidRankExpr(col("c_vec"), cents, rank))
-          .select("c_id", "r").as[(Long, Long)].collect().toMap
-        assert(nat === litR, s"rank=$rank parity, cents=$cents")
-      }
+      // every rank of every row, null-element rows included: the
+      // kernel's short array is the reference's unscored skip
+      val nat = df.select(col("c_id"),
+          Similarity.centroidRanks(col("c_vec"), cents, cents.size))
+        .as[(Long, Seq[Long])].collect().toMap
+      val litR = batch.map { case (id, v) =>
+        id -> LiteralFold.ranks(v, cents, cents.size) }.toMap
+      assert(nat === litR, s"rank parity, cents=$cents")
     }
   }
 
@@ -263,8 +251,9 @@ class PropertiesSpec extends SparkSpec {
     "assignment equals the d2 literal fold over adversarial " +
     "quantizers, incl. a dim-mismatched centroid and null elements") {
     import graft.operators.Similarity
-    // same adversarial pool as the cosine parity above; the d2 fold
-    // has its own comparator corners (strict < keeps the FIRST min;
+    // same adversarial pool as the cosine parity above, same plain
+    // Scala reference (LiteralFold); the d2 fold has its own
+    // comparator corners (strict < keeps the FIRST min;
     // NaN/Inf d2 never beats the MaxValue seed; a null element or
     // dim mismatch skips that centroid; a vector no centroid can
     // score falls back to (-1, MaxValue))
@@ -283,14 +272,15 @@ class PropertiesSpec extends SparkSpec {
     val cases = samples(Gen.zip(centsGen, batchGen), 6)
     assert(cases.nonEmpty)
     cases.foreach { case (cents0, batch) =>
-      // append a dim-2 centroid: BOTH forms must skip it for every
+      // append a dim-2 centroid: both sides must skip it for every
       // dim-3 vector (never chosen, never poisoning the argmin)
       val cents = cents0 :+ (Seq(1.0d, 2.0d): Seq[Double])
       val df = batch.toDF("id", "v")
       def m(r: org.apache.spark.sql.DataFrame) =
         r.select("id", "cluster", "d2").as[(Long, Long, Double)]
           .collect().map(t => t._1 -> ((t._2, t._3))).toMap
-      val lit = m(Similarity.assignLiteral(df, cents))
+      val lit = batch.map { case (id, v) =>
+        id -> LiteralFold.argminD2(v, cents) }.toMap
       val bc = m(Similarity.assignBroadcastD2(df, cents))
       assert(bc === lit, s"d2 parity, cents=$cents")
       // the mismatched centroid (index cents0.size) is never selected

@@ -238,8 +238,8 @@ class ScaleSpec extends SparkSpec {
     val cents = Seq(Seq(0.0, 1.0, 2.0, 3.0), Seq(2.0, 3.0, 4.0, 5.0))
     val assigned = graft.operators.Similarity
       .assignToCentroids(vecs, "vec_id", "embedding", cents)
-    // assignment is a literal-centroid argmin projection — the corpus
-    // must NEVER be exchanged for it (r4 finding #1); the Lloyd
+    // assignment is a broadcast-centroid argmin projection — the
+    // corpus must NEVER be exchanged for it (r4 finding #1); the Lloyd
     // iterate itself is a fused mapPartitions+reduce (one partial per
     // partition), so a round runs zero exchanges by construction
     val plan = assigned.queryExecution.executedPlan.toString
@@ -261,7 +261,9 @@ class ScaleSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val idx = graft.operators.Similarity
       .ivfIndex(vecs, "vec_id", "embedding", nCentroids = 2)
-    // the index DF is persisted; assert on the plan UNDER the cache
+    // the centroids ride a broadcast, not the plan (the test name
+    // predates that); the index DF is persisted, so assert on the
+    // plan UNDER the cache
     val imr = idx.assigned.queryExecution.optimizedPlan.collectFirst {
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
     }
@@ -281,7 +283,7 @@ class ScaleSpec extends SparkSpec {
         m = 2, ksub = 4)
     // build side: the composed (cent_id, codes, norm) projection must
     // materialize without any Exchange — list assignment and PQ encode
-    // are both literal-table folds riding one corpus scan
+    // are both broadcast-quantizer scans riding one corpus scan
     val imr = idx.encoded.queryExecution.optimizedPlan.collectFirst {
       case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
     }
@@ -685,8 +687,8 @@ class ScaleSpec extends SparkSpec {
     val dplan = dapp.queryExecution.executedPlan.toString
     assert("Exchange".r.findAllMatchIn(dplan).size <= 1,
       s"digest append may shuffle the BATCH side only:\n$dplan")
-    // ANN twins: every append assigns/encodes against frozen literal
-    // quantizer state — a map-only projection unioned in, with the
+    // ANN twins: every append assigns/encodes against frozen
+    // broadcast quantizer state — a map-only projection unioned in, with the
     // batch-sized id dedup as the ONLY allowed exchange (the digest
     // twin's stance) and never a join. All FOUR paths asserted so a
     // shuffle regression in any one of them fails the suite.
@@ -798,7 +800,7 @@ class ScaleSpec extends SparkSpec {
       "the stream side must never explode")
 
     // ---- with the semantic (embedding) gate on: ONE more stateless
-    // anti-probe (centroid assignment rides as a row-local literal
+    // anti-probe (centroid ranks ride as the row-local CentroidRanks
     // expression), still exactly one stateful op, still no explode,
     // still no aggregation
     val semCorpus = Seq(

@@ -480,39 +480,6 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState twin of the per-ms counter emits " +
-    "identically (Spark 4 stateful API, RocksDB store)") {
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState only runs on the RocksDB state store
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(Long, String)]
-    val counted = StreamingOps.statefulKeyCounterTws(input.toDS())
-    val q = counted.toDF("ms", "seq", "payload")
-      .writeStream.format("memory").queryName("ctr_tws_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // the SAME arrivals as the flatMapGroupsWithState test — the
-      // twin contract is emit-identical output
-      input.addData((1000L, "a"), (1000L, "b"), (1001L, "c"))
-      q.processAllAvailable()
-      input.addData((1000L, "d")) // same ms arrives in a LATER batch
-      q.processAllAvailable()
-      val rows = spark.table("ctr_tws_sink")
-        .as[(Long, Int, String)].collect().toSet
-      assert(rows == Set((1000L, 1, "a"), (1000L, 2, "b"),
-        (1001L, 1, "c"), (1000L, 3, "d")))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("ingest door: quality + bloom decontamination, batch parity") {
     import org.apache.spark.sql.functions._
     implicit val sqlCtx = spark.sqlContext
@@ -1056,12 +1023,12 @@ class StreamingOpsSpec extends SparkSpec {
     "assignment filled, batch and streaming") {
     import graft.operators.Similarity
     implicit val sqlCtx = spark.sqlContext
-    // 5000 vectors -> sqrt-N = 71 centroids > LiteralQuantizerMax:
-    // the index build runs on the broadcast mapPartitions transport
-    // and the door's probe rank on the native CentroidRank kernel —
-    // two different XL transports whose bit-parity theorems compose,
-    // pinned end to end here (drop requires the kernel's rank-1 to
-    // equal the assignment that filled the list)
+    // 5000 vectors -> sqrt-N = 71 centroids: the index build runs on
+    // the broadcast mapPartitions transport and the door's probe rank
+    // on the native CentroidRank kernel — two transports whose
+    // scoring contracts compose, pinned end to end here (drop
+    // requires the kernel's rank-1 to equal the assignment that
+    // filled the list)
     val corpus = (0 until 5000).map { i =>
       val c = if (i % 2 == 0) Array(1.0f, 0.02f, 0.01f, 0.0f)
               else Array(0.0f, 0.01f, 0.02f, 1.0f)
@@ -1070,7 +1037,7 @@ class StreamingOpsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val index = Similarity.ivfIndex(corpus, "vec_id", "embedding",
       Similarity.suggestedNCentroids(5000L), persistIndex = false)
-    assert(index.cents.size > Similarity.LiteralQuantizerMax)
+    assert(index.cents.size === 71)
     // corpus member 0's embedding, per the generator above
     val twin = Array(1.0f, 0.021f, 0.012f, 0.003f)
     val novel = Array(0.0f, 1.0f, 0.0f, 0.0f)
@@ -1084,9 +1051,9 @@ class StreamingOpsSpec extends SparkSpec {
     assert(out == Seq(11L),
       s"XL-index semantic gate admitted $out (twin must drop via the " +
         "list the broadcast assignment filled)")
-    // the STREAMING tense: past LiteralQuantizerMax the probe rank is
-    // the native CentroidRank kernel — prove it serializes, codegens,
-    // and verdicts identically inside a real streaming query
+    // the STREAMING tense: the probe rank is the native CentroidRank
+    // kernel — prove it serializes, codegens, and verdicts
+    // identically inside a real streaming query
     val input = MemoryStream[(Timestamp, Long, Array[Float])]
     val q = StreamingOps.semanticProbe(
         input.toDF().toDF("ts", "id", "embedding"), "embedding", index,
@@ -1109,8 +1076,8 @@ class StreamingOpsSpec extends SparkSpec {
     "mismatched hierarchy is rejected") {
     import graft.operators.Similarity
     implicit val sqlCtx = spark.sqlContext
-    // the XL fixture above: 71 centroids > LiteralQuantizerMax, two
-    // tight clusters — flat gate = CentroidRankKernel, hierarchical
+    // the XL fixture above: 71 centroids, two tight clusters — flat
+    // gate = CentroidRankKernel, hierarchical
     // gate = TwoLevelRankKernel over the SAME index
     val corpus = (0 until 5000).map { i =>
       val c = if (i % 2 == 0) Array(1.0f, 0.02f, 0.01f, 0.0f)
@@ -1120,7 +1087,7 @@ class StreamingOpsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val index = Similarity.ivfIndex(corpus, "vec_id", "embedding",
       Similarity.suggestedNCentroids(5000L), persistIndex = false)
-    assert(index.cents.size > Similarity.LiteralQuantizerMax)
+    assert(index.cents.size === 71)
     val tlq = Similarity.twoLevelQuantizer(index.cents)
     val twin = Array(1.0f, 0.021f, 0.012f, 0.003f)
     val novel = Array(0.0f, 1.0f, 0.0f, 0.0f)

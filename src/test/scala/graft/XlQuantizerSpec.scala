@@ -4,15 +4,16 @@ import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The large-K ("XL") coarse-quantizer paths: assignment and probe
-  * with the quantizer behind a BROADCAST instead of a plan literal,
+/** The quantizer transports: assignment, probe ranking, k-means
+  * assignment and PQ encode with the quantizer behind a BROADCAST,
   * and the two-level hierarchy that cuts per-row routing to O(√K·dim).
   *
-  * The load-bearing claim is BIT-PARITY of ivfAssignBroadcast with the
-  * literal fold — including the degenerate corners where the two
-  * engines' semantics could plausibly drift: SQL's NaN-largest
-  * ordering, safeCosDiv's zero-norm-centroid branch, NULL-dot
-  * sentinel on dim mismatch / null elements.
+  * The load-bearing claim is the scoring contract at every K,
+  * including the degenerate corners where engines' semantics could
+  * plausibly drift: SQL's NaN-largest ordering, safeCosDiv's
+  * zero-norm-centroid branch, the NULL-dot sentinel on dim mismatch /
+  * null elements — pinned with explicit expected values by the
+  * edge-case table and against the plain-Scala [[LiteralFold]].
   */
 class XlQuantizerSpec extends SparkSpec {
   import spark.implicits._
@@ -49,23 +50,6 @@ class XlQuantizerSpec extends SparkSpec {
   private def asgMap(df: DataFrame): Map[Long, Long] =
     df.select("c_id", "cent_id").as[(Long, Long)].collect().toMap
 
-  test("ivfAssignBroadcast is bit-identical to the literal fold, " +
-    "including every degenerate corner") {
-    val lit = asgMap(Similarity.ivfAssignLiteral(cands, cents))
-    val bc = asgMap(Similarity.ivfAssignBroadcast(cands, cents))
-    assert(bc === lit)
-    // the corners actually exercise the branches they claim to:
-    // NaN is LARGEST in SQL order, so the NaN-scored row picks the
-    // first centroid, not the sentinel
-    assert(lit(91L) === cents.head._1)
-    // dim mismatch and null element: every dot NULL except the
-    // zero-norm centroid, whose safeCosDiv scores 0.0 > -Inf
-    assert(lit(92L) === 7L)
-    assert(lit(93L) === 7L)
-    // zero VECTOR is well-formed: scores 0.0 everywhere, first max wins
-    assert(lit(90L) === 0L)
-  }
-
   test("broadcast assignment plans as one map-only projection whose " +
     "size does not grow with K") {
     def planOf(k: Int): String = {
@@ -80,62 +64,6 @@ class XlQuantizerSpec extends SparkSpec {
     // the quantizer is NOT in the plan: 10x the centroids, same plan
     assert(math.abs(p500.length - p50.length) < 100,
       s"plan grew with K: ${p50.length} -> ${p500.length}")
-    // the literal form, for contrast, carries the matrix in the plan
-    val lit50 = Similarity.ivfAssignLiteral(cands,
-      (0 until 50).map(i => (i.toLong, Seq(i * 1.0d, 1.0d, 0.0d, 0.0d))))
-      .queryExecution.analyzed.toString
-    assert(lit50.length > p50.length)
-  }
-
-  test("ivfIndex auto-dispatches past LiteralQuantizerMax and stays " +
-    "bit-identical to the literal assignment") {
-    val n = Similarity.LiteralQuantizerMax + 104 // rows > K > threshold
-    val big = (0 until n).map { i =>
-      (i.toLong, Seq(Option((i % 97) * 1.0d), Option(((i * 31) % 89) * 1.0d),
-        Option(1.0d), Option((i % 7) * 1.0d)))
-    }.toDF("c_id", "c_vec")
-    val k = Similarity.LiteralQuantizerMax + 54
-    val idx = Similarity.ivfIndex(
-      big.withColumn("c_vec", col("c_vec").cast("array<float>")),
-      "c_id", "c_vec", nCentroids = k, persistIndex = false)
-    assert(idx.cents.size === k)
-    val viaIndex = asgMap(idx.assigned)
-    val viaLiteral = asgMap(Similarity.ivfAssignLiteral(
-      big.withColumn("c_vec", col("c_vec").cast("array<double>")),
-      idx.cents))
-    assert(viaIndex === viaLiteral)
-  }
-
-  test("assignBroadcastD2 is bit-identical to the d2 literal fold " +
-    "(the kmeans assignment), and assignToCentroids dispatches past " +
-    "the boundary") {
-    val v = cands.select(col("c_id").as("id"), col("c_vec").as("v"))
-    def m(df: DataFrame) = df.collect().map { r =>
-      (r.getLong(r.fieldIndex("id")),
-        r.getLong(r.fieldIndex("cluster")),
-        java.lang.Double.doubleToLongBits(
-          r.getDouble(r.fieldIndex("d2"))))
-    }.toSet
-    // d2 semantics differ from the cosine fold on purpose: NaN d2
-    // never beats MaxValue, and the zero-norm centroid is ordinary —
-    // the degenerate rows (91/92/93) land on (-1, MaxValue) in BOTH
-    // transports; parity is the claim, per-corner stances are pinned
-    // by the literal fold's own KMeansSpec contract
-    val cs: Seq[Seq[Double]] = cents.map(_._2)
-    val lit = m(Similarity.assignLiteral(v, cs))
-    val bc = m(Similarity.assignBroadcastD2(v, cs))
-    assert(bc === lit)
-    assert(lit.exists(t => t._2 == -1L)) // degenerate rows present
-    // dispatch: past LiteralQuantizerMax the public entry takes the
-    // broadcast transport, row-identical to the literal form
-    val bigCs: Seq[Seq[Double]] =
-      (0 until Similarity.LiteralQuantizerMax + 6).map(i =>
-        Seq(i * 1.0d, 1.0d, (i % 9) * 0.5d, 0.0d))
-    val viaPublic = m(Similarity.assignToCentroids(
-      cands.select(col("c_id"), col("c_vec").as("embedding")),
-      "c_id", "embedding", bigCs))
-    val viaLiteral = m(Similarity.assignLiteral(v, bigCs))
-    assert(viaPublic === viaLiteral)
   }
 
   test("twoLevelQuantizer partitions the centroid set exactly") {
@@ -176,140 +104,14 @@ class XlQuantizerSpec extends SparkSpec {
     Array(Seq(0.0d, 0.0d), Seq(1.0d, 0.0d), Seq(0.5d, 0.5d)),
     Array(Seq(0.0d, 1.0d), Seq(0.02d, 0.01d), Seq(0.5d, 0.5d)))
 
-  private def encSet(df: DataFrame) = df.collect().map { r =>
-    val nrm = if (r.isNullAt(r.fieldIndex("c_norm"))) None
-      else Some(java.lang.Double.doubleToLongBits(
-        r.getDouble(r.fieldIndex("c_norm"))))
-    (r.getLong(0), r.getSeq[Int](r.fieldIndex("codes")).toList, nrm)
-  }.toSet
-
-  test("pqEncodeBroadcast is bit-identical to the literal fold, " +
-    "including every degenerate corner") {
-    val lit = encSet(Similarity.pqEncodeLiteral(cands, "c_id", "c_vec", book))
-    val bc = encSet(Similarity.pqEncodeBroadcast(cands, "c_id", "c_vec", book))
-    assert(bc === lit)
-    val byId = lit.map(t => (t._1, (t._2, t._3))).toMap
-    // short vector (92): sub 0 encodes, sub 1 overhangs -> -1; its
-    // norm is over its OWN 3 elements (dot(v,v) never mismatches)
-    assert(byId(92L)._1(1) === -1 && byId(92L)._1(0) >= 0)
-    assert(byId(92L)._2.isDefined)
-    // null element at index 1 (93): sub 0 nulls out -> -1, sub 1
-    // encodes; norm is null
-    assert(byId(93L)._1 === List(-1, byId(93L)._1(1)) &&
-      byId(93L)._1(1) >= 0)
-    assert(byId(93L)._2.isEmpty)
-    // NaN element (91): NaN d2 never beats MaxValue -> sub 0 = -1;
-    // norm is NaN (a real bits value, not null)
-    assert(byId(91L)._1(0) === -1)
-    assert(byId(91L)._2 === Some(
-      java.lang.Double.doubleToLongBits(Double.NaN)))
-  }
-
-  test("composed IVF+PQ encode parity: literal == broadcast for raw " +
-    "AND residual codes (including the missed-centroid sentinel)") {
-    val assigned = Similarity.ivfAssignLiteral(cands, cents)
-    for (residual <- Seq(false, true)) {
-      val lit = encSet(Similarity.ivfPqEncodeAssignedLiteral(
-        assigned, cents, book, residual))
-      val bc = encSet(Similarity.ivfPqEncodeAssignedBroadcast(
-        assigned, cents, book, residual))
-      assert(bc === lit, s"residual=$residual")
-    }
-    // row 92 (len 3) was assigned to the zero-norm centroid (id 7),
-    // so its residual zip_with-pads to [v0-0, v1-0, v2-0, null]:
-    // sub 0 encodes, sub 1 nulls out -> -1 (both transports agree,
-    // asserted above; this pins the actual padding semantics)
-    val res = Similarity.ivfPqEncodeAssignedBroadcast(
-      assigned, cents, book, residual = true)
-    val m92 = res.filter(col("c_id") === 92L)
-      .select("codes").collect().head.getSeq[Int](0)
-    assert(m92(0) >= 0 && m92(1) === -1)
-    // a TRUE missed centroid (cent_id = -1, only reachable without
-    // the zero-norm centroid): null residual -> all codes -1, and
-    // the two transports still agree
-    val centsNoZero = cents.filter(_._1 != 7L)
-    val asg2 = Similarity.ivfAssignLiteral(cands, centsNoZero)
-    assert(asg2.filter(col("c_id") === 92L)
-      .select("cent_id").head().getLong(0) === -1L)
-    val lit2 = encSet(Similarity.ivfPqEncodeAssignedLiteral(
-      asg2, centsNoZero, book, residual = true))
-    val bc2 = encSet(Similarity.ivfPqEncodeAssignedBroadcast(
-      asg2, centsNoZero, book, residual = true))
-    assert(bc2 === lit2)
-    assert(lit2.find(_._1 == 92L).get._2 === List(-1, -1))
-  }
-
-  test("pqIndex auto-dispatches past CodebookLiteralMax and stays " +
-    "bit-identical to the literal encode") {
-    val corpus = cands.filter(col("c_id") < 90L)
-      .select(col("c_id").as("vec_id"),
-        col("c_vec").cast("array<float>").as("embedding"))
-    // m=4, ksub=32 -> 128 words > CodebookLiteralMax (64)
-    val idx = Similarity.pqIndex(corpus, "vec_id", "embedding",
-      m = 4, ksub = 32, persistIndex = false)
-    assert(idx.codebook.length * idx.codebook(0).length >
-      Similarity.CodebookLiteralMax)
-    val viaIndex = encSet(idx.encoded)
-    val viaLiteral = encSet(Similarity.pqEncodeLiteral(
-      corpus, "vec_id", "embedding", idx.codebook))
-    assert(viaIndex === viaLiteral)
-  }
-
-  test("native centroid-rank kernel matches the literal fold for " +
-    "every rank on placeable vectors (incl. NaN and zero), NULL on " +
-    "unplaceable ones") {
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    val ids = cents.map(_._1).toArray
-    val mat = cents.map(_._2.toArray).toArray
-    val norms = mat.map(c => math.sqrt(
-      c.foldLeft(0.0d)((a, x) => a + x * x)))
-    val kernel = new graft.functions.CentroidRankKernel(
-      spark.sparkContext.broadcast((ids, mat, norms)))
-    // the kernel scores once and returns ALL ranks; compare each
-    // array slot against the literal per-rank fold.
-    // rows 90 (zero) and 91 (NaN element) ARE placeable: zero scores
-    // 0.0 everywhere, NaN rides SQL's NaN-largest order in BOTH forms
-    val placeable = cands.filter(col("c_id") < 92L)
-    val natAll = placeable.withColumn("rs",
-        GraftBridge.column(graft.functions.CentroidRanks(
-          GraftBridge.expression(col("c_vec")), kernel, cents.size)))
-    for (rank <- 1 to cents.size) {
-      val nat = natAll
-        .select(col("c_id"), try_element_at(col("rs"), org.apache.spark.sql.functions.lit(rank)))
-        .as[(Long, Long)].collect().toMap
-      val lit = placeable.withColumn("r",
-          Similarity.centroidRankExpr(col("c_vec"), cents, rank))
-        .select("c_id", "r").as[(Long, Long)].collect().toMap
-      assert(nat === lit, s"rank=$rank")
-    }
-    // dim mismatch (92) and null element (93) score null against
-    // every centroid except the zero-norm one... which scores 0.0 —
-    // so they ARE placeable onto it; drop it and they become truly
-    // unplaceable: the kernel yields an EMPTY array (ranks read NULL)
-    val idsNz = cents.filter(_._1 != 7L)
-    val kernelNz = new graft.functions.CentroidRankKernel(
-      spark.sparkContext.broadcast((idsNz.map(_._1).toArray,
-        idsNz.map(_._2.toArray).toArray,
-        idsNz.map(c => math.sqrt(
-          c._2.foldLeft(0.0d)((a, x) => a + x * x))).toArray)))
-    val un = cands.filter(col("c_id") >= 92L).withColumn("rs",
-      GraftBridge.column(graft.functions.CentroidRanks(
-        GraftBridge.expression(col("c_vec")), kernelNz, 1)))
-    assert(un.count() === 2)
-    assert(un.filter(size(col("rs")) > 0).count() === 0)
-    assert(un.filter(
-      try_element_at(col("rs"), lit(1)).isNotNull).count() === 0)
-  }
-
   test("two-level rank kernel: full wProbe is rank-for-rank the flat " +
     "kernel; rank 1 is the two-level assignment; narrow wProbe clears " +
     "the agreement floor; an unroutable vector yields an empty array") {
-    // K above LiteralQuantizerMax so the FLAT comparison side is the
-    // CentroidRankKernel codegen transport too — kernel vs kernel,
-    // the pairing the streaming door actually dispatches between.
+    // kernel vs kernel, the pairing the streaming door dispatches
+    // between, at a K past the old plan-literal size limit (64).
     // No zero-norm centroid (third coord pinned 1.0), so no super can
     // be zero-norm either: rows 92/93 are unroutable by construction.
-    val k = Similarity.LiteralQuantizerMax + 16
+    val k = 80
     val bigCents: Seq[(Long, Seq[Double])] = (0 until k).map(i =>
       (i.toLong, Seq((i % 19) * 1.0d, ((i * 13) % 23) * 1.0d, 1.0d,
         (i % 7) * 1.0d)))
@@ -358,21 +160,38 @@ class XlQuantizerSpec extends SparkSpec {
       .select(col("c_id"), col("rs"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(small(92L).isEmpty && small(93L).isEmpty)
-    // flat KERNEL comparison (the literal fold's null-score sort is
-    // undefined for these rows — the kernel is the defined form)
-    import org.apache.spark.sql.graftbridge.GraftBridge
-    val flatKernel = new graft.functions.CentroidRankKernel(
-      spark.sparkContext.broadcast((cents.map(_._1).toArray,
-        cents.map(_._2.toArray).toArray,
-        cents.map(c => math.sqrt(
-          c._2.foldLeft(0.0d)((a, x) => a + x * x))).toArray)))
     val smallFlat = cands.filter(col("c_id") >= 92L)
-      .withColumn("rs", GraftBridge.column(graft.functions.CentroidRanks(
-        GraftBridge.expression(col("c_vec")), flatKernel, 1)))
+      .withColumn("rs", Similarity.centroidRanks(col("c_vec"), cents, 1))
       .select(col("c_id"), col("rs"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(smallFlat(92L) === Seq(7L) && smallFlat(93L) === Seq(7L))
   }
+
+  private def key(df: DataFrame): Set[(Long, Int, Long)] =
+    df.select("q_id", "rank", "c_id").as[(Long, Int, Long)].collect().toSet
+
+  // The window form's results as the reference, one query at a time:
+  // the query's top-`nProbe` lists in the window form's order
+  // (LiteralFold.ranks: score desc, cent_id asc) are the only lists
+  // left in the index, and probing every list of that index returns
+  // exactly what a probe of those lists must return.
+  private def viaWindowLists(queries: DataFrame,
+      cents: Seq[(Long, Seq[Double])], nProbe: Int)(
+      probeAll: (Seq[Long], DataFrame) => DataFrame): Set[(Long, Int, Long)] =
+    queries.select(col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Long, Seq[Option[Double]])].collect().toSeq.flatMap {
+        case (id, v) => key(probeAll(LiteralFold.ranks(v, cents, nProbe),
+          queries.filter(col("vec_id") === id)))
+      }.toSet
+
+  private def ivfPqWindow(idx: Similarity.IvfPqIndex, queries: DataFrame,
+      corpus: DataFrame, nProbe: Int): Set[(Long, Int, Long)] =
+    viaWindowLists(queries, idx.cents, nProbe) { (lists, q) =>
+      Similarity.ivfPqTopKWith(
+        idx.copy(encoded = idx.encoded.filter(col("cent_id").isin(lists: _*))),
+        q, corpus, "vec_id", "embedding", k = 3,
+        nProbe = idx.cents.size, rerank = 8)
+    }
 
   test("IVF+PQ coarse probe: XL transport returns exactly the " +
     "window form's results, raw AND residual") {
@@ -380,21 +199,15 @@ class XlQuantizerSpec extends SparkSpec {
       .select(col("c_id").as("vec_id"),
         col("c_vec").cast("array<float>").as("embedding"))
     val queries = corpus.filter(col("vec_id") < 6L)
-    def key(df: DataFrame) =
-      df.select("q_id", "rank", "c_id").as[(Long, Int, Long)]
-        .collect().toSet
     for (residual <- Seq(false, true)) {
       val idx = Similarity.ivfPqIndex(corpus, "vec_id", "embedding",
         nCentroids = 4, m = 2, ksub = 4, residual = residual,
         persistIndex = false)
-      val lit = key(Similarity.ivfPqTopKImpl(idx, queries, corpus,
-        "vec_id", "embedding", k = 3, nProbe = 2, rerank = 8,
-        xlProbe = false))
-      val xl = key(Similarity.ivfPqTopKImpl(idx, queries, corpus,
-        "vec_id", "embedding", k = 3, nProbe = 2, rerank = 8,
-        xlProbe = true))
-      assert(xl === lit, s"residual=$residual")
-      assert(lit.nonEmpty)
+      val xl = key(Similarity.ivfPqTopKWith(idx, queries, corpus,
+        "vec_id", "embedding", k = 3, nProbe = 2, rerank = 8))
+      assert(xl === ivfPqWindow(idx, queries, corpus, 2),
+        s"residual=$residual")
+      assert(xl.nonEmpty)
     }
   }
 
@@ -402,55 +215,37 @@ class XlQuantizerSpec extends SparkSpec {
     "transport (the branch production actually dispatches to) matches " +
     "the window form, and nProbe > nCentroids clamps instead of " +
     "throwing") {
-    // the small-index case above pins the explode/residual-join shape
-    // over the literal folds; with cents.size <= LiteralQuantizerMax
-    // the CentroidRanks kernel itself never runs inside an ivfPq
-    // pipeline. This fixture crosses the boundary for real: 72
-    // hash-sampled centroids > LiteralQuantizerMax (64), so
-    // centroidRanks takes the codegen-kernel branch and the public
-    // entry auto-dispatches to it
+    // 72 hash-sampled centroids: past 64, the size where the retired
+    // plan-literal probe used to hand over to the kernel
     val n = 160
     val big = (0 until n).map { i =>
       (i.toLong, Seq((i % 97).toFloat, ((i * 31) % 89).toFloat,
         1.0f, (i % 7).toFloat))
     }.toDF("vec_id", "embedding")
-    val k = Similarity.LiteralQuantizerMax + 8
+    val k = 72
     val queries = big.filter(col("vec_id") < 6L)
-    def key(df: DataFrame) =
-      df.select("q_id", "rank", "c_id").as[(Long, Int, Long)]
-        .collect().toSet
     for (residual <- Seq(false, true)) {
       val idx = Similarity.ivfPqIndex(big, "vec_id", "embedding",
         nCentroids = k, m = 2, ksub = 4, residual = residual,
         persistIndex = false)
-      assert(idx.cents.size > Similarity.LiteralQuantizerMax)
-      val lit = key(Similarity.ivfPqTopKImpl(idx, queries, big,
-        "vec_id", "embedding", k = 3, nProbe = 3, rerank = 8,
-        xlProbe = false))
-      val xl = key(Similarity.ivfPqTopKImpl(idx, queries, big,
-        "vec_id", "embedding", k = 3, nProbe = 3, rerank = 8,
-        xlProbe = true))
-      assert(xl === lit, s"residual=$residual")
-      assert(lit.nonEmpty)
-      // the public entry dispatches to the kernel transport here
-      assert(key(Similarity.ivfPqTopKWith(idx, queries, big,
-        "vec_id", "embedding", k = 3, nProbe = 3, rerank = 8)) === lit)
-      // nProbe past the centroid count: the window form silently kept
-      // all lists (rn <= nProbe); the kernel validates its range, so
-      // the entry clamps BEFORE dispatch — same results, no throw
-      val allLit = key(Similarity.ivfPqTopKImpl(idx, queries, big,
-        "vec_id", "embedding", k = 3, nProbe = idx.cents.size + 50,
-        rerank = 8, xlProbe = false))
-      val allXl = key(Similarity.ivfPqTopKWith(idx, queries, big,
+      assert(idx.cents.size === k)
+      val xl = key(Similarity.ivfPqTopKWith(idx, queries, big,
+        "vec_id", "embedding", k = 3, nProbe = 3, rerank = 8))
+      assert(xl === ivfPqWindow(idx, queries, big, 3), s"residual=$residual")
+      assert(xl.nonEmpty)
+      // nProbe past the centroid count probes every list, like the
+      // window form's `rn <= nProbe` — no throw
+      val all = key(Similarity.ivfPqTopKWith(idx, queries, big,
         "vec_id", "embedding", k = 3, nProbe = idx.cents.size + 50,
         rerank = 8))
-      assert(allXl === allLit, s"residual=$residual clamp")
+      assert(all === ivfPqWindow(idx, queries, big, idx.cents.size),
+        s"residual=$residual clamp")
     }
   }
 
-  test("ivfTopKXL returns exactly ivfTopKWith's results " +
+  test("ivfTopKWith probes exactly the window form's lists " +
     "(including a zero-norm query); ivfTopKHier at full wProbe " +
-    "matches them, and a stale hierarchy is rejected") {
+    "matches it, and a stale hierarchy is rejected") {
     val corpus = cands.filter(col("c_id") < 90L)
       .select(col("c_id").as("vec_id"),
         col("c_vec").cast("array<float>").as("embedding"))
@@ -459,27 +254,24 @@ class XlQuantizerSpec extends SparkSpec {
     val queries = corpus.filter(col("vec_id") < 6L)
       .unionByName(Seq((99L, Seq(0.0f, 0.0f, 0.0f, 0.0f)))
         .toDF("vec_id", "embedding"))
-    def key(df: DataFrame) =
-      df.select("q_id", "rank", "c_id").as[(Long, Int, Long)]
-        .collect().toSet
-    val lit = key(Similarity.ivfTopKLiteral(idx, queries,
+    val got = key(Similarity.ivfTopKWith(idx, queries,
       "vec_id", "embedding", k = 3, nProbe = 2))
-    val xl = key(Similarity.ivfTopKXL(idx, queries,
-      "vec_id", "embedding", k = 3, nProbe = 2))
-    assert(xl === lit)
-    assert(lit.nonEmpty)
-    // the public entry dispatches by index size: small stays literal
-    assert(key(Similarity.ivfTopKWith(idx, queries,
-      "vec_id", "embedding", k = 3, nProbe = 2)) === lit)
+    val window = viaWindowLists(queries, idx.cents, 2) { (lists, q) =>
+      Similarity.ivfTopKWith(
+        idx.copy(assigned = idx.assigned.filter(col("cent_id").isin(lists: _*))),
+        q, "vec_id", "embedding", k = 3, nProbe = idx.cents.size)
+    }
+    assert(got === window)
+    assert(got.exists(_._1 == 99L), "the zero-norm query probes too")
     // the batch query stage's hierarchical twin: full wProbe routes
-    // every leaf — result-identical to the XL probe (incl. the
+    // every leaf — result-identical to the flat probe (incl. the
     // zero-norm query, whose all-0.0 scores rank id-ascending in
     // both transports)
     val tlq = Similarity.twoLevelQuantizer(idx.cents)
     val hier = key(Similarity.ivfTopKHier(idx, queries,
       "vec_id", "embedding", k = 3, tlq,
       nProbe = 2, wProbe = tlq.supers.size))
-    assert(hier === lit)
+    assert(hier === got)
     // same-count/same-ids/stale-VECTORS hierarchy: rejected by the
     // shared vector-compare guard, not silently mis-routed
     val stale = Similarity.twoLevelQuantizer(
@@ -511,7 +303,6 @@ class XlQuantizerSpec extends SparkSpec {
   test("quantizer edge cases: explicit expected values at K <= 64 and " +
     "K > 64 for assignment, probe ranks, k-means, PQ encode and probe") {
     import graft.operators.Similarity.{IvfIndex => _, _}
-    import org.apache.spark.sql.graftbridge.GraftBridge
     // the shared fixture plus an exact tie: (1,0,0,1) scores 1.0
     // against both centroid 0 and centroid 1
     val edge = cands.unionByName(Seq((94L, Seq(Option(1.0d), Option(0.0d),
@@ -540,30 +331,22 @@ class XlQuantizerSpec extends SparkSpec {
         d2cs.size > 64 && bk.map(_.length).sum > 64), regime)
       def assign(q: Seq[(Long, Seq[Double])]) =
         asgMap(ivfAssignBroadcast(edge, q))
-      def ranks(q: Seq[(Long, Seq[Double])]) = {
-        val kernel = new graft.functions.CentroidRankKernel(
-          spark.sparkContext.broadcast((q.map(_._1).toArray,
-            q.map(_._2.toArray).toArray, q.map(c => math.sqrt(
-              c._2.foldLeft(0.0d)((a, x) => a + x * x))).toArray)))
-        edge.select(col("c_id"), GraftBridge.column(
-            graft.functions.CentroidRanks(
-              GraftBridge.expression(col("c_vec")), kernel, 3)))
+      def ranks(q: Seq[(Long, Seq[Double])]) =
+        edge.select(col("c_id"), centroidRanks(col("c_vec"), q, 3))
           .as[(Long, Seq[Long])].collect().toMap
-      }
-      val d2 = assignBroadcastD2(
-          edge.select(col("c_id").as("id"), col("c_vec").as("v")), d2cs)
+      val d2 = assignToCentroids(edge, "c_id", "c_vec", d2cs)
         .select("id", "cluster").as[(Long, Long)].collect().toMap
       def codes(df: DataFrame) = df.select("c_id", "codes")
         .as[(Long, Seq[Int])].collect().toMap
-      val pq = codes(pqEncodeBroadcast(edge, "c_id", "c_vec", bk))
+      val pq = codes(pqEncode(edge, "c_id", "c_vec", bk))
       def residual(q: Seq[(Long, Seq[Double])]) = codes(
-        ivfPqEncodeAssignedBroadcast(ivfAssignBroadcast(edge, q), q, bk,
+        ivfPqEncodeAssigned(ivfAssignBroadcast(edge, q), q, bk,
           residual = true))
       def probed(q: Seq[(Long, Seq[Double])]) = {
         val corpus = cands.filter(col("c_id") < 90L)
         val idx = ivfIndexWithCentroids(corpus, "c_id", "c_vec", q,
           persistIndex = false)
-        ivfTopKXL(idx, edge, "c_id", "c_vec", k = 3, nProbe = 2)
+        ivfTopKWith(idx, edge, "c_id", "c_vec", k = 3, nProbe = 2)
           .select("q_id").as[Long].collect().toSet
       }
       val (asg, asgNz) = (assign(cs), assign(csNz))
