@@ -108,8 +108,7 @@ class XlQuantizerSpec extends SparkSpec {
     "kernel; rank 1 is the two-level assignment; narrow wProbe clears " +
     "the agreement floor; an unroutable vector yields an empty array") {
     // kernel vs kernel, the pairing the streaming door dispatches
-    // between, at a K past the old plan-literal size limit (64).
-    // No zero-norm centroid (third coord pinned 1.0), so no super can
+    // between. No zero-norm centroid (third coord pinned 1.0), so no super can
     // be zero-norm either: rows 92/93 are unroutable by construction.
     val k = 80
     val bigCents: Seq[(Long, Seq[Double])] = (0 until k).map(i =>
