@@ -55,4 +55,35 @@ object LiteralFold {
         if (d < best._2) (i.toLong, d) else best
       }
     }
+
+  /** The PQ `c_norm`: √ of the index-order Σx², None on a null
+    * element (a NaN element gives NaN, not None). */
+  def norm(v: Vec): Option[Double] =
+    if (v.exists(_.isEmpty)) None
+    else Some(math.sqrt(v.foldLeft(0.0d)((s, x) => s + x.get * x.get)))
+
+  /** The residual `v − c` with `zip_with`'s padding: as long as the
+    * longer side, a missing element on either side is None. */
+  def residual(v: Vec, c: Seq[Double]): Vec =
+    (0 until math.max(v.length, c.length)).map { i =>
+      if (i < v.length && i < c.length) v(i).map(_ - c(i)) else None }
+
+  /** The PQ codes: per subspace `s` of width `book(s).head.length`,
+    * the index-order d2 of the slice against each codeword, strict
+    * `<` keeping the first minimum (a NaN d2 never wins); a short
+    * slice, a null element or a missing vector (None) encodes -1. */
+  def pqCodes(v: Option[Vec], book: Seq[Seq[Seq[Double]]]): Seq[Int] =
+    book.indices.map { s =>
+      val words = book(s)
+      val sub = words.head.length
+      val slice = v.map(_.slice(s * sub, s * sub + sub))
+        .filter(sl => sl.length == sub && !sl.exists(_.isEmpty))
+      slice.fold(-1) { sl =>
+        words.indices.foldLeft((-1, Double.MaxValue)) { case (best, ci) =>
+          val d = sl.indices.foldLeft(0.0d) { (a, j) =>
+            val x = sl(j).get - words(ci)(j); a + x * x }
+          if (d < best._2) (ci, d) else best
+        }._1
+      }
+    }
 }

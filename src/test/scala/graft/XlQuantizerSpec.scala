@@ -50,6 +50,32 @@ class XlQuantizerSpec extends SparkSpec {
   private def asgMap(df: DataFrame): Map[Long, Long] =
     df.select("c_id", "cent_id").as[(Long, Long)].collect().toMap
 
+  // a frame's vectors as the plain-Scala reference reads them
+  private def vecsOf(df: DataFrame, idCol: String,
+      vecCol: String): Seq[(Long, LiteralFold.Vec)] =
+    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+      .as[(Long, Seq[Option[Double]])].collect().toSeq
+
+  private lazy val rows = vecsOf(cands, "c_id", "c_vec")
+
+  test("ivfAssignBroadcast is bit-identical to the literal fold, " +
+    "including every degenerate corner") {
+    val lit = rows.map { case (id, v) => id -> LiteralFold.assign(v, cents) }
+      .toMap
+    val bc = asgMap(Similarity.ivfAssignBroadcast(cands, cents))
+    assert(bc === lit)
+    // the corners actually exercise the branches they claim to:
+    // NaN is LARGEST in SQL order, so the NaN-scored row picks the
+    // first centroid, not the sentinel
+    assert(lit(91L) === cents.head._1)
+    // dim mismatch and null element: every dot NULL except the
+    // zero-norm centroid, whose safeCosDiv scores 0.0 > -Inf
+    assert(lit(92L) === 7L)
+    assert(lit(93L) === 7L)
+    // zero VECTOR is well-formed: scores 0.0 everywhere, first max wins
+    assert(lit(90L) === 0L)
+  }
+
   test("broadcast assignment plans as one map-only projection whose " +
     "size does not grow with K") {
     def planOf(k: Int): String = {
@@ -64,6 +90,57 @@ class XlQuantizerSpec extends SparkSpec {
     // the quantizer is NOT in the plan: 10x the centroids, same plan
     assert(math.abs(p500.length - p50.length) < 100,
       s"plan grew with K: ${p50.length} -> ${p500.length}")
+  }
+
+  test("ivfIndex auto-dispatches past LiteralQuantizerMax and stays " +
+    "bit-identical to the literal assignment") {
+    // 64 was the retired plan-literal assignment's size limit: the
+    // index build must keep the literal fold's contract past it
+    val n = 64 + 104 // rows > K > 64
+    val big = (0 until n).map { i =>
+      (i.toLong, Seq(Option((i % 97) * 1.0d), Option(((i * 31) % 89) * 1.0d),
+        Option(1.0d), Option((i % 7) * 1.0d)))
+    }.toDF("c_id", "c_vec")
+    val k = 64 + 54
+    val idx = Similarity.ivfIndex(
+      big.withColumn("c_vec", col("c_vec").cast("array<float>")),
+      "c_id", "c_vec", nCentroids = k, persistIndex = false)
+    assert(idx.cents.size === k)
+    val viaIndex = asgMap(idx.assigned)
+    val viaLiteral = vecsOf(big, "c_id", "c_vec").map { case (id, v) =>
+      id -> LiteralFold.assign(v, idx.cents) }.toMap
+    assert(viaIndex === viaLiteral)
+  }
+
+  test("assignBroadcastD2 is bit-identical to the d2 literal fold " +
+    "(the kmeans assignment), and assignToCentroids dispatches past " +
+    "the boundary") {
+    val v = cands.select(col("c_id").as("id"), col("c_vec").as("v"))
+    def m(df: DataFrame) = df.collect().map { r =>
+      (r.getLong(r.fieldIndex("id")),
+        r.getLong(r.fieldIndex("cluster")),
+        java.lang.Double.doubleToLongBits(
+          r.getDouble(r.fieldIndex("d2"))))
+    }.toSet
+    def ref(cs: Seq[Seq[Double]]) = rows.map { case (id, x) =>
+      val (c, d) = LiteralFold.argminD2(x, cs)
+      (id, c, java.lang.Double.doubleToLongBits(d))
+    }.toSet
+    // d2 semantics differ from the cosine fold on purpose: NaN d2
+    // never beats MaxValue, and the zero-norm centroid is ordinary —
+    // the degenerate rows (91/92/93) land on (-1, MaxValue)
+    val cs: Seq[Seq[Double]] = cents.map(_._2)
+    val lit = ref(cs)
+    assert(m(Similarity.assignBroadcastD2(v, cs)) === lit)
+    assert(lit.exists(t => t._2 == -1L)) // degenerate rows present
+    // past 64 centroids (the retired literal fold's limit) the public
+    // entry stays row-identical to the literal fold's contract
+    val bigCs: Seq[Seq[Double]] = (0 until 64 + 6).map(i =>
+      Seq(i * 1.0d, 1.0d, (i % 9) * 0.5d, 0.0d))
+    val viaPublic = m(Similarity.assignToCentroids(
+      cands.select(col("c_id"), col("c_vec").as("embedding")),
+      "c_id", "embedding", bigCs))
+    assert(viaPublic === ref(bigCs))
   }
 
   test("twoLevelQuantizer partitions the centroid set exactly") {
@@ -103,6 +180,138 @@ class XlQuantizerSpec extends SparkSpec {
   private lazy val book: Array[Array[Seq[Double]]] = Array(
     Array(Seq(0.0d, 0.0d), Seq(1.0d, 0.0d), Seq(0.5d, 0.5d)),
     Array(Seq(0.0d, 1.0d), Seq(0.02d, 0.01d), Seq(0.5d, 0.5d)))
+
+  private def encSet(df: DataFrame) = df.collect().map { r =>
+    val nrm = if (r.isNullAt(r.fieldIndex("c_norm"))) None
+      else Some(java.lang.Double.doubleToLongBits(
+        r.getDouble(r.fieldIndex("c_norm"))))
+    (r.getLong(0), r.getSeq[Int](r.fieldIndex("codes")).toList, nrm)
+  }.toSet
+
+  // encSet's shape from the plain-Scala reference: `enc` picks the
+  // vector each row encodes (None: a missed residual centroid)
+  private def encRef(vs: Seq[(Long, LiteralFold.Vec)],
+      bk: Array[Array[Seq[Double]]])(
+      enc: LiteralFold.Vec => Option[LiteralFold.Vec]) =
+    vs.map { case (id, v) =>
+      (id, LiteralFold.pqCodes(enc(v), bk.map(_.toSeq).toSeq).toList,
+        LiteralFold.norm(v).map(java.lang.Double.doubleToLongBits))
+    }.toSet
+
+  test("pqEncodeBroadcast is bit-identical to the literal fold, " +
+    "including every degenerate corner") {
+    val lit = encRef(rows, book)(Some(_))
+    val bc = encSet(Similarity.pqEncode(cands, "c_id", "c_vec", book))
+    assert(bc === lit)
+    val byId = lit.map(t => (t._1, (t._2, t._3))).toMap
+    // short vector (92): sub 0 encodes, sub 1 overhangs -> -1; its
+    // norm is over its OWN 3 elements (dot(v,v) never mismatches)
+    assert(byId(92L)._1(1) === -1 && byId(92L)._1(0) >= 0)
+    assert(byId(92L)._2.isDefined)
+    // null element at index 1 (93): sub 0 nulls out -> -1, sub 1
+    // encodes; norm is null
+    assert(byId(93L)._1 === List(-1, byId(93L)._1(1)) &&
+      byId(93L)._1(1) >= 0)
+    assert(byId(93L)._2.isEmpty)
+    // NaN element (91): NaN d2 never beats MaxValue -> sub 0 = -1;
+    // norm is NaN (a real bits value, not null)
+    assert(byId(91L)._1(0) === -1)
+    assert(byId(91L)._2 === Some(
+      java.lang.Double.doubleToLongBits(Double.NaN)))
+  }
+
+  test("composed IVF+PQ encode parity: literal == broadcast for raw " +
+    "AND residual codes (including the missed-centroid sentinel)") {
+    def ref(cs: Seq[(Long, Seq[Double])], residual: Boolean) =
+      encRef(rows, book) { v =>
+        if (!residual) Some(v)
+        else cs.find(_._1 == LiteralFold.assign(v, cs))
+          .map(c => LiteralFold.residual(v, c._2))
+      }
+    val assigned = Similarity.ivfAssignBroadcast(cands, cents)
+    for (residual <- Seq(false, true)) {
+      val bc = encSet(Similarity.ivfPqEncodeAssigned(
+        assigned, cents, book, residual))
+      assert(bc === ref(cents, residual), s"residual=$residual")
+    }
+    // row 92 (len 3) was assigned to the zero-norm centroid (id 7),
+    // so its residual zip_with-pads to [v0-0, v1-0, v2-0, null]:
+    // sub 0 encodes, sub 1 nulls out -> -1 (this pins the actual
+    // padding semantics)
+    val res = Similarity.ivfPqEncodeAssigned(
+      assigned, cents, book, residual = true)
+    val m92 = res.filter(col("c_id") === 92L)
+      .select("codes").collect().head.getSeq[Int](0)
+    assert(m92(0) >= 0 && m92(1) === -1)
+    // a TRUE missed centroid (cent_id = -1, only reachable without
+    // the zero-norm centroid): null residual -> all codes -1
+    val centsNoZero = cents.filter(_._1 != 7L)
+    val asg2 = Similarity.ivfAssignBroadcast(cands, centsNoZero)
+    assert(asg2.filter(col("c_id") === 92L)
+      .select("cent_id").head().getLong(0) === -1L)
+    val bc2 = encSet(Similarity.ivfPqEncodeAssigned(
+      asg2, centsNoZero, book, residual = true))
+    val lit2 = ref(centsNoZero, residual = true)
+    assert(bc2 === lit2)
+    assert(lit2.find(_._1 == 92L).get._2 === List(-1, -1))
+  }
+
+  test("pqIndex auto-dispatches past CodebookLiteralMax and stays " +
+    "bit-identical to the literal encode") {
+    val corpus = cands.filter(col("c_id") < 90L)
+      .select(col("c_id").as("vec_id"),
+        col("c_vec").cast("array<float>").as("embedding"))
+    // m=4, ksub=32 -> 128 words, past 64 (the retired literal
+    // encode's codebook limit)
+    val idx = Similarity.pqIndex(corpus, "vec_id", "embedding",
+      m = 4, ksub = 32, persistIndex = false)
+    assert(idx.codebook.length * idx.codebook(0).length > 64)
+    val viaIndex = encSet(idx.encoded)
+    val viaLiteral = encRef(vecsOf(corpus, "vec_id", "embedding"),
+      idx.codebook)(Some(_))
+    assert(viaIndex === viaLiteral)
+  }
+
+  test("native centroid-rank kernel matches the literal fold for " +
+    "every rank on placeable vectors (incl. NaN and zero), NULL on " +
+    "unplaceable ones") {
+    import org.apache.spark.sql.graftbridge.GraftBridge
+    def kernelOf(cs: Seq[(Long, Seq[Double])]) =
+      new graft.functions.CentroidRankKernel(
+        spark.sparkContext.broadcast((cs.map(_._1).toArray,
+          cs.map(_._2.toArray).toArray,
+          cs.map(c => math.sqrt(
+            c._2.foldLeft(0.0d)((a, x) => a + x * x))).toArray)))
+    // the kernel scores once and returns ALL ranks; compare each
+    // array slot against the literal fold's per-rank order.
+    // rows 90 (zero) and 91 (NaN element) ARE placeable: zero scores
+    // 0.0 everywhere, NaN rides SQL's NaN-largest order in BOTH forms
+    val placeable = cands.filter(col("c_id") < 92L)
+    val natAll = placeable.withColumn("rs",
+        GraftBridge.column(graft.functions.CentroidRanks(
+          GraftBridge.expression(col("c_vec")), kernelOf(cents), cents.size)))
+    val litAll = rows.filter(_._1 < 92L).map { case (id, v) =>
+      id -> LiteralFold.ranks(v, cents, cents.size) }.toMap
+    for (rank <- 1 to cents.size) {
+      val nat = natAll
+        .select(col("c_id"), try_element_at(col("rs"), lit(rank)))
+        .as[(Long, Long)].collect().toMap
+      assert(nat === litAll.map { case (id, r) => id -> r(rank - 1) },
+        s"rank=$rank")
+    }
+    // dim mismatch (92) and null element (93) score null against
+    // every centroid except the zero-norm one... which scores 0.0 —
+    // so they ARE placeable onto it; drop it and they become truly
+    // unplaceable: the kernel yields an EMPTY array (ranks read NULL)
+    val un = cands.filter(col("c_id") >= 92L).withColumn("rs",
+      GraftBridge.column(graft.functions.CentroidRanks(
+        GraftBridge.expression(col("c_vec")),
+        kernelOf(cents.filter(_._1 != 7L)), 1)))
+    assert(un.count() === 2)
+    assert(un.filter(size(col("rs")) > 0).count() === 0)
+    assert(un.filter(
+      try_element_at(col("rs"), lit(1)).isNotNull).count() === 0)
+  }
 
   test("two-level rank kernel: full wProbe is rank-for-rank the flat " +
     "kernel; rank 1 is the two-level assignment; narrow wProbe clears " +
