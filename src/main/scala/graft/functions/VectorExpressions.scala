@@ -39,20 +39,8 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var s = 0.0d
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      s += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.dotOrNull(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
@@ -81,6 +69,24 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  /** The interpreted kernel, shared with the door's semantic corpus
+    * gate ([[graft.streaming.SemanticSide]]): NULL on a length
+    * mismatch or a null element. */
+  def dotOrNull(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var s = 0.0d
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      s += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    s
+  }
 }
 
 /** Native squared-L2 distance — the k-means / IVF / PQ assignment

@@ -484,6 +484,10 @@ object Dedup {
   private[graft] def bandBits(sim: Column, b: Int): Column =
     shiftrightunsigned(sim, b * 16).bitwiseAND(lit(0xFFFFL))
 
+  /** [[bandBits]] on the JVM, for the door's packed band probe. */
+  private[graft] def bandBitsOf(sim: Long, b: Int): Int =
+    ((sim >>> (b * 16)) & 0xFFFFL).toInt
+
   private def bandedIndex64(hashed: DataFrame): DataFrame =
     hashed.select(col("doc"), col("sim"),
       posexplode(array((0 until HammingBands).map(b =>
@@ -519,8 +523,7 @@ object Dedup {
     * corpus scan, no shuffle, cost O(|batch|) regardless of index
     * size. This is the in-memory tense; the production tense is
     * [[appendToBandedIndexTable]], which hashes the banded batch into
-    * the index table's bucket layout so door probes stay
-    * exchange-free on the corpus side across batches.
+    * the index table's bucket layout.
     *
     * Exactness: for a batch whose doc ids are disjoint from the
     * index's (the ingest contract — door-admitted arrivals carry
@@ -528,7 +531,7 @@ object Dedup {
     * checkpoint's batch id, not from this operator re-checking),
     * the result is row-identical to
     * `hammingBandIndex(corpus ∪ batch)` — spec-asserted. A replayed
-    * batch would only duplicate index rows, which the LEFT ANTI
+    * batch would only duplicate index rows, which the door's corpus
     * probes are set-semantically immune to (a dup row can only
     * re-drop the same arrival), so correctness degrades to wasted
     * space, never to wrong admits.
@@ -541,24 +544,23 @@ object Dedup {
   // The TABLE tense of the banded/digest indexes — the production form
   // the scaladocs above point at. The DataFrame appends are unions:
   // correct, but a union of N appended batches loses any bucketing the
-  // base had, so after enough batches the door probes shuffle the
-  // corpus side again. These operators keep the index in a managed
-  // bucketed table instead: the corpus pays its layout shuffle once at
-  // create/append time, and EVERY later probe joins it exchange-free
-  // on the corpus side (ScaleSpec asserts the plan after multiple
-  // appended batches). Single-writer: the ingest loop's foreachBatch
+  // base had and grows a plan the door re-reads per snapshot. These
+  // operators keep the index in a managed bucketed table instead: the
+  // corpus pays its layout shuffle once at create/append time, an
+  // append is batch-sized, and the door's snapshot of the table is
+  // rebuilt when its files change (ScaleSpec asserts the verdicts
+  // after appends and compaction). Single-writer: the ingest loop's foreachBatch
   // is the only appender (gated by BatchIdGate for replay), the same
   // contract as the in-memory appends.
   // ------------------------------------------------------------------
 
-  /** Layout of the banded-index table: PARTITIONED by `band` (each
-    * door probe filters one band, so partition pruning drops 3/4 of
-    * the files before any IO) and BUCKETED+sorted by `bits` — the
-    * probe's actual equi-key. Bucketing by (band, bits) would NOT
-    * serve the probes: with `band` pinned by the filter, the join key
-    * is `bits` alone, and a hash(band, bits) distribution does not
-    * satisfy a bits-keyed join requirement — the planner would
-    * re-shuffle the corpus anyway. */
+  /** Layout of the banded-index table: PARTITIONED by `band` (a
+    * one-band join prunes 3/4 of the files before any IO) and
+    * BUCKETED+sorted by `bits`, that join's equi-key. Bucketing by
+    * (band, bits) would NOT serve it: with `band` pinned by the
+    * filter, the join key is `bits` alone, and a hash(band, bits)
+    * distribution does not satisfy a bits-keyed join requirement.
+    * The ingest door reads the table whole into its snapshot. */
   private val BandedTableKeys = Seq("bits")
   private val BandedTablePartitions = Seq("band")
 
@@ -616,10 +618,9 @@ object Dedup {
     graft.sources.BucketedTables.maintainBucketed(spark, table, buckets,
       BandedTableKeys, BandedTablePartitions, maxFilesPerBucket)
 
-  /** Materialize a [[digestIndex]] as a table bucketed by `digest` —
-    * the digest probe's equi-key, so
-    * [[graft.streaming.StreamingOps.dedupAgainstCorpus]] joins it
-    * with zero corpus-side exchange. */
+  /** Materialize a [[digestIndex]] as a table bucketed by `digest`,
+    * the corpus side of
+    * [[graft.streaming.StreamingOps.dedupAgainstCorpus]]. */
   def createDigestIndexTable(docs: DataFrame, textCol: String,
                              table: String, buckets: Int): Unit =
     graft.sources.BucketedTables.writeBucketed(
@@ -661,11 +662,11 @@ object Dedup {
     * static digest table without a corpus rebuild. The batch side is
     * deduplicated within itself (batch-sized shuffle only); disjointness
     * from the index is the ingest contract — admitted docs passed the
-    * index's own anti-join at the door, so their digests are new by
+    * index's own probe at the door, so their digests are new by
     * construction and the append is row-identical to
     * `digestIndex(corpus ∪ batch)` (spec-asserted). Same replay
     * stance as [[appendToBandedIndex]]: a duplicated digest row
-    * cannot change any anti-join verdict.
+    * cannot change any probe verdict.
     */
   def appendToDigestIndex(index: DataFrame, docs: DataFrame,
                           textCol: String): DataFrame =

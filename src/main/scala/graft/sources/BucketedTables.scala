@@ -18,10 +18,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * tables with the SAME count — mismatched counts fall back to a
   * shuffle on one side.
   *
-  * One-sided bucketing still pays when the other side is small and
-  * RE-shuffled every run (the ingest-door probes: the corpus index is
-  * the bucketed side and never exchanges; the arriving micro-batch
-  * shuffles batch-sized rows into the corpus's distribution).
+  * The ingest door's corpus gates do not join these tables: they read
+  * a table into a broadcast snapshot when its files change
+  * ([[graft.streaming.CorpusSnapshots]]: the version token is the
+  * listing of the table's files, read from the file system each
+  * micro-batch), so an append or a compaction here is seen by the
+  * door's next batch, from any session. The bucketed layout serves
+  * the batch joins and keeps appends batch-sized.
   */
 object BucketedTables {
 
@@ -73,7 +76,9 @@ object BucketedTables {
     * any OTHER session (including the session that spawned a
     * `foreachBatch` whose clone did the append) caches the table's
     * file listing and must `spark.catalog.refreshTable(table)` before
-    * its next read, or it keeps planning over the pre-append files. */
+    * its next read, or it keeps planning over the pre-append files.
+    * The door's corpus gates list the files themselves and need no
+    * refresh. */
   def appendBucketed(df: DataFrame, table: String, buckets: Int,
                      keyCols: Seq[String],
                      partitionCols: Seq[String] = Nil): Unit =

@@ -58,14 +58,19 @@ object StreamingOps {
   /** Incremental-ingest content dedup — the streaming half of the
     * batch exact-dedup story: drop arriving documents whose
     * [[graft.operators.Dedup.exactDigest]] already exists in the
-    * static corpus index (left-anti equi-join, re-planned per
-    * micro-batch so index refreshes between batches are picked up;
-    * in production the static side is the digest-bucketed table
-    * [[graft.operators.Dedup.createDigestIndexTable]] maintains, so
-    * the join is exchange-free on the corpus side even after many
-    * appended batches), then drop in-stream repeats with digest-keyed
-    * state bounded by the watermark. Same digest on both paths ⇒
-    * batch and streaming agree on what "duplicate" means.
+    * corpus digest index, then drop in-stream repeats with
+    * digest-keyed state bounded by the watermark. Same digest on both
+    * paths ⇒ batch and streaming agree on what "duplicate" means.
+    *
+    * Corpus side ([[CorpusProbes.digestHit]]): a row-local probe of a
+    * packed snapshot of `corpusDigests` behind a broadcast. Each
+    * micro-batch's planning reads the corpus's version token on the
+    * driver (the file listing of a table such as the one
+    * [[graft.operators.Dedup.createDigestIndexTable]] maintains, the
+    * identity of a cached or checkpointed frame) and rebuilds the
+    * snapshot only when it changed, so an append is seen by the next
+    * batch and an unchanged corpus is never re-read
+    * ([[CorpusSnapshots]]).
     */
   def dedupAgainstCorpus(stream: DataFrame, textCol: String,
                          tsCol: String, corpusDigests: DataFrame,
@@ -97,7 +102,7 @@ object StreamingOps {
     else df.dropDuplicates(key)
 
   /** The STATELESS half of [[dedupAgainstCorpus]]: compute the
-    * normalized digest and anti-join the static corpus digest table.
+    * normalized digest and drop the rows the corpus snapshot holds.
     * Shared with [[ingestDoor]], which chains it in front of the
     * banded probe and spends its single-stateful-op budget once for
     * both. Leaves `graft_digest` on the frame for the caller to
@@ -112,8 +117,7 @@ object StreamingOps {
     stream
       .withColumn("graft_digest",
         graft.operators.Dedup.exactDigest(col(textCol)))
-      .join(corpusDigests.select(col("digest").as("graft_digest")),
-        Seq("graft_digest"), "left_anti")
+      .filter(!CorpusProbes.digestHit(col("graft_digest"), corpusDigests))
   }
 
   /** Near-dup dedup at the ingest door — the streaming twin of the
@@ -122,26 +126,21 @@ object StreamingOps {
     * expression, e.g. `Dedup.simhash64(toks)` or
     * `HashKernels.phash64(payload)`). Two stages:
     *
-    * 1. **Corpus probe**: arriving docs are checked against the static
-    *    banded index ([[graft.operators.Dedup.hammingBandIndex]]) with
-    *    one LEFT ANTI join per 16-bit band — equi-keyed on the band's
-    *    bits with the hamming cutoff as a residual condition. By the
-    *    same pigeonhole argument as the batch join, a doc within
-    *    `maxHamming` <= 3 of ANY corpus doc shares at least one band
-    *    verbatim, so the four probes drop it with NO stream-side
-    *    explode and no streaming aggregation — the query stays in
-    *    append mode with a single stateful operator. Probing the index
-    *    four times (once per band) instead of once over an exploded
-    *    stream is the deliberate trade: the re-aggregation an explode
-    *    needs would be a second stateful op, which Spark disallows
-    *    after flatMapGroupsWithState and which would carry corpus-sized
-    *    state. In production `corpusBands` is the managed table
-    *    [[graft.operators.Dedup.createBandedIndexTable]] maintains —
-    *    partitioned by band (each probe prunes to its own band's
-    *    files) and bucketed by bits, the probe's equi-key — so each
-    *    probe is exchange-free on the corpus side even after many
-    *    appended batches (ScaleSpec asserts the plan); the same
-    *    stance as [[dedupAgainstCorpus]]'s digest table.
+    * 1. **Corpus probe** ([[CorpusProbes.bandHit]]): arriving docs
+    *    are checked against the banded index
+    *    ([[graft.operators.Dedup.hammingBandIndex]]) packed per (band,
+    *    bits) into a broadcast snapshot — one row-local kernel that
+    *    looks up each of the four 16-bit bands and runs the hamming
+    *    check inside. By the pigeonhole argument of the batch join, a
+    *    doc within `maxHamming` <= 3 of ANY corpus doc shares at least
+    *    one band verbatim, so the probe drops it with no join, no
+    *    stream-side explode and no streaming aggregation — the query
+    *    stays in append mode with a single stateful operator. The
+    *    snapshot follows the corpus's version token
+    *    ([[dedupAgainstCorpus]]'s contract): in production
+    *    `corpusBands` is the table
+    *    [[graft.operators.Dedup.createBandedIndexTable]] maintains, and
+    *    an append is seen by the next micro-batch.
     * 2. **In-stream state**: survivors are deduped on the full 64-bit
     *    fingerprint with watermark-bounded state, dropping same-batch
     *    and cross-batch arrivals whose fingerprint is identical (the
@@ -151,10 +150,8 @@ object StreamingOps {
     * In-stream pairs at hamming 1..3 inside the watermark window are
     * NOT caught by stage 2 (a near-match is not an equality, and
     * banded state would need the disallowed second stateful op); they
-    * are caught on the next corpus-index refresh, exactly like new
-    * digests in [[dedupAgainstCorpus]] — the transform re-plans the
-    * static side every micro-batch, so the batch job folding accepted
-    * docs into the banded index closes that window.
+    * are caught once accepted docs are folded into the banded index,
+    * exactly like new digests in [[dedupAgainstCorpus]].
     */
   def nearDupAgainstCorpus(stream: DataFrame, sim: org.apache.spark.sql.Column,
                            tsCol: String, corpusBands: DataFrame,
@@ -164,9 +161,9 @@ object StreamingOps {
       .drop("graft_sim")
 
   /** The STATELESS half of [[nearDupAgainstCorpus]]: compute the
-    * 64-bit fingerprint and run the four per-band LEFT ANTI probes of
-    * the static banded index. Shared with [[ingestDoor]]. Leaves
-    * `graft_sim` on the frame for the caller's stateful dedup. */
+    * 64-bit fingerprint and drop the rows the banded snapshot holds a
+    * near neighbour of. Shared with [[ingestDoor]]. Leaves `graft_sim`
+    * on the frame for the caller's stateful dedup. */
   private def bandProbe(stream: DataFrame, sim: Column,
                         corpusBands: DataFrame, maxHamming: Int): DataFrame = {
     val nBands = graft.operators.Dedup.HammingBands
@@ -176,121 +173,9 @@ object StreamingOps {
         "that far, and a negative bound would silently disable the probe")
     require(!stream.columns.contains("graft_sim"),
       "input stream already has a graft_sim column")
-    val withSim = stream.withColumn("graft_sim", sim)
-    (0 until nBands).foldLeft(withSim) { (df, b) =>
-      val cb = corpusBands.filter(col("band") === b)
-        .select(col("bits").as("graft_bits"),
-          col("sim").as("graft_corpus_sim"))
-      df.join(cb,
-        graft.operators.Dedup.bandBits(col("graft_sim"), b) ===
-          col("graft_bits") &&
-          bit_count(col("graft_sim").bitwiseXOR(col("graft_corpus_sim")))
-            <= maxHamming,
-        "left_anti")
-    }
-  }
-
-  /** ARRIVAL-BOUNDED banded corpus probe — the foreachBatch tense of
-    * [[bandProbe]] (r17 VERDICT #1: the in-plan probe's corpus-side
-    * scans are CORPUS-proportional per micro-batch, the engine's last
-    * scale-coupled per-batch cost). Row-identical to [[bandProbe]] on
-    * the same inputs, but the corpus side of each per-band anti-join
-    * is pre-filtered to the BATCH'S OWN (band, bits) key set:
-    *
-    *  - `band = b` stays the partition filter (3/4 of files pruned);
-    *  - the batch's band-b bits keys, collected once per batch, cut
-    *    the band partition to the arrivals' own candidate buckets
-    *    before the anti-join's merge.
-    *
-    * Exactness: a corpus row whose `bits` is not in the batch's band-b
-    * set cannot equal ANY batch row's band-b bits, so removing it
-    * cannot change a LEFT ANTI verdict — the prefilter is redundant
-    * for the join and pure work-reduction for everything downstream
-    * of the scan. Per-band the corpus side is cut to the TRUE
-    * CANDIDATE VOLUME — Θ(|batch| · N/65536) by the 4×16-bit
-    * pigeonhole design, the floor no exact probe can beat (every
-    * corpus row sharing a band with an arrival must be
-    * hamming-checked) — instead of the full band partition feeding
-    * the anti-join's merge.
-    *
-    * Mechanism (measured, r18): the keys ride as a BROADCAST
-    * semi-join, not literal predicates — pushing a micro-batch-sized
-    * IN into the parquet scan was measured 2-5× SLOWER than the
-    * unpruned scan (per-row-group dictionary/stats evaluation of a
-    * thousand-value predicate across every file), and bucket hashing
-    * scatters bits ranges across files so row-group min/max cannot
-    * skip IO at any realistic batch size. The scan still reads the
-    * band partition (band IS partition-pruned); what the prefilter
-    * bounds is the join-side work. Reading LESS than the band
-    * requires a bits-range-partitioned layout whose directory count
-    * grows with the corpus — a next-round layout change with a real
-    * file-count cost, analyzed in OPTIMIZATION_r18.md.
-    *
-    * Needs a driver-side collect of the batch's distinct band keys
-    * (≤ 4·|batch| longs), which a single streaming plan cannot
-    * express — hence the foreachBatch tense, composed with
-    * [[ingestDoor]]'s `deferBandProbe = true` (see there for the
-    * exactness of deferring past the stateful dedup). A batch larger
-    * than `maxProbeKeys` rows skips the key collect entirely and runs
-    * the unpruned corpus sides (identical result — a backfill-sized
-    * "batch" saturates the 65536-value keyspace anyway, and its key
-    * set does not belong on the driver).
-    */
-  def prunedBandProbe(batch: DataFrame, sim: Column,
-                      corpusBands: DataFrame, maxHamming: Int = 3,
-                      maxProbeKeys: Int = 8192): DataFrame = {
-    require(!batch.isStreaming,
-      "prunedBandProbe is the foreachBatch tense: the per-band key " +
-        "collect is a driver action a streaming plan cannot express; " +
-        "use bandProbe (or ingestDoor's in-plan gate) on a stream")
-    val nBands = graft.operators.Dedup.HammingBands
-    require(maxHamming >= 0 && maxHamming <= nBands - 1,
-      s"banded probe is only complete for hamming in [0, ${nBands - 1}] " +
-        s"(got $maxHamming)")
-    require(!batch.columns.contains("graft_sim"),
-      "input batch already has a graft_sim column")
-    val spark = batch.sparkSession
-    // eager localCheckpoint, not persist: per-batch state the
-    // ContextCleaner reclaims once the caller's write finishes — and
-    // the 1 key-collect + nBands anti-joins below must not recompute
-    // the batch's upstream (the door's other gates) five times
-    val withSim = batch.withColumn("graft_sim", sim)
-      .localCheckpoint(true)
-    // backfill guard: a huge "batch" saturates the 16-bit keyspace
-    // (no pruning left to buy) and its key set has no business on the
-    // driver — run the plain unpruned probes instead (same result)
-    val prune = withSim.count() <= maxProbeKeys
-    // ONE job collects every band's distinct keys (NULL fingerprints
-    // collect nothing — a NULL never equi-matches, so those rows pass
-    // the anti-joins untouched exactly as in bandProbe)
-    val keysByBand: Map[Int, Array[Long]] =
-      if (!prune) Map.empty
-      else withSim
-        .select(posexplode(array((0 until nBands).map(b =>
-          graft.operators.Dedup.bandBits(col("graft_sim"), b)): _*))
-          .as(Seq("band", "bits")))
-        .filter(col("bits").isNotNull)
-        .distinct().collect()
-        .groupBy(_.getInt(0))
-        .map { case (b, rows) => b -> rows.map(_.getLong(1)) }
-    (0 until nBands).foldLeft(withSim) { (df, b) =>
-      val cb0 = corpusBands.filter(col("band") === b)
-      val cb = (if (prune) {
-          import spark.implicits._
-          val keys = keysByBand.getOrElse(b, Array.empty[Long])
-            .toSeq.toDF("graft_key")
-          cb0.join(broadcast(keys), col("bits") === col("graft_key"),
-            "left_semi")
-        } else cb0)
-        .select(col("bits").as("graft_bits"),
-          col("sim").as("graft_corpus_sim"))
-      df.join(cb,
-        graft.operators.Dedup.bandBits(col("graft_sim"), b) ===
-          col("graft_bits") &&
-          bit_count(col("graft_sim").bitwiseXOR(col("graft_corpus_sim")))
-            <= maxHamming,
-        "left_anti")
-    }.drop("graft_sim")
+    stream.withColumn("graft_sim", sim)
+      .filter(!CorpusProbes.bandHit(col("graft_sim"), corpusBands,
+        maxHamming))
   }
 
   /** Semantic (embedding) dedup at the ingest door — the streaming
@@ -305,24 +190,29 @@ object StreamingOps {
     *    ([[graft.operators.Similarity.centroidRanks]] — rank 1 is
     *    bit-identical to the build's own assignment), so the stream
     *    side needs no join to find its lists;
-    *  - one LEFT ANTI equi-join on cent_id against the index's
-    *    assigned table, with `cosine >= cosThreshold` as the residual
-    *    condition — the [[nearDupAgainstCorpus]] probe shape with
-    *    cent_id playing the band and cosine playing the hamming
-    *    cutoff. In production `index.assigned` is a table bucketed by
-    *    cent_id, so the corpus side never exchanges.
+    *  - ONE row-local kernel ([[CorpusProbes.semanticHit]]) then
+    *    scans the arrival's lists in a snapshot of `index.assigned`
+    *    packed per cent_id behind a broadcast, with
+    *    [[graft.operators.Similarity.cosine]]'s arithmetic (the
+    *    shared `DotProduct` code) and `cosine >= cosThreshold` inside
+    *    — the [[nearDupAgainstCorpus]] probe shape with cent_id playing
+    *    the band and cosine the hamming cutoff. The snapshot follows
+    *    the corpus's version token ([[dedupAgainstCorpus]]'s
+    *    contract): an append to the staged tables
+    *    ([[graft.operators.Similarity.appendToIvfIndexTable]]) is seen
+    *    by the next micro-batch.
     *
     * `nProbe` > 1 widens to the arrival's 2nd..n-th nearest lists
-    * (one chained anti-join each, the banded-probe trade — never a
-    * stream-side explode): strictly MORE dropping, for corpora where
-    * near-identical pairs straddle a centroid boundary. nProbe = 1 is
-    * the batch-parity tense (SemDeDup compares within one cluster).
+    * (the same kernel call, never a stream-side explode): strictly
+    * MORE dropping, for corpora where near-identical pairs straddle a
+    * centroid boundary. nProbe = 1 is the batch-parity tense (SemDeDup
+    * compares within one cluster).
     *
     * Stateless — no watermark, no state: embeddings cannot key the
     * door's within-watermark dedup (float arrays are not a stable
     * state key), so in-stream semantic pairs inside one batch are NOT
-    * caught here; they are caught at the next index refresh
-    * ([[graft.operators.Similarity.appendToIvfIndex]] /
+    * caught here; they are caught once the index holds them
+    * ([[graft.operators.Similarity.appendToIvfIndexTable]] /
     * [[graft.operators.IndexMaintenance.rebuildIvfIndex]]), exactly
     * the [[nearDupAgainstCorpus]] hamming-1..3 stance. NULL
     * embeddings pass untouched (no semantic evidence to drop on),
@@ -370,35 +260,15 @@ object StreamingOps {
     // leaf VECTORS (Similarity.requireHierOver, one definition with
     // the batch probe's)
     hier.foreach(tlq => Similarity.requireHierOver(tlq, index.cents))
-    require(!stream.columns.contains("graft_cent") &&
-        !stream.columns.contains("graft_cents"),
-      "input stream already has a graft_cent/graft_cents column")
     val v = Similarity.toDouble(col(vecCol))
-    // ALL probe ranks computed once per arrival up front
-    // (Similarity.centroidRanks): ONE native codegen kernel call
-    // scoring the K centroids once — row-local, composes with the
-    // single stateful op; each probe stage then reads its rank with
-    // try_element_at (NULL past a short array = unplaceable vector =
-    // nothing to probe, row passes)
+    // ALL probe ranks in ONE native kernel call scoring the K
+    // centroids once (a short array = an unplaceable vector: fewer or
+    // no lists to probe, the row passes)
     val ranks = hier.fold(
       Similarity.centroidRanks(v, index.cents, nProbe))(tlq =>
       Similarity.centroidRanksTwoLevel(v, tlq, nProbe, wProbe))
-    val withRanks = stream.withColumn("graft_cents",
-      when(col(vecCol).isNotNull, ranks))
-    val probed = (1 to nProbe).foldLeft(withRanks) { (df, p) =>
-      val corpusList = index.assigned
-        .select(col("cent_id").as("graft_probe_cent"),
-          col("c_vec").as("graft_corpus_vec"))
-      df.withColumn("graft_cent",
-          try_element_at(col("graft_cents"), lit(p)))
-        .join(corpusList,
-          col("graft_cent") === col("graft_probe_cent") &&
-            Similarity.cosine(v, col("graft_corpus_vec"))
-              >= cosThreshold,
-          "left_anti")
-        .drop("graft_cent")
-    }
-    probed.drop("graft_cents")
+    stream.filter(
+      !CorpusProbes.semanticHit(v, ranks, index.assigned, cosThreshold))
   }
 
   /** BM25 retrieval at the streaming boundary — score arriving
@@ -867,8 +737,7 @@ object StreamingOps {
     * transform — DSIR target-likeness, quality + bloom decontamination,
     * exact dedup against the corpus digest table, and banded near-dup
     * against the corpus fingerprint index — in cheapest-first order
-    * (row-local gates shed volume before any join runs; the probes
-    * join only what survived).
+    * (the text gates shed volume before the corpus probes run).
     *
     * The composition contract the per-gate operators were built to:
     *
@@ -887,10 +756,16 @@ object StreamingOps {
     *    same state lookup. An arbitrary caller-supplied fingerprint
     *    cannot make that guarantee, which is why there is no `sim`
     *    parameter: `corpusBands` MUST be built with
-    *    [[doorFingerprint]] over the corpus text. The corpus sides
-    *    stay stateless anti-joins, re-planned every micro-batch so
-    *    index appends ([[graft.operators.Dedup.appendToBandedIndex]]
-    *    / `appendToDigestIndex`) take effect on the next batch.
+    *    [[doorFingerprint]] over the corpus text.
+    *  - **Corpus sides**: the digest, band and semantic gates are
+    *    row-local [[CorpusProbes]] kernels over broadcast snapshots,
+    *    so the plan holds no join. Each micro-batch's planning reads
+    *    the corpus version token on the driver and rebuilds a snapshot
+    *    only when its corpus changed ([[CorpusSnapshots]]): an index
+    *    append ([[graft.operators.Dedup.appendToBandedIndexTable]] /
+    *    `appendToDigestIndexTable` / `appendToIvfIndexTable`) takes
+    *    effect on the next batch, and an unchanged corpus costs no
+    *    scan.
     *  - **Batch parity**: on a static frame the watermark elides and
     *    the state dedup degrades to `dropDuplicates`, so the SAME call
     *    is the batch curation pipeline's door — admit sets are equal
@@ -907,7 +782,7 @@ object StreamingOps {
    * independently (DSIR grams and quality shingles over
    * `tokens(text)`, the fingerprint over `tokens(trim(text))`, the
    * digest over `lower(trim(text))`). Each gate is its own
-   * projection, across joins codegen cannot share, so the split runs
+   * expression with no shared token column, so the split runs
    * at least once per gate that needs tokens (the DSIR and shingle
    * kernels each read the token array once), plus whatever the
    * caller's quality model evaluates. Sharing one
@@ -918,35 +793,13 @@ object StreamingOps {
    * operators. */
   /* The optional FIFTH gate: pass `semIndex` (the staged IVF index
    * over the corpus embeddings) and the door chains [[semanticProbe]]
-   * on `semVecCol` after the fingerprint probes — semantically
+   * on `semVecCol` after the fingerprint probe — semantically
    * near-identical arrivals (paraphrases the text gates cannot see)
    * are dropped against the corpus, still with zero additional
-   * stateful ops (the probe is a stateless anti-join). Docs with a
-   * NULL embedding pass the semantic gate untouched. At EXTREME K
-   * pass `semHier`/`semWProbe` to route the gate's rank kernel
-   * through the two-level hierarchy ([[semanticProbe]]'s `hier`). */
-  /* `deferBandProbe` — the ARRIVAL-BOUNDED production composition
-   * (r17 VERDICT #1): `true` removes the four in-plan banded
-   * anti-joins (whose corpus-side scans are corpus-proportional per
-   * micro-batch — the one per-batch cost in this chain that grows
-   * with index size) and the ingest loop instead applies
-   * [[prunedBandProbe]] to each micro-batch inside foreachBatch,
-   * where the batch's own (band, bits) key set can be collected and
-   * joined to the band-pruned corpus side as a broadcast semi-join.
-   *
-   * EXACTNESS of the deferral (spec-pinned, StreamingOpsSpec): the
-   * banded verdict is a pure function of `graft_sim` — exactly the
-   * key the final stateful dedup is keyed on — so the gate is
-   * all-or-none per dedup key and commutes with the dedup: per key,
-   * the dedup's candidate row set is unchanged (every other gate is
-   * per-row and unmoved), so the representative it keeps is the same
-   * row, and the key survives the band gate after the dedup iff it
-   * would have before. The only behavioral differences are
-   * operational: band-duplicate arrivals now occupy (watermark-
-   * bounded) dedup state instead of dying before it, and the rows the
-   * door emits are final only after the caller's per-batch probe —
-   * which is why the default stays in-plan and the deferral is the
-   * ingest loop's opt-in. */
+   * stateful ops. Docs with a NULL embedding pass the semantic gate
+   * untouched. At EXTREME K pass `semHier`/`semWProbe` to route the
+   * gate's rank kernel through the two-level hierarchy
+   * ([[semanticProbe]]'s `hier`). */
   def ingestDoor(stream: DataFrame, textCol: String, tsCol: String,
                  scoreQ8: Column, minScoreQ8: Long,
                  bloom: graft.operators.Decontaminate.BloomModel,
@@ -963,24 +816,14 @@ object StreamingOps {
                  semHier: Option[
                    graft.operators.Similarity.TwoLevelQuantizer]
                    = None,
-                 semWProbe: Int = 2,
-                 deferBandProbe: Boolean = false): DataFrame = {
+                 semWProbe: Int = 2): DataFrame = {
     val gated = admitAtDoor(
       dsirAdmitAtDoor(stream, textCol, dsir),
       textCol, scoreQ8, minScoreQ8, bloom, shingleN, maxContamPermille)
     val digested = digestProbe(gated, textCol, corpusDigests)
       .drop("graft_digest")
-    // deferred: the fingerprint column the dedup keys on is still
-    // computed here (same expression the in-plan probe would use);
-    // only the four corpus anti-joins move into the caller's
-    // foreachBatch ([[prunedBandProbe]])
-    val probed =
-      if (deferBandProbe) {
-        require(!digested.columns.contains("graft_sim"),
-          "input stream already has a graft_sim column")
-        digested.withColumn("graft_sim", doorFingerprint(col(textCol)))
-      } else bandProbe(digested,
-        doorFingerprint(col(textCol)), corpusBands, maxHamming)
+    val probed = bandProbe(digested,
+      doorFingerprint(col(textCol)), corpusBands, maxHamming)
     val sem = semIndex.fold(probed)(ix =>
       semanticProbe(probed, semVecCol, ix, semCosThreshold, semNProbe,
         semHier, semWProbe))

@@ -14,6 +14,11 @@ object GraftBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `plan` with its cached subtrees swapped for their
+    * `InMemoryRelation`s, as query execution sees it. */
+  def useCachedData(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
+    spark.sharedState.cacheManager.useCachedData(plan)
+
   /** Column ⇄ Expression, for expressions that carry non-literal
     * driver state (a broadcast handle) and therefore cannot go
     * through the function registry's Expression-only builders. */

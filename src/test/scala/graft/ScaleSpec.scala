@@ -749,10 +749,9 @@ class ScaleSpec extends SparkSpec {
       batch, "vec_id", "embedding").encoded, 21)
   }
 
-  test("ingestDoor streaming plan: ONE stateful op, anti-joins only, no stream-side explode") {
+  test("ingestDoor streaming plan: ONE stateful op, zero joins, no stream-side explode") {
     import org.apache.spark.sql.catalyst.plans.logical.{
       Aggregate, DeduplicateWithinWatermark, Generate, Join}
-    import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.{Dedup, Decontaminate, Dsir, TextAnalysis => TA}
     implicit val sqlCtx = spark.sqlContext
@@ -787,22 +786,19 @@ class ScaleSpec extends SparkSpec {
       s"the door must spend exactly ONE stateful op, found ${statefuls.size}")
     assert(plan.collect { case a: Aggregate => a }.isEmpty,
       "the door must not carry a streaming aggregation")
-    // every join is a LEFT ANTI corpus probe (1 digest + 4 bands);
-    // anything else would put corpus-sized state on the stream
-    val joins = plan.collect { case j: Join => j }
-    assert(joins.size == 5 && joins.forall(_.joinType == LeftAnti),
-      s"door joins must be the 5 anti-probes, got " +
-        joins.map(_.joinType).mkString(","))
-    // and no stream-side explode: banding probes the index per band
-    // instead of exploding arrivals (the append-mode trade the
-    // nearDupAgainstCorpus scaladoc documents)
+    // the digest and band gates are row-local snapshot probes: no
+    // join reads a corpus side per micro-batch
+    assert(plan.collect { case j: Join => j }.isEmpty,
+      "the door's corpus gates must plan no join")
+    // and no stream-side explode: the band kernel probes all four
+    // bands of an arrival in one call
     assert(plan.collect { case g: Generate => g }.isEmpty,
       "the stream side must never explode")
 
-    // ---- with the semantic (embedding) gate on: ONE more stateless
-    // anti-probe (centroid ranks ride as the row-local CentroidRanks
-    // expression), still exactly one stateful op, still no explode,
-    // still no aggregation
+    // ---- with the semantic (embedding) gate on: ONE more row-local
+    // probe (centroid ranks ride as the CentroidRanks expression),
+    // still exactly one stateful op, no join, no explode, no
+    // aggregation
     val semCorpus = Seq(
       (0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)))
       .toDF("vec_id", "embedding")
@@ -827,74 +823,10 @@ class ScaleSpec extends SparkSpec {
       "the semantic door must still spend exactly ONE stateful op")
     assert(semPlan.collect { case a: Aggregate => a }.isEmpty,
       "the semantic door must not carry a streaming aggregation")
-    val semJoins = semPlan.collect { case j: Join => j }
-    assert(semJoins.size == 6 && semJoins.forall(_.joinType == LeftAnti),
-      s"semantic door joins must be the 6 anti-probes, got " +
-        semJoins.map(_.joinType).mkString(","))
+    assert(semPlan.collect { case j: Join => j }.isEmpty,
+      "the semantic door must plan no join")
     assert(semPlan.collect { case g: Generate => g }.isEmpty,
       "the semantic door's stream side must never explode")
-  }
-
-  test("prunedBandProbe on the banded TABLE: corpus scans are " +
-    "partition-pruned to the probe's bands and semi-joined down to " +
-    "the batch's bits keys; result == unpruned probe") {
-    import graft.operators.Dedup
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    def docsDf(ids: Range) = ids.map(i =>
-      (i.toLong, s"corpus doc $i with shared tokens ${i % 5}"))
-      .toDF("doc_id", "text")
-    // force the session before doorFingerprint registers its kernels
-    spark.sql("DROP TABLE IF EXISTS graft_prune_band")
-    val simOf = graft.streaming.StreamingOps.doorFingerprint(col("text"))
-    try {
-      Dedup.createBandedIndexTable(
-        docsDf(0 until 120).select(col("doc_id"), simOf.as("fp")),
-        "doc_id", "fp", "graft_prune_band", 4)
-      val batch = Seq(
-        (1000L, "corpus doc 3 with shared tokens 3"),  // near-dup
-        (1001L, "entirely novel arrival content xyz")) // novel
-        .toDF("id", "text")
-      val table = spark.table("graft_prune_band")
-      // raw physical plan for the scan assertions (AQE wraps the tree
-      // until execution — the BM25 plan test's stance)
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      val plan = try {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        graft.streaming.StreamingOps.prunedBandProbe(
-            batch, simOf, table, maxHamming = 3)
-          .queryExecution.executedPlan
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      val probed = graft.streaming.StreamingOps.prunedBandProbe(
-        batch, simOf, table, maxHamming = 3)
-      val scans = plan.collect {
-        case s: FileSourceScanExec
-          if s.tableIdentifier.exists(_.table == "graft_prune_band") => s
-      }
-      assert(scans.size == 4, s"expected 4 per-band scans, got ${scans.size}")
-      scans.foreach { s =>
-        assert(s.partitionFilters.exists(_.references.exists(
-            _.name == "band")),
-          s"band scan missing its partition filter: ${s.partitionFilters}")
-      }
-      // each band partition is semi-joined down to the batch's own
-      // collected bits keys (broadcast build — the arrival-bounded
-      // prefilter the deferral exists for) before the anti-join
-      val semis = plan.collect {
-        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
-      }
-      assert(semis.size == 4,
-        s"expected 4 per-band key semi-joins, got ${semis.size}")
-      // exactness: pruning is pure scan hygiene — forcing the fallback
-      // (maxProbeKeys = 0 → unpruned corpus sides) yields the SAME rows
-      val pruned = probed.select("id").as[Long].collect().sorted.toSeq
-      val unpruned = graft.streaming.StreamingOps.prunedBandProbe(
-          batch, simOf, table, maxHamming = 3, maxProbeKeys = 0)
-        .select("id").as[Long].collect().sorted.toSeq
-      assert(pruned == unpruned, s"pruned=$pruned unpruned=$unpruned")
-      assert(pruned == Seq(1001L),
-        s"the near-dup arrival must be dropped, the novel kept: $pruned")
-    } finally spark.sql("DROP TABLE IF EXISTS graft_prune_band")
   }
 
   test("BM25 postings tables: the probe's corpus-side scans stay " +
@@ -1414,9 +1346,8 @@ class ScaleSpec extends SparkSpec {
     "compaction preserves both") {
     import graft.operators.Dedup
     import graft.streaming.StreamingOps
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.joins.{
-      BroadcastHashJoinExec, SortMergeJoinExec, ShuffledHashJoinExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     def docsDf(ids: Range) = ids.map(i =>
       (i.toLong, s"doc number $i with body ${(i * 13) % 7}"))
       .toDF("doc_id", "text")
@@ -1426,15 +1357,10 @@ class ScaleSpec extends SparkSpec {
     val b2 = docsDf(200 until 220)
     val fp = (df: org.apache.spark.sql.DataFrame) =>
       df.select(col("doc_id"), simOf.as("fp"))
-    val prevBroadcast =
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    // force the real at-scale shape: without this the tiny test corpus
-    // would broadcast and trivially (meaninglessly) pass. AQE is off
-    // so the executed plan keeps raw join/exchange nodes for the
-    // structural corpus-side assertions (AQE wraps them in query
-    // stages that tree-collect cannot see through).
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // AQE is off so the executed plan keeps raw scan/join nodes for
+    // the structural assertions (AQE wraps them in query stages that
+    // tree-collect cannot see through)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       Dedup.createBandedIndexTable(fp(corpus), "doc_id", "fp",
@@ -1463,41 +1389,38 @@ class ScaleSpec extends SparkSpec {
         digestRows(Dedup.digestIndex(unionAll, "text")))
 
       // the probes: batch tense of the door's stateless halves over
-      // the table-backed corpus sides. Every anti-join's CORPUS (right)
-      // subtree must be exchange-free — the bucketed layout pays the
-      // shuffle at write time; only the arriving batch may shuffle.
+      // the table-backed corpus sides. The corpus tables are read into
+      // a broadcast snapshot when they change, never scanned or joined
+      // on the arrivals' side; the verdicts follow the tables through
+      // appends and compaction.
       val arrivals = docsDf(300 until 310)
         .withColumn("ts", lit(java.sql.Timestamp.valueOf(
           "2024-01-01 00:00:00")))
-      def assertCorpusSideFree(label: String,
-                               df: org.apache.spark.sql.DataFrame,
-                               expectJoins: Int): Unit = {
+      val dups = docsDf(0 until 2).unionByName(docsDf(200 until 202))
+        .withColumn("ts", lit(java.sql.Timestamp.valueOf(
+          "2024-01-01 00:00:00")))
+      def assertNoCorpusScan(label: String,
+                             probe: org.apache.spark.sql.DataFrame =>
+                               org.apache.spark.sql.DataFrame): Unit = {
+        val df = probe(arrivals)
         assert(df.count() == 10, s"$label: all arrivals are novel")
+        assert(probe(dups).count() == 0,
+          s"$label: corpus and appended docs must all be dropped")
         val plan = df.queryExecution.executedPlan
-        val joins = plan.collect {
-          case j: SortMergeJoinExec => j
-          case j: ShuffledHashJoinExec => j
-        }
-        assert(plan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
-          s"$label: broadcast disabled, probes must plan shuffled joins")
-        assert(joins.size == expectJoins,
-          s"$label: expected $expectJoins probe joins, got ${joins.size}")
-        joins.foreach { j =>
-          val right: SparkPlan = j match {
-            case s: SortMergeJoinExec => s.right
-            case s: ShuffledHashJoinExec => s.right
-          }
-          assert(right.collect {
-              case e: ShuffleExchangeExec => e }.isEmpty,
-            s"$label: corpus side of a probe shuffled:\n$plan")
-        }
+        assert(plan.collect { case s: FileSourceScanExec
+            if s.tableIdentifier.exists(_.table.endsWith("_tbl")) => s
+          }.isEmpty, s"$label: the probe scans a corpus table:\n$plan")
+        assert(plan.collect { case j: BaseJoinExec => j }.isEmpty,
+          s"$label: the probe joins:\n$plan")
       }
-      assertCorpusSideFree("banded probe",
-        StreamingOps.nearDupAgainstCorpus(arrivals, simOf, "ts",
-          spark.table("graft_bands_tbl"), "10 minutes"), 4)
-      assertCorpusSideFree("digest probe",
-        StreamingOps.dedupAgainstCorpus(arrivals, "text", "ts",
-          spark.table("graft_digests_tbl"), "10 minutes"), 1)
+      def bandProbe(df: org.apache.spark.sql.DataFrame) =
+        StreamingOps.nearDupAgainstCorpus(df, simOf, "ts",
+          spark.table("graft_bands_tbl"), "10 minutes")
+      def digestProbe(df: org.apache.spark.sql.DataFrame) =
+        StreamingOps.dedupAgainstCorpus(df, "text", "ts",
+          spark.table("graft_digests_tbl"), "10 minutes")
+      assertNoCorpusScan("banded probe", bandProbe)
+      assertNoCorpusScan("digest probe", digestProbe)
 
       // compaction rewrites the accumulated append files (3 per
       // bucket) into one; content and the exchange-free probe survive
@@ -1514,14 +1437,9 @@ class ScaleSpec extends SparkSpec {
         bandRows(Dedup.hammingBandIndex(fp(unionAll), "doc_id", "fp")))
       assert(digestRows(spark.table("graft_digests_tbl")) ==
         digestRows(Dedup.digestIndex(unionAll, "text")))
-      assertCorpusSideFree("banded probe post-compact",
-        StreamingOps.nearDupAgainstCorpus(arrivals, simOf, "ts",
-          spark.table("graft_bands_tbl"), "10 minutes"), 4)
-      assertCorpusSideFree("digest probe post-compact",
-        StreamingOps.dedupAgainstCorpus(arrivals, "text", "ts",
-          spark.table("graft_digests_tbl"), "10 minutes"), 1)
+      assertNoCorpusScan("banded probe post-compact", bandProbe)
+      assertNoCorpusScan("digest probe post-compact", digestProbe)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.sql("DROP TABLE IF EXISTS graft_bands_tbl")
       spark.sql("DROP TABLE IF EXISTS graft_digests_tbl")

@@ -24,7 +24,13 @@ object SparkSpec {
 
   /** Run `body` and return the messages it logged through the logger
     * of `cls` at WARN or above (the suite's log level). */
-  def warningsOf(cls: Class[_])(body: => Unit): Seq[String] = {
+  def warningsOf(cls: Class[_])(body: => Unit): Seq[String] =
+    logsOf(cls, org.apache.logging.log4j.Level.WARN)(body)
+
+  /** [[warningsOf]] at `level` or above: the logger runs at `level`
+    * for the duration of `body`. */
+  def logsOf(cls: Class[_], level: org.apache.logging.log4j.Level)(
+      body: => Unit): Seq[String] = {
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     session // Spark's log4j2 setup must be live before anything logs
     val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -37,8 +43,13 @@ object SparkSpec {
     appender.start()
     val logger = org.apache.logging.log4j.LogManager.getLogger(cls)
       .asInstanceOf[Logger]
+    val prevLevel = logger.getLevel
     logger.addAppender(appender)
-    try body finally logger.removeAppender(appender)
+    logger.setLevel(level)
+    try body finally {
+      logger.setLevel(prevLevel)
+      logger.removeAppender(appender)
+    }
     got.toArray(Array.empty[String]).toSeq
   }
 }

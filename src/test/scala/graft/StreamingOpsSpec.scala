@@ -711,99 +711,6 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("deferred band gate: door(deferBandProbe) + prunedBandProbe " +
-    "admits exactly what the in-plan door admits") {
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Dedup, Decontaminate, Dsir, TextAnalysis => TA}
-    // the composition test's fixture verbatim — every gate non-vacuous
-    val evalDocs = Seq((900L, "alpha beta gamma delta epsilon", true))
-      .toDF("doc_id", "text", "is_eval")
-    val bloom = Decontaminate.buildShingleBloom(
-      evalDocs, "doc_id", "text", col("is_eval"), n = 3)
-    val dsirCorpus = Seq(
-      (1L, "apple banana cherry damson elder", true),
-      (2L, "banana cherry apple elder damson", true),
-      (3L, "hammer wrench pliers chisel rasp", false),
-      (4L, "wrench hammer rasp pliers chisel", false)
-    ).toDF("doc_id", "text", "is_t")
-    val dsir = Dsir.fitModel(dsirCorpus, "doc_id",
-      TA.tokens(col("text")), isTarget = col("is_t"))
-    val corpus = Seq((100L, "apple banana cherry elder quince plum"))
-      .toDF("doc_id", "text")
-    val corpusDigests = Dedup.digestIndex(corpus, "text")
-    val simOf = StreamingOps.doorFingerprint(col("text"))
-    val corpusBands = Dedup.hammingBandIndex(
-      corpus.select(col("doc_id"), simOf.as("fp")), "doc_id", "fp")
-      .localCheckpoint()
-    def scoreQ8 = {
-      val toks = TA.tokens(col("text"))
-      val lenSatQ4 = floor(least(size(toks), lit(100)).cast("double")
-        / 100.0d * 10000.0d + 0.5d).cast("long")
-      TA.linearModelQ8(Seq((lenSatQ4, 10000L)), biasQ8 = 0L)
-    }
-    val rows = Seq(
-      (ts("2024-01-01 10:00:00"), 1L,
-        "apple damson cherry banana elder damson apple cherry"),
-      (ts("2024-01-01 10:00:01"), 2L,
-        "hammer wrench pliers chisel rasp hammer wrench pliers"),
-      (ts("2024-01-01 10:00:02"), 3L, "apple banana cherry"),
-      (ts("2024-01-01 10:00:03"), 4L,
-        "apple banana alpha beta gamma delta epsilon"),
-      (ts("2024-01-01 10:00:04"), 5L,
-        "apple banana cherry elder quince plum"),
-      // token permutation of the corpus doc → identical simhash → the
-      // DEFERRED band gate (not the in-plan one) must drop it
-      (ts("2024-01-01 10:00:05"), 6L,
-        "plum quince elder cherry banana apple"),
-      (ts("2024-01-01 10:00:06"), 7L,
-        "apple damson cherry banana elder damson apple cherry"),
-      (ts("2024-01-01 10:00:07"), 8L,
-        "cherry elder apple damson banana cherry elder apple damson"))
-    // the deferred STREAMING door: band gate skipped in-plan, applied
-    // per micro-batch inside foreachBatch (the production loop shape)
-    val deferredTexts = scala.collection.mutable.Set.empty[String]
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val door = StreamingOps.ingestDoor(
-      input.toDF().toDF("ts", "id", "text"), "text", "ts",
-      scoreQ8, minScoreQ8 = 4000000L, bloom, dsir,
-      corpusDigests, corpusBands, "10 minutes",
-      deferBandProbe = true)
-    // structural: the deferred door spends its single stateful op and
-    // carries ONLY the digest anti-probe — the four banded joins left
-    // the plan
-    val lp = door.queryExecution.analyzed
-    import org.apache.spark.sql.catalyst.plans.logical.{
-      DeduplicateWithinWatermark, Join}
-    assert(lp.collect { case d: DeduplicateWithinWatermark => d }.size == 1)
-    assert(lp.collect { case j: Join => j }.size == 1,
-      "the deferred door must carry only the digest anti-probe")
-    val q = door.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        deferredTexts ++= StreamingOps.prunedBandProbe(
-            batch, StreamingOps.doorFingerprint(col("text")),
-            corpusBands, maxHamming = 3)
-          .select(lower(trim(col("text")))).as[String].collect()
-        ()
-      }.start()
-    try {
-      input.addData(rows.take(5): _*)
-      q.processAllAvailable()
-      input.addData(rows.drop(5): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // the in-plan door over the same rows (batch tense — the
-    // composition test already pins batch == stream for it)
-    val inPlanTexts = StreamingOps.ingestDoor(
-        rows.toDF("ts", "id", "text"), "text", "ts",
-        scoreQ8, minScoreQ8 = 4000000L, bloom, dsir,
-        corpusDigests, corpusBands, "10 minutes")
-      .select(lower(trim(col("text")))).as[String].collect().toSet
-    assert(deferredTexts.toSet == inPlanTexts,
-      s"deferred=$deferredTexts in-plan=$inPlanTexts")
-  }
-
   test("ingestDoor drops a NULL-text document without crashing") {
     import org.apache.spark.sql.functions._
     import graft.operators.{Dedup, Decontaminate, Dsir, TextAnalysis => TA}
