@@ -28,5 +28,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    // runs once, when the session builds its analyzer
+    e.injectCheckRule { spark =>
+      graft.sources.NioLocalFileSystem.install(spark)
+      _ => ()
+    }
   }
 }

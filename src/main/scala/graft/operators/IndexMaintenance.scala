@@ -287,17 +287,9 @@ object IndexMaintenance {
                       spark: SparkSession): Option[IvfIndex] =
     store.currentDir().map(loadIvfIndex(spark, _))
 
-  def currentLshIndex(store: VersionedIndexStore,
-                      spark: SparkSession): Option[LshIndex] =
-    store.currentDir().map(loadLshIndex(spark, _))
-
   def currentPqIndex(store: VersionedIndexStore,
                      spark: SparkSession): Option[PqIndex] =
     store.currentDir().map(loadPqIndex(spark, _))
-
-  def currentIvfPqIndex(store: VersionedIndexStore,
-                        spark: SparkSession): Option[IvfPqIndex] =
-    store.currentDir().map(loadIvfPqIndex(spark, _))
 
   /** Load a version directory as the SAME family as `like` — the
     * family-dispatch seam the cross-surface erasure audit uses to

@@ -57,16 +57,6 @@ object Similarity {
   /** Squared L2 norm. */
   def normSq(a: Column): Column = dot(a, a)
 
-  /** Squared L2 distance via the native kernel
-    * (graft.functions.SqDist). Index-order summation — bit-identical
-    * to the `aggregate(zip_with((x-y)*(x-y)))` fold it replaced and
-    * to the fused Lloyd iterate's JVM loop. */
-  def sqDist(a: Column, b: Column): Column = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("graft_sqdist", a, b)
-  }
-
   /** Rows with a NULL embedding are EXCLUDED from every vector
     * operator — the realistic failed-extraction artifact: vector math
     * has no null-propagating meaning inside an index, a centroid sum,
@@ -91,14 +81,6 @@ object Similarity {
     * [[cosine]]) — shared by the scorers that precompute norms. */
   private def safeCosDiv(num: Column, den: Column): Column =
     when(den === 0.0d, 0.0d).otherwise(num / den)
-
-  /** Divide by `n` element-wise; zero norms pass the vector through
-    * unchanged rather than dividing by zero. */
-  private def normalizeBy(v: Column, n: Column): Column =
-    when(n === 0.0d, v).otherwise(transform(v, x => x / n))
-
-  /** L2-normalized copy of a double-array column. */
-  def l2Normalize(v: Column): Column = normalizeBy(v, sqrt(normSq(v)))
 
   /** Int8 quantization of an embedding: scale the L2-normalized
     * vector by 127 and round half-up — the standard storage shrink
@@ -2453,13 +2435,6 @@ object Similarity {
                               batchId: Option[Long] = None): Long =
     StagedTables.delete(spark, lshLayout(prefix), buckets, batchId,
       ids.select(col(idCol).as("c_id")))
-
-  /** Tombstone-applying compaction + batch-attribution collapse —
-    * [[compactIvfIndexTable]]'s contract on the bucket layout. The
-    * `dropped` census is untouched: it stays frozen. */
-  def compactLshIndexTable(spark: org.apache.spark.sql.SparkSession,
-                           prefix: String, buckets: Int): Unit =
-    StagedTables.compact(spark, lshLayout(prefix), buckets)
 
   /** Audit-gated maintenance — [[maintainIvfIndexTable]]'s contract
     * on the bucket layout. */

@@ -41,6 +41,7 @@ object BucketedTables {
                     partitionCols: Seq[String] = Nil): Unit = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(keyCols.nonEmpty, "need at least one bucketing column")
+    NioLocalFileSystem.install(df.sparkSession)
     // hash-repartition into the bucket layout BEFORE writing: without
     // it every write task emits a file into every bucket it holds rows
     // for (up to tasks × buckets small files per write — the classic
@@ -244,6 +245,7 @@ object BucketedTables {
     * tables are by the same token cheap to over-compact. */
   def fileAmplification(spark: SparkSession, table: String,
                         buckets: Int): Double = {
+    NioLocalFileSystem.install(spark)
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     val meta = spark.sessionState.catalog.getTableMetadata(ident)
     val rawRoot = new org.apache.hadoop.fs.Path(meta.location)

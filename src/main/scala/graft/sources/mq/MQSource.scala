@@ -58,7 +58,7 @@ class MQSourceProvider extends TableProvider with DataSourceRegister {
     // both readStream and writeStream of `ibmmq` resolve the table
     // here, before the query builds its offset/commit logs
     SparkSession.getActiveSession
-      .foreach(graft.sources.LocalCheckpointFileManager.install)
+      .foreach(graft.sources.NioLocalFileSystem.install)
     new MQTable(MQOptions(properties.asScala.toMap))
   }
 }

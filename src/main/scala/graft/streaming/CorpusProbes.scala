@@ -481,6 +481,7 @@ object CorpusSnapshots {
   private def listing(spark: SparkSession,
                       index: FileIndex): Option[Seq[(String, Long, Long)]] =
     scala.util.Try {
+      graft.sources.NioLocalFileSystem.install(spark)
       val roots = index.rootPaths
       val under = roots.map(_.toUri.getPath.stripSuffix("/") + "/")
       val partitions = index match {
@@ -491,14 +492,10 @@ object CorpusSnapshots {
         case _ => Nil
       }
       val conf = spark.sparkContext.hadoopConfiguration
-      // plain listStatus: a located listing would also read each
-      // file's owner and permissions, which a local file system gets
-      // by forking a process per file
-      def walk(fs: org.apache.hadoop.fs.FileSystem,
-               dir: Path): Seq[(String, Long, Long)] =
-        fs.listStatus(dir).toSeq.flatMap(st =>
-          if (st.isDirectory) walk(fs, st.getPath)
-          else Seq((st.getPath.toString, st.getLen, st.getModificationTime)))
-      (roots ++ partitions).flatMap(r => walk(r.getFileSystem(conf), r)).sorted
+      (roots ++ partitions).flatMap { r =>
+        val it = r.getFileSystem(conf).listFiles(r, /* recursive = */ true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+      }.sorted
     }.toOption
 }

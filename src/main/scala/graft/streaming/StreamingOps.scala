@@ -27,15 +27,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("cnt"), sum(col(valueCol)).as("total"))
       .select(col("w.start").as("win_start"), col("cnt"), col("total"))
 
-  /** Sliding-window counts with watermark. */
-  def slidingAgg(events: DataFrame, tsCol: String, windowLen: String,
-                 slide: String, lateness: String): DataFrame =
-    events
-      .withWatermark(tsCol, lateness)
-      .groupBy(window(col(tsCol), windowLen, slide).as("w"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("w.start").as("win_start"), col("cnt"))
-
   /** Session windows per key with a gap timeout. */
   def sessionAgg(events: DataFrame, tsCol: String, keyCol: String,
                  gap: String, lateness: String): DataFrame =

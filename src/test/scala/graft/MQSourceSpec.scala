@@ -2,9 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import graft.sources.LocalCheckpointFileManager
 import graft.sources.mq.{FileMQTransport, MQInputPartition, MQOptions, MQRecord, MQTransport, RetryingTransport}
-import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -1290,15 +1288,13 @@ class MQSourceSpec extends SparkSpec {
     assert(pq.encoded.count() == 256L + 8L + 96L + 8L)
   }
 
-  /** Run `body` with the session's checkpoint file manager set to
-    * `cls` (None = unset, so the `ibmmq` provider installs its own),
-    * restoring the previous setting afterwards. */
-  private def withCheckpointManager[T](cls: Option[String])(body: => T): T = {
-    val key = LocalCheckpointFileManager.ConfKey
-    val before = spark.conf.getOption(key)
-    cls.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    try body
-    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  /** Run `body` with the session's `FileContext` file system for
+    * `file:` set to Hadoop's stock `LocalFs`, which Spark's default
+    * checkpoint file manager then writes through. */
+  private def withStockLocalFs[T](body: => T): T = {
+    val key = "fs.AbstractFileSystem.file.impl"
+    spark.conf.set(key, "org.apache.hadoop.fs.local.LocalFs")
+    try body finally spark.conf.unset(key)
   }
 
   /** One AvailableNow pass of an `ibmmq` -> `ibmmq` relay. */
@@ -1325,26 +1321,31 @@ class MQSourceSpec extends SparkSpec {
     finally walk.close()
   }
 
-  test("relay checkpoints move between Spark's default manager and the " +
-    "local one in both directions, exactly once") {
-    val sparkDefault = Some(classOf[FileContextBasedCheckpointFileManager].getName)
+  test("relay reads forward checkpoints with and without .crc sidecars") {
     val (in, out, ckpt) =
-      (tmpDir("mq-cfm-in"), tmpDir("mq-cfm-out"), tmpDir("mq-cfm-ckpt"))
+      (tmpDir("mq-crc-in"), tmpDir("mq-crc-out"), tmpDir("mq-crc-ckpt"))
     append(in, (1L, "a"), (2L, "b"), (3L, "c"))
-    withCheckpointManager(sparkDefault)(relayOnce(in, out, ckpt))
-    assert(crcFiles(ckpt).nonEmpty, "Spark's default manager writes .crc")
+    withStockLocalFs(relayOnce(in, out, ckpt))
+    assert(crcFiles(ckpt).nonEmpty, "stock LocalFs writes .crc")
     append(in, (4L, "d"), (5L, "e"))
-    withCheckpointManager(None)(relayOnce(in, out, ckpt))
+    relayOnce(in, out, ckpt)
+    // no sidecars at all, as the engine writes its own checkpoint files
+    val walk = Files.walk(ckpt)
+    try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".crc"))
+      .toList.foreach(Files.delete)
+    finally walk.close()
     append(in, (6L, "f"))
-    withCheckpointManager(sparkDefault)(relayOnce(in, out, ckpt))
-    assert(payloads(out) == Seq("a", "b", "c", "d", "e", "f"))
+    relayOnce(in, out, ckpt)
+    append(in, (7L, "g"))
+    withStockLocalFs(relayOnce(in, out, ckpt))
+    assert(payloads(out) == Seq("a", "b", "c", "d", "e", "f", "g"))
   }
 
   test("an ibmmq query's default checkpoint holds no .crc sidecars") {
     val (in, out, ckpt) =
       (tmpDir("mq-nocrc-in"), tmpDir("mq-nocrc-out"), tmpDir("mq-nocrc-ckpt"))
     append(in, (1L, "a"), (2L, "b"), (3L, "c"))
-    withCheckpointManager(None)(relayOnce(in, out, ckpt))
+    relayOnce(in, out, ckpt)
     assert(payloads(out) == Seq("a", "b", "c"))
     assert(Files.exists(ckpt.resolve("commits").resolve("1")))
     assert(crcFiles(ckpt).isEmpty, crcFiles(ckpt).mkString(", "))
