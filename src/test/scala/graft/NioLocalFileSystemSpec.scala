@@ -11,7 +11,7 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{CreateFlag, FileAlreadyExistsException, FileContext, FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.security.UserGroupInformation
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
@@ -27,10 +27,11 @@ class MockSchemeFileSystem extends RawLocalFileSystem {
 /** The `file:` file system the engine installs: nothing it does on the
   * streaming and index-maintenance paths starts a process, its
   * statuses read as the stock ones do, it takes over the JVM's cached
-  * instance, and Spark's default checkpoint file manager keeps its
-  * contract over it. */
+  * instance, and Spark's default checkpoint file manager uses it for
+  * `file:` checkpoints. */
 class NioLocalFileSystemSpec extends SparkSpec {
   import spark.implicits._
+  import LocalCheckpointFileManagerSpec.{names, read, write}
 
   private def queue(dir: NioPath, payloads: String*): Unit =
     Files.write(dir.resolve("queue.jsonl"),
@@ -193,34 +194,10 @@ class NioLocalFileSystemSpec extends SparkSpec {
   }
 
   // Spark's default checkpoint file manager over the installed file
-  // system: the contract `HDFSMetadataLog` relies on
-
-  private def manager(dir: NioPath): CheckpointFileManager = {
-    NioLocalFileSystem.install(spark)
-    CheckpointFileManager.create(new Path(dir.toUri), spark.sessionState.newHadoopConf())
-  }
-
-  private def names(dir: NioPath): Set[String] = {
-    val ls = Files.list(dir)
-    try ls.iterator().asScala.map(_.getFileName.toString).toSet
-    finally ls.close()
-  }
-
-  private def write(fm: CheckpointFileManager, p: Path, text: String,
-                    overwrite: Boolean): Unit = {
-    val out = fm.createAtomic(p, overwrite)
-    out.write(text.getBytes(UTF_8))
-    out.close()
-  }
-
-  private def read(fm: CheckpointFileManager, p: Path): String = {
-    val in = fm.open(p)
-    try new String(in.readAllBytes(), UTF_8) finally in.close()
-  }
-
+  // system; its contract is LocalCheckpointFileManagerSpec's
   test("file: checkpoints go through the fork-free file system") {
     val dir = Files.createTempDirectory("cfm-fs")
-    val fm = manager(dir)
+    val fm = LocalCheckpointFileManagerSpec.manager(spark, dir)
     assert(fm.isInstanceOf[FileContextBasedCheckpointFileManager])
     val fc = FileContext.getFileContext(dir.toUri, spark.sessionState.newHadoopConf())
     assert(fc.getDefaultFileSystem.isInstanceOf[NioLocalFs])
@@ -244,42 +221,6 @@ class NioLocalFileSystemSpec extends SparkSpec {
     }
     assert(starts.isEmpty, byCommand(starts))
     assert(names(dir).isEmpty)
-  }
-
-  test("a created file is visible only after close") {
-    val dir = Files.createTempDirectory("cfm-create")
-    val fm = manager(dir)
-    val p = new Path(dir.toUri.toString, "0")
-    val out = fm.createAtomic(p, overwriteIfPossible = false)
-    out.write("v1".getBytes(UTF_8))
-    out.flush()
-    assert(!fm.exists(p))
-    out.close()
-    assert(fm.exists(p) && read(fm, p) == "v1")
-    assert(names(dir) == Set("0"))
-  }
-
-  test("cancel leaves neither the file nor a temp file") {
-    val dir = Files.createTempDirectory("cfm-cancel")
-    val fm = manager(dir)
-    val p = new Path(dir.toUri.toString, "0")
-    val out = fm.createAtomic(p, overwriteIfPossible = true)
-    out.write("partial".getBytes(UTF_8))
-    out.cancel()
-    assert(!fm.exists(p))
-    assert(names(dir).isEmpty)
-  }
-
-  test("a no-overwrite create onto an existing file throws " +
-    "FileAlreadyExistsException and keeps the first file") {
-    val dir = Files.createTempDirectory("cfm-noover")
-    val fm = manager(dir)
-    val p = new Path(dir.toUri.toString, "0")
-    write(fm, p, "first", overwrite = false)
-    intercept[FileAlreadyExistsException] {
-      write(fm, p, "second", overwrite = false)
-    }
-    assert(read(fm, p) == "first")
   }
 
   test("a non-file: scheme is untouched") {
