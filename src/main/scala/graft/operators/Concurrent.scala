@@ -124,13 +124,14 @@ object Concurrent {
         }
       } catch {
         case e: java.util.concurrent.TimeoutException =>
+          // a sibling that already failed is often the root cause of
+          // the hang; keep it on the exception instead of losing it
+          // (read first: the interrupts below fail the stragglers too)
+          fs.flatMap(_.value).foreach(_.flatten.failed.foreach(e.addSuppressed))
           // hang-breaker: interrupt stragglers rather than leaking a
           // non-daemon pool that pins the JVM
           interrupted = true
           pool.shutdownNow()
-          // a sibling that already failed is often the root cause of
-          // the hang; keep it on the exception instead of losing it
-          fs.flatMap(_.value).foreach(_.flatten.failed.foreach(e.addSuppressed))
           throw e
       }
       // every future is complete here; outer Try = the future's own

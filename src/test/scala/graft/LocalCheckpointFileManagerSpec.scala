@@ -2,52 +2,40 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => NioPath}
-import graft.sources.LocalCheckpointFileManager
+import java.util.concurrent.{Callable, CyclicBarrier, Executors}
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path, RawLocalFileSystem}
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
-/** A local file system reached under a scheme that is not `file:`. */
-class MockSchemeFileSystem extends RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("mockfs:///")
-}
-
-/** The fork-free local checkpoint file manager: atomic create, cancel,
-  * the no-overwrite contract `HDFSMetadataLog` relies on, Hadoop `.crc`
-  * sidecar handling, and the session wiring. */
+/** Spark's default checkpoint file manager on local `file:` paths,
+  * over the file system the engine installs: atomic create, cancel,
+  * the no-overwrite contract `HDFSMetadataLog` relies on, and Hadoop
+  * `.crc` sidecar handling. */
 class LocalCheckpointFileManagerSpec extends SparkSpec {
+  import LocalCheckpointFileManagerSpec._
 
-  private def manager(dir: NioPath): LocalCheckpointFileManager =
-    new LocalCheckpointFileManager(new Path(dir.toUri), new Configuration())
-
-  private def names(dir: NioPath): Set[String] = {
-    val ls = Files.list(dir)
-    try ls.iterator().asScala.map(_.getFileName.toString).toSet
-    finally ls.close()
-  }
-
-  private def write(fm: LocalCheckpointFileManager, p: Path, text: String,
-                    overwrite: Boolean): Unit = {
-    val out = fm.createAtomic(p, overwrite)
-    out.write(text.getBytes(UTF_8))
-    out.close()
-  }
-
-  private def read(fm: LocalCheckpointFileManager, p: Path): String = {
-    val in = fm.open(p)
-    try new String(in.readAllBytes(), UTF_8) finally in.close()
-  }
+  private def manager(dir: NioPath): CheckpointFileManager =
+    LocalCheckpointFileManagerSpec.manager(spark, dir)
 
   test("file: paths take the java.nio branch") {
-    val fm = manager(Files.createTempDirectory("cfm-branch"))
-    assert(fm.impl.isInstanceOf[LocalCheckpointFileManager.Nio])
+    val dir = Files.createTempDirectory("cfm-branch")
+    val fm = manager(dir)
+    assert(fm.isInstanceOf[FileContextBasedCheckpointFileManager])
+    val fc = FileContext.getFileContext(dir.toUri, spark.sessionState.newHadoopConf())
+    assert(fc.getDefaultFileSystem.isInstanceOf[NioLocalFs])
     assert(fm.isLocal)
   }
 
   test("a created file is visible only after close") {
     val dir = Files.createTempDirectory("cfm-create")
     val fm = manager(dir)
+    // Spark's manager creates no parent directory, as under stock
+    // LocalFs (HDFSMetadataLog makes its own)
+    Files.createDirectory(dir.resolve("sub"))
     val p = new Path(dir.toUri.toString, "sub/0")
     val out = fm.createAtomic(p, overwriteIfPossible = false)
     out.write("v1".getBytes(UTF_8))
@@ -82,6 +70,28 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     assert(names(dir) == Set("0"))
   }
 
+  test("of two no-overwrite writers racing on one file, exactly one wins") {
+    val dir = Files.createTempDirectory("cfm-race")
+    val (a, b) = (manager(dir), manager(dir))
+    val pool = Executors.newFixedThreadPool(2)
+    try for (round <- 0 until 200) {
+      val p = new Path(dir.toUri.toString, round.toString)
+      val outs = Seq(a -> "a", b -> "b").map { case (fm, text) =>
+        val out = fm.createAtomic(p, overwriteIfPossible = false)
+        out.write(text.getBytes(UTF_8))
+        out
+      }
+      val start = new CyclicBarrier(2)
+      val closed = outs.map(out => pool.submit(new Callable[Try[Unit]] {
+        override def call(): Try[Unit] = { start.await(); Try(out.close()) }
+      })).map(_.get)
+      assert(closed.count(_.isSuccess) == 1, s"round $round")
+      closed.foreach(_.failed.foreach(e =>
+        assert(e.isInstanceOf[FileAlreadyExistsException], e)))
+    } finally pool.shutdown()
+    assert(names(dir) == (0 until 200).map(_.toString).toSet)
+  }
+
   test("overwrite replaces the file and drops a stale .crc") {
     val dir = Files.createTempDirectory("cfm-over")
     val fm = manager(dir)
@@ -91,7 +101,7 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     write(fm, p, "new", overwrite = true)
     assert(read(fm, p) == "new")
     assert(names(dir) == Set("1.delta"))
-    // Hadoop's checksummed reader (Spark's default manager) agrees
+    // Hadoop's stock checksummed reader agrees
     val local = FileSystem.getLocal(new Configuration())
     val in = local.open(p)
     try assert(new String(in.readAllBytes(), UTF_8) == "new")
@@ -119,44 +129,31 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     assert(names(dir).isEmpty)
     fm.delete(p) // deleting a missing file is a no-op
   }
+}
 
-  test("a non-file: path never reaches the java.nio branch") {
-    val conf = new Configuration()
-    conf.setClass("fs.mockfs.impl", classOf[MockSchemeFileSystem],
-      classOf[FileSystem])
-    // the session key stays set: the delegate must not resolve to this
-    // class again (that would recurse)
-    conf.set(LocalCheckpointFileManager.ConfKey,
-      classOf[LocalCheckpointFileManager].getName)
-    val dir = Files.createTempDirectory("cfm-mockfs")
-    val fm = new LocalCheckpointFileManager(
-      new Path(s"mockfs://${dir.toUri.getPath}"), conf)
-    assert(fm.impl.isInstanceOf[FileSystemBasedCheckpointFileManager])
+object LocalCheckpointFileManagerSpec {
+  /** Spark's default checkpoint manager for `dir`, with the engine's
+    * `file:` file system installed in `spark`. */
+  def manager(spark: SparkSession, dir: NioPath): CheckpointFileManager = {
+    NioLocalFileSystem.install(spark)
+    CheckpointFileManager.create(new Path(dir.toUri), spark.sessionState.newHadoopConf())
   }
 
-  test("a user-set checkpointFileManagerClass is never replaced") {
-    val key = LocalCheckpointFileManager.ConfKey
-    val ours = classOf[LocalCheckpointFileManager].getName
-    val theirs = classOf[FileSystemBasedCheckpointFileManager].getName
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val before = spark.conf.getOption(key)
-    def loadIbmmq(): Unit = spark.readStream.format("ibmmq")
-      .option("path", "/nonexistent-queue-dir").load()
-    try {
-      spark.conf.unset(key)
-      loadIbmmq()
-      assert(spark.conf.get(key) == ours)
-      spark.conf.set(key, theirs)
-      loadIbmmq()
-      assert(spark.conf.get(key) == theirs)
-      // a Hadoop-level choice counts as the user's too
-      spark.conf.unset(key)
-      hadoopConf.set(key, theirs)
-      loadIbmmq()
-      assert(spark.conf.getOption(key).isEmpty)
-    } finally {
-      hadoopConf.unset(key)
-      before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
+  def names(dir: NioPath): Set[String] = {
+    val ls = Files.list(dir)
+    try ls.iterator().asScala.map(_.getFileName.toString).toSet
+    finally ls.close()
+  }
+
+  def write(fm: CheckpointFileManager, p: Path, text: String,
+            overwrite: Boolean): Unit = {
+    val out = fm.createAtomic(p, overwrite)
+    out.write(text.getBytes(UTF_8))
+    out.close()
+  }
+
+  def read(fm: CheckpointFileManager, p: Path): String = {
+    val in = fm.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 }

@@ -113,14 +113,16 @@ class NioLocalFileSystemSpec extends SparkSpec {
     }
   }
 
-  /** A file, a directory and a relative symlink to the file, with
-    * permissions other than the umask's defaults. */
+  /** A file, a directory, a sticky directory and a relative symlink to
+    * the file, with permissions other than the umask's defaults. */
   private def tree(): NioPath = {
     val dir = Files.createTempDirectory("fs-parity")
     val f = Files.write(dir.resolve("f"), "twelve bytes".getBytes(UTF_8))
     Files.setPosixFilePermissions(f, PosixFilePermissions.fromString("rw-r-----"))
     Files.setPosixFilePermissions(Files.createDirectory(dir.resolve("d")),
       PosixFilePermissions.fromString("rwxr-x--x"))
+    Files.setAttribute(Files.createDirectory(dir.resolve("t")), "unix:mode",
+      Int.box(Integer.parseInt("1777", 8)))
     Files.createSymbolicLink(dir.resolve("l"), Paths.get("f"))
     dir
   }
@@ -142,7 +144,7 @@ class NioLocalFileSystemSpec extends SparkSpec {
     // bare and `file:` paths; the stock link status reads the link
     // through `new File(path.toString)`, which names no file for a
     // `file:` path, so only bare paths show it a link
-    for (n <- Seq("f", "d", "l"); p <- Seq(new Path(dir.resolve(n).toString),
+    for (n <- Seq("f", "d", "t", "l"); p <- Seq(new Path(dir.resolve(n).toString),
       new Path(dir.resolve(n).toUri))) {
       assert(view(ours.getFileStatus(p)) == view(stock.getFileStatus(p)), p)
       assert(ours.listStatus(p).map(view).toSet ==
@@ -157,6 +159,8 @@ class NioLocalFileSystemSpec extends SparkSpec {
     assert(link.isSymlink && link.getSymlink == new Path(dir.resolve("f").toUri))
     assert(ours.getFileStatus(new Path(dir.resolve("d").toUri)).getPermission ==
       new FsPermission("751"))
+    val sticky = new Path(dir.resolve("t").toUri)
+    assert(stock.getFileStatus(sticky).getPermission == new FsPermission("1777"))
     val missing = new Path(dir.resolve("missing").toUri)
     intercept[FileNotFoundException](ours.getFileStatus(missing))
     intercept[FileNotFoundException](ours.getFileLinkStatus(missing))
@@ -164,6 +168,8 @@ class NioLocalFileSystemSpec extends SparkSpec {
     ours.setPermission(new Path(dir.resolve("f").toUri), new FsPermission("604"))
     assert(stock.getFileStatus(new Path(dir.resolve("f").toUri)).getPermission ==
       new FsPermission("604"))
+    ours.setPermission(sticky, new FsPermission("1755"))
+    assert(stock.getFileStatus(sticky).getPermission == new FsPermission("1755"))
   }
 
   test("install replaces a cached stock file: instance; its holder keeps " +
