@@ -183,7 +183,7 @@ object ServingBench {
       }
       builds("pq_store_publish") = timed {
         val v = pqStore.nextVersion()
-        IM.savePqIndex(pq, pqStore.versionDir(v))
+        IM.saveAnnIndex(pq, pqStore.versionDir(v))
         pqStore.publish(v)
       }
     }
@@ -197,7 +197,7 @@ object ServingBench {
       }
       builds("ivfpq_store_publish") = timed {
         val v = ivfpqStore.nextVersion()
-        IM.saveIvfPqIndex(ivfpq, ivfpqStore.versionDir(v))
+        IM.saveAnnIndex(ivfpq, ivfpqStore.versionDir(v))
         ivfpqStore.publish(v)
       }
     }
@@ -284,13 +284,13 @@ object ServingBench {
       // pointer per probe (the pointer-following reader's cost); the
       // exact-rerank side reads the bucketed embeddings table
       "ann_pq_store" -> (() => Similarity.pqTopKWith(
-        IM.loadPqIndex(spark,
-          pqStore.versionDir(pqStore.currentVersion())),
+        IM.loadAnnIndexLike(spark,
+          pqStore.versionDir(pqStore.currentVersion()), pq),
         vq, spark.table(embTable), "vec_id", "embedding",
         k = 10).count()),
       "ann_ivfpq_store" -> (() => Similarity.ivfPqTopKWith(
-        IM.loadIvfPqIndex(spark,
-          ivfpqStore.versionDir(ivfpqStore.currentVersion())),
+        IM.loadAnnIndexLike(spark,
+          ivfpqStore.versionDir(ivfpqStore.currentVersion()), ivfpq),
         vq, spark.table(embTable), "vec_id", "embedding",
         k = 10, nProbe = 2).count()),
       // the compliance audit over PRE-STAGED surfaces: only the

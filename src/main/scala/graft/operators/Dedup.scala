@@ -1015,7 +1015,7 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs within an id-gap candidate window
     * (oracle-checkable bounded form; the unbounded form goes through
-    * Similarity.lshTopK buckets instead of the id window).
+    * Similarity.lshIndex buckets instead of the id window).
     */
   def embeddingNearDups(vecs: DataFrame, idCol: String, vecCol: String,
                         threshold: Double, maxIdGap: Long): DataFrame = {

@@ -3,11 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity.{IvfIndex, IvfPqIndex, LshIndex, PqIndex}
+import graft.operators.Similarity.{AnnIndex, IvfIndex, IvfPqIndex, LshIndex, PqIndex}
 import graft.streaming.BatchIdGate
 
 /** Index REBUILD + atomic swap — the other half of the incremental
-  * `appendTo*Index` story (Similarity.scala): appends fold batches in
+  * `Similarity.appendToAnnIndex` story: appends fold batches in
   * under a FROZEN quantizer, which drifts as the data distribution
   * moves; this module closes the maintenance loop by re-training the
   * quantizer on the CURRENT corpus, rebuilding the index, and
@@ -49,10 +49,10 @@ import graft.streaming.BatchIdGate
   * conditional put) — the version-directory protocol is unchanged.
   *
   * WHEN to rebuild: `q_sim_ann_recall` is the drift alarm (the
-  * documented stance at Similarity.scala appendTo* scaladocs) — a
-  * recall audit against a brute-force sample dropping below its floor
-  * means the frozen quantizer no longer describes the corpus, and the
-  * fix is exactly one [[rebuildPqIndex]]/[[rebuildIvfIndex]]/... call.
+  * documented stance of Similarity's ANN lifecycle) — a recall audit
+  * against a brute-force sample dropping below its floor means the
+  * frozen quantizer no longer describes the corpus, and
+  * [[maintainAnnIndex]] is that audit wired to one rebuild + swap.
   */
 object IndexMaintenance {
 
@@ -175,40 +175,15 @@ object IndexMaintenance {
   }
 
   // ---------------------------------------------------------------- //
-  // Parquet save/load per index shape. Quantizer state (driver
+  // Parquet save/load of every index family. Quantizer state (driver
   // literals in the in-memory form) round-trips through parquet rows
   // — doubles are exact in parquet, and load re-sorts by the id
   // columns so the reconstructed literals are element-identical.
   // ---------------------------------------------------------------- //
 
-  private def write(df: DataFrame, dir: String, name: String): Unit =
-    df.write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(dir, name).toString)
-
   private def read(spark: SparkSession, dir: String,
                    name: String): DataFrame =
     spark.read.parquet(new org.apache.hadoop.fs.Path(dir, name).toString)
-
-  private def centsDf(spark: SparkSession,
-                      cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    import spark.implicits._
-    cents.toDF("cent_id", "cent_vec")
-  }
-
-  private def loadCents(spark: SparkSession, dir: String)
-  : Seq[(Long, Seq[Double])] = {
-    import spark.implicits._
-    read(spark, dir, "cents").select("cent_id", "cent_vec")
-      .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-  }
-
-  private def codebookDf(spark: SparkSession,
-                         cb: Array[Array[Seq[Double]]]): DataFrame = {
-    import spark.implicits._
-    cb.zipWithIndex.flatMap { case (sub, s) =>
-      sub.zipWithIndex.map { case (cw, j) => (s, j, cw) }
-    }.toSeq.toDF("s", "j", "codeword")
-  }
 
   private def loadCodebook(spark: SparkSession, dir: String)
   : Array[Array[Seq[Double]]] = {
@@ -219,91 +194,57 @@ object IndexMaintenance {
       .map(_._2.sortBy(_._2).map(_._3))
   }
 
-  def saveIvfIndex(index: IvfIndex, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
-    write(centsDf(spark, index.cents), dir, "cents")
-    write(index.assigned, dir, "assigned")
-  }
-
-  def loadIvfIndex(spark: SparkSession, dir: String): IvfIndex =
-    IvfIndex(loadCents(spark, dir), read(spark, dir, "assigned"))
-
-  def saveLshIndex(index: LshIndex, dir: String): Unit = {
-    val spark = index.buckets.sparkSession
+  /** Write every artifact of `index` into the version directory `dir`,
+    * one parquet directory each: the family's quantizer state
+    * (`cents`, `codebook`, `meta` — LSH's plane count and planes,
+    * IVF+PQ's residual flag — and LSH's census `dropped`) and its
+    * id-keyed row table (`assigned`, `buckets` or `encoded`). */
+  def saveAnnIndex(index: AnnIndex, dir: String): Unit = {
+    val spark = index.rows.sparkSession
     import spark.implicits._
-    // meta carries both quantizer parameters (empty planes array =
-    // the seeded pseudo-random hyperplanes), like the TABLE tense
-    write(Seq((index.nPlanes, index.planes.map(_.toSeq)))
-      .toDF("n_planes", "planes"), dir, "meta")
-    write(index.buckets, dir, "buckets")
-    write(index.dropped, dir, "dropped")
+    def cents(c: Seq[(Long, Seq[Double])]) =
+      "cents" -> c.toDF("cent_id", "cent_vec")
+    def codebook(cb: Array[Array[Seq[Double]]]) =
+      "codebook" -> cb.zipWithIndex.flatMap { case (sub, s) =>
+        sub.zipWithIndex.map { case (cw, j) => (s, j, cw) }
+      }.toSeq.toDF("s", "j", "codeword")
+    val artifacts: Seq[(String, DataFrame)] = index match {
+      case ix: IvfIndex => Seq(cents(ix.cents), "assigned" -> ix.assigned)
+      case ix: LshIndex => Seq("meta" -> Similarity.lshMetaFrame(ix),
+        "buckets" -> ix.buckets, "dropped" -> ix.dropped)
+      case ix: PqIndex => Seq(codebook(ix.codebook), "encoded" -> ix.encoded)
+      case ix: IvfPqIndex => Seq(cents(ix.cents), codebook(ix.codebook),
+        "meta" -> Seq(ix.residual).toDF("residual"), "encoded" -> ix.encoded)
+    }
+    artifacts.foreach { case (name, df) =>
+      df.write.mode("overwrite")
+        .parquet(new org.apache.hadoop.fs.Path(dir, name).toString)
+    }
   }
-
-  def loadLshIndex(spark: SparkSession, dir: String): LshIndex = {
-    import spark.implicits._
-    // a meta row written before the explicit-planes tense has no
-    // `planes` column; it IS a valid pseudo-random artifact (empty
-    // list), not an unloadable version
-    val meta = read(spark, dir, "meta")
-    val (nPlanes, planes) =
-      if (meta.columns.contains("planes"))
-        meta.select("n_planes", "planes")
-          .as[(Int, Seq[Seq[Double]])].head()
-      else (meta.select("n_planes").as[Int].head(),
-        Seq.empty[Seq[Double]])
-    LshIndex(nPlanes, read(spark, dir, "buckets"),
-      read(spark, dir, "dropped"), planes)
-  }
-
-  def savePqIndex(index: PqIndex, dir: String): Unit = {
-    val spark = index.encoded.sparkSession
-    write(codebookDf(spark, index.codebook), dir, "codebook")
-    write(index.encoded, dir, "encoded")
-  }
-
-  def loadPqIndex(spark: SparkSession, dir: String): PqIndex =
-    PqIndex(loadCodebook(spark, dir), read(spark, dir, "encoded"))
-
-  def saveIvfPqIndex(index: IvfPqIndex, dir: String): Unit = {
-    val spark = index.encoded.sparkSession
-    import spark.implicits._
-    write(centsDf(spark, index.cents), dir, "cents")
-    write(codebookDf(spark, index.codebook), dir, "codebook")
-    write(Seq(index.residual).toDF("residual"), dir, "meta")
-    write(index.encoded, dir, "encoded")
-  }
-
-  def loadIvfPqIndex(spark: SparkSession, dir: String): IvfPqIndex = {
-    import spark.implicits._
-    IvfPqIndex(loadCents(spark, dir), loadCodebook(spark, dir),
-      read(spark, dir, "encoded"),
-      read(spark, dir, "meta").as[Boolean].head())
-  }
-
-  /** Published index, if any — resolves the pointer ONCE, so every
-    * artifact comes from the same version even if a rebuild publishes
-    * concurrently. */
-  def currentIvfIndex(store: VersionedIndexStore,
-                      spark: SparkSession): Option[IvfIndex] =
-    store.currentDir().map(loadIvfIndex(spark, _))
-
-  def currentPqIndex(store: VersionedIndexStore,
-                     spark: SparkSession): Option[PqIndex] =
-    store.currentDir().map(loadPqIndex(spark, _))
 
   /** Load a version directory as the SAME family as `like` — the
-    * family-dispatch seam the cross-surface erasure audit uses to
-    * enumerate what every retained store version still holds without
-    * the caller naming the family twice (the live handle already
-    * knows it). */
-  def loadAnnIndexLike(spark: SparkSession, dir: String,
-                       like: Similarity.AnnIndex): Similarity.AnnIndex =
-    like match {
-      case _: IvfIndex   => loadIvfIndex(spark, dir)
-      case _: LshIndex   => loadLshIndex(spark, dir)
-      case _: PqIndex    => loadPqIndex(spark, dir)
-      case _: IvfPqIndex => loadIvfPqIndex(spark, dir)
-    }
+    * caller names the family by the index it already holds, so the
+    * cross-surface erasure audit can enumerate what every retained
+    * store version still holds. For the published version, resolve
+    * the pointer ONCE (`store.currentDir()`), so every artifact comes
+    * from one version even if a rebuild publishes concurrently. */
+  def loadAnnIndexLike[I <: AnnIndex](spark: SparkSession, dir: String,
+                                      like: I): I = {
+    import spark.implicits._
+    def cents = Similarity.centsOf(read(spark, dir, "cents"))
+    (like match {
+      case _: IvfIndex => IvfIndex(cents, read(spark, dir, "assigned"))
+      case _: LshIndex =>
+        val (nPlanes, planes) = Similarity.lshMeta(read(spark, dir, "meta"))
+        LshIndex(nPlanes, read(spark, dir, "buckets"),
+          read(spark, dir, "dropped"), planes)
+      case _: PqIndex =>
+        PqIndex(loadCodebook(spark, dir), read(spark, dir, "encoded"))
+      case _: IvfPqIndex => IvfPqIndex(cents, loadCodebook(spark, dir),
+        read(spark, dir, "encoded"),
+        read(spark, dir, "meta").as[Boolean].head())
+    }).asInstanceOf[I]
+  }
 
   // ---------------------------------------------------------------- //
   // rebuild*: re-train the quantizer on `corpus` (a FRESH build — the
@@ -315,14 +256,13 @@ object IndexMaintenance {
   // reader of the store sees.
   // ---------------------------------------------------------------- //
 
-  private def rebuildWith[I](store: VersionedIndexStore, spark: SparkSession,
-                             build: () => I, save: (I, String) => Unit,
-                             load: (SparkSession, String) => I): I = {
+  private def rebuildWith[I <: AnnIndex](store: VersionedIndexStore,
+                                         built: I): I = {
     val v = store.nextVersion()
     val dir = store.versionDir(v)
-    save(build(), dir)
+    saveAnnIndex(built, dir)
     store.publish(v)
-    load(spark, dir)
+    loadAnnIndexLike(built.rows.sparkSession, dir, built)
   }
 
   /** `Similarity.AutoCentroids` (the IVF-family default here) →
@@ -331,7 +271,8 @@ object IndexMaintenance {
     * the rebuild is the one moment the size can track growth, and a
     * frozen count degrades every probe linearly in N (measured,
     * docs/SCALE.md round 10). One corpus count per actual rebuild;
-    * the healthy no-rebuild path in maintain* never pays it. */
+    * the healthy no-rebuild path in [[maintainAnnIndex]] never pays
+    * it. */
   private def resolveCentroids(nCentroids: Int, corpus: DataFrame): Int =
     if (nCentroids == Similarity.AutoCentroids)
       Similarity.suggestedNCentroids(corpus.count())
@@ -341,11 +282,10 @@ object IndexMaintenance {
                       idCol: String, vecCol: String,
                       nCentroids: Int = Similarity.AutoCentroids,
                       trainCoarse: Boolean = false): IvfIndex =
-    rebuildWith[IvfIndex](store, corpus.sparkSession,
-      () => Similarity.ivfIndex(corpus, idCol, vecCol,
+    rebuildWith(store,
+      Similarity.ivfIndex(corpus, idCol, vecCol,
         resolveCentroids(nCentroids, corpus),
-        persistIndex = false, trainCoarse = trainCoarse),
-      saveIvfIndex, loadIvfIndex)
+        persistIndex = false, trainCoarse = trainCoarse))
 
   /** `planes` non-empty = rebuild under the caller's FROZEN explicit
     * hyperplanes ([[Similarity.lshIndexWithPlanes]]) instead of the
@@ -357,49 +297,41 @@ object IndexMaintenance {
                       idCol: String, vecCol: String,
                       nPlanes: Int = 6, bucketCap: Int = 2000,
                       planes: Seq[Seq[Double]] = Nil): LshIndex =
-    rebuildWith[LshIndex](store, corpus.sparkSession,
-      () => if (planes.nonEmpty)
+    rebuildWith(store,
+      if (planes.nonEmpty)
         Similarity.lshIndexWithPlanes(corpus, idCol, vecCol, planes,
           bucketCap, persistIndex = false)
       else Similarity.lshIndex(corpus, idCol, vecCol, nPlanes,
-        bucketCap, persistIndex = false),
-      saveLshIndex, loadLshIndex)
+        bucketCap, persistIndex = false))
 
   def rebuildPqIndex(store: VersionedIndexStore, corpus: DataFrame,
                      idCol: String, vecCol: String,
                      m: Int = 8, ksub: Int = 16, maxIter: Int = 5,
                      trainSize: Int = 4096): PqIndex =
-    rebuildWith[PqIndex](store, corpus.sparkSession,
-      () => Similarity.pqIndex(corpus, idCol, vecCol, m, ksub, maxIter,
-        trainSize, persistIndex = false),
-      savePqIndex, loadPqIndex)
+    rebuildWith(store,
+      Similarity.pqIndex(corpus, idCol, vecCol, m, ksub, maxIter,
+        trainSize, persistIndex = false))
 
-  /** Outcome of one [[maintainPqIndex]]/[[maintainIvfIndex]] step:
-    * the live index (rebuilt or untouched), the audited recall that
-    * drove the decision, whether a rebuild+swap happened, and the
-    * versions retention GC deleted (empty unless `retain` was set AND
-    * the step rebuilt). */
+  def rebuildIvfPqIndex(store: VersionedIndexStore, corpus: DataFrame,
+                        idCol: String, vecCol: String,
+                        nCentroids: Int = Similarity.AutoCentroids,
+                        m: Int = 8, ksub: Int = 16,
+                        maxIter: Int = 5, trainSize: Int = 4096,
+                        residual: Boolean = false,
+                        trainCoarse: Boolean = false): IvfPqIndex =
+    rebuildWith(store,
+      Similarity.ivfPqIndex(corpus, idCol, vecCol,
+        resolveCentroids(nCentroids, corpus), m,
+        ksub, maxIter, trainSize, residual, trainCoarse,
+        persistIndex = false))
+
+  /** Outcome of one [[maintainAnnIndex]] step: the live index (rebuilt
+    * or untouched), the audited recall that drove the decision,
+    * whether a rebuild+swap happened, and the versions retention GC
+    * deleted (empty unless `retain` was set AND the step rebuilt). */
   final case class Maintenance[I](index: I, recall: Double,
                                   rebuilt: Boolean,
                                   gcVersions: Seq[Long] = Nil)
-
-  /** The audit→rebuild→swap→GC tail shared by every maintain*: GC
-    * runs ONLY on the rebuild path (a healthy audit must never delete
-    * anything — under-threshold calls stay read-only no-ops), with
-    * [[VersionedIndexStore.retainVersions]]' concurrent-reader
-    * contract: `retain = Some(n)` keeps CURRENT plus the n versions
-    * directly below it, so size n to the deployment's longest
-    * in-flight read (n ≥ 1 tolerates a reader that resolved the
-    * pointer just before this swap; Some(0) is the keep-only-CURRENT
-    * setting for single-reader loops). None (the default) defers GC
-    * to an explicit owner call, the pre-existing contract. */
-  private def withRetention[I](store: VersionedIndexStore,
-                               retain: Option[Int], recall: Double,
-                               rebuilt: => I): Maintenance[I] = {
-    val ix = rebuilt
-    Maintenance(ix, recall, rebuilt = true,
-      gcVersions = retain.fold(Seq.empty[Long])(store.retainVersions))
-  }
 
   /** Deterministic hash-uniform audit sample of corpus vectors (the
     * kmeans-seeding stance: smallest xxhash64 of the id — no Random,
@@ -411,123 +343,83 @@ object IndexMaintenance {
       .orderBy(col("graft_h"), col(idCol)).limit(n)
       .drop("graft_h")
 
-  private def recallOf(exact: DataFrame, ann: DataFrame): Double = {
-    val spark = exact.sparkSession
+  /** The alarm wired to its response. Appends defer quantizer drift
+    * to "periodic re-train with q_sim_ann_recall as the alarm"; this
+    * is that loop as ONE operator over any family: audit recall@k of
+    * the live index ([[Similarity.annTopKWith]]) against a bounded
+    * brute-force sample of its own corpus, and rebuild + atomically
+    * swap ONLY when it falls below `recallFloor`. Audit cost is
+    * `sampleQueries` brute-force rows (|S|·|corpus| dot products — the
+    * q_sim_ann_recall shape, bounded by the sample size); a healthy
+    * index costs exactly the audit and touches neither the store nor
+    * the pointer. Run from the maintenance owner between ingest
+    * batches — the same single-writer stance as the appends.
+    *
+    * The rebuild keeps every quantizer shape `current` carries: the
+    * PQ families' subspace count and codebook size, IVF+PQ's residual
+    * codes, and LSH's plane count and explicit planes (the frozen-
+    * quantizer contract — see [[rebuildLshIndex]]). The parameters
+    * are the audit's (`k`; `nProbe` for the IVF-routed families;
+    * `rerank`, the PQ families' ADC shortlist depth, which must be
+    * at least `k`) and the build's (`nCentroids` and `trainCoarse`
+    * for the IVF-routed families, `bucketCap` for LSH, `maxIter` and
+    * `trainSize` for codebook training).
+    *
+    * Retention GC runs ONLY on the rebuild path (a healthy audit must
+    * never delete anything), with
+    * [[VersionedIndexStore.retainVersions]]' concurrent-reader
+    * contract: `retain = Some(n)` keeps CURRENT plus the n versions
+    * directly below it, so size n to the deployment's longest
+    * in-flight read (n ≥ 1 tolerates a reader that resolved the
+    * pointer just before this swap; Some(0) is the keep-only-CURRENT
+    * setting for single-reader loops). None (the default) defers GC
+    * to an explicit owner call. */
+  def maintainAnnIndex[I <: AnnIndex](store: VersionedIndexStore,
+                                      corpus: DataFrame, idCol: String,
+                                      vecCol: String, current: I,
+                                      recallFloor: Double, k: Int = 3,
+                                      nProbe: Int = 2, rerank: Int = 16,
+                                      sampleQueries: Int = 64,
+                                      nCentroids: Int = Similarity.AutoCentroids,
+                                      trainCoarse: Boolean = false,
+                                      bucketCap: Int = 2000,
+                                      maxIter: Int = 5,
+                                      trainSize: Int = 4096,
+                                      retain: Option[Int] = None)
+  : Maintenance[I] = {
+    current match {
+      case _: PqIndex | _: IvfPqIndex => require(rerank >= k,
+        s"rerank ($rerank) must be >= k ($k): the exact re-scoring can " +
+          "only return rows from the ADC shortlist")
+      case _ =>
+    }
+    val spark = corpus.sparkSession
     import spark.implicits._
-    Similarity.recallAtK(exact, ann, "audit")
+    val sample = auditSample(corpus, idCol, vecCol, sampleQueries)
+    val r = Similarity.recallAtK(
+        Similarity.bruteForceTopK(sample, corpus, idCol, vecCol, k),
+        Similarity.annTopKWith(current, sample, idCol, vecCol, k, nProbe,
+          rerankVecs = Some(corpus), rerankDepth = rerank), "audit")
       .select("recall").as[Double].head()
-  }
-
-  // ---------------------------------------------------------------- //
-  // maintain*: the alarm wired to its response. The appends'
-  // scaladocs defer quantizer drift to "periodic re-train with
-  // q_sim_ann_recall as the alarm"; this is that loop as ONE
-  // operator: audit recall@k of the live index against a bounded
-  // brute-force sample of its own corpus, and rebuild + atomically
-  // swap ONLY when it falls below `recallFloor`. Audit cost is
-  // sampleQueries brute-force rows (|S|·|corpus| dot products — the
-  // q_sim_ann_recall shape, bounded by the sample size); a healthy
-  // index costs exactly the audit and touches neither the store nor
-  // the pointer. Run from the maintenance owner between ingest
-  // batches — the same single-writer stance as the appends.
-  // ---------------------------------------------------------------- //
-
-  def maintainPqIndex(store: VersionedIndexStore, corpus: DataFrame,
-                      idCol: String, vecCol: String,
-                      current: PqIndex, recallFloor: Double,
-                      k: Int = 3, rerank: Int = 16,
-                      sampleQueries: Int = 64,
-                      m: Int = 8, ksub: Int = 16, maxIter: Int = 5,
-                      trainSize: Int = 4096,
-                      retain: Option[Int] = None): Maintenance[PqIndex] = {
-    val sample = auditSample(corpus, idCol, vecCol, sampleQueries)
-    val exact = Similarity.bruteForceTopK(sample, corpus, idCol,
-      vecCol, k)
-    val r = recallOf(exact, Similarity.pqTopKWith(current, sample,
-      corpus, idCol, vecCol, k, rerank))
     if (r >= recallFloor) Maintenance(current, r, rebuilt = false)
-    else withRetention(store, retain, r,
-      rebuildPqIndex(store, corpus, idCol, vecCol, m, ksub, maxIter,
-        trainSize))
+    else {
+      def shape(cb: Array[Array[Seq[Double]]]) = (cb.length, cb.head.length)
+      val rebuilt = current match {
+        case _: IvfIndex => rebuildIvfIndex(store, corpus, idCol, vecCol,
+          nCentroids, trainCoarse)
+        case ix: LshIndex => rebuildLshIndex(store, corpus, idCol, vecCol,
+          ix.nPlanes, bucketCap, ix.planes)
+        case ix: PqIndex =>
+          val (m, ksub) = shape(ix.codebook)
+          rebuildPqIndex(store, corpus, idCol, vecCol, m, ksub, maxIter,
+            trainSize)
+        case ix: IvfPqIndex =>
+          val (m, ksub) = shape(ix.codebook)
+          rebuildIvfPqIndex(store, corpus, idCol, vecCol, nCentroids, m,
+            ksub, maxIter, trainSize, ix.residual, trainCoarse)
+      }
+      Maintenance(rebuilt.asInstanceOf[I], r, rebuilt = true,
+        gcVersions = retain.fold(Seq.empty[Long])(store.retainVersions))
+    }
   }
-
-  def maintainIvfIndex(store: VersionedIndexStore, corpus: DataFrame,
-                       idCol: String, vecCol: String,
-                       current: IvfIndex, recallFloor: Double,
-                       k: Int = 3, nProbe: Int = 2,
-                       sampleQueries: Int = 64,
-                       nCentroids: Int = Similarity.AutoCentroids,
-                       trainCoarse: Boolean = false,
-                       retain: Option[Int] = None)
-  : Maintenance[IvfIndex] = {
-    val sample = auditSample(corpus, idCol, vecCol, sampleQueries)
-    val exact = Similarity.bruteForceTopK(sample, corpus, idCol,
-      vecCol, k)
-    val r = recallOf(exact, Similarity.ivfTopKWith(current, sample,
-      idCol, vecCol, k, nProbe))
-    if (r >= recallFloor) Maintenance(current, r, rebuilt = false)
-    else withRetention(store, retain, r,
-      rebuildIvfIndex(store, corpus, idCol, vecCol, nCentroids,
-        trainCoarse))
-  }
-
-  /** A recall-floor rebuild INHERITS the current index's explicit
-    * planes when it carries them (the frozen-quantizer contract —
-    * see [[rebuildLshIndex]]); `nPlanes` applies only to the
-    * pseudo-random tense. */
-  def maintainLshIndex(store: VersionedIndexStore, corpus: DataFrame,
-                       idCol: String, vecCol: String,
-                       current: LshIndex, recallFloor: Double,
-                       k: Int = 3, sampleQueries: Int = 64,
-                       nPlanes: Int = 6, bucketCap: Int = 2000,
-                       retain: Option[Int] = None)
-  : Maintenance[LshIndex] = {
-    val sample = auditSample(corpus, idCol, vecCol, sampleQueries)
-    val exact = Similarity.bruteForceTopK(sample, corpus, idCol,
-      vecCol, k)
-    val r = recallOf(exact, Similarity.lshTopKWith(current, sample,
-      idCol, vecCol, k))
-    if (r >= recallFloor) Maintenance(current, r, rebuilt = false)
-    else withRetention(store, retain, r,
-      rebuildLshIndex(store, corpus, idCol, vecCol, nPlanes,
-        bucketCap, planes = current.planes))
-  }
-
-  def maintainIvfPqIndex(store: VersionedIndexStore, corpus: DataFrame,
-                         idCol: String, vecCol: String,
-                         current: IvfPqIndex, recallFloor: Double,
-                         k: Int = 3, nProbe: Int = 2, rerank: Int = 16,
-                         sampleQueries: Int = 64,
-                         nCentroids: Int = Similarity.AutoCentroids,
-                         m: Int = 8,
-                         ksub: Int = 16, maxIter: Int = 5,
-                         trainSize: Int = 4096,
-                         residual: Boolean = false,
-                         trainCoarse: Boolean = false,
-                         retain: Option[Int] = None)
-  : Maintenance[IvfPqIndex] = {
-    val sample = auditSample(corpus, idCol, vecCol, sampleQueries)
-    val exact = Similarity.bruteForceTopK(sample, corpus, idCol,
-      vecCol, k)
-    val r = recallOf(exact, Similarity.ivfPqTopKWith(current, sample,
-      corpus, idCol, vecCol, k, nProbe, rerank))
-    if (r >= recallFloor) Maintenance(current, r, rebuilt = false)
-    else withRetention(store, retain, r,
-      rebuildIvfPqIndex(store, corpus, idCol, vecCol, nCentroids, m,
-        ksub, maxIter, trainSize, residual, trainCoarse))
-  }
-
-  def rebuildIvfPqIndex(store: VersionedIndexStore, corpus: DataFrame,
-                        idCol: String, vecCol: String,
-                        nCentroids: Int = Similarity.AutoCentroids,
-                        m: Int = 8, ksub: Int = 16,
-                        maxIter: Int = 5, trainSize: Int = 4096,
-                        residual: Boolean = false,
-                        trainCoarse: Boolean = false): IvfPqIndex =
-    rebuildWith[IvfPqIndex](store, corpus.sparkSession,
-      () => Similarity.ivfPqIndex(corpus, idCol, vecCol,
-        resolveCentroids(nCentroids, corpus), m,
-        ksub, maxIter, trainSize, residual, trainCoarse,
-        persistIndex = false),
-      saveIvfPqIndex, loadIvfPqIndex)
 }

@@ -284,15 +284,28 @@ object Similarity {
       lshBucketWithPlanes(vec, planes)
     } else lshBucket(vec, nPlanes)
 
-  /** Common supertype of the four staged ANN index families (IVF,
-    * LSH, PQ, IVF+PQ) — what lets a consumer that serves ANY dense
-    * index (the hybrid funnel's dense list, the filtered-serving
-    * allowlist path) dispatch one restrict ([[restrictAnnToIds]]) and
-    * one probe ([[annTopKWith]]) without caring which family the
-    * deployment staged. Sealed: the per-family operators stay the
-    * primary API; this is the dispatch seam, not a new abstraction
-    * layer. */
-  sealed trait AnnIndex
+  /** The four staged ANN index families (IVF, LSH, PQ, IVF+PQ). They
+    * share one lifecycle contract: a FROZEN quantizer (centroids /
+    * planes and census / codebook) plus an id-keyed row table, one row
+    * per indexed vector. So append, restrict, delete
+    * ([[appendToAnnIndex]], [[restrictAnnToIds]],
+    * [[deleteFromAnnIndex]]), the erasure count ([[annRowsHeld]]), the
+    * probe ([[annTopKWith]]) and save / load / maintain
+    * ([[IndexMaintenance]]) are written once over this trait; a family
+    * contributes only its row table and its encode. */
+  sealed trait AnnIndex {
+    /** The family's own case class, which a row edit returns. */
+    type Self <: AnnIndex
+    /** The id-keyed row table: `assigned` (IVF), `buckets` (LSH) or
+      * `encoded` (PQ, IVF+PQ). */
+    def rows: DataFrame
+    /** The same frozen quantizer over other rows. */
+    def withRows(rows: DataFrame): Self
+    /** (c_id, c_vec) vectors as rows of [[rows]] under the frozen
+      * quantizer: the build's own projection, so an appended vector's
+      * row is the one a rebuild with the same quantizer gives it. */
+    private[graft] def encode(cands: DataFrame): DataFrame
+  }
 
   /** Staged IVF index: the coarse-quantizer centroid table (driver
     * state — nCentroids·dim doubles, the bounded-collect stance shared
@@ -300,7 +313,13 @@ object Similarity {
     * list, persisted so every consumer (probe join, recall audit)
     * reads one materialization. */
   final case class IvfIndex(cents: Seq[(Long, Seq[Double])],
-                            assigned: DataFrame) extends AnnIndex
+                            assigned: DataFrame) extends AnnIndex {
+    type Self = IvfIndex
+    def rows: DataFrame = assigned
+    def withRows(rows: DataFrame): IvfIndex = copy(assigned = rows)
+    private[graft] def encode(cands: DataFrame): DataFrame =
+      ivfAssignBroadcast(cands, cents)
+  }
 
   /** Build the IVF index: `nCentroids` centroids picked
     * deterministically (smallest xxhash64 of the id — a seeded uniform
@@ -402,9 +421,9 @@ object Similarity {
 
   /** The staged-index persist step every in-memory build shares:
     * `persistIndex = false` trades recomputing the projection for each
-    * consumer against zero cache residue — the one-shot `*TopK` entry
-    * points take it so a throwaway index cannot leak until
-    * clearCache. */
+    * consumer against zero cache residue — a throwaway index (a
+    * rebuild about to be written out, a spec fixture) takes it so it
+    * cannot leak until clearCache. */
   private def persisted(df: DataFrame, persistIndex: Boolean): DataFrame =
     if (persistIndex)
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -861,23 +880,10 @@ object Similarity {
         kernel, nProbe))
   }
 
-  /** IVF (inverted-file) approximate top-k — the other standard ANN
-    * scale path next to LSH: [[ivfIndex]] + [[ivfTopKWith]] in one
-    * call for single-shot use. The throwaway index is NOT persisted:
-    * it has exactly one consumer here, and a cached corpus-sized DF
-    * with no caller-held handle would leak until clearCache. */
-  def ivfTopK(queries: DataFrame, candidates: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              nCentroids: Int = 16, nProbe: Int = 2): DataFrame =
-    ivfTopKWith(
-      ivfIndex(candidates, idCol, vecCol, nCentroids,
-        persistIndex = false),
-      queries, idCol, vecCol, k, nProbe)
-
   /** Recall@k of an ANN result against the exact brute-force result:
     * the fraction of `exact`'s (q_id, c_id) pairs that `ann` also
     * returned. Both inputs use the top-k output shape of
-    * [[bruteForceTopK]]/[[lshTopK]]/[[ivfTopK]]. The denominator is
+    * [[bruteForceTopK]]/[[annTopKWith]]. The denominator is
     * |exact| (per-query lists may be shorter than k on a small
     * corpus), so recall is always in [0, 1]. One row out:
     * (method, n_exact, hits, recall) — approximation quality as a
@@ -931,7 +937,22 @@ object Similarity {
   final case class LshIndex(nPlanes: Int, buckets: DataFrame,
                             dropped: DataFrame,
                             planes: Seq[Seq[Double]] = Nil)
-    extends AnnIndex
+    extends AnnIndex {
+    type Self = LshIndex
+    def rows: DataFrame = buckets
+    def withRows(rows: DataFrame): LshIndex = copy(buckets = rows)
+    /** Vectors hashing into a bucket the BUILD census dropped are
+      * excluded: re-admitting them would resurrect a censored bucket
+      * holding only a biased sliver of its membership, while a
+      * frozen-quantizer rebuild keeps it dropped. The cap is not
+      * re-censused for surviving buckets (that needs a full-table
+      * count): a bucket crossing it through appends is caught at the
+      * next rebuild's census, and until then costs probe work, never
+      * wrong results. */
+    private[graft] def encode(cands: DataFrame): DataFrame =
+      cands.withColumn("bucket", lshHash(col("c_vec"), nPlanes, planes))
+        .join(broadcast(dropped), Seq("bucket"), "left_anti")
+  }
 
   /** Bucketed-and-capped LSH corpus index, materialized once (in a
     * real deployment this is a bucketed TABLE amortized over all
@@ -1006,19 +1027,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank"), col("c_id"), col("cos"))
   }
-
-  /** LSH-bucketed approximate top-k: [[lshIndex]] + [[lshTopKWith]]
-    * in one call for single-shot use. The throwaway index is NOT
-    * persisted (the census consumer re-runs the map-only bucket
-    * kernel instead — a cached corpus-sized DF with no caller-held
-    * handle would leak until clearCache); callers amortizing one
-    * index over many query batches use the staged pair. */
-  def lshTopK(queries: DataFrame, candidates: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              nPlanes: Int = 6, bucketCap: Int = 2000): DataFrame =
-    lshTopKWith(lshIndex(candidates, idCol, vecCol, nPlanes, bucketCap,
-        persistIndex = false),
-      queries, idCol, vecCol, k)
 
   /** Map-only nearest-centroid assignment with the centroid table
     * behind a broadcast ([[assignBroadcastD2]]) — the corpus is
@@ -1566,7 +1574,13 @@ object Similarity {
     * expensive artifact (32× smaller than the raw vectors), built
     * once and amortized over all queries and recall audits. */
   final case class PqIndex(codebook: Array[Array[Seq[Double]]],
-                           encoded: DataFrame) extends AnnIndex
+                           encoded: DataFrame) extends AnnIndex {
+    type Self = PqIndex
+    def rows: DataFrame = encoded
+    def withRows(rows: DataFrame): PqIndex = copy(encoded = rows)
+    private[graft] def encode(cands: DataFrame): DataFrame =
+      pqCodesBroadcast(cands, codebook, cents = None)
+  }
 
   def pqIndex(candidates: DataFrame, idCol: String, vecCol: String,
               m: Int = 8, ksub: Int = 16, maxIter: Int = 5,
@@ -1649,18 +1663,6 @@ object Similarity {
       .select(col("q_id"), col("rank"), col("c_id"), col("cos"))
   }
 
-  /** PQ ADC top-k in one call for single-shot use: [[pqIndex]] +
-    * [[pqTopKWith]]. The throwaway encoded corpus is NOT persisted —
-    * one consumer, and an unreachable cached DF would leak until
-    * clearCache. */
-  def pqTopK(queries: DataFrame, candidates: DataFrame,
-             idCol: String, vecCol: String, k: Int,
-             m: Int = 8, ksub: Int = 16, rerank: Int = 32,
-             trainSize: Int = 4096): DataFrame =
-    pqTopKWith(pqIndex(candidates, idCol, vecCol, m, ksub,
-        trainSize = trainSize, persistIndex = false),
-      queries, candidates, idCol, vecCol, k, rerank)
-
   /** Composed IVF+PQ index — the standard billion-scale ANN layout
     * (FAISS's IVFADC): the coarse quantizer confines each query to
     * `nProbe` inverted lists, and inside those lists the scan reads PQ
@@ -1692,7 +1694,14 @@ object Similarity {
   final case class IvfPqIndex(cents: Seq[(Long, Seq[Double])],
                               codebook: Array[Array[Seq[Double]]],
                               encoded: DataFrame,
-                              residual: Boolean) extends AnnIndex
+                              residual: Boolean) extends AnnIndex {
+    type Self = IvfPqIndex
+    def rows: DataFrame = encoded
+    def withRows(rows: DataFrame): IvfPqIndex = copy(encoded = rows)
+    private[graft] def encode(cands: DataFrame): DataFrame =
+      ivfPqEncodeAssigned(ivfAssignBroadcast(cands, cents), cents,
+        codebook, residual)
+  }
 
   /** The assigned centroid's vector, looked up from the bounded
     * centroid table as ONE map literal — stays inside the map-only
@@ -1729,7 +1738,7 @@ object Similarity {
 
   /** The IVF+PQ encode projection over an ALREADY-ASSIGNED frame —
     * ONE definition shared by [[ivfPqIndex]] (build) and
-    * [[appendToIvfPqIndex]] (incremental refresh), so appended codes
+    * [[IvfPqIndex]]'s encode (append), so appended codes
     * are byte-identical to what a rebuild with the same quantizers
     * would produce. */
   private[graft] def ivfPqEncodeAssigned(assigned: DataFrame,
@@ -1797,262 +1806,127 @@ object Similarity {
       candidates, idCol, vecCol, k, rerank)
   }
 
-  /** IVF+PQ top-k in one call for single-shot use: [[ivfPqIndex]] +
-    * [[ivfPqTopKWith]]. The throwaway composed index is NOT persisted —
-    * one consumer, and an unreachable cached DF would leak until
-    * clearCache. */
-  def ivfPqTopK(queries: DataFrame, candidates: DataFrame,
-                idCol: String, vecCol: String, k: Int,
-                nCentroids: Int = 16, nProbe: Int = 2,
-                m: Int = 8, ksub: Int = 16, rerank: Int = 32,
-                trainSize: Int = 4096,
-                residual: Boolean = false,
-                trainCoarse: Boolean = false): DataFrame =
-    ivfPqTopKWith(
-      ivfPqIndex(candidates, idCol, vecCol, nCentroids, m, ksub,
-        trainSize = trainSize, residual = residual,
-        trainCoarse = trainCoarse, persistIndex = false),
-      queries, candidates, idCol, vecCol, k, nProbe, rerank)
-
   // ------------------------------------------------------------------
-  // Incremental ANN index refresh — the embedding twin of
-  // Dedup.appendToBandedIndex: fold a batch of newly admitted vectors
-  // into a staged index WITHOUT touching the corpus or re-training any
-  // quantizer. Every append reuses the build's own assignment/encode
-  // projection with the index's FROZEN quantizer state (centroids /
-  // planes / codebook), so the appended rows are row-identical to what
-  // a rebuild holding the same quantizers over (corpus ∪ batch) would
-  // produce — spec-asserted per path. Cost is a map-only projection
-  // over the batch + a NARROW union (plus a batch-sized id dedup; see
-  // below); in production each is a partitioned INSERT into the index
-  // table (bucketed by cent_id / bucket). Quantizer DRIFT is the
-  // deliberate trade: appended data shifts the distribution the
-  // quantizers were trained on, so a real ingest loop appends between
-  // periodic re-train/rebuild cycles — the same deferred-maintenance
-  // stance as the streaming near-dup window, with q_sim_ann_recall as
-  // the drift alarm.
+  // The ANN lifecycle, written once over [[AnnIndex]]: every step edits
+  // the id-keyed row table and leaves the FROZEN quantizer (centroids /
+  // planes and census / codebook) untouched.
   //
-  // REPLAY: unlike the Dedup twins, whose LEFT ANTI consumers are
-  // set-semantically immune to duplicated index rows, the ANN query
-  // stages rank with row_number — a duplicated c_id would occupy two
-  // ranks of a top-k list and silently displace a true neighbor. The
-  // appends therefore dedup WITHIN the batch on id (batch-sized, the
+  // APPEND is the embedding twin of Dedup.appendToBandedIndex: fold a
+  // batch of newly admitted vectors in WITHOUT touching the corpus or
+  // re-training any quantizer. The batch goes through the family's
+  // own encode, so the appended rows are row-identical to what a
+  // rebuild holding the same quantizers over (corpus ∪ batch) would
+  // produce — spec-asserted per family. Cost is a map-only projection
+  // over the batch + a NARROW union (plus a batch-sized id dedup); in
+  // production each is a partitioned INSERT into the index table.
+  // Quantizer DRIFT is the deliberate trade: appended data shifts the
+  // distribution the quantizers were trained on, so a real ingest loop
+  // appends between periodic re-train/rebuild cycles
+  // (IndexMaintenance.maintainAnnIndex), with q_sim_ann_recall as the
+  // drift alarm.
+  //
+  // DELETE is the takedown twin (and the dense-side counterpart of
+  // Retrieval.deleteFromPostingsIndexTable): a taken-down document must
+  // never be retrieved through the EMBEDDING space either (a hybrid
+  // probe fusing a lexical and a dense list must not resurface a victim
+  // through the list that forgot to delete it). ANN state has no global
+  // statistics, so a victim is just its own id-keyed rows, and delete
+  // == a rebuild holding the same quantizers over the survivors, row
+  // for row. A centroid or bucket whose last member leaves goes empty;
+  // LSH's census is NOT revisited (the next rebuild re-censuses).
+  //
+  // RESTRICT keeps only allowed ids in the SERVING set — the dense-space
+  // twin of Retrieval.restrictToDocs (filtered retrieval must constrain
+  // BOTH spaces of a hybrid funnel, or the allowlist leaks through the
+  // list that skipped it). The restriction lives INSIDE the ranking (a
+  // disallowed vector never occupies a rank — filtering a truncated
+  // list instead loses every allowed vector below the cut), so restrict
+  // == a same-quantizer build over the subset, row for row. The PQ
+  // families' exact rerank joins raw vectors DOWN to the (already
+  // restricted) shortlist ids, so restricting the code table alone
+  // restricts the whole probe.
+  //
+  // REPLAY: the probes rank with row_number, so a duplicated c_id would
+  // occupy two ranks of a top-k list and displace a true neighbor. An
+  // append therefore dedups WITHIN the batch on id (batch-sized, the
   // appendToDigestIndex stance); CROSS-RUN replay protection is the
   // caller's exactly-once contract — gate the append on foreachBatch's
-  // batchId (apply only if batchId > last recorded), the standard
-  // idempotent-sink pattern the streaming checkpoint exists to enable.
-  // ------------------------------------------------------------------
-
-  /** Fold new vectors into a staged [[IvfIndex]]: assign against the
-    * frozen centroid table (map-only), union into the list table. */
-  def appendToIvfIndex(index: IvfIndex, newVecs: DataFrame,
-                       idCol: String, vecCol: String): IvfIndex = {
-    requireIntegralId(newVecs, idCol, "appendToIvfIndex")
-    IvfIndex(index.cents,
-      index.assigned.unionByName(ivfAssignBroadcast(
-        nonNullVecs(newVecs, vecCol).dropDuplicates(idCol)
-          .select(col(idCol).cast("long").as("c_id"),
-            toDouble(col(vecCol)).as("c_vec")), index.cents)))
-  }
-
-  /** Fold new vectors into a staged [[LshIndex]]: hash with the
-    * index's own plane count, union into the bucket table. Batch
-    * vectors hashing into a bucket the BUILD census dropped are
-    * excluded (broadcast anti-join on the tiny `dropped` table —
-    * without it an append would resurrect a censored bucket holding
-    * only the batch's biased sliver of its membership, while a
-    * frozen-quantizer rebuild keeps it dropped). The cap is NOT
-    * re-censused for surviving buckets (that needs a full-table
-    * count): a bucket crossing the cap through appends is caught at
-    * the next rebuild's census, and until then costs extra probe
-    * work, never wrong results. */
-  def appendToLshIndex(index: LshIndex, newVecs: DataFrame,
-                       idCol: String, vecCol: String): LshIndex =
-    index.copy(buckets =
-      index.buckets.unionByName(
-        nonNullVecs(newVecs, vecCol).dropDuplicates(idCol)
-          .select(col(idCol).as("c_id"),
-            toDouble(col(vecCol)).as("c_vec"))
-          .withColumn("bucket",
-            lshHash(col("c_vec"), index.nPlanes, index.planes))
-          .join(broadcast(index.dropped), Seq("bucket"), "left_anti")))
-
-  /** Fold new vectors into a staged [[PqIndex]]: encode with the
-    * frozen codebook (map-only), union into the code table. */
-  def appendToPqIndex(index: PqIndex, newVecs: DataFrame,
-                      idCol: String, vecCol: String): PqIndex =
-    PqIndex(index.codebook,
-      index.encoded.unionByName(
-        // null-filter BEFORE the id dedup (like the other appends):
-        // dedup-first could arbitrarily keep a null-vec duplicate and
-        // then lose the id entirely when the filter drops it
-        pqEncode(nonNullVecs(newVecs, vecCol).dropDuplicates(idCol),
-          idCol, vecCol, index.codebook)))
-
-  /** Fold new vectors into a staged [[IvfPqIndex]]: assign against
-    * the frozen coarse quantizer, encode (residual or raw, matching
-    * the index) with the frozen codebook — one map-only projection —
-    * and union into the encoded table. */
-  def appendToIvfPqIndex(index: IvfPqIndex, newVecs: DataFrame,
-                         idCol: String, vecCol: String): IvfPqIndex = {
-    requireIntegralId(newVecs, idCol, "appendToIvfPqIndex")
-    IvfPqIndex(index.cents, index.codebook,
-      index.encoded.unionByName(ivfPqEncodeAssigned(
-        ivfAssignBroadcast(nonNullVecs(newVecs, vecCol).dropDuplicates(idCol)
-          .select(col(idCol).cast("long").as("c_id"),
-            toDouble(col(vecCol)).as("c_vec")), index.cents),
-        index.cents, index.codebook, index.residual)),
-      index.residual)
-  }
-
-  // ------------------------------------------------------------------
-  // Targeted ANN deletion — the takedown twin of the appends above
-  // (and the dense-side counterpart of
-  // Retrieval.deleteFromPostingsIndexTable): remove vectors from a
-  // staged index so a taken-down document can never be retrieved
-  // through the EMBEDDING space either (a hybrid probe that fuses a
-  // lexical and a dense list must not resurface a victim through the
-  // list that forgot to delete it). Far simpler than the BM25 delete
-  // because ANN state has no global statistics: a victim is just its
-  // own id-keyed rows in the assigned/bucket/code table, and the
-  // quantizers (centroids / planes / codebook) are FROZEN state that
-  // deletion does not touch — exactly the appends' contract mirrored,
-  // so delete == a rebuild holding the same quantizers over the
-  // survivors, row for row (spec-asserted per path). A centroid or
-  // bucket whose last member leaves simply goes empty (probes of it
-  // return nothing); quantizer drift from shrinkage is the same
-  // deliberate trade as append drift, audited by q_sim_ann_recall and
-  // repaired at the rebuild cadence. LSH's census `dropped` table is
-  // NOT revisited (a censored bucket stays censored — the next
-  // rebuild re-censuses).
-  //
-  // REPLAY: unlike the appends, deletion is set-semantically
-  // idempotent — an anti-join removes the same rows however often it
-  // replays — so no gate is needed. In production the deleted index
+  // batchId, the standard idempotent-sink pattern. Delete and restrict
+  // are set-semantically idempotent. In production an edited index
   // persists as a NEW VERSION through the IndexMaintenance
-  // VersionedIndexStore (delete → save → publish), the same
-  // swap-under-readers protocol rebuilds use.
+  // VersionedIndexStore (edit → save → publish).
   // ------------------------------------------------------------------
+
+  /** `idCol` of `df` as the index's `c_id` key: the IVF-routed families
+    * key on Long (their builds cast), LSH and PQ on the id as built —
+    * so every step resolves ids in the space the index was built in. */
+  private def idKey(index: AnnIndex, df: DataFrame, idCol: String,
+                    op: String): Column = index match {
+    case _: IvfIndex | _: IvfPqIndex =>
+      requireIntegralId(df, idCol, op)
+      col(idCol).cast("long").as("c_id")
+    case _ => col(idCol).as("c_id")
+  }
+
+  /** The distinct ids of `df` as a one-column `c_id` frame. */
+  private def idRows(index: AnnIndex, df: DataFrame, idCol: String,
+                     op: String): DataFrame =
+    df.select(idKey(index, df, idCol, op)).distinct()
+
+  /** A batch of vectors as the (c_id, c_vec) rows every encode takes:
+    * null vectors dropped BEFORE the id dedup (dedup-first could keep
+    * a null-vector duplicate and then lose the id to the filter). */
+  private def encodeInput(index: AnnIndex, vecs: DataFrame, idCol: String,
+                          vecCol: String, op: String): DataFrame =
+    nonNullVecs(vecs, vecCol).dropDuplicates(idCol)
+      .select(idKey(index, vecs, idCol, op), toDouble(col(vecCol)).as("c_vec"))
 
   // a USING-column anti/semi-join reorders the join key to the front;
   // re-select the table's own column order so delete == rebuild (and
   // restrict == subset-build) is ROW-identical, not just set-equal
   // modulo projection
-  private def antiIdRows(rows: DataFrame, victims: DataFrame): DataFrame =
-    rows.join(victims, Seq("c_id"), "left_anti")
-      .select(rows.columns.map(col).toIndexedSeq: _*)
+  private def keepColumns(rows: DataFrame, joined: DataFrame): DataFrame =
+    joined.select(rows.columns.map(col).toIndexedSeq: _*)
 
-  private def semiIdRows(rows: DataFrame, allowed: DataFrame): DataFrame =
-    rows.join(allowed, Seq("c_id"), "left_semi")
-      .select(rows.columns.map(col).toIndexedSeq: _*)
+  /** Fold new vectors into a staged index under its frozen quantizer. */
+  def appendToAnnIndex(index: AnnIndex, newVecs: DataFrame, idCol: String,
+                       vecCol: String): index.Self =
+    index.withRows(index.rows.unionByName(index.encode(
+      encodeInput(index, newVecs, idCol, vecCol, "appendToAnnIndex"))))
 
-  /** Restrict an [[IvfIndex]]'s SERVING set to `allowed` ids — the
-    * dense-space twin of [[graft.operators.Retrieval.restrictToDocs]]
-    * (filtered retrieval must constrain BOTH spaces of a hybrid
-    * funnel, or the allowlist leaks through the list that skipped
-    * it). Same exactness stance as the filter's lexical side: the
-    * restriction lives INSIDE the ranking (a disallowed vector never
-    * occupies a rank — filtering a truncated list instead loses every
-    * allowed vector below the cut), and the quantizer is untouched,
-    * so restrict == a same-quantizer build over the subset, row for
-    * row. */
-  def restrictIvfToIds(index: IvfIndex, allowed: DataFrame,
-                       idCol: String): IvfIndex = {
-    requireIntegralId(allowed, idCol, "restrictIvfToIds")
-    IvfIndex(index.cents, semiIdRows(index.assigned,
-      allowed.select(col(idCol).cast("long").as("c_id")).distinct()))
-  }
-
-  /** Restrict an [[LshIndex]]'s SERVING set to `allowed` ids — the
-    * [[restrictIvfToIds]] contract on the LSH family: the planes AND
-    * the build census's `dropped` table are frozen, so restrict == a
-    * same-plane build over the subset that keeps the original census
-    * (the [[appendToLshIndex]] stance: a bucket censored at build
-    * stays censored — re-censusing over the subset would resurrect
-    * hot buckets with a biased sliver of their membership), row for
-    * row. */
-  def restrictLshToIds(index: LshIndex, allowed: DataFrame,
-                       idCol: String): LshIndex =
-    index.copy(buckets =
-      semiIdRows(index.buckets,
-        allowed.select(col(idCol).as("c_id")).distinct()))
-
-  /** Restrict a [[PqIndex]]'s SERVING set to `allowed` ids — the
-    * [[restrictIvfToIds]] contract on the PQ family: the codebook is
-    * frozen and encoding is per-row, so restrict == a same-codebook
-    * build over the subset, row for row. The ADC probe's exact-rerank
-    * stage joins raw vectors DOWN to the (already restricted)
-    * shortlist ids, so restricting the encoded table alone restricts
-    * the whole probe. */
-  def restrictPqToIds(index: PqIndex, allowed: DataFrame,
-                      idCol: String): PqIndex =
-    PqIndex(index.codebook,
-      semiIdRows(index.encoded,
-        allowed.select(col(idCol).as("c_id")).distinct()))
-
-  /** Restrict an [[IvfPqIndex]]'s SERVING set to `allowed` ids — the
-    * [[restrictIvfToIds]] contract on the composed family: coarse
-    * quantizer and codebook both frozen, assignment and encoding both
-    * per-row, so restrict == a same-quantizers build over the subset,
-    * row for row. */
-  def restrictIvfPqToIds(index: IvfPqIndex, allowed: DataFrame,
-                         idCol: String): IvfPqIndex = {
-    requireIntegralId(allowed, idCol, "restrictIvfPqToIds")
-    IvfPqIndex(index.cents, index.codebook,
-      semiIdRows(index.encoded,
-        allowed.select(col(idCol).cast("long").as("c_id")).distinct()),
-      index.residual)
-  }
-
-  /** Family-dispatching restrict — the one call a filtered-serving
-    * path makes so an allowlist constrains the dense space WHICHEVER
-    * index family the deployment staged
-    * ([[graft.streaming.StreamingOps.hybridProbe]]'s seam): without
-    * it, a funnel serving off PQ/IVFPQ/LSH could not honor the
-    * allowlist inside the dense ranking and would leak disallowed
-    * docs through RRF — exactly the failure filtered retrieval
-    * exists to prevent. Semantics per family are the four restrict
-    * operators verbatim (restrict == frozen-quantizer subset build,
-    * row for row; the restriction lives INSIDE the ranking). */
+  /** Restrict an index's SERVING set to `allowed` ids — the one call a
+    * filtered-serving path makes
+    * ([[graft.streaming.StreamingOps.hybridProbe]]'s seam), whichever
+    * family the deployment staged. */
   def restrictAnnToIds(index: AnnIndex, allowed: DataFrame,
-                       idCol: String): AnnIndex = index match {
-    case ix: IvfIndex   => restrictIvfToIds(ix, allowed, idCol)
-    case ix: LshIndex   => restrictLshToIds(ix, allowed, idCol)
-    case ix: PqIndex    => restrictPqToIds(ix, allowed, idCol)
-    case ix: IvfPqIndex => restrictIvfPqToIds(ix, allowed, idCol)
-  }
+                       idCol: String): index.Self =
+    index.withRows(keepColumns(index.rows, index.rows.join(
+      idRows(index, allowed, idCol, "restrictAnnToIds"), Seq("c_id"),
+      "left_semi")))
+
+  /** Remove ids from a staged index. */
+  def deleteFromAnnIndex(index: AnnIndex, ids: DataFrame,
+                         idCol: String): index.Self =
+    index.withRows(keepColumns(index.rows, index.rows.join(
+      idRows(index, ids, idCol, "deleteFromAnnIndex"), Seq("c_id"),
+      "left_anti")))
 
   /** Rows a staged ANN index still holds per requested id — the
     * dense-side erasure counter behind
-    * [[Retrieval.takedownAuditAll]]: 0 after a
-    * [[deleteFromIvfIndex]]-family delete (ANN deletes are physical
-    * removals from the id-keyed table — no tombstone state), 1 for a
-    * live indexed vector, 0 for an id that never entered the index
-    * (NULL embedding, census-dropped LSH bucket, unknown id).
-    * Victim-bounded: the request set joins INTO the table before any
-    * aggregation, so the cost is the victims' own rows, never a
-    * corpus pass — and on a cent_id/bucket-bucketed table the join
-    * keys on the id column exactly as the delete did. Output:
+    * [[Retrieval.takedownAuditAll]]: 0 after a [[deleteFromAnnIndex]]
+    * (ANN deletes are physical removals from the id-keyed table — no
+    * tombstone state), 1 for a live indexed vector, 0 for an id that
+    * never entered the index (NULL embedding, census-dropped LSH
+    * bucket, unknown id). Victim-bounded: the request set joins INTO
+    * the table before any aggregation, so the cost is the victims' own
+    * rows, never a corpus pass — and on a cent_id/bucket-bucketed table
+    * the join keys on the id column exactly as the delete did. Output:
     * (doc, rows_held), one row per distinct requested id. */
   def annRowsHeld(index: AnnIndex, ids: DataFrame,
                   idCol: String): DataFrame = {
-    val table = index match {
-      case ix: IvfIndex   => ix.assigned
-      case ix: LshIndex   => ix.buckets
-      case ix: PqIndex    => ix.encoded
-      case ix: IvfPqIndex => ix.encoded
-    }
-    // the Long-keyed families cast like their restrict/delete twins,
-    // so the audit resolves ids in the same key space the takedown
-    // acted in
-    val key = index match {
-      case _: IvfIndex | _: IvfPqIndex =>
-        requireIntegralId(ids, idCol, "annRowsHeld")
-        col(idCol).cast("long")
-      case _ => col(idCol)
-    }
-    val req = ids.select(key.as("doc")).distinct()
-    val held = table.select(col("c_id").as("doc"))
+    val req = idRows(index, ids, idCol, "annRowsHeld")
+      .withColumnRenamed("c_id", "doc")
+    val held = index.rows.select(col("c_id").as("doc"))
       .join(req, "doc")
       .groupBy("doc").agg(count(lit(1)).as("rows_held"))
     req.join(held, Seq("doc"), "left")
@@ -2089,38 +1963,6 @@ object Similarity {
       case ix: IvfPqIndex => ivfPqTopKWith(ix, queries,
         vecs("IvfPqIndex"), idCol, vecCol, k, nProbe, depth)
     }
-  }
-
-  /** Remove ids from a staged [[IvfIndex]]. */
-  def deleteFromIvfIndex(index: IvfIndex, ids: DataFrame,
-                         idCol: String): IvfIndex = {
-    requireIntegralId(ids, idCol, "deleteFromIvfIndex")
-    IvfIndex(index.cents, antiIdRows(index.assigned,
-      ids.select(col(idCol).cast("long").as("c_id")).distinct()))
-  }
-
-  /** Remove ids from a staged [[LshIndex]]. */
-  def deleteFromLshIndex(index: LshIndex, ids: DataFrame,
-                         idCol: String): LshIndex =
-    index.copy(buckets =
-      antiIdRows(index.buckets,
-        ids.select(col(idCol).as("c_id")).distinct()))
-
-  /** Remove ids from a staged [[PqIndex]]. */
-  def deleteFromPqIndex(index: PqIndex, ids: DataFrame,
-                        idCol: String): PqIndex =
-    PqIndex(index.codebook,
-      antiIdRows(index.encoded,
-        ids.select(col(idCol).as("c_id")).distinct()))
-
-  /** Remove ids from a staged [[IvfPqIndex]]. */
-  def deleteFromIvfPqIndex(index: IvfPqIndex, ids: DataFrame,
-                           idCol: String): IvfPqIndex = {
-    requireIntegralId(ids, idCol, "deleteFromIvfPqIndex")
-    IvfPqIndex(index.cents, index.codebook,
-      antiIdRows(index.encoded,
-        ids.select(col(idCol).cast("long").as("c_id")).distinct()),
-      index.residual)
   }
 
   // ------------------------------------------------------------------
@@ -2217,9 +2059,15 @@ object Similarity {
   /** The staged coarse quantizer, re-collected (K·dim doubles — the
     * bounded driver artifact, sorted by cent_id like every build). */
   def loadIvfCents(spark: org.apache.spark.sql.SparkSession,
-                   prefix: String): Seq[(Long, Seq[Double])] = {
+                   prefix: String): Seq[(Long, Seq[Double])] =
+    centsOf(spark.table(ivfCentsTable(prefix)))
+
+  /** A (cent_id, cent_vec) table as the driver-side centroid list,
+    * sorted by cent_id — the one reader of every stored quantizer. */
+  private[graft] def centsOf(df: DataFrame): Seq[(Long, Seq[Double])] = {
+    val spark = df.sparkSession
     import spark.implicits._
-    spark.table(ivfCentsTable(prefix)).select("cent_id", "cent_vec")
+    df.select("cent_id", "cent_vec")
       .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
   }
 
@@ -2241,7 +2089,7 @@ object Similarity {
     IvfIndex(loadIvfCents(spark, prefix), assigned)
   }
 
-  /** The table tense of [[appendToIvfIndex]]: assign the admitted
+  /** The table tense of [[appendToAnnIndex]]: encode the admitted
     * batch under the staged FROZEN quantizer (map-only) and hash it
     * into the existing layout — batch-sized shuffle, corpus rows
     * never read or rewritten. `batchId` makes the append idempotent
@@ -2256,15 +2104,13 @@ object Similarity {
     StagedTables.append(spark, ivfLayout(prefix), buckets, batchId,
       batch.select(col(idCol).cast("long").as("c_id")),
       "maintainIvfIndexTable") {
-      ivfAssignBroadcast(
-        nonNullVecs(batch, vecCol).dropDuplicates(idCol)
-          .select(col(idCol).cast("long").as("c_id"),
-            toDouble(col(vecCol)).as("c_vec")),
-        loadIvfCents(spark, prefix))
+      val ix = loadIvfIndexTable(spark, prefix)
+      ix.encode(encodeInput(ix, batch, idCol, vecCol,
+        "appendToIvfIndexTable"))
     }
   }
 
-  /** The table tense of [[deleteFromIvfIndex]] — a takedown is an
+  /** The table tense of [[deleteFromAnnIndex]] — a takedown is an
     * APPEND of c_id tombstones, never a rewrite of the cent_id-
     * partitioned corpus; serving stops at the next
     * [[loadIvfIndexTable]] and the bytes leave at the next compaction
@@ -2311,7 +2157,7 @@ object Similarity {
   // build/query plane mismatch cannot be expressed), <prefix>_buckets
   // partitioned (batch_id, bucket) + bucketed by c_id,
   // <prefix>_dropped (the build census — FROZEN across appends, the
-  // appendToLshIndex stance), <prefix>_tombstones c_id-bucketed.
+  // LshIndex encode's stance), <prefix>_tombstones c_id-bucketed.
   // ------------------------------------------------------------------
 
   private def lshMetaTable(prefix: String) = prefix + "_meta"
@@ -2333,8 +2179,6 @@ object Similarity {
   /** Materialize a staged [[LshIndex]] as the tables above. */
   def createLshIndexTable(index: LshIndex, prefix: String,
                           buckets: Int): Unit = {
-    val spark = index.buckets.sparkSession
-    import spark.implicits._
     // four DIFFERENT tables — independent writes, overlapped from the
     // driver (guide §2.6, the createPostingsIndexTable stance), under
     // createIvfIndexTable's concurrency contract: `dropped` and
@@ -2345,11 +2189,7 @@ object Similarity {
       index.buckets.select(col("c_id")))
       .withColumn("batch_id", lit(StagedTables.BasePartition))
     Concurrent.inParallel(Seq(
-      // the meta row carries BOTH quantizer parameters: the plane count
-      // and (explicit-planes tense) the hyperplanes themselves — empty
-      // array = the seeded pseudo-random planes
-      () => Seq((index.nPlanes, index.planes.map(_.toSeq)))
-        .toDF("n_planes", "planes").write
+      () => lshMetaFrame(index).write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .format("parquet").saveAsTable(lshMetaTable(prefix)),
       () => {
@@ -2383,21 +2223,30 @@ object Similarity {
         rows.join(spark.table(lshTombTable(prefix)).select("c_id"),
           Seq("c_id"), "left_anti")
       else rows
-    val (nPlanes, planes) = lshMeta(spark, prefix)
+    val (nPlanes, planes) = lshMeta(spark.table(lshMetaTable(prefix)))
     LshIndex(nPlanes, served,
       spark.table(lshDroppedTable(prefix)), planes)
   }
 
-  /** The staged quantizer parameters — ONE reader shared by load and
-    * append so both hash in the space the create wrote. A meta row
+  /** The LSH quantizer parameters as the one-row meta table both the
+    * table tense and the versioned store write: the plane count and
+    * (explicit-planes tense) the hyperplanes themselves — an empty
+    * array is the seeded pseudo-random planes. */
+  private[graft] def lshMetaFrame(index: LshIndex): DataFrame = {
+    val spark = index.buckets.sparkSession
+    import spark.implicits._
+    Seq((index.nPlanes, index.planes.map(_.toSeq))).toDF("n_planes", "planes")
+  }
+
+  /** The staged quantizer parameters — ONE reader shared by every load
+    * so each hashes in the space the create wrote. A meta row
     * written before the explicit-planes tense existed has no `planes`
     * column; it IS a valid pseudo-random artifact, so it reads as the
     * empty list rather than failing (which would also make the
     * compliance audit misreport such a version as unloadable). */
-  private def lshMeta(spark: org.apache.spark.sql.SparkSession,
-                      prefix: String): (Int, Seq[Seq[Double]]) = {
+  private[graft] def lshMeta(meta: DataFrame): (Int, Seq[Seq[Double]]) = {
+    val spark = meta.sparkSession
     import spark.implicits._
-    val meta = spark.table(lshMetaTable(prefix))
     if (meta.columns.contains("planes")) {
       val (n, planes) = meta.select("n_planes", "planes")
         .as[(Int, Seq[Seq[Double]])].head()
@@ -2405,11 +2254,10 @@ object Similarity {
     } else (meta.select("n_planes").as[Int].head(), Nil)
   }
 
-  /** The table tense of [[appendToLshIndex]]: hash the admitted batch
-    * with the STAGED plane count, exclude census-dropped buckets
-    * (frozen census — resurrecting one with the batch's biased sliver
-    * is the documented wrong answer), gated idempotent append under
-    * the [[StagedTables]] contract. */
+  /** The table tense of [[appendToAnnIndex]] on the LSH layout: hash
+    * the admitted batch under the STAGED planes, exclude
+    * census-dropped buckets (the frozen census), gated idempotent
+    * append under the [[StagedTables]] contract. */
   def appendToLshIndexTable(batch: DataFrame, idCol: String,
                             vecCol: String, prefix: String,
                             buckets: Int,
@@ -2417,17 +2265,14 @@ object Similarity {
     val spark = batch.sparkSession
     StagedTables.append(spark, lshLayout(prefix), buckets, batchId,
       batch.select(col(idCol).as("c_id")), "maintainLshIndexTable") {
-      val (nPlanes, planes) = lshMeta(spark, prefix)
-      nonNullVecs(batch, vecCol).dropDuplicates(idCol)
-        .select(col(idCol).as("c_id"), toDouble(col(vecCol)).as("c_vec"))
-        .withColumn("bucket", lshHash(col("c_vec"), nPlanes, planes))
-        .join(broadcast(spark.table(lshDroppedTable(prefix))),
-          Seq("bucket"), "left_anti")
-        .select("c_id", "c_vec", "bucket")
+      val ix = loadLshIndexTable(spark, prefix)
+      ix.encode(encodeInput(ix, batch, idCol, vecCol,
+        "appendToLshIndexTable")).select("c_id", "c_vec", "bucket")
     }
   }
 
-  /** The table tense of [[deleteFromLshIndex]] — tombstone append
+  /** The table tense of [[deleteFromAnnIndex]] on the LSH layout —
+    * tombstone append
     * resolved against the live set ([[StagedTables.delete]]). */
   def deleteFromLshIndexTable(spark: org.apache.spark.sql.SparkSession,
                               ids: DataFrame, idCol: String,

@@ -845,23 +845,23 @@ object VectorQueries {
           // v1; v0 stays on disk (retained) until a retention GC
           val ivfFull = Similarity.ivfIndex(emb, "vec_id", "embedding",
             persistIndex = false)
-          ivf = Similarity.deleteFromIvfIndex(ivfFull, victims,
+          ivf = Similarity.deleteFromAnnIndex(ivfFull, victims,
             "vec_id")
           val v0 = store.nextVersion()
-          IndexMaintenance.saveIvfIndex(ivfFull, store.versionDir(v0))
+          IndexMaintenance.saveAnnIndex(ivfFull, store.versionDir(v0))
           store.publish(v0)
           val v1 = store.nextVersion()
-          IndexMaintenance.saveIvfIndex(ivf, store.versionDir(v1))
+          IndexMaintenance.saveAnnIndex(ivf, store.versionDir(v1))
           store.publish(v1)
         },
-        () => lsh = Similarity.deleteFromLshIndex(
+        () => lsh = Similarity.deleteFromAnnIndex(
           Similarity.lshIndex(emb, "vec_id", "embedding", nPlanes = 4,
             bucketCap = Int.MaxValue, persistIndex = false),
           victims, "vec_id"),
-        () => pq = Similarity.deleteFromPqIndex(
+        () => pq = Similarity.deleteFromAnnIndex(
           Similarity.pqIndex(emb, "vec_id", "embedding",
             persistIndex = false), victims, "vec_id"),
-        () => ivfpq = Similarity.deleteFromIvfPqIndex(
+        () => ivfpq = Similarity.deleteFromAnnIndex(
           Similarity.ivfPqIndex(emb, "vec_id", "embedding",
             persistIndex = false), victims, "vec_id"),
         () => { // the landing surface: batch_id-partitioned corpus, purged

@@ -33,8 +33,7 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     val a = try Files.readAttributes(file.toPath,
       "unix:size,isDirectory,lastModifiedTime,lastAccessTime,mode,uid,gid")
     catch { // as java.io.File.exists sees it, and so the stock code
-      case _: FileSystemException =>
-        throw new FileNotFoundException(s"File $f does not exist")
+      case e: FileSystemException => throw NioRawLocalFileSystem.missing(f, e)
     }
     def time(k: String) = a.get(k).asInstanceOf[FileTime].toMillis
     def name(names: ConcurrentHashMap[AnyRef, String], id: String,
@@ -74,6 +73,18 @@ object NioRawLocalFileSystem {
   /** Names by uid and gid: the JDK asks `getpwuid`/`getgrgid` on every
     * lookup, which would cost a located listing most of its time. */
   private val users, groups = new ConcurrentHashMap[AnyRef, String]
+
+  /** The miss `getFileStatus` reports. Misses are routine (Spark's
+    * checkpoint manager looks up three missing paths per log entry)
+    * and their callers catch them, so the stack walk is not taken a
+    * second time: the trace is java.nio's, carried as the cause. */
+  private def missing(f: Path, cause: FileSystemException) = {
+    val e = new FileNotFoundException(s"File $f does not exist") {
+      override def fillInStackTrace(): Throwable = this
+    }
+    e.initCause(cause)
+    e
+  }
 }
 
 /** The checksummed `file:` file system over [[NioRawLocalFileSystem]]:

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
   * `foreachBatch` — the concrete form of the "gate the append on
   * batchId" replay contract the index appends document
   * ([[graft.operators.Dedup.appendToBandedIndex]],
-  * `Similarity.appendTo*Index`). Spark's streaming checkpoint
+  * `Similarity.appendToAnnIndex`). Spark's streaming checkpoint
   * guarantees each batchId is REDELIVERED after a crash, not that the
   * caller's side effects ran once; this gate records the last batchId
   * whose side effects completed, so a redelivered batch can skip them.

@@ -213,7 +213,7 @@ class CorpusProbeSpec extends SparkSpec {
     // two exact centroids; the corpus fills list 0 only
     val cents = Seq((0L, Seq(1.0, 0.0, 0.0, 0.0)),
       (1L, Seq(0.0, 0.0, 0.0, 1.0)))
-    val ivf = Similarity.appendToIvfIndex(
+    val ivf = Similarity.appendToAnnIndex(
       Similarity.IvfIndex(cents, Seq.empty[(Long, Seq[Double], Long)]
         .toDF("c_id", "c_vec", "cent_id")),
       Seq((100L, Array(1.0f, 0.02f, 0.0f, 0.0f)))

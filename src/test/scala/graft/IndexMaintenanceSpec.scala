@@ -23,6 +23,15 @@ class IndexMaintenanceSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
   }
 
+  // a load reads a version back as the family of its `like` index;
+  // an empty IvfIndex names the family where no built one is in scope
+  private def loadIvf(dir: String): Similarity.IvfIndex =
+    IM.loadAnnIndexLike(spark, dir,
+      Similarity.IvfIndex(Nil, spark.emptyDataFrame))
+
+  private def currentIvf(store: IM.VersionedIndexStore) =
+    store.currentDir().map(loadIvf)
+
   private def topkSet(df: org.apache.spark.sql.DataFrame) =
     df.select("q_id", "rank", "c_id").as[(Long, Int, Long)].collect().toSet
 
@@ -104,10 +113,10 @@ class IndexMaintenanceSpec extends SparkSpec {
     // (dropped table) and plane count exactly like the in-memory one
     val batch = Seq((100L, Array(1.0f, 0.0f, 0.0f, 0.01f)))
       .toDF("vec_id", "embedding")
-    assert(Similarity.appendToLshIndex(lshLoaded, batch, "vec_id",
+    assert(Similarity.appendToAnnIndex(lshLoaded, batch, "vec_id",
         "embedding").buckets.select("c_id").as[Long].collect().sorted
         .toSeq ==
-      Similarity.appendToLshIndex(lshMem, batch, "vec_id",
+      Similarity.appendToAnnIndex(lshMem, batch, "vec_id",
         "embedding").buckets.select("c_id").as[Long].collect().sorted
         .toSeq)
 
@@ -151,12 +160,12 @@ class IndexMaintenanceSpec extends SparkSpec {
     val extra = clustered.unionByName(
       Seq((999L, Array(0.5f, 0.5f, 0.5f, 0.5f)))
         .toDF("vec_id", "embedding"))
-    IM.saveIvfIndex(Similarity.ivfIndex(extra, "vec_id", "embedding",
+    IM.saveAnnIndex(Similarity.ivfIndex(extra, "vec_id", "embedding",
       nCentroids = 4, persistIndex = false), store.versionDir(1))
 
     // readers still see v0, bit-for-bit
     assert(store.currentVersion() == 0L)
-    val seen = IM.currentIvfIndex(store, spark).get
+    val seen = currentIvf(store).get
     assert(seen.assigned.select("c_id").as[Long].collect().sorted.toSeq
       == v0Rows)
     assert(!seen.assigned.select("c_id").as[Long].collect().contains(999L))
@@ -168,7 +177,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     IM.rebuildIvfIndex(store, extra, "vec_id", "embedding",
       nCentroids = 4)
     assert(store.currentVersion() == 2L)
-    assert(IM.currentIvfIndex(store, spark).get
+    assert(currentIvf(store).get
       .assigned.select("c_id").as[Long].collect().contains(999L))
 
     // a stale rebuild cannot regress the pointer
@@ -184,16 +193,16 @@ class IndexMaintenanceSpec extends SparkSpec {
     // the takedown: remove vec 7 with the quantizer frozen, persist
     // as the NEXT version, publish — the rebuild swap protocol reused
     // verbatim for deletion
-    val deleted = Similarity.deleteFromIvfIndex(v0,
+    val deleted = Similarity.deleteFromAnnIndex(v0,
       Seq(7L).toDF("vec_id"), "vec_id")
     val v = store.nextVersion()
-    IM.saveIvfIndex(deleted, store.versionDir(v))
+    IM.saveAnnIndex(deleted, store.versionDir(v))
     // until publish, readers still serve the pre-delete index (the
     // compliance cutover is the pointer flip, not the write)
-    assert(IM.currentIvfIndex(store, spark).get
+    assert(currentIvf(store).get
       .assigned.select("c_id").as[Long].collect().contains(7L))
     store.publish(v)
-    val now = IM.currentIvfIndex(store, spark).get
+    val now = currentIvf(store).get
     val ids = now.assigned.select("c_id").as[Long].collect().toSeq
     assert(!ids.contains(7L) && ids.size.toLong ===
       clustered.count() - 1, "published index must be victim-free")
@@ -206,12 +215,12 @@ class IndexMaintenanceSpec extends SparkSpec {
       .select("c_id").as[Long].collect().contains(7L))
     // the straddling-reader window: the pre-delete version stays
     // readable until retention GC removes it
-    assert(IM.loadIvfIndex(spark, store.versionDir(0L))
+    assert(loadIvf(store.versionDir(0L))
       .assigned.select("c_id").as[Long].collect().contains(7L))
     assert(store.retainVersions(0) == Seq(0L),
       "aggressive retention prunes exactly the pre-delete version")
     intercept[Exception] {
-      IM.loadIvfIndex(spark, store.versionDir(0L))
+      loadIvf(store.versionDir(0L))
         .assigned.collect()
     }
   }
@@ -269,7 +278,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // append trade
     val published = IM.rebuildPqIndex(store, corpusA, "vec_id",
       "embedding", m = 4, ksub = 32)
-    val stale = Similarity.appendToPqIndex(published, batchB, "vec_id",
+    val stale = Similarity.appendToAnnIndex(published, batchB, "vec_id",
       "embedding")
     val staleRecall = recallOf(stale)
     assert(staleRecall <= 0.3,
@@ -306,9 +315,8 @@ class IndexMaintenanceSpec extends SparkSpec {
 
     // healthy: the corpus IS what the codebook trained on — the
     // audit passes and the store is untouched
-    val healthy = IM.maintainPqIndex(store, corpusA, "vec_id",
-      "embedding", published, recallFloor = 0.9, k = 3, rerank = 16,
-      m = 4, ksub = 32)
+    val healthy = IM.maintainAnnIndex(store, corpusA, "vec_id",
+      "embedding", published, recallFloor = 0.9, k = 3, rerank = 16)
     assert(!healthy.rebuilt && healthy.recall >= 0.9,
       s"healthy audit recall ${healthy.recall}")
     assert(store.currentVersion() == 0L, "no-op must not bump version")
@@ -317,22 +325,59 @@ class IndexMaintenanceSpec extends SparkSpec {
     // sample now includes collapsed-code vectors, recall falls below
     // the floor, and maintain rebuilds + swaps atomically
     val union = corpusA.unionByName(batchB)
-    val stale = Similarity.appendToPqIndex(published, batchB, "vec_id",
+    val stale = Similarity.appendToAnnIndex(published, batchB, "vec_id",
       "embedding")
-    val out = IM.maintainPqIndex(store, union, "vec_id", "embedding",
-      stale, recallFloor = 0.9, k = 3, rerank = 16, m = 4, ksub = 32)
+    val out = IM.maintainAnnIndex(store, union, "vec_id", "embedding",
+      stale, recallFloor = 0.9, k = 3, rerank = 16)
     assert(out.rebuilt, s"drifted audit recall ${out.recall} must " +
       "trigger a rebuild")
     assert(out.recall < 0.9)
     assert(store.currentVersion() == 1L, "rebuild must publish v1")
     // the returned (published) index clears the floor on the same
     // deterministic audit
-    val after = IM.maintainPqIndex(store, union, "vec_id", "embedding",
-      out.index, recallFloor = 0.9, k = 3, rerank = 16,
-      m = 4, ksub = 32)
+    val after = IM.maintainAnnIndex(store, union, "vec_id", "embedding",
+      out.index, recallFloor = 0.9, k = 3, rerank = 16)
     assert(!after.rebuilt && after.recall >= 0.9,
       s"post-rebuild audit recall ${after.recall}")
     assert(store.currentVersion() == 1L)
+  }
+
+  test("a forced maintain keeps the current index's quantizer shape: " +
+    "PQ m and ksub, IVF-PQ residual") {
+    // a recall-floor rebuild must publish the index it replaces
+    // re-trained, not the builder defaults (8 subspaces x 16
+    // codewords, raw codes): the shape is read from `current`, never
+    // repeated by the caller
+    def shape(cb: Array[Array[Seq[Double]]]) = (cb.length, cb.head.length)
+    val pqStore = tmpStore()
+    val pq0 = IM.rebuildPqIndex(pqStore, corpusA, "vec_id", "embedding",
+      m = 4, ksub = 32)
+    val pq = IM.maintainAnnIndex(pqStore, corpusA, "vec_id", "embedding",
+      pq0, recallFloor = 1.01)
+    assert(pq.rebuilt && pqStore.currentVersion() == 1L)
+    assert(shape(pq.index.codebook) === ((4, 32)))
+
+    val ipqStore = tmpStore()
+    val ipq0 = IM.rebuildIvfPqIndex(ipqStore, corpusA, "vec_id",
+      "embedding", nCentroids = 4, m = 4, ksub = 32, residual = true)
+    val ipq = IM.maintainAnnIndex(ipqStore, corpusA, "vec_id",
+      "embedding", ipq0, recallFloor = 1.01, nCentroids = 4)
+    assert(ipq.rebuilt && ipqStore.currentVersion() == 1L)
+    assert(ipq.index.residual)
+    assert(shape(ipq.index.codebook) === ((4, 32)))
+  }
+
+  test("a maintain whose ADC shortlist is shallower than k fails " +
+    "loudly and leaves the store untouched") {
+    val store = tmpStore()
+    val pq0 = IM.rebuildPqIndex(store, corpusA, "vec_id", "embedding",
+      m = 4, ksub = 32)
+    val e = intercept[IllegalArgumentException] {
+      IM.maintainAnnIndex(store, corpusA, "vec_id", "embedding", pq0,
+        recallFloor = 1.01, k = 8, rerank = 4)
+    }
+    assert(e.getMessage.contains("rerank (4) must be >= k (8)"))
+    assert(store.currentVersion() == 0L)
   }
 
   test("maintain covers all four index families: healthy no-op and " +
@@ -344,11 +389,11 @@ class IndexMaintenanceSpec extends SparkSpec {
     val ivfStore = tmpStore()
     val ivf0 = IM.rebuildIvfIndex(ivfStore, clustered, "vec_id",
       "embedding", nCentroids = 2)
-    val ivfOk = IM.maintainIvfIndex(ivfStore, clustered, "vec_id",
+    val ivfOk = IM.maintainAnnIndex(ivfStore, clustered, "vec_id",
       "embedding", ivf0, recallFloor = 0.5, nProbe = 2,
       nCentroids = 2)
     assert(!ivfOk.rebuilt && ivfStore.currentVersion() == 0L)
-    val ivfForced = IM.maintainIvfIndex(ivfStore, clustered, "vec_id",
+    val ivfForced = IM.maintainAnnIndex(ivfStore, clustered, "vec_id",
       "embedding", ivf0, recallFloor = 1.01, nProbe = 2,
       nCentroids = 2)
     assert(ivfForced.rebuilt && ivfStore.currentVersion() == 1L)
@@ -357,16 +402,16 @@ class IndexMaintenanceSpec extends SparkSpec {
     val lshStore = tmpStore()
     val lsh0 = IM.rebuildLshIndex(lshStore, clustered, "vec_id",
       "embedding", nPlanes = 4)
-    val lshForced = IM.maintainLshIndex(lshStore, clustered, "vec_id",
-      "embedding", lsh0, recallFloor = 1.01, nPlanes = 4)
+    val lshForced = IM.maintainAnnIndex(lshStore, clustered, "vec_id",
+      "embedding", lsh0, recallFloor = 1.01)
     assert(lshForced.rebuilt && lshStore.currentVersion() == 1L)
 
     val ipqStore = tmpStore()
     val ipq0 = IM.rebuildIvfPqIndex(ipqStore, clustered, "vec_id",
       "embedding", nCentroids = 2, m = 2, ksub = 4)
-    val ipqForced = IM.maintainIvfPqIndex(ipqStore, clustered,
+    val ipqForced = IM.maintainAnnIndex(ipqStore, clustered,
       "vec_id", "embedding", ipq0, recallFloor = 1.01,
-      nCentroids = 2, m = 2, ksub = 4)
+      nCentroids = 2)
     assert(ipqForced.rebuilt && ipqStore.currentVersion() == 1L)
   }
 
@@ -380,35 +425,36 @@ class IndexMaintenanceSpec extends SparkSpec {
       m = 4, ksub = 32)
     // healthy path with retention configured: audit-only — GC must
     // NOT run (a passing audit is read-only, retention or not)
-    val healthy = IM.maintainPqIndex(store, corpusA, "vec_id",
+    val healthy = IM.maintainAnnIndex(store, corpusA, "vec_id",
       "embedding", v0, recallFloor = 0.9, k = 3, rerank = 16,
-      m = 4, ksub = 32, retain = Some(0))
+      retain = Some(0))
     assert(!healthy.rebuilt && healthy.gcVersions.isEmpty)
     assert(dirExists(store, 0L) && store.currentVersion() == 0L)
     // forced rebuild, retain = 1: v1 publishes; v0 is CURRENT−1 and
     // survives for the straddling reader
-    val r1 = IM.maintainPqIndex(store, corpusA, "vec_id", "embedding",
+    val r1 = IM.maintainAnnIndex(store, corpusA, "vec_id", "embedding",
       healthy.index, recallFloor = 1.01, k = 3, rerank = 16,
-      m = 4, ksub = 32, retain = Some(1))
+      retain = Some(1))
     assert(r1.rebuilt && store.currentVersion() == 1L)
     assert(r1.gcVersions.isEmpty && dirExists(store, 0L))
     // second forced rebuild, retain = 1: v2 publishes; GC prunes
     // exactly v0, keeps v1 (the window) + v2 (CURRENT), both loadable
-    val r2 = IM.maintainPqIndex(store, corpusA, "vec_id", "embedding",
+    val r2 = IM.maintainAnnIndex(store, corpusA, "vec_id", "embedding",
       r1.index, recallFloor = 1.01, k = 3, rerank = 16,
-      m = 4, ksub = 32, retain = Some(1))
+      retain = Some(1))
     assert(r2.gcVersions == Seq(0L), s"gc: ${r2.gcVersions}")
     assert(!dirExists(store, 0L) && dirExists(store, 1L) &&
       dirExists(store, 2L))
-    assert(IM.loadPqIndex(spark, store.versionDir(1L))
+    assert(IM.loadAnnIndexLike(spark, store.versionDir(1L), v0)
       .codebook.length == 4)
     // aggressive keep-only-CURRENT: v3 publishes, v1 and v2 pruned
-    val r3 = IM.maintainPqIndex(store, corpusA, "vec_id", "embedding",
+    val r3 = IM.maintainAnnIndex(store, corpusA, "vec_id", "embedding",
       r2.index, recallFloor = 1.01, k = 3, rerank = 16,
-      m = 4, ksub = 32, retain = Some(0))
+      retain = Some(0))
     assert(r3.gcVersions == Seq(1L, 2L), s"gc: ${r3.gcVersions}")
     assert(store.currentVersion() == 3L && dirExists(store, 3L))
-    assert(IM.currentPqIndex(store, spark).get.codebook.length == 4)
+    assert(store.currentDir().map(IM.loadAnnIndexLike(spark, _, v0)).get
+      .codebook.length == 4)
   }
 
   test("concurrent-reader soak: readers interleaved with rebuild+publish " +
@@ -461,7 +507,7 @@ class IndexMaintenanceSpec extends SparkSpec {
               failures.add(s"reader $r: pointer regressed $lastSeen -> $v")
             lastSeen = math.max(lastSeen, v)
             Thread.sleep(5) // widen the resolve->load window
-            val ans = answerOf(IM.loadIvfIndex(spark, dir))
+            val ans = answerOf(loadIvf(dir))
             if (ans != expected(v.toInt))
               failures.add(s"reader $r: version $v answered a blend")
           } catch {
@@ -487,9 +533,9 @@ class IndexMaintenanceSpec extends SparkSpec {
     // superseded version dirs stay readable (GC is opt-in via
     // retainVersions, not automatic): a straggler holding v0
     // mid-query still completes correctly
-    assert(answerOf(IM.loadIvfIndex(spark, store.versionDir(0L))) ==
+    assert(answerOf(loadIvf(store.versionDir(0L))) ==
       expected(0))
-    assert(answerOf(IM.loadIvfIndex(spark, store.versionDir(1L))) ==
+    assert(answerOf(loadIvf(store.versionDir(1L))) ==
       expected(1))
   }
 
@@ -508,7 +554,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(store.currentVersion() == 3L)
     // plus an in-flight staging dir ABOVE the pointer (a rebuild in
     // progress / crashed before publish)
-    IM.saveIvfIndex(Similarity.ivfIndex(clustered, "vec_id",
+    IM.saveAnnIndex(Similarity.ivfIndex(clustered, "vec_id",
       "embedding", nCentroids = 4, persistIndex = false),
       store.versionDir(7L))
 
@@ -518,7 +564,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // CURRENT and the retained predecessor both still load + answer
     val q = clustered.filter(col("vec_id") < 4)
     Seq(2L, 3L).foreach { v =>
-      val idx = IM.loadIvfIndex(spark, store.versionDir(v))
+      val idx = loadIvf(store.versionDir(v))
       assert(topkSet(Similarity.ivfTopKWith(idx, q, "vec_id",
         "embedding", 3, nProbe = 2)).nonEmpty)
     }
@@ -532,14 +578,14 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(deleted2 == Seq(2L))
     assert(dirExists(store, 3L) && dirExists(store, 7L))
     assert(store.currentVersion() == 3L)
-    assert(IM.currentIvfIndex(store, spark).nonEmpty)
+    assert(currentIvf(store).nonEmpty)
   }
 
   test("retention GC: no-op before anything is published; idempotent; " +
     "crash mid-GC leaves a loadable store") {
     val fresh = tmpStore()
     // unpublished store: every dir is potential staging — GC refuses
-    IM.saveIvfIndex(Similarity.ivfIndex(clustered, "vec_id",
+    IM.saveAnnIndex(Similarity.ivfIndex(clustered, "vec_id",
       "embedding", nCentroids = 4, persistIndex = false),
       fresh.versionDir(0L))
     assert(fresh.releaseBelow(Long.MaxValue) == Nil)
@@ -559,7 +605,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(fs.delete(v0cents, true))
     // the store is still loadable at CURRENT, and the next GC pass
     // finishes the job
-    assert(IM.currentIvfIndex(store, spark).nonEmpty)
+    assert(currentIvf(store).nonEmpty)
     assert(store.retainVersions(1) == Seq(0L))
     assert(!dirExists(store, 0L))
     // idempotent: nothing left below the window
@@ -607,7 +653,7 @@ class IndexMaintenanceSpec extends SparkSpec {
             val v = store.currentVersion()
             observed.set(r, v)
             Thread.sleep(5)
-            val ans = answerOf(IM.loadIvfIndex(spark,
+            val ans = answerOf(loadIvf(
               store.versionDir(v)))
             if (ans != expected(v.toInt))
               failures.add(s"reader $r: version $v answered a blend")
@@ -645,9 +691,9 @@ class IndexMaintenanceSpec extends SparkSpec {
     }
     assert(failures.isEmpty, failures.toArray.mkString("; "))
     assert(!dirExists(store, 0L))
-    assert(answerOf(IM.loadIvfIndex(spark, store.versionDir(1L))) ==
+    assert(answerOf(loadIvf(store.versionDir(1L))) ==
       expected(1))
-    assert(answerOf(IM.currentIvfIndex(store, spark).get) == expected(2))
+    assert(answerOf(currentIvf(store).get) == expected(2))
   }
 
   test("explicit-planes LSH round-trips the versioned store: planes " +
@@ -659,9 +705,9 @@ class IndexMaintenanceSpec extends SparkSpec {
       "embedding", planes, bucketCap = Int.MaxValue,
       persistIndex = false)
     val store = tmpStore()
-    IM.saveLshIndex(ix, store.versionDir(store.nextVersion()))
+    IM.saveAnnIndex(ix, store.versionDir(store.nextVersion()))
     store.publish(0L)
-    val loaded = IM.loadLshIndex(spark, store.versionDir(0L))
+    val loaded = IM.loadAnnIndexLike(spark, store.versionDir(0L), ix)
     assert(loaded.nPlanes === 2 && loaded.planes === planes,
       "the quantizer parameters must round-trip exactly")
     val q = clustered.filter(col("vec_id") < 2)
@@ -675,15 +721,15 @@ class IndexMaintenanceSpec extends SparkSpec {
     // seeded-hyperplane marker), not a crash or a corrupt artifact
     val pr = Similarity.lshIndex(clustered, "vec_id", "embedding",
       nPlanes = 2, persistIndex = false)
-    IM.saveLshIndex(pr, store.versionDir(store.nextVersion()))
+    IM.saveAnnIndex(pr, store.versionDir(store.nextVersion()))
     store.publish(1L)
-    val prLoaded = IM.loadLshIndex(spark, store.versionDir(1L))
+    val prLoaded = IM.loadAnnIndexLike(spark, store.versionDir(1L), pr)
     assert(prLoaded.planes.isEmpty && prLoaded.nPlanes === 2)
     assert(probe(prLoaded) === probe(pr))
     // a recall-floor rebuild INHERITS the explicit planes — without
     // that, maintenance would silently publish a pseudo-random index
     // in a different hash space than the frozen-quantizer contract
-    val m = IM.maintainLshIndex(store, clustered, "vec_id",
+    val m = IM.maintainAnnIndex(store, clustered, "vec_id",
       "embedding", loaded, recallFloor = 2.0)
     assert(m.rebuilt, "recallFloor=2.0 must force the rebuild")
     assert(m.index.planes === planes && m.index.nPlanes === 2,
@@ -701,7 +747,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val ivf = Similarity.ivfIndex(vecs, "doc_id", "embedding",
       nCentroids = 2, persistIndex = false)
     val store = tmpStore()
-    IM.saveIvfIndex(ivf, store.versionDir(store.nextVersion()))
+    IM.saveAnnIndex(ivf, store.versionDir(store.nextVersion()))
     store.publish(0L)
     // a rebuild that died mid-save: v1 exists on disk with only the
     // cents artifact written — versionsPresent() sees it, its load
@@ -753,15 +799,15 @@ class IndexMaintenanceSpec extends SparkSpec {
       // four dense families, deleted per family
       val ivfFull = Similarity.ivfIndex(vecs, "doc_id", "embedding",
         nCentroids = 2, persistIndex = false)
-      val ivf = Similarity.deleteFromIvfIndex(ivfFull, victims,
+      val ivf = Similarity.deleteFromAnnIndex(ivfFull, victims,
         "doc_id")
-      val lsh = Similarity.deleteFromLshIndex(
+      val lsh = Similarity.deleteFromAnnIndex(
         Similarity.lshIndex(vecs, "doc_id", "embedding", nPlanes = 2,
           persistIndex = false), victims, "doc_id")
-      val pq = Similarity.deleteFromPqIndex(
+      val pq = Similarity.deleteFromAnnIndex(
         Similarity.pqIndex(vecs, "doc_id", "embedding", m = 2,
           ksub = 2, persistIndex = false), victims, "doc_id")
-      val ivfpq = Similarity.deleteFromIvfPqIndex(
+      val ivfpq = Similarity.deleteFromAnnIndex(
         Similarity.ivfPqIndex(vecs, "doc_id", "embedding",
           nCentroids = 2, m = 2, ksub = 2, persistIndex = false),
         victims, "doc_id")
@@ -769,9 +815,9 @@ class IndexMaintenanceSpec extends SparkSpec {
       // pre-delete publish, the delete lands as v1 — v0 is exactly
       // the straggling-reader exposure until retention GC
       val store = new IM.VersionedIndexStore(s"$root/store")
-      IM.saveIvfIndex(ivfFull, store.versionDir(store.nextVersion()))
+      IM.saveAnnIndex(ivfFull, store.versionDir(store.nextVersion()))
       store.publish(0L)
-      IM.saveIvfIndex(ivf, store.versionDir(store.nextVersion()))
+      IM.saveAnnIndex(ivf, store.versionDir(store.nextVersion()))
       store.publish(1L)
       // landing written batch-partitioned, then purged
       vecs.withColumn("batch_id", (col("doc_id") % 3).cast("long"))

@@ -910,13 +910,13 @@ class MQSourceSpec extends SparkSpec {
                 // the in-memory vars it needs NO crash snapshot
                 Similarity.appendToIvfIndexTable(adf, "doc_id",
                   "embedding", ivftPrefix, 2, batchId = Some(batchId))
-                ivf = Similarity.appendToIvfIndex(ivf, adf,
+                ivf = Similarity.appendToAnnIndex(ivf, adf,
                   "doc_id", "embedding")
-                lsh = Similarity.appendToLshIndex(lsh, adf,
+                lsh = Similarity.appendToAnnIndex(lsh, adf,
                   "doc_id", "embedding")
-                pq = Similarity.appendToPqIndex(pq, adf,
+                pq = Similarity.appendToAnnIndex(pq, adf,
                   "doc_id", "embedding")
-                ivfpq = Similarity.appendToIvfPqIndex(ivfpq, adf,
+                ivfpq = Similarity.appendToAnnIndex(ivfpq, adf,
                   "doc_id", "embedding")
               }
               if (crash2Armed && !adf.isEmpty) {
@@ -1015,7 +1015,7 @@ class MQSourceSpec extends SparkSpec {
       assert(ids(lsh.buckets) == Seq(100L, 7000L, 8002L))
       assert(ids(pq.encoded) == Seq(100L, 7000L, 8002L))
       assert(ids(ivfpq.encoded) == Seq(100L, 7000L, 8002L))
-      val oneShot = Similarity.appendToIvfIndex(
+      val oneShot = Similarity.appendToAnnIndex(
         Similarity.ivfIndex(corpusVecs, "vec_id", "embedding",
           nCentroids = 1, persistIndex = false),
         allVecs.filter(col("vec_id") =!= 100L), "vec_id", "embedding")
@@ -1091,7 +1091,7 @@ class MQSourceSpec extends SparkSpec {
       assert(Retrieval.deleteFromPostingsIndexTable(spark,
         Seq(7000L).toDF("doc_id"), "doc_id", "graft_cap_post", 2,
         batchId = Some(99L)) == 1L)
-      ivf = Similarity.deleteFromIvfIndex(ivf,
+      ivf = Similarity.deleteFromAnnIndex(ivf,
         Seq(7000L).toDF("vec_id"), "vec_id")
       // the serving tables take the same takedown: a gated tombstone
       // append — the next loadIvfIndexTable stops serving 7000
@@ -1162,7 +1162,7 @@ class MQSourceSpec extends SparkSpec {
     "drifted batch triggers exactly one rebuild, admits unaffected") {
     // The maintenance loop wired where production runs it: each
     // ingested batch appends to the PQ index under the FROZEN
-    // codebook, then maintainPqIndex audits recall against the
+    // codebook, then maintainAnnIndex audits recall against the
     // accumulated corpus and rebuilds+swaps ONLY when the audit
     // fails. Vectors ride in the MQ payload (csv), the corpus is
     // what landed in the idempotent out dir — no side state.
@@ -1217,16 +1217,16 @@ class MQSourceSpec extends SparkSpec {
                   vecOf(col("value")).as("embedding"))
                 .localCheckpoint()
               if (!adf.isEmpty)
-                pq = Similarity.appendToPqIndex(pq, adf, "vec_id",
+                pq = Similarity.appendToAnnIndex(pq, adf, "vec_id",
                   "embedding")
               // corpus = seed table + everything that LANDED
               val corpus = s.read.parquet(corpusDir.toString)
                 .unionByName(s.read.parquet(out.toString).select(
                   unix_millis(col("put_ts")).as("vec_id"),
                   vecOf(col("value")).as("embedding")))
-              val m = IM.maintainPqIndex(store, corpus, "vec_id",
+              val m = IM.maintainAnnIndex(store, corpus, "vec_id",
                 "embedding", pq, recallFloor = 0.9, k = 3,
-                rerank = 16, m = 4, ksub = 32)
+                rerank = 16)
               pq = m.index
               events += ((store.currentVersion(), m.rebuilt, m.recall))
               // retention GC on the same cadence, the aggressive
@@ -1276,7 +1276,7 @@ class MQSourceSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(store.versionDir(0L))),
       "version 0 must be deleted after the swap-batch GC")
-    val reloaded = IM.loadPqIndex(spark, store.versionDir(1L))
+    val reloaded = IM.loadAnnIndexLike(spark, store.versionDir(1L), pq)
     assert(reloaded.codebook.length == 4)
     // admits unaffected by the mid-run swap: every message landed
     // exactly once (batch replay absorbed by the idempotent write)

@@ -807,8 +807,9 @@ class SimilaritySpec extends SparkSpec {
     // 5 vectors, 2 natural clusters; nCentroids=2, probe both lists →
     // IVF must agree with brute force
     val q = vecs.filter(col("vec_id") === 0)
-    val ivf = Similarity.ivfTopK(q, vecs, "vec_id", "embedding", 2,
-        nCentroids = 2, nProbe = 2)
+    val ivf = Similarity.ivfTopKWith(Similarity.ivfIndex(vecs, "vec_id",
+        "embedding", nCentroids = 2, persistIndex = false),
+        q, "vec_id", "embedding", 2, nProbe = 2)
       .orderBy("rank").select("c_id").as[Long].collect().toSeq
     val bf = Similarity.bruteForceTopK(q, vecs, "vec_id", "embedding", 2)
       .orderBy("rank").select("c_id").as[Long].collect().toSeq
@@ -835,8 +836,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("LSH top-k returns same-bucket neighbours with exact rerank") {
-    val top = Similarity.lshTopK(vecs.filter(col("vec_id") === 0),
-      vecs, "vec_id", "embedding", 2, nPlanes = 2)
+    val top = Similarity.lshTopKWith(Similarity.lshIndex(vecs, "vec_id",
+        "embedding", nPlanes = 2, persistIndex = false),
+      vecs.filter(col("vec_id") === 0), "vec_id", "embedding", 2)
     // bucket collision is probabilistic per plane set, but the query
     // vector always shares its own bucket family; result must never
     // contain the query itself and must be cosine-ordered
@@ -859,9 +861,11 @@ class SimilaritySpec extends SparkSpec {
     val q = all.filter(col("vec_id") < 6)
     val k = 3
     val exact = Similarity.bruteForceTopK(q, all, "vec_id", "embedding", k)
-    val lsh = Similarity.lshTopK(q, all, "vec_id", "embedding", k)
-    val ivf = Similarity.ivfTopK(q, all, "vec_id", "embedding", k,
-      nCentroids = 2, nProbe = 2)
+    val lsh = Similarity.lshTopKWith(Similarity.lshIndex(all, "vec_id",
+      "embedding", persistIndex = false), q, "vec_id", "embedding", k)
+    val ivf = Similarity.ivfTopKWith(Similarity.ivfIndex(all, "vec_id",
+        "embedding", nCentroids = 2, persistIndex = false),
+      q, "vec_id", "embedding", k, nProbe = 2)
     val rec = Similarity.recallAtK(exact, lsh, "lsh")
       .unionByName(Similarity.recallAtK(exact, ivf, "ivf"))
       .select("method", "recall").as[(String, Double)].collect().toMap
@@ -915,8 +919,9 @@ class SimilaritySpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val q = all.filter(col("vec_id") < 6)
     val k = 3
-    def run() = Similarity.pqTopK(q, all, "vec_id", "embedding", k,
-      m = 2, ksub = 4)
+    def run() = Similarity.pqTopKWith(Similarity.pqIndex(all, "vec_id",
+        "embedding", m = 2, ksub = 4, persistIndex = false),
+      q, all, "vec_id", "embedding", k)
     val exact = Similarity.bruteForceTopK(q, all, "vec_id", "embedding", k)
     val rec = Similarity.recallAtK(exact, run(), "pq")
       .select("recall").as[Double].head()
@@ -946,8 +951,10 @@ class SimilaritySpec extends SparkSpec {
     val k = 3
     // probe BOTH lists so the coarse quantizer can't hide a PQ-side
     // regression behind a lucky list assignment
-    def run() = Similarity.ivfPqTopK(q, all, "vec_id", "embedding", k,
-      nCentroids = 2, nProbe = 2, m = 2, ksub = 4)
+    def run() = Similarity.ivfPqTopKWith(Similarity.ivfPqIndex(all,
+        "vec_id", "embedding", nCentroids = 2, m = 2, ksub = 4,
+        persistIndex = false),
+      q, all, "vec_id", "embedding", k, nProbe = 2)
     val exact = Similarity.bruteForceTopK(q, all, "vec_id", "embedding", k)
     val rec = Similarity.recallAtK(exact, run(), "ivfpq")
       .select("recall").as[Double].head()
@@ -985,9 +992,10 @@ class SimilaritySpec extends SparkSpec {
     // codes — must clear the floor too (the fixture's two tight
     // clusters are exactly where residual encoding is meaningful)
     val faissRec = Similarity.recallAtK(exact,
-      Similarity.ivfPqTopK(q, all, "vec_id", "embedding", k,
-        nCentroids = 2, nProbe = 2, m = 2, ksub = 4,
-        residual = true, trainCoarse = true),
+      Similarity.ivfPqTopKWith(Similarity.ivfPqIndex(all, "vec_id",
+          "embedding", nCentroids = 2, m = 2, ksub = 4, residual = true,
+          trainCoarse = true, persistIndex = false),
+        q, all, "vec_id", "embedding", k, nProbe = 2),
       "ivfpq_residual").select("recall").as[Double].head()
     assert(faissRec >= 0.9, s"trained+residual ivfpq recall $faissRec")
   }
@@ -1027,9 +1035,9 @@ class SimilaritySpec extends SparkSpec {
     // ---- IVF
     val ivf0 = Similarity.ivfIndex(corpus, "vec_id", "embedding",
       nCentroids = 4, persistIndex = false)
-    val ivf1 = Similarity.appendToIvfIndex(ivf0, batchDf,
+    val ivf1 = Similarity.appendToAnnIndex(ivf0, batchDf,
       "vec_id", "embedding")
-    val ivfRebuilt = Similarity.appendToIvfIndex(
+    val ivfRebuilt = Similarity.appendToAnnIndex(
       Similarity.IvfIndex(ivf0.cents, ivf0.assigned.limit(0)), union,
       "vec_id", "embedding")
     assert(rows(ivf1.assigned) == rows(ivfRebuilt.assigned))
@@ -1041,9 +1049,9 @@ class SimilaritySpec extends SparkSpec {
     // ---- LSH (cap not exceeded in this fixture, so append == rebuild)
     val lsh0 = Similarity.lshIndex(corpus, "vec_id", "embedding",
       nPlanes = 4, persistIndex = false)
-    val lsh1 = Similarity.appendToLshIndex(lsh0, batchDf,
+    val lsh1 = Similarity.appendToAnnIndex(lsh0, batchDf,
       "vec_id", "embedding")
-    val lshRebuilt = Similarity.appendToLshIndex(
+    val lshRebuilt = Similarity.appendToAnnIndex(
       Similarity.LshIndex(lsh0.nPlanes, lsh0.buckets.limit(0),
         lsh0.dropped), union,
       "vec_id", "embedding")
@@ -1056,9 +1064,9 @@ class SimilaritySpec extends SparkSpec {
     // ---- PQ
     val pq0 = Similarity.pqIndex(corpus, "vec_id", "embedding",
       m = 4, ksub = 4, persistIndex = false)
-    val pq1 = Similarity.appendToPqIndex(pq0, batchDf,
+    val pq1 = Similarity.appendToAnnIndex(pq0, batchDf,
       "vec_id", "embedding")
-    val pqRebuilt = Similarity.appendToPqIndex(
+    val pqRebuilt = Similarity.appendToAnnIndex(
       Similarity.PqIndex(pq0.codebook, pq0.encoded.limit(0)), union,
       "vec_id", "embedding")
     assert(rows(pq1.encoded) == rows(pqRebuilt.encoded))
@@ -1071,9 +1079,9 @@ class SimilaritySpec extends SparkSpec {
     val ivfpq0 = Similarity.ivfPqIndex(corpus, "vec_id", "embedding",
       nCentroids = 4, m = 4, ksub = 4, residual = true,
       persistIndex = false)
-    val ivfpq1 = Similarity.appendToIvfPqIndex(ivfpq0, batchDf,
+    val ivfpq1 = Similarity.appendToAnnIndex(ivfpq0, batchDf,
       "vec_id", "embedding")
-    val ivfpqRebuilt = Similarity.appendToIvfPqIndex(
+    val ivfpqRebuilt = Similarity.appendToAnnIndex(
       Similarity.IvfPqIndex(ivfpq0.cents, ivfpq0.codebook,
         ivfpq0.encoded.limit(0), ivfpq0.residual), union,
       "vec_id", "embedding")
@@ -1112,12 +1120,12 @@ class SimilaritySpec extends SparkSpec {
     // ---- IVF
     val ivf0 = Similarity.ivfIndex(union, "vec_id", "embedding",
       nCentroids = 4, persistIndex = false)
-    val ivf1 = Similarity.deleteFromIvfIndex(ivf0, victimIds, "vec_id")
-    val ivfSurv = Similarity.appendToIvfIndex(
+    val ivf1 = Similarity.deleteFromAnnIndex(ivf0, victimIds, "vec_id")
+    val ivfSurv = Similarity.appendToAnnIndex(
       Similarity.IvfIndex(ivf0.cents, ivf0.assigned.limit(0)), corpus,
       "vec_id", "embedding")
     assert(rows(ivf1.assigned) == rows(ivfSurv.assigned))
-    assert(rows(Similarity.deleteFromIvfIndex(ivf1, victimIds,
+    assert(rows(Similarity.deleteFromAnnIndex(ivf1, victimIds,
         "vec_id").assigned) == rows(ivf1.assigned),
       "re-deleting must be a no-op")
     assert(Similarity.ivfTopKWith(ivf1, query, "vec_id", "embedding",
@@ -1128,8 +1136,8 @@ class SimilaritySpec extends SparkSpec {
     // ---- LSH
     val lsh0 = Similarity.lshIndex(union, "vec_id", "embedding",
       nPlanes = 4, persistIndex = false)
-    val lsh1 = Similarity.deleteFromLshIndex(lsh0, victimIds, "vec_id")
-    val lshSurv = Similarity.appendToLshIndex(
+    val lsh1 = Similarity.deleteFromAnnIndex(lsh0, victimIds, "vec_id")
+    val lshSurv = Similarity.appendToAnnIndex(
       Similarity.LshIndex(lsh0.nPlanes, lsh0.buckets.limit(0),
         lsh0.dropped), corpus, "vec_id", "embedding")
     assert(rows(lsh1.buckets) == rows(lshSurv.buckets))
@@ -1141,8 +1149,8 @@ class SimilaritySpec extends SparkSpec {
     // ---- PQ
     val pq0 = Similarity.pqIndex(union, "vec_id", "embedding",
       m = 4, ksub = 4, persistIndex = false)
-    val pq1 = Similarity.deleteFromPqIndex(pq0, victimIds, "vec_id")
-    val pqSurv = Similarity.appendToPqIndex(
+    val pq1 = Similarity.deleteFromAnnIndex(pq0, victimIds, "vec_id")
+    val pqSurv = Similarity.appendToAnnIndex(
       Similarity.PqIndex(pq0.codebook, pq0.encoded.limit(0)), corpus,
       "vec_id", "embedding")
     assert(rows(pq1.encoded) == rows(pqSurv.encoded))
@@ -1155,9 +1163,9 @@ class SimilaritySpec extends SparkSpec {
     val ivfpq0 = Similarity.ivfPqIndex(union, "vec_id", "embedding",
       nCentroids = 4, m = 4, ksub = 4, residual = true,
       persistIndex = false)
-    val ivfpq1 = Similarity.deleteFromIvfPqIndex(ivfpq0, victimIds,
+    val ivfpq1 = Similarity.deleteFromAnnIndex(ivfpq0, victimIds,
       "vec_id")
-    val ivfpqSurv = Similarity.appendToIvfPqIndex(
+    val ivfpqSurv = Similarity.appendToAnnIndex(
       Similarity.IvfPqIndex(ivfpq0.cents, ivfpq0.codebook,
         ivfpq0.encoded.limit(0), ivfpq0.residual), corpus,
       "vec_id", "embedding")
@@ -1200,24 +1208,24 @@ class SimilaritySpec extends SparkSpec {
     // ---- IVF
     val ivf0 = Similarity.ivfIndex(corpus, "vec_id", "embedding",
       nCentroids = 4, persistIndex = false)
-    val ivfR = Similarity.restrictIvfToIds(ivf0, allowedIds, "vec_id")
-    val ivfSub = Similarity.appendToIvfIndex(
+    val ivfR = Similarity.restrictAnnToIds(ivf0, allowedIds, "vec_id")
+    val ivfSub = Similarity.appendToAnnIndex(
       Similarity.IvfIndex(ivf0.cents, ivf0.assigned.limit(0)),
       allowedDf, "vec_id", "embedding")
     assert(rows(ivfR.assigned) == rows(ivfSub.assigned))
     // ---- LSH (census frozen: the build's dropped table is kept)
     val lsh0 = Similarity.lshIndex(corpus, "vec_id", "embedding",
       nPlanes = 4, persistIndex = false)
-    val lshR = Similarity.restrictLshToIds(lsh0, allowedIds, "vec_id")
-    val lshSub = Similarity.appendToLshIndex(
+    val lshR = Similarity.restrictAnnToIds(lsh0, allowedIds, "vec_id")
+    val lshSub = Similarity.appendToAnnIndex(
       Similarity.LshIndex(lsh0.nPlanes, lsh0.buckets.limit(0),
         lsh0.dropped), allowedDf, "vec_id", "embedding")
     assert(rows(lshR.buckets) == rows(lshSub.buckets))
     // ---- PQ
     val pq0 = Similarity.pqIndex(corpus, "vec_id", "embedding",
       m = 4, ksub = 4, persistIndex = false)
-    val pqR = Similarity.restrictPqToIds(pq0, allowedIds, "vec_id")
-    val pqSub = Similarity.appendToPqIndex(
+    val pqR = Similarity.restrictAnnToIds(pq0, allowedIds, "vec_id")
+    val pqSub = Similarity.appendToAnnIndex(
       Similarity.PqIndex(pq0.codebook, pq0.encoded.limit(0)),
       allowedDf, "vec_id", "embedding")
     assert(rows(pqR.encoded) == rows(pqSub.encoded))
@@ -1225,9 +1233,9 @@ class SimilaritySpec extends SparkSpec {
     val ivfpq0 = Similarity.ivfPqIndex(corpus, "vec_id", "embedding",
       nCentroids = 4, m = 4, ksub = 4, residual = true,
       persistIndex = false)
-    val ivfpqR = Similarity.restrictIvfPqToIds(ivfpq0, allowedIds,
+    val ivfpqR = Similarity.restrictAnnToIds(ivfpq0, allowedIds,
       "vec_id")
-    val ivfpqSub = Similarity.appendToIvfPqIndex(
+    val ivfpqSub = Similarity.appendToAnnIndex(
       Similarity.IvfPqIndex(ivfpq0.cents, ivfpq0.codebook,
         ivfpq0.encoded.limit(0), ivfpq0.residual), allowedDf,
       "vec_id", "embedding")
@@ -1307,7 +1315,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.appendToIvfIndexTable(batch, "vec_id", "embedding",
         prefix, buckets = 2, batchId = Some(0L))
       val staged = Similarity.loadIvfIndexTable(spark, prefix)
-      val rebuilt = Similarity.appendToIvfIndex(
+      val rebuilt = Similarity.appendToAnnIndex(
         Similarity.IvfIndex(ix0.cents, ix0.assigned.limit(0)),
         corpus.unionByName(batch), "vec_id", "embedding")
       def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
@@ -1334,7 +1342,7 @@ class SimilaritySpec extends SparkSpec {
         buckets = 2, batchId = Some(4L)) === 0L,
         "a fresh delete of already-deleted ids must be a no-op")
       val afterDel = Similarity.loadIvfIndexTable(spark, prefix)
-      val survivors = Similarity.deleteFromIvfIndex(rebuilt,
+      val survivors = Similarity.deleteFromAnnIndex(rebuilt,
         Seq(100L, 101L).toDF("vec_id"), "vec_id")
       assert(probeSet(afterDel) === probeSet(survivors))
       // silenced-but-physical until maintenance, then erased — the
@@ -1402,7 +1410,7 @@ class SimilaritySpec extends SparkSpec {
         prefix, buckets = 2, batchId = Some(0L))
       val staged = Similarity.loadLshIndexTable(spark, prefix)
       assert(staged.nPlanes === ix0.nPlanes)
-      val rebuilt = Similarity.appendToLshIndex(
+      val rebuilt = Similarity.appendToAnnIndex(
         Similarity.LshIndex(ix0.nPlanes, ix0.buckets.limit(0),
           ix0.dropped), corpus.unionByName(batch), "vec_id",
         "embedding")
@@ -1604,7 +1612,7 @@ class SimilaritySpec extends SparkSpec {
       nPlanes = 2, bucketCap = 3, persistIndex = false)
     assert(lsh0.dropped.count() == 1, "fixture must censor one bucket")
     val batch = Seq(dirA(200L), dirB(201L)).toDF("vec_id", "embedding")
-    val lsh1 = Similarity.appendToLshIndex(lsh0, batch,
+    val lsh1 = Similarity.appendToAnnIndex(lsh0, batch,
       "vec_id", "embedding")
     val ids = lsh1.buckets.select("c_id").as[Long].collect().toSet
     assert(!ids.contains(200L),

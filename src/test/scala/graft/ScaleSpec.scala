@@ -725,25 +725,25 @@ class ScaleSpec extends SparkSpec {
     }
     val ivf = Similarity.ivfIndex(vecs, "vec_id", "embedding",
       nCentroids = 2, persistIndex = false)
-    assertAppendPlan("IVF", Similarity.appendToIvfIndex(
+    assertAppendPlan("IVF", Similarity.appendToAnnIndex(
       Similarity.IvfIndex(ivf.cents, ivf.assigned.localCheckpoint()),
       batch, "vec_id", "embedding").assigned, 21)
     val lsh = Similarity.lshIndex(vecs, "vec_id", "embedding",
       nPlanes = 3, persistIndex = false)
-    assertAppendPlan("LSH", Similarity.appendToLshIndex(
+    assertAppendPlan("LSH", Similarity.appendToAnnIndex(
       Similarity.LshIndex(lsh.nPlanes, lsh.buckets.localCheckpoint(),
         lsh.dropped.localCheckpoint()),
       batch, "vec_id", "embedding").buckets, 21,
       allowBroadcastAnti = true)
     val pq = Similarity.pqIndex(vecs, "vec_id", "embedding",
       m = 2, ksub = 2, persistIndex = false)
-    assertAppendPlan("PQ", Similarity.appendToPqIndex(
+    assertAppendPlan("PQ", Similarity.appendToAnnIndex(
       Similarity.PqIndex(pq.codebook, pq.encoded.localCheckpoint()),
       batch, "vec_id", "embedding").encoded, 21)
     val ivfpq = Similarity.ivfPqIndex(vecs, "vec_id", "embedding",
       nCentroids = 2, m = 2, ksub = 2, residual = true,
       persistIndex = false)
-    assertAppendPlan("IVF+PQ", Similarity.appendToIvfPqIndex(
+    assertAppendPlan("IVF+PQ", Similarity.appendToAnnIndex(
       Similarity.IvfPqIndex(ivfpq.cents, ivfpq.codebook,
         ivfpq.encoded.localCheckpoint(), ivfpq.residual),
       batch, "vec_id", "embedding").encoded, 21)

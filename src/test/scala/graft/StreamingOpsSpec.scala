@@ -875,7 +875,7 @@ class StreamingOpsSpec extends SparkSpec {
       // near the boundary but in cluster 0 (cos to c0 beats c1)
       (3L, Array(1.0f, 0.0f, 0.0f, 0.99f)))
       .toDF("vec_id", "embedding")
-    val index = Similarity.appendToIvfIndex(
+    val index = Similarity.appendToAnnIndex(
       Similarity.IvfIndex(cents, emptyAssigned),
       corpus, "vec_id", "embedding")
     val rows: Seq[(Timestamp, Long, Array[Float])] = Seq(
@@ -1405,7 +1405,7 @@ class StreamingOpsSpec extends SparkSpec {
       Retrieval.deleteFromPostingsIndexTable(spark,
         Seq(3L).toDF("doc_id"), "doc_id", prefix, buckets = 2,
         batchId = Some(0L))
-      val ivfDel = Similarity.deleteFromIvfIndex(ivf,
+      val ivfDel = Similarity.deleteFromAnnIndex(ivf,
         Seq(3L).toDF("vec_id"), "vec_id")
       val after = fused(ivfDel)
       assert(after.nonEmpty && !after.exists(_._3 == 3L),
@@ -1421,7 +1421,7 @@ class StreamingOpsSpec extends SparkSpec {
       try {
         Retrieval.createPostingsIndexTable(survivors, "doc_id",
           TA.tokens(col("text")), prefix2, buckets = 2)
-        val ivfSurv = Similarity.appendToIvfIndex(
+        val ivfSurv = Similarity.appendToAnnIndex(
           Similarity.IvfIndex(ivf.cents, ivf.assigned.limit(0)),
           survVecs, "vec_id", "embedding")
         val want = StreamingOps.hybridProbe(qdf, "query_id",
@@ -1477,7 +1477,7 @@ class StreamingOpsSpec extends SparkSpec {
           qdf, "query_id", TA.tokens(col("text")), k = 10)
         .select("query", "rank", "doc")
       val dense = Similarity.ivfTopKWith(
-          Similarity.restrictIvfToIds(ivf, allowed, "doc"),
+          Similarity.restrictAnnToIds(ivf, allowed, "doc"),
           qdf, "query_id", "qv", k = 10, nProbe = 2)
         .select(col("q_id").as("query"),
           col("rank").cast("long").as("rank"), col("c_id").as("doc"))
@@ -1638,27 +1638,6 @@ class StreamingOpsSpec extends SparkSpec {
       graft.sources.mq.MQSources.orderedMerge(_, lateness = "2 seconds"),
       "om_sink")
     assertOrderedMergeContract(got, dropped)
-  }
-
-  test("orderedMergeTws: emission-identical to the fMGWS form on the " +
-    "interleaved fixture — incremental MapState transport, same " +
-    "late-drop horizon (RocksDB store)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val (got, dropped) = runOrderedMergeFixture(
-        graft.sources.mq.MQSources.orderedMergeTws(_,
-          lateness = "2 seconds"),
-        "om_tws_sink")
-      assertOrderedMergeContract(got, dropped)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 
   test("purgeFromLanding rewrites ONLY the victims' own batch " +
